@@ -1,96 +1,148 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Eager block management for `localCheckpoint()`-materialized frames.
+/** Block management for `localCheckpoint()`-materialized frames.
   *
   * A localCheckpoint pins its RDD at MEMORY_AND_DISK until the ContextCleaner
-  * notices the RDD object is unreachable — which needs a driver GC. Iterative
-  * operators (dupComponents) and multi-consumer keysets (semiAnti) that are
-  * invoked repeatedly in one JVM (bench reps, the gate runner) must therefore
-  * free superseded checkpoints eagerly or the heap fills with dead blocks.
+  * notices the RDD object is unreachable — which needs a driver GC. Operators
+  * invoked repeatedly in one JVM (bench reps, the gate runner) therefore make
+  * their checkpoints inside a [[scope]], which frees them eagerly, and run
+  * their fixed-point loops through [[Scope.fixpoint]].
   */
 object CacheOps {
-
-  /** Run `body` with AQE disabled and `spark.sql.shuffle.partitions` pinned
-    * to a width derived from the loop's OWN data size (guide §2: partition
-    * counts follow input size, never a constant). Fixed-point loops
-    * (components, PageRank, k-core, SSSP, pointer jumping) materialize one
-    * tiny checkpoint per round; under AQE each exchange in that plan is its
-    * own sub-job, so a 4-round loop pays ~25-45 job submissions of pure
-    * scheduling (measured 20-50 ms each at sf0.1 while every stage ran 1-2
-    * tasks). With AQE off each round is ONE job; the width pin keeps the
-    * static planner from fanning tiny shuffles to the session default.
-    * Restores both confs on exit (including the loud non-convergence throw).
-    * The session's thread confs are mutated, so callers must not run
-    * concurrent queries on the same session inside `body` — true of every
-    * loop here (rounds are inherently sequential). */
-  def withLoopConf[T](spark: org.apache.spark.sql.SparkSession, rows: Long)(body: => T): T =
-    withLoopWidth(spark, math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong, rows / 65536L)).toInt)(body)
 
   /** Materialized byte size of a localCheckpoint'd frame — a pure
     * driver-side storage-info lookup (no job; 0 for non-checkpoints or
     * not-yet-materialized ones). */
-  def checkpointBytes(spark: org.apache.spark.sql.SparkSession, df: DataFrame): Long =
+  def checkpointBytes(spark: SparkSession, df: DataFrame): Long =
     df.queryExecution.analyzed match {
-      case lr: LogicalRDD =>
-        spark.sparkContext.getRDDStorageInfo.find(_.id == lr.rdd.id)
-          .map(i => i.memSize + i.diskSize).getOrElse(0L)
+      case lr: LogicalRDD => rddBytes(spark, Set(lr.rdd.id))
       case _ => 0L
     }
 
-  /** Loop width for a MATERIALIZED localCheckpoint, derived from its
-    * registered block bytes (~1 MB per partition, capped at session
-    * parallelism) — so operators whose specs pin "zero count actions"
-    * (CacheSpec on dupComponents) can size their loops without a job. */
-  def checkpointWidth(spark: org.apache.spark.sql.SparkSession, df: DataFrame): Int =
-    math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong,
-      checkpointBytes(spark, df) / (1L << 20))).toInt
+  private def rddBytes(spark: SparkSession, ids: collection.Set[Int]): Long =
+    spark.sparkContext.getRDDStorageInfo.filter(i => ids.contains(i.id))
+      .map(i => i.memSize + i.diskSize).sum
 
   /** Size-GATED broadcast hint for plans built over localCheckpoints.
-    * A checkpoint's LogicalRDD carries no statistics, so the planner
-    * shuffle-joins relations that parquet statistics would have broadcast;
-    * a blanket `broadcast()` hint would fix that locally but FORCE an
-    * unbounded broadcast at production scale. This gates the hint on the
-    * MEASURED materialized size of `basis` (the checkpoint the relation
-    * derives from): under `maxBasisBytes` (default 64 MB — guide §3.1's
-    * "a few hundred MB is usually fine" with margin for derived-relation
-    * expansion) the broadcast the stats-driven plan chose is restored;
-    * above it the shuffle-join fallback stands. Scale-adaptive by
-    * construction, like autoBroadcastJoinThreshold but fed by real bytes. */
-  def broadcastIfSmall(spark: org.apache.spark.sql.SparkSession, df: DataFrame,
+    * A checkpoint's LogicalRDD keeps the optimizer's PRE-checkpoint size
+    * estimate, not its materialized size, so an estimate far off the real
+    * bytes (an explode, a self-join) carries through the checkpoint; a
+    * blanket `broadcast()` hint would FORCE an unbounded broadcast at
+    * production scale. This gates the hint on the MEASURED materialized
+    * size of `basis` (the checkpoint the relation derives from): under
+    * `maxBasisBytes` (default 64 MB — guide §3.1's "a few hundred MB is
+    * usually fine" with margin for derived-relation expansion) the hint is
+    * applied; above it the planner's own choice stands. */
+  def broadcastIfSmall(spark: SparkSession, df: DataFrame,
                        basis: DataFrame, maxBasisBytes: Long = 64L << 20): DataFrame =
     if (checkpointBytes(spark, basis) <= maxBasisBytes)
       org.apache.spark.sql.functions.broadcast(df)
     else df
 
-  def withLoopWidth[T](spark: org.apache.spark.sql.SparkSession, width: Int)(body: => T): T = {
-    val conf = spark.conf
-    val aqe = conf.get("spark.sql.adaptive.enabled")
-    val sp = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", width.toString)
-    try body finally {
-      conf.set("spark.sql.adaptive.enabled", aqe)
-      conf.set("spark.sql.shuffle.partitions", sp)
+  /** RDD ids of every checkpoint `df`'s analyzed plan reads. */
+  private def referenced(df: DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collectWithSubqueries { case lr: LogicalRDD => lr.rdd.id }.toSet
+
+  private val enclosing = ThreadLocal.withInitial[Option[Scope]](() => None)
+
+  /** Runs `body` with a fresh [[Scope]]. On exit — including on a throw —
+    * every checkpoint the scope owns is freed, except those the returned
+    * frame still reads: those pass to the enclosing scope, or, outside any
+    * scope, to the caller (and the ContextCleaner). Confs a
+    * [[Scope.fixpoint]] set are restored on exit too. */
+  def scope(body: Scope => DataFrame): DataFrame = {
+    val outer = enclosing.get
+    val s = new Scope(outer)
+    enclosing.set(Some(s))
+    var out: Option[DataFrame] = None
+    try {
+      out = Some(body(s))
+      out.get
+    } finally {
+      enclosing.set(outer)
+      s.close(out.fold(Set.empty[Int])(referenced))
     }
   }
 
-  /** Drop a localCheckpoint'd DataFrame's cached blocks NOW.
-    *
-    * Returns true iff blocks were actually freed. A localCheckpoint'd frame
-    * analyzes to a bare [[LogicalRDD]]; if a Spark upgrade ever wraps that
-    * plan, this match would stop engaging — so rather than silently no-op
-    * (the eager-free guarantee dying invisibly), the miss is logged and
-    * surfaced to callers, and CacheSpec asserts on the return value. */
-  def freeLocalCheckpoint(df: DataFrame): Boolean =
-    df.queryExecution.analyzed match {
-      case lr: LogicalRDD => lr.rdd.unpersist(false); true
-      case other =>
-        Console.err.println(
-          s"[graft] freeLocalCheckpoint: expected LogicalRDD, got ${other.getClass.getSimpleName} — blocks NOT freed")
-        false
+  /** The checkpoints made inside one [[scope]] call, plus those that
+    * escaped its inner scopes. */
+  final class Scope private[CacheOps] (outer: Option[Scope]) {
+    private val live = mutable.LinkedHashMap[Int, RDD[_]]()
+    private var restoreConfs: () => Unit = () => ()
+
+    /** `df.localCheckpoint(eager)`, owned by this scope. */
+    def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame =
+      own(df.localCheckpoint(eager))
+
+    /** Records the RDD under an already-checkpointed frame. Throws when the
+      * plan is not a bare [[LogicalRDD]] — its blocks could never be freed,
+      * and a silent no-op would let the leak go unnoticed. */
+    private[graft] def own(cp: DataFrame): DataFrame = cp.queryExecution.analyzed match {
+      case lr: LogicalRDD => live(lr.rdd.id) = lr.rdd; cp
+      case other => throw new IllegalStateException(
+        s"expected a checkpoint's LogicalRDD plan, got ${other.getClass.getSimpleName}")
     }
+
+    /** Frees every owned checkpoint whose RDD id is not in `keep`. */
+    private def free(keep: Set[Int]): Unit =
+      live.filterInPlace { (id, rdd) => keep(id) || { rdd.unpersist(false); false } }
+
+    private[CacheOps] def close(keep: Set[Int]): Unit = {
+      restoreConfs()
+      free(keep)
+      outer.foreach(_.live ++= live)
+      live.clear()
+    }
+
+    /** The fixed-point driver every iterative operator runs on. Round `i`
+      * (1-based) maps the current state to `step(state, i) = (next, done)`;
+      * rounds run until `done` or `maxRounds`, and a loop that is not done
+      * by then throws `"<op> did not converge within N rounds"` rather than
+      * return a partial answer.
+      *
+      * Contract: each round makes ONE driver action — the eager checkpoint
+      * of `next`, or a lazy one that the round's convergence action
+      * materializes. The loop runs with AQE off (under AQE every exchange of
+      * a round's plan is its own job) and `spark.sql.shuffle.partitions`
+      * pinned to ~1 MB per partition of the scope's live checkpoint bytes
+      * when the call starts (capped at the session parallelism), so the
+      * loop's inputs must be materialized before the call. `init` is
+      * evaluated under these confs, and they hold until the scope exits, so
+      * a rollup over the result runs under them too. After each round every
+      * checkpoint that is neither a loop input (live at the call and not
+      * read by `init`) nor read by `next` is freed — the superseded state
+      * and the round's scratch — so the loop holds O(one round) of blocks. */
+    def fixpoint(op: String, maxRounds: Int, init: => DataFrame)
+                (step: (DataFrame, Int) => (DataFrame, Boolean)): DataFrame = {
+      val spark = SparkSession.active
+      val width = math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong,
+        rddBytes(spark, live.keySet) / (1L << 20)))
+      val confs = Seq("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> width.toString)
+      val saved = confs.map { case (k, _) => k -> spark.conf.get(k) }
+      val restoreEarlier = restoreConfs
+      restoreConfs = () => { saved.foreach { case (k, v) => spark.conf.set(k, v) }; restoreEarlier() }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      var state = init
+      val inputs = live.keySet.toSet -- referenced(state)
+      var done = false
+      var round = 0
+      while (!done && round < maxRounds) {
+        round += 1
+        val (next, d) = step(state, round)
+        free(inputs ++ referenced(next))
+        state = next
+        done = d
+      }
+      if (!done) throw new IllegalArgumentException(
+        s"$op did not converge within $maxRounds rounds")
+      state
+    }
+  }
 }

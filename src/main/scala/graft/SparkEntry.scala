@@ -77,14 +77,15 @@ object SparkEntry {
     "q59_simhash_capped" -> ((s: SparkSession, d: String) => Dedup.simhashPairs(s, d)),
     // dup-GROUP resolution: connected components (hash-min propagation) over
     // the verified minhash pair graph — the decision step of a dedup
-    // pipeline, vs DuckDB's recursive-CTE transitive closure
-    "q63_dup_components" -> ((s: SparkSession, d: String) =>
-      Dedup.dupComponents(Dedup.minhashLsh(s, d, maxBucket = Int.MaxValue))),
+    // pipeline, vs DuckDB's recursive-CTE transitive closure (the scope frees
+    // the pair checkpoint once the components are built)
+    "q63_dup_components" -> ((s: SparkSession, d: String) => CacheOps.scope(_ =>
+      Dedup.dupComponents(Dedup.minhashLsh(s, d, maxBucket = Int.MaxValue)))),
     // the SAME components through the large/small-star contraction (the
     // long-chain scale path): third independent algorithm family against
     // the same recursive-CTE closure oracle
-    "q67_dup_components_stars" -> ((s: SparkSession, d: String) =>
-      Dedup.dupComponentsStars(Dedup.minhashLsh(s, d, maxBucket = Int.MaxValue))),
+    "q67_dup_components_stars" -> ((s: SparkSession, d: String) => CacheOps.scope(_ =>
+      Dedup.dupComponentsStars(Dedup.minhashLsh(s, d, maxBucket = Int.MaxValue)))),
     // the dedup DECISION list: components over the verified pair graph →
     // representative per group (most tokens, ties to lowest id) → per-doc
     // keep/drop verdict covering the WHOLE corpus (singletons keep=1); the
@@ -383,8 +384,8 @@ object SparkEntry {
     // model, score map-side in exact integers
     "q124_bigram_lm" -> ((s: SparkSession, d: String) =>
       TextOps.bigramLm(s, d)),
-    // k-core via iterative peeling; per-round localCheckpoint + eager free,
-    // loud non-convergence refusal
+    // k-core via iterative peeling on the fixed-point driver; loud
+    // non-convergence refusal
     "q125_kcore" -> ((s: SparkSession, _: String) =>
       graft.ops.Graph.kCore(s)),
     // inverted-index build + conjunctive AND-query over posting lists

@@ -773,7 +773,7 @@ object Ann {
     semDedupFrom(loadVecs(spark, dir), nlist, theta, iters)
 
   def semDedupFrom(vecs: DataFrame, nlist: Int, theta: Double,
-                   iters: Int = 2): DataFrame = {
+                   iters: Int = 2): DataFrame = graft.CacheOps.scope { s =>
     val spark = vecs.sparkSession
     import spark.implicits._
     val assigned =
@@ -810,11 +810,9 @@ object Ann {
       }
       .toDF("a", "b")
     val labels = graft.text.Dedup.componentLabels(pairs)
-    val dupVerdicts = labels
+    val dupVerdicts = s.checkpoint(labels // eager: O(dup members); frees the labels on return
       .select(col("doc_id").as("vec_id"), col("label").as("component"),
-        when(col("doc_id") === col("label"), 1L).otherwise(0L).as("keep"))
-      .localCheckpoint() // eager: O(dup members); lets the label set go now
-    graft.CacheOps.freeLocalCheckpoint(labels)
+        when(col("doc_id") === col("label"), 1L).otherwise(0L).as("keep")))
     val singles = vecs.select(col("vec_id"))
       .join(dupVerdicts.select(col("vec_id")), Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("vec_id").as("component"), lit(1L).as("keep"))

@@ -69,23 +69,22 @@ object PhashDedup {
     *
     * Scale shape (the dedupDecision discipline): the caption rollup and the
     * decision join run ONLY over dup-group members (O(dup members), label
-    * propagation's output), materialized eagerly so the full label set is
-    * freed; singletons arrive via an ids-only left_anti with keep=1,
-    * conflict=0. Captions never enter the component loop's shuffles. */
+    * propagation's output), materialized eagerly so the segment and label
+    * checkpoints are freed on return; singletons arrive via an ids-only
+    * left_anti with keep=1, conflict=0. Captions never enter the component
+    * loop's shuffles. */
   def phashDupDecisions(corpus: DataFrame, maxHam: Int = 3,
-                        maxBucket: Int = 1024): DataFrame = {
+                        maxBucket: Int = 1024): DataFrame = graft.CacheOps.scope { s =>
     val pairs = phashNearDupPairs(corpus, maxHam, maxBucket)
     val labels = Dedup.componentLabels(pairs)
     val members = corpus.select(col("image_id"), col("caption"))
       .join(labels.withColumnRenamed("doc_id", "image_id"), Seq("image_id"))
     val conflicts = members.groupBy(col("label"))
       .agg((countDistinct(col("caption")) > 1).as("has_conflict"))
-    val decided = members.join(conflicts, Seq("label"))
+    val decided = s.checkpoint(members.join(conflicts, Seq("label"))
       .select(col("image_id"), col("label").as("component"),
         when(col("image_id") === col("label"), 1L).otherwise(0L).as("keep"),
-        when(col("has_conflict"), 1L).otherwise(0L).as("conflict"))
-      .localCheckpoint() // eager: O(dup members); lets the label set go now
-    graft.CacheOps.freeLocalCheckpoint(labels)
+        when(col("has_conflict"), 1L).otherwise(0L).as("conflict")))
     val singles = corpus.select(col("image_id"))
       .join(decided.select(col("image_id")), Seq("image_id"), "left_anti")
       .select(col("image_id"), col("image_id").as("component"),

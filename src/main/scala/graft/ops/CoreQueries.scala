@@ -57,13 +57,12 @@ object CoreQueries {
   /** U2/J3-style semi/anti membership (roster-matched vs unmatched,
     * map-contribution-extractor.js:105,123): per nation, customers with and
     * without orders, via one build of the orders key set. */
-  def semiAnti(spark: SparkSession, dir: String): DataFrame = {
+  def semiAnti(spark: SparkSession, dir: String): DataFrame = graft.CacheOps.scope { s =>
     val c = table(spark, dir, "customer")
     // the distinct key build is consumed by BOTH the semi and the anti join;
     // materialize it once (same multi-consumer re-execution class as the q45
     // pre-rollup — without this Catalyst scans+distincts orders twice)
-    val o = table(spark, dir, "orders").select(col("o_custkey")).distinct()
-      .localCheckpoint()
+    val o = s.checkpoint(table(spark, dir, "orders").select(col("o_custkey")).distinct())
     val withO = c.join(o, col("c_custkey") === col("o_custkey"), "left_semi")
       .groupBy(col("c_nationkey")).agg(count(lit(1)).as("n_with_orders"))
     val without = c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")
@@ -73,11 +72,10 @@ object CoreQueries {
         coalesce(col("n_with_orders"), lit(0L)).as("n_with_orders"),
         coalesce(col("n_without_orders"), lit(0L)).as("n_without_orders"))
     // the rollup is dimension-bounded (one row per nation key), so an eager
-    // driver materialization is scale-safe — and it lets the keyset
-    // checkpoint be FREED here instead of stranding MEMORY_AND_DISK blocks
-    // per invocation for the JVM lifetime (repeated bench reps accumulate)
+    // driver materialization is scale-safe — and it lets the scope free the
+    // keyset checkpoint on return instead of stranding MEMORY_AND_DISK
+    // blocks per invocation for the JVM lifetime (repeated bench reps)
     val rows = res.collect()
-    graft.CacheOps.freeLocalCheckpoint(o)
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
   }
 

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.CacheOps
 import graft.functions.SeedExprs
 
 /** Graph analytics over the dup/interaction pair graphs the engine already
@@ -107,34 +108,25 @@ object Graph {
     *
     * Scale shape: each round is ONE shuffle — the edges⋈ranks join keys on
     * u (outdeg is fused into the edge set once, up front), the contribution
-    * sum re-keys on v. Ranks are localCheckpoint'ed per round (flat lineage,
-    * the dupComponents discipline) with superseded rounds freed eagerly. */
+    * sum re-keys on v. Rounds run on [[graft.CacheOps.Scope.fixpoint]], one
+    * eager rank checkpoint per round. */
   def pageRank(spark: SparkSession, n: Int = 250, m: Int = 1500,
-               iters: Int = 10): DataFrame = {
+               iters: Int = 10): DataFrame = CacheOps.scope { s =>
     val dedges = synthDraws(spark, n, m).distinct()
     val outdeg = dedges.groupBy("u").agg(count(lit(1)).as("od"))
-    val edgesOd = dedges.join(outdeg, "u").localCheckpoint()
+    val edgesOd = s.checkpoint(dedges.join(outdeg, "u"))
     val r0 = BigInt(10).pow(12) / n
     val base = BigInt(15) * BigInt(10).pow(12) / (BigInt(100) * n)
     val nodes = spark.range(0L, n.toLong, 1L, slicesFor(spark, n.toLong))
       .select(col("id").as("node"))
-    // AQE off + m-derived width for the fixed rounds (CacheOps.withLoopConf:
-    // one job per round instead of one per exchange per round)
-    graft.CacheOps.withLoopConf(spark, m.toLong) {
-    var ranks = nodes.withColumn("r", lit(r0.toLong)).localCheckpoint()
-    for (_ <- 1 to iters) {
-      val contrib = edgesOd.join(ranks, edgesOd("u") === ranks("node"))
-        .groupBy(col("v"))
-        .agg(sum(expr("(85 * r) div (100 * od)")).as("contrib"))
-      val next = nodes.join(contrib, nodes("node") === contrib("v"), "left")
-        .select(col("node"),
-          (lit(base.toLong) + coalesce(col("contrib"), lit(0L))).as("r"))
-        .localCheckpoint()
-      graft.CacheOps.freeLocalCheckpoint(ranks)
-      ranks = next
-    }
-    graft.CacheOps.freeLocalCheckpoint(edgesOd)
-    ranks
+    s.fixpoint("pageRank", iters, s.checkpoint(nodes.withColumn("r", lit(r0.toLong)))) {
+      (ranks, i) =>
+        val contrib = edgesOd.join(ranks, edgesOd("u") === ranks("node"))
+          .groupBy(col("v"))
+          .agg(sum(expr("(85 * r) div (100 * od)")).as("contrib"))
+        (s.checkpoint(nodes.join(contrib, nodes("node") === contrib("v"), "left")
+          .select(col("node"),
+            (lit(base.toLong) + coalesce(col("contrib"), lit(0L))).as("r"))), i == iters)
     }
   }
 
@@ -146,92 +138,61 @@ object Graph {
     * (0, 0) so jumps through the root are natural fixed points — no special
     * case. A depth-D tree converges in ceil(log2 D) rounds (the fixture's
     * depth-15 tree: 4), each ONE self-join shuffle on the jump key —
-    * against the sequential chase's D dependent lookups. Per-round
-    * localCheckpoint + eager free; the materializing count doubles as the
-    * convergence signal; non-convergence refuses loudly. Oracle: recursive
-    * CTE walk (sequential chase — different algorithm family). */
+    * against the sequential chase's D dependent lookups. Rounds run on
+    * [[graft.CacheOps.Scope.fixpoint]]: a lazy checkpoint whose
+    * still-jumping count is the round's one action and convergence signal.
+    * Oracle: recursive CTE walk (sequential chase — different algorithm
+    * family). */
   def treeDepths(spark: SparkSession, n: Int = 2000,
-                 maxRounds: Int = 64): DataFrame = {
+                 maxRounds: Int = 64): DataFrame = CacheOps.scope { s =>
     val t = spark.range(0L, n.toLong, 1L, slicesFor(spark, n.toLong))
       .select(col("id").as("node"),
       when(col("id") === 0, 0L)
         .otherwise(SeedExprs.mix64(col("id") + 61453L)
           .bitwiseAND(lit(Long.MaxValue)) % col("id")).as("parent"))
-    // lazy checkpoint + count: the convergence count is the action that
-    // materializes the round's checkpoint — one job per round, not two;
-    // AQE off + n-derived width for the rounds (CacheOps.withLoopConf)
-    graft.CacheOps.withLoopConf(spark, n.toLong) {
-    var state = t.select(col("node"), col("parent").as("anc"),
-      when(col("node") === 0, 0L).otherwise(1L).as("d")).localCheckpoint(false)
-    var pending = state.where(col("anc") =!= 0).count()
-    var rounds = 0
-    while (pending > 0 && rounds < maxRounds) {
+    val init = s.checkpoint(t.select(col("node"), col("parent").as("anc"),
+      when(col("node") === 0, 0L).otherwise(1L).as("d")))
+    s.fixpoint("treeDepths", maxRounds, init) { (state, _) =>
       val lookup = state.select(col("node").as("lnode"), col("anc").as("lanc"),
         col("d").as("ld"))
-      val next = state.join(lookup, col("anc") === col("lnode"))
+      val next = s.checkpoint(state.join(lookup, col("anc") === col("lnode"))
         .select(col("node"), col("lanc").as("anc"),
-          (col("d") + col("ld")).as("d"))
-        .localCheckpoint(false)
-      pending = next.where(col("anc") =!= 0).count()
-      graft.CacheOps.freeLocalCheckpoint(state)
-      state = next
-      rounds += 1
-    }
-    require(pending == 0,
-      s"treeDepths did not converge within $maxRounds rounds")
-    state.select(col("node"), col("d").as("depth"))
-    }
+          (col("d") + col("ld")).as("d")), eager = false)
+      (next, next.where(col("anc") =!= 0).count() == 0)
+    }.select(col("node"), col("d").as("depth"))
   }
 
   /** Gate query (q125): the k-core of the synth graph — iterative peeling
     * (drop nodes with degree < k, re-derive degrees, repeat to fixpoint),
     * the standard dense-subgraph primitive for community/spam detection
     * over dup/interaction graphs. Each round is two keyed shuffles (degree
-    * agg + survivor semi-join) with the edge set localCheckpoint'ed per
-    * round (flat lineage, superseded rounds freed eagerly — the
-    * dupComponents discipline); the round's own materializing count doubles
-    * as the convergence signal (no second action). Peeling converges in
-    * ≤ rounds-to-fixpoint regardless of order (the k-core is
-    * order-independent), and a non-converged exit refuses loudly rather
-    * than returning a superset. Output: each surviving node with its
-    * core-subgraph degree. */
+    * agg + survivor semi-join) on [[graft.CacheOps.Scope.fixpoint]]: a lazy
+    * edge checkpoint whose count is the round's one action and convergence
+    * signal (an unchanged count means nothing was peeled). Peeling
+    * converges regardless of order (the k-core is order-independent), and a
+    * non-converged exit refuses rather than return a superset. Output: each
+    * surviving node with its core-subgraph degree. */
   def kCore(spark: SparkSession, n: Int = 250, m: Int = 1500, k: Int = 8,
-            maxRounds: Int = 64): DataFrame = {
-    // lazy checkpoint + count: the convergence count is the action that
-    // materializes the round's checkpoint — one job per round, not two;
-    // AQE off + m-derived width for the rounds (CacheOps.withLoopConf —
-    // peeling never grows the edge set, so m bounds every round)
-    graft.CacheOps.withLoopConf(spark, m.toLong) {
-    var edges = synthDraws(spark, n, m)
-      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-      .distinct().localCheckpoint(false)
-    var cnt = edges.count()
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
+            maxRounds: Int = 64): DataFrame = CacheOps.scope { s =>
+    val draws = s.checkpoint(synthDraws(spark, n, m)) // the driver sizes the loop from these bytes
+    var cnt = -1L // unknown until the first round counts
+    val core = s.fixpoint("kCore", maxRounds, draws
+        .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
+        .distinct()) { (edges, _) =>
       val surv = edges.select(col("a").as("node"))
         .unionByName(edges.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("d"))
         .where(col("d") >= k).select("node")
-      val next = edges
+      val next = s.checkpoint(edges
         .join(surv.withColumnRenamed("node", "a"), "a")
         .join(surv.withColumnRenamed("node", "b"), "b")
-        .select("a", "b").localCheckpoint(false)
-      val nextCnt = next.count()
-      graft.CacheOps.freeLocalCheckpoint(edges)
-      edges = next
-      converged = nextCnt == cnt
-      cnt = nextCnt
-      rounds += 1
+        .select("a", "b"), eager = false)
+      val prev = cnt
+      cnt = next.count()
+      (next, cnt == prev)
     }
-    require(converged || rounds < maxRounds,
-      s"kCore did not converge within $maxRounds rounds — refusing to return a superset")
-    val out = edges.select(col("a").as("node"))
-      .unionByName(edges.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("core_deg"))
-      .localCheckpoint() // eager, so the final edge set can be freed now
-    graft.CacheOps.freeLocalCheckpoint(edges)
-    out
-    }
+    s.checkpoint(core.select(col("a").as("node"))
+      .unionByName(core.select(col("b").as("node")))
+      .groupBy("node").agg(count(lit(1)).as("core_deg")))
   }
 }

@@ -143,7 +143,8 @@ object OrderStats {
     * Dominance is strict-in-one-coordinate (ties are mutually non-dominating
     * but collapse in the distinct step); the DuckDB oracle is the honest
     * NOT-EXISTS dominance predicate — a different algorithm family. */
-  def skyline(spark: SparkSession, dir: String, parts: Int = 8): DataFrame = {
+  def skyline(spark: SparkSession, dir: String, parts: Int = 8): DataFrame =
+    graft.CacheOps.scope { s =>
     import org.apache.spark.sql.Encoders
     val all = table(spark, dir, "part")
       .select(floor(col("p_retailprice") * 100.0 + 0.5).cast("long")
@@ -159,14 +160,14 @@ object OrderStats {
     val local = pts.rdd.mapPartitionsWithIndex { (pid, it) =>
       var runmax = Long.MinValue
       it.flatMap { r =>
-        val p = r.getLong(0); val s = r.getLong(1)
-        if (s > runmax) { runmax = s; Iterator((pid, p, s, runmax)) }
+        val p = r.getLong(0); val sz = r.getLong(1)
+        if (sz > runmax) { runmax = sz; Iterator((pid, p, sz, runmax)) }
         else Iterator.empty
       }
     }
-    val localDf = spark.createDataset(local)(tup)
-      .toDF("pid", "price_c", "size", "runmax")
-      .localCheckpoint() // one scan feeds both the maxes collect and the filter
+    // one scan feeds both the maxes collect and the filter
+    val localDf = s.checkpoint(spark.createDataset(local)(tup)
+      .toDF("pid", "price_c", "size", "runmax"))
     // P scalars to the driver: max size per partition, in partition order
     // (a partition's local-skyline max IS its max — the first point reaching
     // the partition max always survives the strict-running-max scan)
@@ -181,10 +182,8 @@ object OrderStats {
     val sky = localDf.join(prefixDf, "pid")
       .where(col("size") > col("prefix_max"))
       .select(col("price_c"), col("size"))
-    val out = sky.join(all, Seq("price_c", "size"))
-      .groupBy("price_c", "size").agg(count(lit(1)).as("n_parts"))
-      .localCheckpoint() // eager, so the P-sized intermediate can be freed now
-    graft.CacheOps.freeLocalCheckpoint(localDf)
-    out
+    // eager, so the scope frees the P-sized intermediate on return
+    s.checkpoint(sky.join(all, Seq("price_c", "size"))
+      .groupBy("price_c", "size").agg(count(lit(1)).as("n_parts")))
   }
 }

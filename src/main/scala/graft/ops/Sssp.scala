@@ -19,39 +19,25 @@ object Sssp {
     * event-derived weighted digraph (src = user_id,
     * dst = (event_id·1103515245) mod 1000, w = 1 + event_id mod 97).
     * Integer weights, so distances are exact. One shuffle per round (join
-    * on the frontier key + min-combine), per-round localCheckpoint keeps
-    * lineage flat (the q63 iterative discipline). The DuckDB oracle unrolls
-    * the same rounds as MATERIALIZED CTEs. */
-  def boundedSssp(spark: SparkSession, dir: String, hops: Int = 6): DataFrame = {
-    val edges = table(spark, dir, "events").select(
-        col("user_id").as("src"),
-        ((col("event_id") * 1103515245L) % 1000L).as("dst"),
-        (col("event_id") % 97L + 1L).as("w"))
-      .groupBy("src", "dst").agg(min(col("w")).as("w")) // parallel edges: keep min
-      .localCheckpoint()
-    import spark.implicits._
-    // AQE off + checkpoint-bytes-derived width for the relaxation rounds
-    // (one job per round, not one per exchange per round)
-    CacheOps.withLoopWidth(spark, CacheOps.checkpointWidth(spark, edges)) {
-    var dist = Seq((0L, 0L)).toDF("node", "d").localCheckpoint()
-    var k = 0
-    while (k < hops) {
-      val relaxed = dist.join(edges, col("node") === col("src"))
-        .select(col("dst").as("node"), (col("d") + col("w")).as("d"))
-        .unionByName(dist)
-        .groupBy("node").agg(min(col("d")).as("d"))
-        .localCheckpoint()
-      CacheOps.freeLocalCheckpoint(dist)
-      dist = relaxed
-      k += 1
+    * on the frontier key + min-combine) on [[CacheOps.Scope.fixpoint]], one
+    * eager distance checkpoint per round. The DuckDB oracle unrolls the
+    * same rounds as MATERIALIZED CTEs. */
+  def boundedSssp(spark: SparkSession, dir: String, hops: Int = 6): DataFrame =
+    CacheOps.scope { s =>
+      val edges = s.checkpoint(table(spark, dir, "events").select(
+          col("user_id").as("src"),
+          ((col("event_id") * 1103515245L) % 1000L).as("dst"),
+          (col("event_id") % 97L + 1L).as("w"))
+        .groupBy("src", "dst").agg(min(col("w")).as("w"))) // parallel edges: keep min
+      import spark.implicits._
+      s.fixpoint("boundedSssp", hops, s.checkpoint(Seq((0L, 0L)).toDF("node", "d"))) {
+        (dist, k) =>
+          (s.checkpoint(dist.join(edges, col("node") === col("src"))
+            .select(col("dst").as("node"), (col("d") + col("w")).as("d"))
+            .unionByName(dist)
+            .groupBy("node").agg(min(col("d")).as("d"))), k == hops)
+      }
     }
-    // the final dist checkpoint is materialized (eager), so the edge
-    // relation's blocks can be released before returning — the round-4
-    // ADVICE leak class (a stranded MEMORY_AND_DISK set per invocation)
-    CacheOps.freeLocalCheckpoint(edges)
-    dist
-    }
-  }
 
   /** Gate query (q174) — time-weighted average value (TWAP) per user: each
     * value holds from its event to the next (step function), integrated

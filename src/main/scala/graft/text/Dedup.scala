@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.CacheOps
 import graft.Session.table
 
 /** Deduplication family for a training-data pipeline (exact, MinHash+LSH,
@@ -133,7 +134,8 @@ object Dedup {
     * The gate oracle computes all-pairs exact Jaccard in SQL — so the gate
     * ALSO proves LSH recall = 1.0 at this threshold on this corpus. */
   def minhashLsh(spark: SparkSession, dir: String, k: Int = 32, bands: Int = 8,
-                 w: Int = 3, threshold: Double = 0.5, maxBucket: Int = 64): DataFrame = {
+                 w: Int = 3, threshold: Double = 0.5, maxBucket: Int = 64): DataFrame =
+    CacheOps.scope { s =>
     import spark.implicits._
     val kk = k; val ww = w
     // one pass: doc -> (id, signature, distinct shingle hashes),
@@ -144,7 +146,7 @@ object Dedup {
     // shingling cost scales with the corpus scan's own split count, and
     // measured at sf0.1 a blanket defaultParallelism fan-out ADDED ~20 s of
     // near-empty-task overhead across the dedup family's downstream stages.
-    val signed = table(spark, dir, "documents")
+    val signed = s.checkpoint(table(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .mapPartitions { it =>
@@ -152,9 +154,8 @@ object Dedup {
           val shs = shingleHashes(text, ww)
           (id, minhashSigFromHashes(shs, kk), shs)
         }
-      }.toDF("doc_id", "sig", "shs")
-      .localCheckpoint()
-    // (A static-planner withLoopWidth wrapper around the verify was tried
+      }.toDF("doc_id", "sig", "shs"))
+    // (A static-planner loop-width wrapper around the verify was tried
     // and reverted: the pipeline's jobs are mostly CONCURRENT broadcast
     // builds, so AQE-off bought nothing measurable, and it would forfeit
     // AQE's skew-join splitting exactly where a production-scale verify
@@ -162,13 +163,12 @@ object Dedup {
     val cand = minhashCandidates(signed, bands, k / bands, maxBucket)
     // exact verification: intersect candidate pairs' shingle-hash sets.
     // Size-GATED broadcast hints (CacheOps.broadcastIfSmall on the measured
-    // signature-checkpoint bytes): `signed` is a localCheckpoint with no
-    // size statistics, so without a hint the planner shuffle-joins what
-    // round 5's parquet-stats-driven plan broadcast — the candidate list
-    // and the exploded hash relation — while a blanket hint would force an
-    // unbounded broadcast at production corpus sizes. The gate restores the
-    // stats plan exactly where the bytes prove it fits.
-    def bis(df: DataFrame) = graft.CacheOps.broadcastIfSmall(spark, df, signed)
+    // signature-checkpoint bytes) on the candidate list and the exploded
+    // hash relation: `signed` keeps only its pre-checkpoint size estimate,
+    // which says nothing about the explode, and a blanket hint would force
+    // an unbounded broadcast at production corpus sizes. The gate applies
+    // the hint exactly where the bytes prove it fits.
+    def bis(df: DataFrame) = CacheOps.broadcastIfSmall(spark, df, signed)
     val ex = signed.select(col("doc_id"), size(col("shs")).as("n_sh"),
       explode(col("shs")).as("gh"))
     val inter = ex.as("l")
@@ -178,16 +178,13 @@ object Dedup {
       .groupBy(col("a"), col("b"), col("l.n_sh").as("na"), col("r.n_sh").as("nb"))
       .agg(count(lit(1)).as("common"))
     // the verified pair list is O(dup pairs) — checkpoint it eagerly so the
-    // signature checkpoint's blocks (the big intermediate) can be freed NOW
-    // instead of leaking until a driver GC; consumers (components, decision
-    // list, splits, the gate count) read the small materialized pairs
-    val out = inter
+    // scope frees the signature and banding checkpoints (the big
+    // intermediates) on return; consumers (components, decision list,
+    // splits, the gate count) read the small materialized pairs
+    s.checkpoint(inter
       .withColumn("j_bp", floor(col("common") * 10000.0 / (col("na") + col("nb") - col("common"))).cast("long"))
       .filter(col("j_bp") >= (threshold * 10000).toLong)
-      .select(col("a"), col("b"), col("common"), col("j_bp"))
-      .localCheckpoint()
-    graft.CacheOps.freeLocalCheckpoint(signed)
-    out
+      .select(col("a"), col("b"), col("common"), col("j_bp")))
   }
 
   /** LSH band-bucket candidate pairs with a hot-bucket bound: band the
@@ -219,17 +216,18 @@ object Dedup {
     * precisely so one failed hub edge cannot by itself sever a genuine dup
     * group. Shared by minhash bands, simhash segments (shape-specialized
     * there for the fingerprint columns) and the ANN cosine LSH tier. */
-  def boundedPairs(banded: DataFrame, maxBucket: Int): DataFrame = {
+  def boundedPairs(banded: DataFrame, maxBucket: Int): DataFrame = CacheOps.scope { s =>
     // the banding relation has two consumers (bucket-size rollup + the
     // bucket self-join) — materialize it once, and use its MEASURED bytes
-    // to gate the broadcast hints (CacheOps.broadcastIfSmall): banded often
-    // derives from a stats-less localCheckpoint'ed signature frame, so the
-    // planner would shuffle-join what round 5's parquet statistics let it
-    // broadcast; the gate restores that plan only while the bytes fit —
-    // never a forced broadcast of a production-scale banding
+    // to gate the broadcast hints (CacheOps.broadcastIfSmall): a checkpoint
+    // keeps only the optimizer's pre-checkpoint size estimate, which the
+    // band posexplode can miss by orders of magnitude; the gate applies the
+    // hint only while the measured bytes fit — never a forced broadcast of a
+    // production-scale banding. The checkpoint escapes in the lazy result,
+    // to the caller's scope.
     val spark = banded.sparkSession
-    val bd = banded.localCheckpoint()
-    def bis(df: DataFrame) = graft.CacheOps.broadcastIfSmall(spark, df, bd)
+    val bd = s.checkpoint(banded)
+    def bis(df: DataFrame) = CacheOps.broadcastIfSmall(spark, df, bd)
     val sized = bd.join(
       bis(bd.groupBy(col("band"), col("bucket"))
         .agg(count(lit(1)).as("bn"),
@@ -289,7 +287,8 @@ object Dedup {
     * shape-specialized here because the fingerprints must ride along for the
     * hamming verify. The same completeness caveat applies: a star pair the
     * ham≤k check rejects is not retried through a member-member edge. */
-  def simhashCandidatePairs(df: DataFrame, maxHam: Int, maxBucket: Int): DataFrame = {
+  def simhashCandidatePairs(df: DataFrame, maxHam: Int, maxBucket: Int): DataFrame =
+    CacheOps.scope { s =>
     // pigeonhole: with 4 disjoint 16-bit segments, two fingerprints within
     // hamming distance 3 MUST agree on at least one whole segment (3 differing
     // bits can dirty at most 3 of the 4). The guarantee is maxHam <= segs-1,
@@ -301,14 +300,13 @@ object Dedup {
     // pairs whose fingerprints differ in sign)
     // the segment relation has two consumers (bucket rollup + self-join) —
     // materialize it once and use its measured bytes to gate the broadcast
-    // hints (the boundedPairs discipline; the corpus side is often itself a
-    // stats-less localCheckpoint, e.g. the q78/q79 planted phash table)
+    // hints (the boundedPairs discipline: a checkpoint's carried-over size
+    // estimate can miss the 4x posexplode)
     val spark = df.sparkSession
-    val segs = df.select(col("doc_id"), col("sh"), posexplode(array(
-      (0 until 4).map(s => shiftright(col("sh"), s * 16).bitwiseAND(lit(65535L))): _*)))
-      .toDF("doc_id", "sh", "seg_idx", "seg")
-      .localCheckpoint()
-    def bis(d: DataFrame) = graft.CacheOps.broadcastIfSmall(spark, d, segs)
+    val segs = s.checkpoint(df.select(col("doc_id"), col("sh"), posexplode(array(
+      (0 until 4).map(i => shiftright(col("sh"), i * 16).bitwiseAND(lit(65535L))): _*)))
+      .toDF("doc_id", "sh", "seg_idx", "seg"))
+    def bis(d: DataFrame) = CacheOps.broadcastIfSmall(spark, d, segs)
     val sized = segs.join(
       bis(segs.groupBy(col("seg_idx"), col("seg"))
         .agg(count(lit(1)).as("bn"),
@@ -341,85 +339,53 @@ object Dedup {
     * a vertex takes the min of its label and its neighbors' labels; rounds
     * continue until a fixpoint (≤ graph diameter, which for near-dup graphs
     * is tiny — dup clusters are dense). Each round is ONE shuffle on vertex
-    * id (edge join + groupBy min) and ONE driver action: the eager
-    * localCheckpoint that materializes the round ALSO carries the
-    * convergence signal, via an accumulator counting label decreases inside
-    * the round's own job (the round-4 version ran a second join+count action
-    * per round just to detect convergence). A retried task can over-count
-    * the accumulator, never under-count — and only exact 0 means anything,
-    * so over-counting costs at most one extra (no-op) round. Edges and
-    * labels are materialized per round so the loop's lineage cannot grow
-    * unboundedly. At 10^12 rows the standard large-star/small-star variant
-    * halves the round count; the per-round plan here is already its building
-    * block. No data collects to the driver.
-    *
-    * Block hygiene: superseded label rounds and the edge set are freed
-    * eagerly ([[graft.CacheOps.freeLocalCheckpoint]]); the final rollup is
-    * itself eagerly checkpointed so the LAST label set can be freed before
-    * returning — the returned frame holds only the O(components) rollup,
-    * reclaimed by the ContextCleaner once the caller drops it (callers
-    * looping over many graphs in one JVM can free it immediately with
-    * `CacheOps.freeLocalCheckpoint`).
+    * id (edge join + groupBy min) on [[CacheOps.Scope.fixpoint]]; the
+    * round's eager checkpoint also carries the convergence signal, via an
+    * accumulator counting label decreases inside the round's own job. A
+    * retried task can over-count the accumulator, never under-count — and
+    * only exact 0 means anything, so over-counting costs at most one extra
+    * (no-op) round. At 10^12 rows the large-star/small-star variant
+    * ([[dupComponentsStars]]) cuts the round count; the per-round plan here
+    * is already its building block. No data collects to the driver. The
+    * rollup is checkpointed eagerly so the label set is freed on return.
     *
     * Input: (a, b) candidate pairs with a < b (any of the candidate
     * generators). Output: one row per component with ≥2 members. */
-  def dupComponents(pairs: DataFrame, maxRounds: Int = 64): DataFrame = {
-    val labels = componentLabels(pairs, maxRounds)
-    val rollup = labels.groupBy(col("label"))
+  def dupComponents(pairs: DataFrame, maxRounds: Int = 64): DataFrame = CacheOps.scope { s =>
+    s.checkpoint(componentLabels(pairs, maxRounds).groupBy(col("label"))
       .agg(count(lit(1)).as("n_docs"), max(col("doc_id")).as("max_doc"))
-      .select(col("label").as("component"), col("n_docs"), col("max_doc"))
-      .localCheckpoint() // eager, so the full label set can be freed now
-    graft.CacheOps.freeLocalCheckpoint(labels)
-    rollup
+      .select(col("label").as("component"), col("n_docs"), col("max_doc")))
   }
 
   /** The hash-min label-propagation loop itself (the engine under
     * [[dupComponents]] and [[dedupDecision]] — ONE definition, so a decision
     * list can never disagree with the component rollup it summarizes).
     * Returns the eagerly-checkpointed (doc_id, label) frame covering every
-    * vertex that appears in a pair; the caller owns the checkpoint and must
-    * free it ([[graft.CacheOps.freeLocalCheckpoint]]) once its derived frames
-    * are materialized. Convergence/refusal semantics documented on
+    * vertex that appears in a pair; the checkpoint passes to the caller's
+    * [[CacheOps.scope]]. Convergence/refusal semantics documented on
     * [[dupComponents]]. */
-  def componentLabels(pairs: DataFrame, maxRounds: Int = 64): DataFrame = {
+  def componentLabels(pairs: DataFrame, maxRounds: Int = 64): DataFrame = CacheOps.scope { s =>
     val spark = pairs.sparkSession
     import spark.implicits._
-    val edges = pairs.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(pairs.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint()
-    // the loop's per-round relations are O(|edges|): run the rounds with
-    // AQE off and a width derived from the edge checkpoint's block bytes
-    // (one job per round instead of one per exchange per round; the width
-    // lookup is driver-side only — this operator's spec pins zero count
-    // actions)
-    graft.CacheOps.withLoopWidth(spark, graft.CacheOps.checkpointWidth(spark, edges)) {
-    var labels: DataFrame = edges.select(col("u").as("doc_id")).distinct()
-      .withColumn("label", col("doc_id")).localCheckpoint()
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < maxRounds) {
-      val acc = spark.sparkContext.longAccumulator(s"graft.cc.decreases.r$rounds")
-      val nbrMin = edges.join(labels, edges("v") === labels("doc_id"))
-        .groupBy(col("u")).agg(min(col("label")).as("nbr_min"))
-      val next = labels.as("l").join(nbrMin, col("l.doc_id") === col("u"), "left")
-        .select(col("l.doc_id").as("doc_id"), col("l.label").as("old_label"),
-          least(col("l.label"), coalesce(col("nbr_min"), col("l.label"))).as("label"))
-        .as[(Long, Long, Long)]
-        .map { case (id, old, nw) => if (nw < old) acc.add(1L); (id, nw) }
-        .toDF("doc_id", "label")
-        .localCheckpoint() // eager: this materialization populates `acc`
-      changed = acc.value
-      graft.CacheOps.freeLocalCheckpoint(labels) // superseded round's blocks
-      labels = next
-      rounds += 1
-    }
+    val edges = s.checkpoint(pairs.select(col("a").as("u"), col("b").as("v"))
+      .unionByName(pairs.select(col("b").as("u"), col("a").as("v"))))
     // an unconverged exit would silently split real components (under-dedup
-    // with no signal) — refuse instead; near-dup graphs converge in a few
-    // rounds, so hitting the cap means the input is not a near-dup graph
-    require(changed == 0,
-      s"dupComponents did not converge within $maxRounds rounds (diameter too large)")
-    graft.CacheOps.freeLocalCheckpoint(edges) // callers read only `labels`
-    labels
+    // with no signal), so the driver refuses instead; near-dup graphs
+    // converge in a few rounds, so hitting the cap means the input is not a
+    // near-dup graph
+    s.fixpoint("componentLabels", maxRounds, s.checkpoint(
+        edges.select(col("u").as("doc_id")).distinct().withColumn("label", col("doc_id")))) {
+      (labels, round) =>
+        val acc = spark.sparkContext.longAccumulator(s"graft.cc.decreases.r$round")
+        val nbrMin = edges.join(labels, edges("v") === labels("doc_id"))
+          .groupBy(col("u")).agg(min(col("label")).as("nbr_min"))
+        val next = s.checkpoint(labels.as("l").join(nbrMin, col("l.doc_id") === col("u"), "left")
+          .select(col("l.doc_id").as("doc_id"), col("l.label").as("old_label"),
+            least(col("l.label"), coalesce(col("nbr_min"), col("l.label"))).as("label"))
+          .as[(Long, Long, Long)]
+          .map { case (id, old, nw) => if (nw < old) acc.add(1L); (id, nw) }
+          .toDF("doc_id", "label")) // eager: this materialization populates `acc`
+        (next, acc.value == 0)
     }
   }
 
@@ -435,21 +401,18 @@ object Dedup {
     * dup-group members (a small fraction of any real corpus — label
     * propagation's output), never over the full table; singletons join
     * against the materialized O(dup members) decision frame with a
-    * left_anti (no shuffle of text, ids only). The label checkpoint is
-    * freed as soon as the decided frame is materialized; callers looping
-    * in one JVM can free the returned frame's (small) checkpoint too. */
-  def dedupDecision(spark: SparkSession, dir: String): DataFrame = {
+    * left_anti (no shuffle of text, ids only). The pair and label
+    * checkpoints are freed once the decided frame is materialized. */
+  def dedupDecision(spark: SparkSession, dir: String): DataFrame = CacheOps.scope { s =>
     val pairs = minhashLsh(spark, dir, maxBucket = Int.MaxValue)
     val labels = componentLabels(pairs)
     val docs = table(spark, dir, "documents")
       .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n_tokens"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("label")).orderBy(col("n_tokens").desc, col("doc_id"))
-    val decided = docs.join(labels, Seq("doc_id"))
+    val decided = s.checkpoint(docs.join(labels, Seq("doc_id"))
       .withColumn("keep", when(row_number().over(w) === 1, 1L).otherwise(0L))
-      .select(col("doc_id"), col("label").as("component"), col("n_tokens"), col("keep"))
-      .localCheckpoint() // eager: O(dup members); lets the label set go now
-    graft.CacheOps.freeLocalCheckpoint(labels)
+      .select(col("doc_id"), col("label").as("component"), col("n_tokens"), col("keep")))
     val singles = docs.join(decided.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("doc_id").as("component"), col("n_tokens"),
         lit(1L).as("keep"))
@@ -467,10 +430,11 @@ object Dedup {
     * no RNG state): < 9000 train, < 9500 val, else test.
     *
     * Scale shape: split derivation for dup members runs over the
-    * O(dup members) label frame and is materialized there (checkpoint freed
-    * eagerly); the corpus-wide remainder is one left_anti on ids plus a
-    * per-row codegen hash — no shuffle wider than the label join. */
-  def leakageSafeSplit(spark: SparkSession, dir: String): DataFrame = {
+    * O(dup members) label frame and is materialized there (pair and label
+    * checkpoints freed on return); the corpus-wide remainder is one
+    * left_anti on ids plus a per-row codegen hash — no shuffle wider than
+    * the label join. */
+  def leakageSafeSplit(spark: SparkSession, dir: String): DataFrame = CacheOps.scope { s =>
     import graft.functions.SeedExprs
     val SplitSalt = 7777777L
     def withSplit(df: DataFrame): DataFrame = df
@@ -479,10 +443,8 @@ object Dedup {
         .when(col("h_bp") < 9500L, "val").otherwise("test"))
     val pairs = minhashLsh(spark, dir, maxBucket = Int.MaxValue)
     val labels = componentLabels(pairs)
-    val dupSplits = withSplit(
-        labels.select(col("doc_id"), col("label").as("component")))
-      .localCheckpoint() // eager: O(dup members); lets the label set go now
-    graft.CacheOps.freeLocalCheckpoint(labels)
+    val dupSplits = s.checkpoint(withSplit(
+        labels.select(col("doc_id"), col("label").as("component"))))
     val singles = withSplit(
       table(spark, dir, "documents").select(col("doc_id"))
         .join(dupSplits.select(col("doc_id")), Seq("doc_id"), "left_anti")
@@ -508,21 +470,13 @@ object Dedup {
     *    (and itself) to that minimum.
     *
     * Both emit canonical (lo < hi) edges, each round is two
-    * groupBy-min + join shuffles, per-round frames are localCheckpoint'd
-    * and freed like the hash-min loop. Fixpoint = the edge set is stable,
-    * at which point edges ARE the component stars. */
-  def dupComponentsStars(pairs: DataFrame, maxRounds: Int = 64): DataFrame = {
-    var edges = pairs
+    * groupBy-min + join shuffles on [[CacheOps.Scope.fixpoint]]. Fixpoint =
+    * the edge set is stable, at which point edges ARE the component stars. */
+  def dupComponentsStars(pairs: DataFrame, maxRounds: Int = 64): DataFrame = CacheOps.scope { s =>
+    val init = s.checkpoint(pairs
       .select(least(col("a"), col("b")).as("lo"), greatest(col("a"), col("b")).as("hi"))
-      .filter(col("lo") =!= col("hi")).distinct().localCheckpoint()
-    val spark = pairs.sparkSession
-    // AQE off + checkpoint-bytes-derived width for the rounds: star
-    // contraction never grows the edge set, so the initial checkpoint
-    // bounds every round's relations
-    graft.CacheOps.withLoopWidth(spark, graft.CacheOps.checkpointWidth(spark, edges)) {
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
+      .filter(col("lo") =!= col("hi")).distinct())
+    val stars = s.fixpoint("dupComponentsStars", maxRounds, init) { (edges, _) =>
       // LARGE-STAR: m(u) = min over Γ(u) ∪ {u}; emit (m, v) for v ∈ Γ(u), v > u.
       // m ≤ u < v keeps edges canonical by construction.
       val adj = edges.select(col("lo").as("u"), col("hi").as("v"))
@@ -530,39 +484,26 @@ object Dedup {
       val mins = adj.groupBy(col("u")).agg(min(col("v")).as("mn"))
         .select(col("u"), least(col("u"), col("mn")).as("m"))
       // lazy: materialized by ss's eager checkpoint below — one job/round
-      val ls = adj.join(mins, Seq("u")).filter(col("v") > col("u"))
-        .select(col("m").as("lo"), col("v").as("hi")).distinct().localCheckpoint(false)
+      val ls = s.checkpoint(adj.join(mins, Seq("u")).filter(col("v") > col("u"))
+        .select(col("m").as("lo"), col("v").as("hi")).distinct(), eager = false)
       // SMALL-STAR over the large-star output: direct each edge to its
       // larger endpoint u with smaller neighbor set N(u); m = min(N(u));
       // emit (m, v) for v ∈ N(u) ∪ {u}, v ≠ m (m < v keeps it canonical)
       val dir = ls.select(col("hi").as("u"), col("lo").as("v"))
       val mins2 = dir.groupBy(col("u")).agg(min(col("v")).as("mn"))
-      val ss = dir.join(mins2, Seq("u")).filter(col("v") =!= col("mn"))
+      val ss = s.checkpoint(dir.join(mins2, Seq("u")).filter(col("v") =!= col("mn"))
         .select(col("mn").as("lo"), col("v").as("hi"))
         .unionByName(mins2.select(col("mn").as("lo"), col("u").as("hi")))
-        .distinct().localCheckpoint()
-      graft.CacheOps.freeLocalCheckpoint(ls)
+        .distinct())
       // fixpoint test: edge sets equal — BOTH exceptAll directions unioned
-      // into one relation probed with a single isEmpty action (the round-5
-      // shape ran two actions per round; dupComponents' in-job accumulator
-      // remains the one-action ideal, but an empty-union probe halves the
-      // per-round job count here at zero semantic risk)
-      converged = ss.exceptAll(edges).unionByName(edges.exceptAll(ss)).isEmpty
-      graft.CacheOps.freeLocalCheckpoint(edges)
-      edges = ss
-      rounds += 1
+      // into one relation probed with a single isEmpty action
+      (ss, ss.exceptAll(edges).unionByName(edges.exceptAll(ss)).isEmpty)
     }
-    require(converged,
-      s"dupComponentsStars did not converge within $maxRounds rounds")
     // at fixpoint the edges are component stars: lo = component minimum
-    val rollup = edges.groupBy(col("lo"))
+    s.checkpoint(stars.groupBy(col("lo"))
       .agg((count(lit(1)) + lit(1L)).as("n_docs"),
         greatest(max(col("hi")), first(col("lo"))).as("max_doc"))
-      .select(col("lo").as("component"), col("n_docs"), col("max_doc"))
-      .localCheckpoint()
-    graft.CacheOps.freeLocalCheckpoint(edges)
-    rollup
-    }
+      .select(col("lo").as("component"), col("n_docs"), col("max_doc")))
   }
 
   /** n-gram Jaccard near-dup, exact (the verification-grade variant):
@@ -595,10 +536,9 @@ object Dedup {
     val exc = ex.join(dfok, Seq("g"))
     val n = exc.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     // size-GATED broadcast hint on the build side (CacheOps.broadcastIfSmall
-    // on the checkpoint's measured bytes): exn is a localCheckpoint with no
-    // size statistics, and without a hint the planner shuffle-joins what the
-    // parquet-stats-driven round-5 plan broadcast; the gate never forces a
-    // production-scale broadcast
+    // on the checkpoint's measured bytes): exn keeps only the optimizer's
+    // pre-checkpoint estimate of the explode-and-join, not its real size;
+    // the gate never forces a production-scale broadcast
     val exn = exc.join(n, Seq("doc_id")).localCheckpoint()
     val inter = exn.as("l").join(
       graft.CacheOps.broadcastIfSmall(spark, exn.as("r"), exn),

@@ -343,7 +343,7 @@ object TextOps {
     // the N-docs count action, both sides of the pair self-join) —
     // materialize its scan + distinct exchange once (guide §2.4);
     // size-gated broadcast hint on the self-join build side because the
-    // checkpoint's LogicalRDD carries no size statistics
+    // checkpoint keeps only the optimizer's pre-checkpoint size estimate
     val t = table(spark, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .distinct()

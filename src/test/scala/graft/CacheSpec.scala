@@ -1,27 +1,69 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.GraftTestShim
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.text.Dedup
 
-/** Pins the eager-free guarantee (ADVICE r4): freeLocalCheckpoint must
-  * actually free — and must SAY so, so a Spark plan-wrapping change cannot
-  * silently disable the block hygiene of the iterative operators. */
+/** Checkpoint residue probes: the persisted RDDs of the shared session,
+  * the RDDs a frame's plan reads, and the confs a loop pins. */
+object Residue {
+  def persisted(spark: SparkSession): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  def reads(df: DataFrame): Set[Int] = df.queryExecution.analyzed
+    .collectWithSubqueries { case lr: LogicalRDD => lr.rdd.id }.toSet
+
+  def loopConfs(spark: SparkSession): Seq[String] =
+    Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions").map(spark.conf.get)
+}
+
+/** Pins the scope's block hygiene (ADVICE r4): a scope must actually free
+  * what it owns, and must refuse — loudly — a frame whose blocks it could
+  * not free, so a Spark plan-wrapping change cannot silently disable it. */
 class CacheSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("freeLocalCheckpoint frees a localCheckpoint'd frame and reports it") {
-    import spark.implicits._
-    val df = spark.range(100).toDF("x").localCheckpoint()
-    val rdd = df.queryExecution.analyzed
-      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
-    assert(rdd.getStorageLevel.useMemory || rdd.getStorageLevel.useDisk)
-    assert(CacheOps.freeLocalCheckpoint(df))
-    assert(rdd.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  test("scope frees its checkpoints on exit and hands on the ones its result reads") {
+    var inner: DataFrame = null
+    val out = CacheOps.scope { s =>
+      inner = s.checkpoint(spark.range(100).toDF("x"))
+      s.checkpoint(spark.range(10).toDF("y"))
+    }
+    val innerRdd = inner.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
+    val outRdd = out.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
+    assert(innerRdd.getStorageLevel == StorageLevel.NONE)
+    assert(outRdd.getStorageLevel.useMemory || outRdd.getStorageLevel.useDisk)
+    outRdd.unpersist(false)
   }
 
-  test("freeLocalCheckpoint returns false (does not throw) on a non-checkpointed plan") {
-    assert(!CacheOps.freeLocalCheckpoint(spark.range(10).toDF("x")))
+  test("scope refuses a plan that is not a checkpoint") {
+    val ex = intercept[IllegalStateException] {
+      CacheOps.scope(s => s.own(spark.range(10).toDF("x")))
+    }
+    assert(ex.getMessage.contains("LogicalRDD"))
+  }
+}
+
+/** Every gate query built on the fixed-point loops or componentLabels
+  * returns holding only the checkpoints its own plan reads, and prints
+  * nothing (a free that cannot engage must not degrade to a warning). */
+class LoopResidueSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+
+  for (q <- Seq("q63_dup_components", "q67_dup_components_stars", "q70_dedup_decision",
+      "q72_leakage_safe_split", "q73_semdedup", "q79_phash_dup_decisions", "q109_pagerank",
+      "q125_kcore", "q131_grid_clusters", "q142_tree_depths", "q173_sssp")) {
+    test(s"$q leaves only blocks its result reads") {
+      val before = Residue.persisted(spark)
+      val err = new java.io.ByteArrayOutputStream()
+      val out = Console.withErr(err)(SparkEntry.queries(q)(spark, "/root/testdata/sf0.001"))
+      val stranded = Residue.persisted(spark) -- before -- Residue.reads(out)
+      assert(stranded.isEmpty, s"stranded RDDs $stranded")
+      assert(err.size == 0, err.toString)
+    }
   }
 }
 
@@ -57,13 +99,7 @@ class DupComponentsSpec extends AnyFunSuite {
     spark.listenerManager.register(listener)
     try {
       val out = Dedup.dupComponents(pairs)
-      // the listener bus is async: poll until quiet (stable across 4 polls)
-      var last = -1; var stable = 0; var waited = 0
-      while (stable < 4 && waited < 5000) {
-        Thread.sleep(50); waited += 50
-        val cur = names.size()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
+      GraftTestShim.drainListenerBus(spark.sparkContext)
       val evs = names.toArray(Array.empty[String]).toSeq
       assert(evs.count(_ == "localCheckpoint") == 8,
         s"expected 8 localCheckpoint actions (1/round + 3), saw $evs")
@@ -81,10 +117,15 @@ class DupComponentsSpec extends AnyFunSuite {
   }
 
   test("diameter over the round cap trips the loud refusal, never a silent split") {
+    val before = Residue.persisted(spark)
+    val confs = Residue.loopConfs(spark)
     val ex = intercept[IllegalArgumentException] {
       Dedup.dupComponents(pathPairs(13), maxRounds = 13).collect()
     }
     assert(ex.getMessage.contains("did not converge"))
+    // the refusal frees the loop's checkpoints and restores the session confs
+    assert(Residue.persisted(spark) -- before == Set.empty)
+    assert(Residue.loopConfs(spark) == confs)
   }
 
   test("large/small-star converges on a 200-edge path where hash-min's cap refuses") {

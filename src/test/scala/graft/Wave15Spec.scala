@@ -53,10 +53,15 @@ class Wave15Spec extends AnyFunSuite {
     assert(got == expect && got.nonEmpty)
     // the refusal path: the fixture needs 8 peel rounds, so a cap of 2 must
     // throw loudly rather than return a not-yet-fixed superset
+    val before = Residue.persisted(spark)
+    val confs = Residue.loopConfs(spark)
     val ex = intercept[IllegalArgumentException] {
       Graph.kCore(spark, n, m, k, maxRounds = 2).collect()
     }
     assert(ex.getMessage.contains("did not converge"))
+    // the refusal frees the loop's checkpoints and restores the session confs
+    assert(Residue.persisted(spark) -- before == Set.empty)
+    assert(Residue.loopConfs(spark) == confs)
   }
 
   test("inverted query: conjunctive semantics against a direct per-doc scan") {
