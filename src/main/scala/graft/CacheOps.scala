@@ -51,6 +51,9 @@ object CacheOps {
 
   private val enclosing = ThreadLocal.withInitial[Option[Scope]](() => None)
 
+  /** The `op` of the [[Scope.fixpoint]] running on this thread, if any. */
+  private val looping = ThreadLocal.withInitial[Option[String]](() => None)
+
   /** Runs `body` with a fresh [[Scope]]. On exit — including on a throw —
     * every checkpoint the scope owns is freed, except those the returned
     * frame still reads: those pass to the enclosing scope, or, outside any
@@ -117,9 +120,15 @@ object CacheOps {
       * a rollup over the result runs under them too. After each round every
       * checkpoint that is neither a loop input (live at the call and not
       * read by `init`) nor read by `next` is freed — the superseded state
-      * and the round's scratch — so the loop holds O(one round) of blocks. */
+      * and the round's scratch — so the loop holds O(one round) of blocks.
+      *
+      * Not reentrant: the confs are session-global, so a `fixpoint` called
+      * while another runs on the same thread (from its `init` or `step`)
+      * throws before it sets any conf. */
     def fixpoint(op: String, maxRounds: Int, init: => DataFrame)
                 (step: (DataFrame, Int) => (DataFrame, Boolean)): DataFrame = {
+      looping.get.foreach(outer => throw new IllegalStateException(
+        s"$op: fixpoint called while the $outer fixpoint runs on this thread"))
       val spark = SparkSession.active
       val width = math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong,
         rddBytes(spark, live.keySet) / (1L << 20)))
@@ -129,20 +138,23 @@ object CacheOps {
       val restoreEarlier = restoreConfs
       restoreConfs = () => { saved.foreach { case (k, v) => spark.conf.set(k, v) }; restoreEarlier() }
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      var state = init
-      val inputs = live.keySet.toSet -- referenced(state)
-      var done = false
-      var round = 0
-      while (!done && round < maxRounds) {
-        round += 1
-        val (next, d) = step(state, round)
-        free(inputs ++ referenced(next))
-        state = next
-        done = d
-      }
-      if (!done) throw new IllegalArgumentException(
-        s"$op did not converge within $maxRounds rounds")
-      state
+      looping.set(Some(op))
+      try {
+        var state = init
+        val inputs = live.keySet.toSet -- referenced(state)
+        var done = false
+        var round = 0
+        while (!done && round < maxRounds) {
+          round += 1
+          val (next, d) = step(state, round)
+          free(inputs ++ referenced(next))
+          state = next
+          done = d
+        }
+        if (!done) throw new IllegalArgumentException(
+          s"$op did not converge within $maxRounds rounds")
+        state
+      } finally looping.set(None)
     }
   }
 }

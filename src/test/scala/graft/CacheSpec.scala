@@ -45,6 +45,29 @@ class CacheSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("LogicalRDD"))
   }
+
+  test("a fixpoint inside a running fixpoint is refused before it sets any conf") {
+    val session = Residue.loopConfs(spark)
+    var pinned, afterRefusal = Seq.empty[String]
+    var refusal = ""
+    CacheOps.scope { s =>
+      s.fixpoint("outer", 1, s.checkpoint(spark.range(10).toDF("x"))) { (state, _) =>
+        // megabytes of live checkpoint: an inner loop would pin a wider
+        // shuffle than the outer loop's 1 partition
+        s.checkpoint(spark.range(300000).toDF("y"))
+        pinned = Residue.loopConfs(spark)
+        refusal = intercept[IllegalStateException] {
+          s.fixpoint("inner", 1, state)((st, _) => (st, true))
+        }.getMessage
+        afterRefusal = Residue.loopConfs(spark)
+        (state, true)
+      }
+    }
+    assert(refusal.contains("inner") && refusal.contains("outer"), refusal)
+    assert(pinned == Seq("false", "1"))
+    assert(afterRefusal == pinned)
+    assert(Residue.loopConfs(spark) == session)
+  }
 }
 
 /** Every gate query built on the fixed-point loops or componentLabels
