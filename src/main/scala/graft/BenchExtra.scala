@@ -62,8 +62,8 @@ object BenchExtra {
         val t0 = System.nanoTime()
         val rows = fn(spark, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9
-        // listener events are async; give them a beat before reading counters
-        Thread.sleep(200)
+        // listener events are async: read counters only once all are delivered
+        org.apache.spark.sql.GraftShim.drainListenerBus(spark.sparkContext)
         println(f"[$n] rep $i: $dt%.3f s  rows=$rows  jobs=${jobs.get}  " +
           f"stages=${stages.get}  stageWallMs=${stageMs.get}  taskMs=${taskMs.get}")
         if (detail && i == reps) {

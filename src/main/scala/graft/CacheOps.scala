@@ -3,7 +3,7 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Block management for `localCheckpoint()`-materialized frames.
@@ -13,37 +13,37 @@ import org.apache.spark.sql.execution.LogicalRDD
   * invoked repeatedly in one JVM (bench reps, the gate runner) therefore make
   * their checkpoints inside a [[scope]], which frees them eagerly, and run
   * their fixed-point loops through [[Scope.fixpoint]].
+  *
+  * Statistics contract: a materialized checkpoint's plan reports its
+  * measured block bytes (memory + disk) as its size, not the optimizer's
+  * pre-checkpoint estimate that Spark carries over, so the planner's
+  * `autoBroadcastJoinThreshold` decides every broadcast over it from real
+  * bytes. Eager checkpoints are sized when made; a fixpoint round's lazy
+  * one once the round's action has materialized it. A checkpoint whose
+  * storage reports no bytes keeps Spark's unknown size
+  * (`spark.sql.defaultSizeInBytes`), never 0.
   */
 object CacheOps {
-
-  /** Materialized byte size of a localCheckpoint'd frame — a pure
-    * driver-side storage-info lookup (no job; 0 for non-checkpoints or
-    * not-yet-materialized ones). */
-  def checkpointBytes(spark: SparkSession, df: DataFrame): Long =
-    df.queryExecution.analyzed match {
-      case lr: LogicalRDD => rddBytes(spark, Set(lr.rdd.id))
-      case _ => 0L
-    }
 
   private def rddBytes(spark: SparkSession, ids: collection.Set[Int]): Long =
     spark.sparkContext.getRDDStorageInfo.filter(i => ids.contains(i.id))
       .map(i => i.memSize + i.diskSize).sum
 
-  /** Size-GATED broadcast hint for plans built over localCheckpoints.
-    * A checkpoint's LogicalRDD keeps the optimizer's PRE-checkpoint size
-    * estimate, not its materialized size, so an estimate far off the real
-    * bytes (an explode, a self-join) carries through the checkpoint; a
-    * blanket `broadcast()` hint would FORCE an unbounded broadcast at
-    * production scale. This gates the hint on the MEASURED materialized
-    * size of `basis` (the checkpoint the relation derives from): under
-    * `maxBasisBytes` (default 64 MB — guide §3.1's "a few hundred MB is
-    * usually fine" with margin for derived-relation expansion) the hint is
-    * applied; above it the planner's own choice stands. */
-  def broadcastIfSmall(spark: SparkSession, df: DataFrame,
-                       basis: DataFrame, maxBasisBytes: Long = 64L << 20): DataFrame =
-    if (checkpointBytes(spark, basis) <= maxBasisBytes)
-      org.apache.spark.sql.functions.broadcast(df)
-    else df
+  /** The checkpoint's LogicalRDD. Throws when the plan is anything else —
+    * its blocks could never be freed or sized, and a silent no-op would let
+    * that go unnoticed. */
+  private def logicalRdd(cp: DataFrame): LogicalRDD = cp.queryExecution.analyzed match {
+    case lr: LogicalRDD => lr
+    case other => throw new IllegalStateException(
+      s"expected a checkpoint's LogicalRDD plan, got ${other.getClass.getSimpleName}")
+  }
+
+  /** `cp` with its measured block bytes as its plan's size statistic. */
+  private def measured(cp: DataFrame): DataFrame = {
+    val lr = logicalRdd(cp)
+    val bytes = rddBytes(cp.sparkSession, Set(lr.rdd.id))
+    GraftShim.withSizeInBytes(cp, lr, Option.when(bytes > 0)(BigInt(bytes)))
+  }
 
   /** RDD ids of every checkpoint `df`'s analyzed plan reads. */
   private def referenced(df: DataFrame): Set[Int] =
@@ -79,17 +79,18 @@ object CacheOps {
     private val live = mutable.LinkedHashMap[Int, RDD[_]]()
     private var restoreConfs: () => Unit = () => ()
 
-    /** `df.localCheckpoint(eager)`, owned by this scope. */
-    def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame =
-      own(df.localCheckpoint(eager))
+    /** `df.localCheckpoint(eager)`, owned by this scope; an eager one is
+      * [[measured]]. */
+    def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame = {
+      val cp = own(df.localCheckpoint(eager))
+      if (eager) measured(cp) else cp
+    }
 
-    /** Records the RDD under an already-checkpointed frame. Throws when the
-      * plan is not a bare [[LogicalRDD]] — its blocks could never be freed,
-      * and a silent no-op would let the leak go unnoticed. */
-    private[graft] def own(cp: DataFrame): DataFrame = cp.queryExecution.analyzed match {
-      case lr: LogicalRDD => live(lr.rdd.id) = lr.rdd; cp
-      case other => throw new IllegalStateException(
-        s"expected a checkpoint's LogicalRDD plan, got ${other.getClass.getSimpleName}")
+    /** Records the RDD under an already-checkpointed frame. */
+    private[graft] def own(cp: DataFrame): DataFrame = {
+      val lr = logicalRdd(cp)
+      live(lr.rdd.id) = lr.rdd
+      cp
     }
 
     /** Frees every owned checkpoint whose RDD id is not in `keep`. */
@@ -111,8 +112,9 @@ object CacheOps {
       *
       * Contract: each round makes ONE driver action — the eager checkpoint
       * of `next`, or a lazy one that the round's convergence action
-      * materializes. The loop runs with AQE off (under AQE every exchange of
-      * a round's plan is its own job) and `spark.sql.shuffle.partitions`
+      * materializes; the next round reads `next` [[measured]]. The loop
+      * runs with AQE off (under AQE every exchange of a round's plan is its
+      * own job) and `spark.sql.shuffle.partitions`
       * pinned to ~1 MB per partition of the scope's live checkpoint bytes
       * when the call starts (capped at the session parallelism), so the
       * loop's inputs must be materialized before the call. `init` is
@@ -148,7 +150,7 @@ object CacheOps {
           round += 1
           val (next, d) = step(state, round)
           free(inputs ++ referenced(next))
-          state = next
+          state = measured(next)
           done = d
         }
         if (!done) throw new IllegalArgumentException(

@@ -486,17 +486,17 @@ object SparkEntry {
     // the documents table); the oracle is candidate-free all-pairs, so the
     // hash proves the bucketed path's recall is exactly 1.0 at ham<=3.
     // corpus materialized once — consumed by both sides of the segment join
-    "q78_phash_neardup" -> ((s: SparkSession, d: String) =>
-      graft.multimodal.PhashDedup.phashNearDupPairs(
+    "q78_phash_neardup" -> ((s: SparkSession, d: String) => CacheOps.scope(c =>
+      graft.multimodal.PhashDedup.phashNearDupPairs(c.checkpoint(
         graft.multimodal.PhashDedup.plantedPhashCorpus(
-          s, graft.Session.table(s, d, "documents").count()).localCheckpoint())),
+          s, graft.Session.table(s, d, "documents").count()))))),
     // per-image dedup decision + caption-conflict flag (components over the
     // phash pair graph; conflicts = near-dup images with disagreeing
     // captions — label noise to quarantine, not silently dedup)
-    "q79_phash_dup_decisions" -> ((s: SparkSession, d: String) =>
-      graft.multimodal.PhashDedup.phashDupDecisions(
+    "q79_phash_dup_decisions" -> ((s: SparkSession, d: String) => CacheOps.scope(c =>
+      graft.multimodal.PhashDedup.phashDupDecisions(c.checkpoint(
         graft.multimodal.PhashDedup.plantedPhashCorpus(
-          s, graft.Session.table(s, d, "documents").count()).localCheckpoint())),
+          s, graft.Session.table(s, d, "documents").count()))))),
     "q31_ann_lsh" -> ((s: SparkSession, d: String) => Ann.lshTopK(s, d)),
     // IVF through its inverted-list plan at FULL probe: every list is
     // scanned, so the relation must equal brute-force exactly (q30's oracle)
@@ -535,9 +535,8 @@ object SparkEntry {
     // three times (banding + both sides of the vector join-back), and
     // re-running the generator through every consumer tripled the plan and
     // dominated the gate's wall time (8.2 s -> see PLANS.md r5)
-    "q65_ann_neardup_lsh_tier" -> ((s: SparkSession, _: String) =>
-      Ann.cosineNearDupLshTier(Ann.plantedNearDupVecs(s, 900).localCheckpoint(),
-        minCos = 0.95)),
+    "q65_ann_neardup_lsh_tier" -> ((s: SparkSession, _: String) => CacheOps.scope(c =>
+      Ann.cosineNearDupLshTier(c.checkpoint(Ann.plantedNearDupVecs(s, 900)), minCos = 0.95))),
     // image pipeline (north_rule flagship; input synthesized deterministically)
     "q32_image_tile_pivot" -> ((s: SparkSession, _: String) => ImagePipeline.run(s, 2000L, 16)),
     // the same rollup with teams DISCOVERED dynamically via pivot() over the

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.CacheOps
 import graft.Session.table
 
 /** Frequent-pattern mining: pairwise co-occurrence with support and lift —
@@ -19,16 +20,16 @@ import graft.Session.table
 object Baskets {
 
   /** Gate query (q161): item pairs with support ≥ minSup, plus exact lift. */
-  def pairRules(spark: SparkSession, dir: String, minSup: Long = 3L): DataFrame = {
+  def pairRules(spark: SparkSession, dir: String, minSup: Long = 3L): DataFrame =
+    CacheOps.scope { s =>
     // the distinct basket relation has FOUR consumers (item counts, order
     // total, both sides of the pair self-join) — materialize its scan +
     // distinct exchange once (guide §2.4), not once per consumer. (A
     // session-width pre-partitioning on the basket key was tried and
     // reverted: it made every SMALL consumer pay a 32-task stage and cost
     // more in scheduling than the wider pair join saved.)
-    val b = table(spark, dir, "lineitem")
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      .localCheckpoint()
+    val b = s.checkpoint(table(spark, dir, "lineitem")
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct())
     val item = b.groupBy(col("p")).agg(count(lit(1)).as("cnt"))
     val nOrders = b.select(countDistinct(col("o")).as("n_orders"))
     val right = b.select(col("o"), col("p").as("pb"))

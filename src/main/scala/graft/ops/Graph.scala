@@ -112,6 +112,7 @@ object Graph {
     * eager rank checkpoint per round. */
   def pageRank(spark: SparkSession, n: Int = 250, m: Int = 1500,
                iters: Int = 10): DataFrame = CacheOps.scope { s =>
+    require(iters >= 1, s"pageRank needs iters >= 1, got iters=$iters")
     val dedges = synthDraws(spark, n, m).distinct()
     val outdeg = dedges.groupBy("u").agg(count(lit(1)).as("od"))
     val edgesOd = s.checkpoint(dedges.join(outdeg, "u"))

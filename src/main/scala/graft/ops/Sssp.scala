@@ -24,6 +24,7 @@ object Sssp {
     * same rounds as MATERIALIZED CTEs. */
   def boundedSssp(spark: SparkSession, dir: String, hops: Int = 6): DataFrame =
     CacheOps.scope { s =>
+      require(hops >= 1, s"boundedSssp needs hops >= 1, got hops=$hops")
       val edges = s.checkpoint(table(spark, dir, "events").select(
           col("user_id").as("src"),
           ((col("event_id") * 1103515245L) % 1000L).as("dst"),

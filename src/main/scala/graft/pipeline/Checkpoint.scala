@@ -3,6 +3,7 @@ package graft.pipeline
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.CacheOps
 import graft.synth.{ImageSynth, Geotag}
 import graft.index.Hex
 
@@ -164,19 +165,19 @@ object Checkpoint {
     * as-of read returned exactly the rows committed at that snapshot: no
     * epoch-1 leakage, no epoch-0 loss. */
   def timeTravelGate(spark: SparkSession, n0: Long, n1: Long, asOf: Int = 0,
-                     buckets: Int = 8, parts: Int = 8): DataFrame = {
+                     buckets: Int = 8, parts: Int = 8): DataFrame = CacheOps.scope { s =>
     val dir = Files.createTempDirectory("graft_ckpt_tt")
     try {
       runEpoch(spark, 0, 0L, n0, dir.toString, buckets, parts)
       runEpoch(spark, 1, n0, n1, dir.toString, buckets, parts)
       val idx = substring(col("image_id"), 4, 16).cast("long")
-      spark.read.parquet(s"$dir/data")
+      // eager: the scratch store is deleted on return
+      s.checkpoint(spark.read.parquet(s"$dir/data")
         .where(col("epoch") <= asOf)
         .select(col("bucket"), idx.as("idx"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("row_count"), sum(col("idx")).as("sum_idx"),
-          min(col("idx")).as("min_idx"), max(col("idx")).as("max_idx"))
-        .localCheckpoint() // eager: the scratch store is deleted on return
+          min(col("idx")).as("min_idx"), max(col("idx")).as("max_idx")))
     } finally deleteRecursively(dir)
   }
 

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.CacheOps
 import graft.synth.{ImageSynth, Geotag}
 import graft.index.{Hex, Quadkey, S2Like}
 import graft.spatial.{Boundary, BoundaryIndex}
@@ -140,13 +141,13 @@ object ImagePipeline {
     * (At 100 TB pass the known team list to `pivot(col, values)` to skip the
     * discovery job — the output contract is identical.) Absent team cells
     * coalesce to 0 like the reference's zero-initialized accumulators. */
-  def tileTeamPivotDynamic(joined: DataFrame): DataFrame = {
+  def tileTeamPivotDynamic(joined: DataFrame): DataFrame = CacheOps.scope { s =>
     // pre-rollup once on (tile, boundary, team, uid) — fine enough for BOTH
     // the pivot and the distinct-user totals — and materialize it: the two
     // branches would otherwise re-execute the feature scan (same
     // multi-consumer re-execution q45's plan audit caught)
-    val pre = joined.groupBy(col("tile"), col("boundary_id"), col("team"), col("uid"))
-      .agg(count(lit(1)).as("e")).localCheckpoint()
+    val pre = s.checkpoint(joined.groupBy(col("tile"), col("boundary_id"), col("team"), col("uid"))
+      .agg(count(lit(1)).as("e")))
     val p = pre.groupBy(col("tile"), col("boundary_id")).pivot("team").agg(sum("e"))
     val teams = p.columns.filterNot(Set("tile", "boundary_id"))
     val totals = pre.groupBy(col("tile"), col("boundary_id"))
@@ -228,7 +229,8 @@ object ImagePipeline {
     * operate on ~|tiles|·|teams|·2 rows. The pivot's team-discovery pass runs
     * on the pre-rollup, not the feature table; at 100 TB pass the known team
     * list to `pivot(col, values)` and the discovery job disappears. */
-  def tileMeasureMatrix(spark: SparkSession, n: Long, parts: Int = 16): DataFrame = {
+  def tileMeasureMatrix(spark: SparkSession, n: Long, parts: Int = 16): DataFrame =
+    CacheOps.scope { s =>
     import graft.functions.SeedExprs
     val f = pipFiltered(spark, n, parts)
       .withColumn("noun_id", SeedExprs.metaNounId(col("idx")))
@@ -239,20 +241,19 @@ object ImagePipeline {
       floor(graft.spatial.SpatialQueries.haversineKmCol(
         col("lat"), col("lon"), col("lat") + col("dlat"), col("lon") + col("dlon"))
         * lit(1e6) + lit(0.5)).cast("long")).otherwise(0L)
-    val pre = f
+    // the totals / pivot / team_sum branches below each consume this
+    // pre-rollup; without materialization Catalyst re-executes the full
+    // scan+shuffle per branch (verified: 3 scans, no ReusedExchange).
+    // The pre-rollup is ~|tiles|·|teams|·2 rows, so pinning it locally is
+    // the scale-correct trade: ONE pass over the feature table, period.
+    val pre = s.checkpoint(f
       .withColumn("km_e6", kmE6)
       .withColumn("is_b", when(col("noun_id") === 0, 1L).otherwise(0L))
       .withColumn("is_p", when(col("noun_id").isin(3, 4), 1L).otherwise(0L))
       .withColumn("rostered", col("uid") % 5 =!= 0)
       .groupBy(col("tile"), col("team"), col("rostered"))
       .agg(count(lit(1)).as("e"), sum("km_e6").as("km_e6"),
-        sum("is_b").as("b"), sum("is_p").as("p"))
-      // the totals / pivot / team_sum branches below each consume this
-      // pre-rollup; without materialization Catalyst re-executes the full
-      // scan+shuffle per branch (verified: 3 scans, no ReusedExchange).
-      // The pre-rollup is ~|tiles|·|teams|·2 rows, so pinning it locally is
-      // the scale-correct trade: ONE pass over the feature table, period.
-      .localCheckpoint()
+        sum("is_b").as("b"), sum("is_p").as("p")))
     val totals = pre.groupBy(col("tile")).agg(
       sum("e").as("total_features"), sum("km_e6").as("total_km_e6"),
       sum("b").as("total_b"), sum("p").as("total_p"))

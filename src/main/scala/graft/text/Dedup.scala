@@ -161,19 +161,12 @@ object Dedup {
     // AQE's skew-join splitting exactly where a production-scale verify
     // falls back to shuffle joins.)
     val cand = minhashCandidates(signed, bands, k / bands, maxBucket)
-    // exact verification: intersect candidate pairs' shingle-hash sets.
-    // Size-GATED broadcast hints (CacheOps.broadcastIfSmall on the measured
-    // signature-checkpoint bytes) on the candidate list and the exploded
-    // hash relation: `signed` keeps only its pre-checkpoint size estimate,
-    // which says nothing about the explode, and a blanket hint would force
-    // an unbounded broadcast at production corpus sizes. The gate applies
-    // the hint exactly where the bytes prove it fits.
-    def bis(df: DataFrame) = CacheOps.broadcastIfSmall(spark, df, signed)
+    // exact verification: intersect candidate pairs' shingle-hash sets
     val ex = signed.select(col("doc_id"), size(col("shs")).as("n_sh"),
       explode(col("shs")).as("gh"))
     val inter = ex.as("l")
-      .join(bis(cand), col("l.doc_id") === col("a"))
-      .join(bis(ex.as("r")),
+      .join(cand, col("l.doc_id") === col("a"))
+      .join(ex.as("r"),
         col("r.doc_id") === col("b") && col("l.gh") === col("r.gh"))
       .groupBy(col("a"), col("b"), col("l.n_sh").as("na"), col("r.n_sh").as("nb"))
       .agg(count(lit(1)).as("common"))
@@ -218,23 +211,16 @@ object Dedup {
     * there for the fingerprint columns) and the ANN cosine LSH tier. */
   def boundedPairs(banded: DataFrame, maxBucket: Int): DataFrame = CacheOps.scope { s =>
     // the banding relation has two consumers (bucket-size rollup + the
-    // bucket self-join) — materialize it once, and use its MEASURED bytes
-    // to gate the broadcast hints (CacheOps.broadcastIfSmall): a checkpoint
-    // keeps only the optimizer's pre-checkpoint size estimate, which the
-    // band posexplode can miss by orders of magnitude; the gate applies the
-    // hint only while the measured bytes fit — never a forced broadcast of a
-    // production-scale banding. The checkpoint escapes in the lazy result,
-    // to the caller's scope.
-    val spark = banded.sparkSession
+    // bucket self-join) — materialize it once. The checkpoint escapes in the
+    // lazy result, to the caller's scope.
     val bd = s.checkpoint(banded)
-    def bis(df: DataFrame) = CacheOps.broadcastIfSmall(spark, df, bd)
     val sized = bd.join(
-      bis(bd.groupBy(col("band"), col("bucket"))
+      bd.groupBy(col("band"), col("bucket"))
         .agg(count(lit(1)).as("bn"),
-          min(col("doc_id")).as("hub_lo"), max(col("doc_id")).as("hub_hi"))),
+          min(col("doc_id")).as("hub_lo"), max(col("doc_id")).as("hub_hi")),
       Seq("band", "bucket"))
     val small = sized.filter(col("bn") <= maxBucket)
-    val pairwise = small.as("l").join(bis(small.as("r")),
+    val pairwise = small.as("l").join(small.as("r"),
         col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
           col("l.doc_id") < col("r.doc_id"))
       .select(col("l.doc_id").as("a"), col("r.doc_id").as("b"))
@@ -299,22 +285,18 @@ object Dedup {
     // `% 65536` of a negative value is NOT the low 16 bits — that dropped
     // pairs whose fingerprints differ in sign)
     // the segment relation has two consumers (bucket rollup + self-join) —
-    // materialize it once and use its measured bytes to gate the broadcast
-    // hints (the boundedPairs discipline: a checkpoint's carried-over size
-    // estimate can miss the 4x posexplode)
-    val spark = df.sparkSession
+    // materialize it once
     val segs = s.checkpoint(df.select(col("doc_id"), col("sh"), posexplode(array(
       (0 until 4).map(i => shiftright(col("sh"), i * 16).bitwiseAND(lit(65535L))): _*)))
       .toDF("doc_id", "sh", "seg_idx", "seg"))
-    def bis(d: DataFrame) = CacheOps.broadcastIfSmall(spark, d, segs)
     val sized = segs.join(
-      bis(segs.groupBy(col("seg_idx"), col("seg"))
+      segs.groupBy(col("seg_idx"), col("seg"))
         .agg(count(lit(1)).as("bn"),
           min(col("doc_id")).as("hub_lo"), min_by(col("sh"), col("doc_id")).as("hub_lo_sh"),
-          max(col("doc_id")).as("hub_hi"), max_by(col("sh"), col("doc_id")).as("hub_hi_sh"))),
+          max(col("doc_id")).as("hub_hi"), max_by(col("sh"), col("doc_id")).as("hub_hi_sh")),
       Seq("seg_idx", "seg"))
     val small = sized.filter(col("bn") <= maxBucket)
-    val pairwise = small.as("l").join(bis(small.as("r")),
+    val pairwise = small.as("l").join(small.as("r"),
         col("l.seg_idx") === col("r.seg_idx") && col("l.seg") === col("r.seg") &&
           col("l.doc_id") < col("r.doc_id"))
       .select(col("l.doc_id").as("a"), col("r.doc_id").as("b"),
@@ -513,7 +495,7 @@ object Dedup {
     * shingle, count intersection, Jaccard over the CAPPED shingle sets.
     * Bucketed by `source` to bound pairs. */
   def ngramJaccard(spark: SparkSession, dir: String, w: Int = 3, minJ: Double = 0.2,
-                   maxDf: Int = 5): DataFrame = {
+                   maxDf: Int = 5): DataFrame = CacheOps.scope { s =>
     import spark.implicits._
     // distinct shingle HASHES, not strings: the df rollup and both sides of
     // the intersection self-join exchange 8-byte longs instead of w-token
@@ -535,13 +517,8 @@ object Dedup {
       .filter(col("df") <= maxDf).select(col("g"))
     val exc = ex.join(dfok, Seq("g"))
     val n = exc.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    // size-GATED broadcast hint on the build side (CacheOps.broadcastIfSmall
-    // on the checkpoint's measured bytes): exn keeps only the optimizer's
-    // pre-checkpoint estimate of the explode-and-join, not its real size;
-    // the gate never forces a production-scale broadcast
-    val exn = exc.join(n, Seq("doc_id")).localCheckpoint()
-    val inter = exn.as("l").join(
-      graft.CacheOps.broadcastIfSmall(spark, exn.as("r"), exn),
+    val exn = s.checkpoint(exc.join(n, Seq("doc_id")))
+    val inter = exn.as("l").join(exn.as("r"),
         col("l.source") === col("r.source") && col("l.g") === col("r.g") &&
           col("l.doc_id") < col("r.doc_id"))
       .groupBy(col("l.doc_id").as("a"), col("r.doc_id").as("b"),
@@ -637,7 +614,8 @@ object Dedup {
     * distinct shared spans. The q71 gate's oracle joins on the span STRINGS
     * — an independent representation that would catch (not inherit) a 64-bit
     * hash collision. */
-  def spanDup(spark: SparkSession, dir: String, k: Int = 12, maxDf: Int = 64): DataFrame = {
+  def spanDup(spark: SparkSession, dir: String, k: Int = 12, maxDf: Int = 64): DataFrame =
+    CacheOps.scope { s =>
     import spark.implicits._
     val kk = k
     // the df-capped (doc, span-hash) relation feeds BOTH sides of the
@@ -652,9 +630,8 @@ object Dedup {
     // one partitioning end to end
     val dfok = ex.groupBy(col("g")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf).select(col("g"))
-    // size-gated broadcast hint on the build side — see ngramJaccard
-    val exc = ex.join(dfok, Seq("g")).localCheckpoint()
-    exc.as("l").join(graft.CacheOps.broadcastIfSmall(spark, exc.as("r"), exc),
+    val exc = s.checkpoint(ex.join(dfok, Seq("g")))
+    exc.as("l").join(exc.as("r"),
         col("l.g") === col("r.g") && col("l.doc_id") < col("r.doc_id"))
       .groupBy(col("l.doc_id").as("a"), col("r.doc_id").as("b"))
       .agg(count(lit(1)).as("n_spans"))

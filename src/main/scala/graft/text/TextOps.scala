@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.CacheOps
 import graft.Session.table
 
 /** Text-analysis operators for a training-data pipeline over the `documents`
@@ -288,17 +289,16 @@ object TextOps {
     * joins BROADCAST: at 10^12 documents the corpus is scanned twice and
     * never reshuffled — the model-scoring shape (train → broadcast →
     * map-side score) every quality-filter pipeline at scale uses. */
-  def bigramLm(spark: SparkSession, dir: String): DataFrame = {
+  def bigramLm(spark: SparkSession, dir: String): DataFrame = CacheOps.scope { s =>
     // the bigram relation has THREE consumers (both model aggs + the scoring
     // pass) — materialize the scan → split → explode subtree once (guide §2.4)
-    val bg = table(spark, dir, "documents")
+    val bg = s.checkpoint(table(spark, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("ts"))
       .where(size(col("ts")) >= 2)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(1, size(ts)-1), i -> struct(ts[i-1] AS w1, ts[i] AS w2))"))
         .as("p"))
-      .select(col("doc_id"), col("p.w1"), col("p.w2"))
-      .localCheckpoint()
+      .select(col("doc_id"), col("p.w1"), col("p.w2")))
     val cb = bg.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
     val cp = bg.groupBy("w1").agg(count(lit(1)).as("cp"))
     bg.join(broadcast(cb), Seq("w1", "w2"))
@@ -338,19 +338,17 @@ object TextOps {
     * rows — bounded by per-doc vocabulary, not corpus size — and the
     * unigram counts broadcast. cab-floor keeps the output to the
     * statistically meaningful pairs. */
-  def termLift(spark: SparkSession, dir: String, minCab: Long = 25L): DataFrame = {
+  def termLift(spark: SparkSession, dir: String, minCab: Long = 25L): DataFrame =
+    CacheOps.scope { s =>
     // the distinct (doc, term) relation has FOUR consumers (unigram counts,
     // the N-docs count action, both sides of the pair self-join) —
-    // materialize its scan + distinct exchange once (guide §2.4);
-    // size-gated broadcast hint on the self-join build side because the
-    // checkpoint keeps only the optimizer's pre-checkpoint size estimate
-    val t = table(spark, dir, "documents")
+    // materialize its scan + distinct exchange once (guide §2.4)
+    val t = s.checkpoint(table(spark, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val cw = t.groupBy("w").agg(count(lit(1)).as("c"))
     val nd = t.select("doc_id").distinct().count()
-    val pair = t.as("a").join(graft.CacheOps.broadcastIfSmall(spark, t.as("b"), t),
+    val pair = t.as("a").join(t.as("b"),
         col("a.doc_id") === col("b.doc_id") && col("a.w") < col("b.w"))
       .groupBy(col("a.w").as("wa"), col("b.w").as("wb"))
       .agg(count(lit(1)).as("cab"))

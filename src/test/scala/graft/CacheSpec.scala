@@ -1,9 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.GraftTestShim
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.text.Dedup
@@ -68,22 +70,91 @@ class CacheSpec extends AnyFunSuite {
     assert(afterRefusal == pinned)
     assert(Residue.loopConfs(spark) == session)
   }
+
+  /** (measured block bytes of `cp`, its plan's size statistic) */
+  private def sizes(cp: DataFrame): (Long, BigInt) = {
+    val id = cp.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.id
+    (spark.sparkContext.getRDDStorageInfo.filter(_.id == id).map(i => i.memSize + i.diskSize).sum,
+      cp.queryExecution.optimizedPlan.stats.sizeInBytes)
+  }
+
+  private def broadcasts(df: DataFrame): Int = df.queryExecution.sparkPlan.collect {
+    case j: BroadcastHashJoinExec => j
+    case j: BroadcastNestedLoopJoinExec => j
+  }.size
+
+  private val threshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  test("an exploded checkpoint measured over the broadcast threshold is not broadcast") {
+    val exploded = spark.range(1000).toDF("k")
+      .select(col("k"), explode(sequence(lit(1), lit(200))).as("i"))
+    val estimate = exploded.queryExecution.optimizedPlan.stats.sizeInBytes
+    val saved = spark.conf.get(threshold)
+    CacheOps.scope { s =>
+      val cp = s.checkpoint(exploded)
+      val (bytes, stat) = sizes(cp)
+      assert(estimate * 4 < bytes, s"estimate $estimate vs measured $bytes")
+      try {
+        spark.conf.set(threshold, ((estimate + bytes) / 2).toString)
+        assert(broadcasts(spark.range(1L << 30).toDF("k").join(cp, "k")) == 0)
+      } finally spark.conf.set(threshold, saved)
+      assert(stat == BigInt(bytes))
+      spark.emptyDataFrame
+    }
+  }
+
+  test("a join's checkpoint measured under the threshold is broadcast with no hint") {
+    val joined = spark.range(2000).toDF("k").join(spark.range(2000).toDF("k"), "k")
+    assert(joined.queryExecution.optimizedPlan.collectFirst { case j: Join => j.stats.sizeInBytes }
+      .contains(BigInt(16000) * 16000))
+    val estimate = joined.queryExecution.optimizedPlan.stats.sizeInBytes
+    val limit = SQLConf.get.autoBroadcastJoinThreshold
+    CacheOps.scope { s =>
+      val cp = s.checkpoint(joined)
+      val (bytes, stat) = sizes(cp)
+      assert(bytes > 0 && bytes < limit && estimate > limit, s"measured $bytes, limit $limit")
+      assert(broadcasts(spark.range(1L << 30).toDF("k").join(cp, "k")) == 1)
+      assert(stat == BigInt(bytes))
+      spark.emptyDataFrame
+    }
+  }
+
+  test("a checkpoint with no stored bytes keeps Spark's unknown size, never 0") {
+    val empty = spark.range(100).toDF("x").where(lit(false))
+    CacheOps.scope { s =>
+      val cp = s.checkpoint(empty)
+      val (bytes, stat) = sizes(cp)
+      assert(bytes == 0)
+      assert(stat == BigInt(SQLConf.get.defaultSizeInBytes))
+      spark.emptyDataFrame
+    }
+  }
+
+  test("fixed-round loops refuse zero rounds before they make a checkpoint") {
+    val before = Residue.persisted(spark)
+    val pr = intercept[IllegalArgumentException](graft.ops.Graph.pageRank(spark, iters = 0))
+    // the refusal comes before the events table is read, so no data dir is needed
+    val sp = intercept[IllegalArgumentException](graft.ops.Sssp.boundedSssp(spark, "", hops = 0))
+    assert(pr.getMessage.contains("iters") && sp.getMessage.contains("hops"),
+      s"${pr.getMessage} / ${sp.getMessage}")
+    assert(Residue.persisted(spark) == before)
+  }
 }
 
-/** Every gate query built on the fixed-point loops or componentLabels
-  * returns holding only the checkpoints its own plan reads, and prints
-  * nothing (a free that cannot engage must not degrade to a warning). */
+/** Every gate query returns holding only the checkpoints its own plan
+  * reads, and prints nothing (a free that cannot engage must not degrade to
+  * a warning). */
 class LoopResidueSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  for (q <- Seq("q63_dup_components", "q67_dup_components_stars", "q70_dedup_decision",
-      "q72_leakage_safe_split", "q73_semdedup", "q79_phash_dup_decisions", "q109_pagerank",
-      "q125_kcore", "q131_grid_clusters", "q142_tree_depths", "q173_sssp")) {
+  for (q <- SparkEntry.queries.keys.toSeq.sorted) {
     test(s"$q leaves only blocks its result reads") {
       val before = Residue.persisted(spark)
       val err = new java.io.ByteArrayOutputStream()
       val out = Console.withErr(err)(SparkEntry.queries(q)(spark, "/root/testdata/sf0.001"))
-      val stranded = Residue.persisted(spark) -- before -- Residue.reads(out)
+      val held = Residue.persisted(spark) -- before
+      val stranded = held -- Residue.reads(out)
+      held.foreach(spark.sparkContext.getPersistentRDDs(_).unpersist(false))
       assert(stranded.isEmpty, s"stranded RDDs $stranded")
       assert(err.size == 0, err.toString)
     }
@@ -122,7 +193,7 @@ class DupComponentsSpec extends AnyFunSuite {
     spark.listenerManager.register(listener)
     try {
       val out = Dedup.dupComponents(pairs)
-      GraftTestShim.drainListenerBus(spark.sparkContext)
+      GraftShim.drainListenerBus(spark.sparkContext)
       val evs = names.toArray(Array.empty[String]).toSeq
       assert(evs.count(_ == "localCheckpoint") == 8,
         s"expected 8 localCheckpoint actions (1/round + 3), saw $evs")
