@@ -8,11 +8,12 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * reporting per-rep wall time plus job/stage/task-time counters from a
   * SparkListener, so per-query cost can be attributed to scheduling overhead
   * (many tiny jobs) vs actual task work. Also dumps `.explain("formatted")`
-  * to plans/r06/<query>_<tag>.txt when SPARK_GRAFT_PLan_TAG is set.
+  * to plans/<tag>/<query>.txt when SPARK_GRAFT_PLAN_TAG is set.
   *
   * Usage: runMain graft.BenchExtra q181_star_pip[,q129_...] [reps]
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
-  *      SPARK_GRAFT_PLAN_TAG (e.g. "before"/"after" — write plan files). */
+  *      SPARK_GRAFT_PLAN_TAG (a directory under plans/, e.g. "r08/before";
+  *      created if missing). */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
@@ -73,7 +74,8 @@ object BenchExtra {
       }
       println(f"[$n] min=${times.min}%.3f s")
       planTag.foreach { tag =>
-        val pw = new java.io.PrintWriter(s"plans/r06/${n}_$tag.txt")
+        val dir = java.nio.file.Files.createDirectories(java.nio.file.Paths.get("plans", tag))
+        val pw = new java.io.PrintWriter(dir.resolve(s"$n.txt").toFile)
         // explain("formatted") prints to stdout; route it into the file
         val buf = new java.io.ByteArrayOutputStream()
         Console.withOut(new java.io.PrintStream(buf)) { fn(spark, sfDir).explain("formatted") }

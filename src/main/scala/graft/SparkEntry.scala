@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.ops.CoreQueries
-import graft.spatial.SpatialQueries
+import graft.spatial.{PipJoin, SpatialQueries}
 import graft.text.{TextOps, Dedup}
 import graft.ann.Ann
 import graft.pipeline.{ImagePipeline, Validate}
@@ -542,8 +542,8 @@ object SparkEntry {
     // the same rollup with teams DISCOVERED dynamically via pivot() over the
     // typed Dataset path — must agree with q32's codegen path and the oracle
     "q38_team_pivot_dynamic" -> ((s: SparkSession, _: String) =>
-      ImagePipeline.tileTeamPivotDynamic(ImagePipeline.pipJoin(
-        ImagePipeline.features(s, 2000L, 16), ImagePipeline.metroBoundaries))),
+      ImagePipeline.tileTeamPivotDynamic(PipJoin.join(
+        ImagePipeline.features(s, 2000L, 16).toDF(), ImagePipeline.metroBoundaries, "lon", "lat"))),
     // the FULL tilePointSummaries measure matrix: tile totals + dynamic
     // per-team km/b/p/e pivot + team_sum rollups (extractor.js:279-313)
     "q45_tile_measure_matrix" -> ((s: SparkSession, _: String) =>

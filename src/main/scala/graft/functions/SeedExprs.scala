@@ -57,7 +57,6 @@ case class CellScalar(left: Expression, right: Expression, res: Int, fn: String)
   override protected def nullSafeEval(lat: Any, lon: Any): Any = fn match {
     case "hexCell" => Statics.hexCell(lat.asInstanceOf[Double], lon.asInstanceOf[Double], res)
     case "s2Cell" => Statics.s2Cell(lat.asInstanceOf[Double], lon.asInstanceOf[Double], res)
-    case "quadCell" => Statics.quadCell(lat.asInstanceOf[Double], lon.asInstanceOf[Double], res)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -67,12 +66,12 @@ case class CellScalar(left: Expression, right: Expression, res: Int, fn: String)
     copy(left = newLeft, right = newRight)
 }
 
-/** (lon, lat) → containing boundary ordinal (−1 = outside all). The boundary
-  * index ships with the serialized plan and is referenced from generated code
-  * via addReferenceObj — the broadcast-R-tree-per-partition pattern without
-  * leaving codegen. */
-case class PipOrdinal(left: Expression, right: Expression, index: BoundaryIndex,
-                      prefiltered: Boolean = false)
+/** (lon, lat) → ordinal of the lowest-id containing boundary (−1 = outside
+  * all), the one point-in-polygon predicate behind every broadcast PIP
+  * ([[graft.spatial.PipJoin]]). The boundary index ships with the serialized
+  * plan and is referenced from generated code via addReferenceObj — the
+  * broadcast-R-tree-per-partition pattern without leaving codegen. */
+case class PipOrdinal(left: Expression, right: Expression, index: BoundaryIndex)
     extends BinaryExpression with Serializable {
   override def dataType: DataType = IntegerType
   override def prettyName: String = "pip_ordinal"
@@ -109,8 +108,6 @@ object SeedExprs {
     co(CellScalar(ex(lat), ex(lon), res, "hexCell"))
   def s2Cell(lat: Column, lon: Column, level: Int): Column =
     co(CellScalar(ex(lat), ex(lon), level, "s2Cell"))
-  def quadCell(lat: Column, lon: Column, zoom: Int): Column =
-    co(CellScalar(ex(lat), ex(lon), zoom, "quadCell"))
   def pipOrdinal(lon: Column, lat: Column, index: BoundaryIndex): Column =
     co(PipOrdinal(ex(lon), ex(lat), index))
 }

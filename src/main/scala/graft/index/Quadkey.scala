@@ -118,8 +118,9 @@ object Quadkey {
   }
 
   /** Tile y as a pure Column expression — same atanh(sinφ) form as the
-    * scalar [[tileY]] (the two must assign identical tiles or the coarse
-    * prefilter ranges built from the scalar could drop boundary rows). The
+    * scalar [[tileY]] (the two must assign identical tiles or the cell
+    * cover `PipJoin.joinViaCellCover` builds from the scalar could drop
+    * boundary rows). The
     * repeated `sin(latRad)` subtree is shared by whole-stage codegen's
     * subexpression elimination: one sin + one log per row. */
   def tileYCol(lat: Column, z: Int): Column = {

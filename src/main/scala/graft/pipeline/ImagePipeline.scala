@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.CacheOps
 import graft.synth.{ImageSynth, Geotag}
 import graft.index.{Hex, Quadkey, S2Like}
-import graft.spatial.{Boundary, BoundaryIndex}
+import graft.spatial.{Boundary, PipJoin}
 
 /** The flagship spatial-join + tiling pipeline over the image+caption table
   * (north_rule): geotagged image rows → H3/S2/quadkey cell encoding
@@ -87,41 +87,6 @@ object ImagePipeline {
     }
   }
 
-  /** PIP join: attach boundary_id via the broadcast index (inner join —
-    * points outside every boundary drop, like the reference's AOI). */
-  def pipJoin(feats: Dataset[Feature], boundaries: Seq[Boundary]): DataFrame = {
-    val spark = feats.sparkSession
-    val bc = spark.sparkContext.broadcast(new BoundaryIndex(boundaries.toArray))
-    val pip = udf { (lon: Double, lat: Double) => bc.value.queryFirst(lon, lat) }
-    feats.toDF()
-      .withColumn("boundary_id", pip(col("lon"), col("lat")))
-      .filter(col("boundary_id").isNotNull)
-  }
-
-  /** The reference's four stacked rollup layers (map-contribution-extractor.js:
-    * 164-320), re-expressed: objects (per tile/uid/day), userDaily, teamDaily,
-    * tile summaries with per-team pivot columns. One `layer` column unions
-    * them (SURVEY.md U1). */
-  def tileRollups(joined: DataFrame): DataFrame = {
-    val objects = joined.groupBy(col("tile"), col("uid"), col("day"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("tile"), col("uid").cast("long").as("k1"), col("day").as("k2"),
-        col("n"), lit("objects").as("layer"))
-    val teamDaily = joined.groupBy(col("tile"), col("team"), col("day"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("tile"), hash(col("team")).cast("long").as("k1"), col("day").as("k2"),
-        col("n"), lit("teamDaily").as("layer"))
-    val tileSummary = joined.groupBy(col("tile"))
-      .agg(
-        sum(when(col("team") === "kll", 1L).otherwise(0L)).as("kll_e"),
-        sum(when(col("team") === "msf", 1L).otherwise(0L)).as("msf_e"),
-        sum(when(col("team") === "dcx", 1L).otherwise(0L)).as("dcx_e"),
-        sum(when(col("team") === "hot", 1L).otherwise(0L)).as("hot_e"),
-        count(lit(1)).as("n"))
-      .select(col("tile"), lit(0L).as("k1"), lit(0L).as("k2"), col("n"), lit("tileSummary").as("layer"))
-    objects.unionByName(teamDaily).unionByName(tileSummary)
-  }
-
   /** Per-tile per-team pivot — the `<team>-e` dynamic-column layer
     * (map-contribution-extractor.js:295-311) with `teamSum` totals. */
   def tileTeamPivot(joined: DataFrame): DataFrame =
@@ -186,7 +151,7 @@ object ImagePipeline {
     * never moves. */
   def userDailyCentroidGate(spark: SparkSession, n: Long, parts: Int = 16): DataFrame = {
     import spark.implicits._
-    val joined = pipJoin(features(spark, n, parts), metroBoundaries)
+    val joined = PipJoin.join(features(spark, n, parts).toDF(), metroBoundaries, "lon", "lat")
     joined.select(col("uid"), col("day"),
         floor(col("lon") * lit(1e6) + lit(0.5)).cast("double").as("lon_e6"),
         floor(col("lat") * lit(1e6) + lit(0.5)).cast("double").as("lat_e6"))
@@ -200,17 +165,13 @@ object ImagePipeline {
       .toDF("uid", "day", "c_lon_e6", "c_lat_e6", "n_pts")
   }
 
-  /** AOI-filtered codegen feature stream — the ONE definition of the
-    * BoundaryIndex + pipOrdinal + keep-inside prologue shared by every tile
-    * gate query (measure matrix, multi-zoom, centers, flagship run), so the
-    * PIP semantics cannot silently diverge between them. */
-  private def pipFiltered(spark: SparkSession, n: Long, parts: Int): DataFrame = {
-    import graft.functions.SeedExprs
-    val index = new BoundaryIndex(metroBoundaries.toArray)
-    fastFeatures(spark, n, parts)
-      .withColumn("b_ord", SeedExprs.pipOrdinal(col("lon"), col("lat"), index))
-      .filter(col("b_ord") >= 0)
-  }
+  /** AOI-filtered codegen feature stream: [[fastFeatures]] through
+    * [[PipJoin.withOrdinal]], the one broadcast PIP prologue, which also backs
+    * [[PipJoin.join]] (q17, q38, q46). Every tile gate query (measure matrix,
+    * daily summaries, objects, multi-zoom, centers, flagship run) reads the
+    * metro ordinal from its `b_ord` column. */
+  private def pipFiltered(spark: SparkSession, n: Long, parts: Int): DataFrame =
+    PipJoin.withOrdinal(fastFeatures(spark, n, parts), metroBoundaries, "lon", "lat")
 
   /** The reference's FULL tilePointSummaries measure matrix
     * (util/map-contribution-extractor.js:279-313; counters :21-62): per tile,
@@ -405,7 +366,8 @@ object ImagePipeline {
   private val teamNames = Seq("kll", "msf", "dcx", "hot")
 
   /** Codegen PIP join + per-tile per-team pivot — semantically identical to
-    * `tileTeamPivot(pipJoin(features(...)))` (asserted in PipelineSpec). */
+    * `tileTeamPivot` over the typed [[features]] joined to their metros
+    * (asserted in FastPathSpec). */
   def run(spark: SparkSession, n: Long, parts: Int = 32): DataFrame = {
     val names = metroBoundaries.map(_.id).toArray // ordinal = position in the index array
     val joined = pipFiltered(spark, n, parts)

@@ -6,6 +6,10 @@ import graft.geo.Geo
   * precomputed bbox. Mirrors the reference's AOI polygon input
   * (extractions/se-asia.interactionconfig:2-28; InteractionsBuilder.java:103-111)
   * generalized to a broadcastable *set* of boundaries.
+  *
+  * Rings are planar lon/lat: the bbox is the plain min/max of the vertices and
+  * the ray-cast never wraps. A ring that crosses ±180 must be split there by
+  * the caller; given whole, it covers the wrong side of the globe.
   */
 final case class Boundary(id: String,
                           lons: Array[Double], lats: Array[Double]) {
@@ -20,11 +24,13 @@ final case class Boundary(id: String,
 }
 
 /** Tiny driver-built spatial index over boundaries: a uniform lon/lat grid of
-  * candidate lists (an STRtree stand-in with zero deps, built once and
-  * broadcast; each executor partition probes it read-only — the reference's
+  * candidate lists (an STRtree stand-in with zero deps, built once on the
+  * driver and shipped with the plan; each task probes it read-only — the reference's
   * "reused index objects" pattern, north_rule). For O(100s) of boundaries this
   * beats tree traversal; swap for JTS STRtree if boundary counts grow. */
-final class BoundaryIndex(val boundaries: Array[Boundary], gridN: Int = 64) extends Serializable {
+final class BoundaryIndex(val boundaries: Array[Boundary]) extends Serializable {
+  // 64×64 cells of 5.6°×2.8°
+  private final val gridN = 64
   private val cellW = 360.0 / gridN
   private val cellH = 180.0 / gridN
   // grid cell -> indices of boundaries whose bbox intersects it
@@ -46,22 +52,6 @@ final class BoundaryIndex(val boundaries: Array[Boundary], gridN: Int = 64) exte
       b += 1
     }
     tmp.map(_.toArray)
-  }
-
-  /** All boundary ids containing the point (usually 0 or 1). */
-  def query(lon: Double, lat: Double): List[String] = {
-    if (lon < -180 || lon > 180 || lat < -90 || lat > 90) return Nil
-    val x = math.min(gridN - 1, math.max(0, ((lon + 180.0) / cellW).toInt))
-    val y = math.min(gridN - 1, math.max(0, ((lat + 90.0) / cellH).toInt))
-    var out: List[String] = Nil
-    val cands = grid(y * gridN + x)
-    var i = 0
-    while (i < cands.length) {
-      val b = boundaries(cands(i))
-      if (b.containsPoint(lon, lat)) out = b.id :: out
-      i += 1
-    }
-    out
   }
 
   /** First (lowest-id) boundary containing the point, or null. */

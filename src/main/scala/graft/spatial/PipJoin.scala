@@ -1,103 +1,80 @@
 package graft.spatial
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.SeedExprs
 import graft.index.Quadkey
 
 /** Point-in-polygon join (SURVEY.md J6/F3), Spark-first.
   *
-  * Strategy (designed for 10^12 points × O(10^2..10^4) polygons):
-  *  1. The polygon side is tiny relative to the fact side → broadcast it once
-  *     as a serializable [[BoundaryIndex]]; never shuffle the points.
-  *  2. A coarse cell-id prefilter (pure-Column web-mercator tile arithmetic,
-  *     stays in whole-stage codegen) skips the exact test for points whose
-  *     tile doesn't touch any boundary bbox — at 100 TB this prunes the vast
-  *     majority of rows *before* any JVM object is allocated.
-  *  3. The exact ray-cast test runs per-partition against the one broadcast
-  *     index (the reference's reused-index-objects pattern, north_rule).
+  * Two algorithms, one per size of the polygon side:
+  *  - [[withOrdinal]] / [[join]]: the polygon set ships with the plan as a
+  *    [[BoundaryIndex]] and every point is probed by the codegen
+  *    `pip_ordinal` expression ([[SeedExprs.pipOrdinal]]): scan → one
+  *    whole-stage-codegen filter, zero shuffles, no per-row JVM object. The
+  *    index's 64×64 grid rejects points far from every boundary with two
+  *    divisions and an array read before any ray-cast runs. This is the one
+  *    broadcast PIP path; the flagship pipeline and the gate queries all run it.
+  *  - [[joinViaCellCover]]: a distributed equi-join on cell ids, for polygon
+  *    sets too large to ship with every task.
   *
-  * The plan is scan → codegen filter → mapPartitions probe: zero shuffles,
-  * zero driver collection, linear scaling in partitions.
+  * Scale trade: the index travels as a reference inside the serialized plan
+  * and is deserialized once per task, not fetched once per executor like a
+  * broadcast variable. Every caller passes 5 rings or fewer; a polygon set
+  * large enough for that to matter goes through [[joinViaCellCover]].
   */
 object PipJoin {
 
-  val PrefilterZoom = 6
+  /** Cell-cover zoom: z6 tiles are ~5.6° wide, the grain of the fixtures. */
+  private val CoverZoom = 6
 
-  /** Inner PIP join: rows whose (lonCol, latCol) fall inside a boundary get
-    * that boundary's id in `boundary_id`; rows outside all boundaries drop. */
+  /** Rows whose (lonCol, latCol) fall inside a boundary get the ordinal (the
+    * position in `boundaries`) of the lowest-id containing boundary in
+    * `b_ord`; rows outside every boundary, or with a null, NaN or
+    * out-of-range coordinate, drop. */
+  def withOrdinal(points: DataFrame, boundaries: Seq[Boundary],
+                  lonCol: String, latCol: String): DataFrame =
+    points
+      .withColumn("b_ord", SeedExprs.pipOrdinal(col(lonCol), col(latCol),
+        new BoundaryIndex(boundaries.toArray)))
+      .filter(col("b_ord") >= 0)
+
+  /** Inner PIP join: [[withOrdinal]] with the boundary's id in `boundary_id`
+    * in place of its ordinal. */
   def join(points: DataFrame, boundaries: Seq[Boundary],
-           lonCol: String, latCol: String): DataFrame = {
-    val spark = points.sparkSession
-    val bcIndex = spark.sparkContext.broadcast(new BoundaryIndex(boundaries.toArray))
-
-    // coarse prefilter: set of z6 tiles intersecting any boundary bbox.
-    // A degenerate bbox (minLon > maxLon — an antimeridian-crossing ring built
-    // outside the Boundary constructor) would make the x-range EMPTY and the
-    // prefilter would silently drop that boundary's points: skip the prefilter
-    // instead (correctness first; the exact test still runs).
-    val crossesAntimeridian = boundaries.exists(b => b.minLon > b.maxLon || b.minLat > b.maxLat)
-    val tiles: Set[Long] =
-      if (crossesAntimeridian) Set.empty
-      else boundaries.flatMap { b =>
-        val x0 = Quadkey.tileX(b.minLon, PrefilterZoom); val x1 = Quadkey.tileX(b.maxLon, PrefilterZoom)
-        val y0 = Quadkey.tileY(b.maxLat, PrefilterZoom); val y1 = Quadkey.tileY(b.minLat, PrefilterZoom)
-        for (x <- x0 to x1; y <- y0 to y1) yield Quadkey.cellId(x, y, PrefilterZoom)
-      }.toSet
-
-    val cellCol = Quadkey.cellIdCol(col(lonCol), col(latCol), PrefilterZoom)
-    val prefiltered =
-      if (!crossesAntimeridian && tiles.size <= 4096) points.filter(cellCol.isInCollection(tiles))
-      else points // boundary set covers too much area for an IN-list; go straight to exact
-
-    val pip = udf { (lon: Double, lat: Double) => bcIndex.value.queryFirst(lon, lat) }
-    prefiltered
-      .withColumn("boundary_id", pip(col(lonCol), col(latCol)))
-      .filter(col("boundary_id").isNotNull)
-  }
-
-  /** PIP membership as a Column-only predicate for *convex-box* boundaries —
-    * fully codegen, no UDF; used when every boundary is an axis-aligned box
-    * (the changeset-bbox case, changesets/map-changeset-parser.js:18-24). */
-  def boxJoinExpr(lon: Column, lat: Column, b: Boundary): Column =
-    lon >= lit(b.minLon) && lon <= lit(b.maxLon) &&
-      lat >= lit(b.minLat) && lat <= lit(b.maxLat)
+           lonCol: String, latCol: String): DataFrame =
+    withOrdinal(points, boundaries, lonCol, latCol)
+      .withColumn("boundary_id", element_at(lit(boundaries.map(_.id).toArray), col("b_ord") + 1))
+      .drop("b_ord")
 
   /** Distributed PIP join via cell-cover EQUI-join — the path past the
     * broadcast ceiling (north_star: "range-join pushdown on cell ID
-    * intervals"). Each boundary explodes to the z-`level` cells covering its
-    * bbox (the discretized cell-ID interval); each point computes its one
-    * cell in codegen; the join is a plain equi-join on `cell` that Catalyst
-    * plans however the sides' sizes dictate — broadcast for small boundary
-    * sets, shuffle hash join when millions of polygons make [[join]]'s
-    * broadcast index impossible. The exact ray-cast verifies candidates
-    * after the join (never in the join condition), and `queryFirst` parity
-    * (first boundary in input order wins) comes from one row_number over the
-    * candidate set — which is cover-pruned, NOT the point table. */
+    * intervals"). Each boundary explodes to the z6 cells covering its bbox
+    * (the discretized cell-ID interval); each point computes its one cell in
+    * codegen; the join is a plain equi-join on `cell` that Catalyst plans
+    * however the sides' sizes dictate — broadcast for small boundary sets,
+    * shuffle hash join when millions of polygons make [[join]]'s shipped
+    * index impossible. The exact ray-cast verifies candidates after the join
+    * (never in the join condition), and [[join]] parity (lowest id wins)
+    * comes from one row_number over the candidate set — which is
+    * cover-pruned, NOT the point table. A point with a null coordinate has
+    * no cell; a NaN or out-of-range one fails every bbox test (Spark orders
+    * NaN above every number). */
   def joinViaCellCover(points: DataFrame, boundaries: Seq[Boundary],
-                       lonCol: String, latCol: String, idCol: String,
-                       level: Int = 6): DataFrame = {
+                       lonCol: String, latCol: String, idCol: String): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
-    // an antimeridian-crossing ring (minLon > maxLon) would produce an EMPTY
-    // x-range and be silently dropped by the join — and the planar ray-cast
-    // itself (like the reference's AOI handling) does not support crossing
-    // rings. Fail loudly: callers must split such polygons at ±180 upstream
-    // (standard GIS practice), after which each half covers correctly.
-    boundaries.foreach { b =>
-      require(b.minLon <= b.maxLon,
-        s"boundary '${b.id}' crosses the antimeridian (minLon ${b.minLon} > maxLon ${b.maxLon}); split it at ±180 first")
-    }
-    val bRows = boundaries.zipWithIndex.flatMap { case (b, ord) =>
-      val x0 = Quadkey.tileX(b.minLon, level); val x1 = Quadkey.tileX(b.maxLon, level)
-      val y0 = Quadkey.tileY(b.maxLat, level); val y1 = Quadkey.tileY(b.minLat, level)
+    val bRows = boundaries.flatMap { b =>
+      val x0 = Quadkey.tileX(b.minLon, CoverZoom); val x1 = Quadkey.tileX(b.maxLon, CoverZoom)
+      val y0 = Quadkey.tileY(b.maxLat, CoverZoom); val y1 = Quadkey.tileY(b.minLat, CoverZoom)
       for (x <- x0 to x1; y <- y0 to y1)
-        yield (Quadkey.cellId(x, y, level), ord, b.id, b.lons.toSeq, b.lats.toSeq,
+        yield (Quadkey.cellId(x, y, CoverZoom), b.id, b.lons.toSeq, b.lats.toSeq,
           b.minLon, b.maxLon, b.minLat, b.maxLat)
     }
-    val bDf = bRows.toDF("cell", "__ord", "boundary_id", "__b_lons", "__b_lats",
+    val bDf = bRows.toDF("cell", "boundary_id", "__b_lons", "__b_lats",
       "__w", "__e", "__s", "__n")
     val pts = points.withColumn("cell",
-      Quadkey.cellIdCol(col(lonCol), col(latCol), level))
+      Quadkey.cellIdCol(col(lonCol), col(latCol), CoverZoom))
     val inRing = udf { (lon: Double, lat: Double, lons: Seq[Double], lats: Seq[Double]) =>
       graft.geo.Geo.pointInRing(lon, lat, lons.toArray, lats.toArray)
     }
@@ -108,8 +85,8 @@ object PipJoin {
         col(latCol) >= col("__s") && col(latCol) <= col("__n"))
       .filter(inRing(col(lonCol), col(latCol), col("__b_lons"), col("__b_lats")))
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("__ord"))
+      .partitionBy(col(idCol)).orderBy(col("boundary_id"))
     cand.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .drop("__rn", "__ord", "__b_lons", "__b_lats", "__w", "__e", "__s", "__n", "cell")
+      .drop("__rn", "__b_lons", "__b_lats", "__w", "__e", "__s", "__n", "cell")
   }
 }

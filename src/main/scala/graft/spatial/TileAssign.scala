@@ -1,45 +1,13 @@
 package graft.spatial
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.index.{Hex, Quadkey, S2Like}
+import graft.index.Quadkey
 
 /** Feature→tile assignment — the tiling-engine core (SURVEY.md J7/X10;
   * reference: tile-reduce bucketing by z12 quadkey,
-  * util/map-contribution-extractor.js:85,186,191).
-  *
-  * All encoders come in two shapes:
-  *  - pure-Column arithmetic (tileX/tileY/cellId) → whole-stage codegen;
-  *  - `mapPartitions`-friendly batch functions over reused index objects for
-  *    the encoders that genuinely need loops (quadkey string, hex, s2).
-  */
+  * util/map-contribution-extractor.js:85,186,191). */
 object TileAssign {
-
-  /** Attach slippy-tile coords + packed cell id at zoom z (codegen path). */
-  def withTile(df: DataFrame, lonCol: String, latCol: String, z: Int): DataFrame =
-    df.withColumn("tile_x", Quadkey.tileXCol(col(lonCol), z))
-      .withColumn("tile_y", Quadkey.tileYCol(col(latCol), z))
-      .withColumn("cell_id", Quadkey.cellIdCol(col(lonCol), col(latCol), z))
-
-  /** Quadkey string column (needs a digit loop → UDF; off the hot path). */
-  def quadkeyCol(lon: Column, lat: Column, z: Int): Column = {
-    val f = udf { (lo: Double, la: Double) =>
-      Quadkey.toQuadkey(Quadkey.tileX(lo, z), Quadkey.tileY(la, z), z)
-    }
-    f(lon, lat)
-  }
-
-  /** Hex cell id column (H3-style, res 0-14). */
-  def hexCellCol(lon: Column, lat: Column, res: Int): Column = {
-    val f = udf { (lo: Double, la: Double) => Hex.latLngToCell(la, lo, res) }
-    f(lon, lat)
-  }
-
-  /** S2-style cell id column at a level. */
-  def s2CellCol(lon: Column, lat: Column, level: Int): Column = {
-    val f = udf { (lo: Double, la: Double) => S2Like.cellIdAt(la, lo, level) }
-    f(lon, lat)
-  }
 
   /** Salted repartition on cell prefix — the skew treatment (north_rule):
     * dense metro cells are split across `salt` buckets so no single task owns

@@ -182,7 +182,8 @@ class StoredTableSpec extends AnyFunSuite {
       !readSchema.contains("bytes"), s"bytes not pruned: $plan")
 
     val viaTable = ImagePipeline.tileTeamPivot(
-      ImagePipeline.pipJoin(feats, ImagePipeline.metroBoundaries)).collect()
+      graft.spatial.PipJoin.join(feats.toDF(), ImagePipeline.metroBoundaries, "lon", "lat"))
+      .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(6))).toSet
     val viaFast = ImagePipeline.run(spark, 800, 4).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(6))).toSet

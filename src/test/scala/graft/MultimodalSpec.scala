@@ -58,8 +58,8 @@ class GeoJsonSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val g = GeoJson.polygonGeometry(Array(0.0, 1.0, 1.0, 0.0, 0.0), Array(0.0, 0.0, 1.0, 1.0, 0.0))
     assert(g == """{"type":"Polygon","coordinates":[[[0,0],[1,0],[1,1],[0,1],[0,0]]]}""")
-    val df = ImagePipeline.pipJoin(ImagePipeline.features(spark, 50, 2),
-      ImagePipeline.metroBoundaries)
+    val df = graft.spatial.PipJoin.join(ImagePipeline.features(spark, 50, 2).toDF(),
+      ImagePipeline.metroBoundaries, "lon", "lat")
       .select(col("lon"), col("lat"), col("uid"), col("boundary_id"))
     val lines = GeoJson.pointFeatures(df).collect()
     assert(lines.nonEmpty)

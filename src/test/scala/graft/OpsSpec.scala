@@ -73,8 +73,8 @@ class CentroidSpec extends AnyFunSuite {
   }
 
   test("pipeline userDailyCentroids lie inside their boundary") {
-    val joined = ImagePipeline.pipJoin(ImagePipeline.features(spark, 1500, 4),
-      ImagePipeline.metroBoundaries)
+    val joined = graft.spatial.PipJoin.join(ImagePipeline.features(spark, 1500, 4).toDF(),
+      ImagePipeline.metroBoundaries, "lon", "lat")
     val cents = ImagePipeline.userDailyCentroids(joined).collect()
     assert(cents.nonEmpty)
     // every centroid is a plausible lon/lat (means of member points)

@@ -1,38 +1,37 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.GraftShim
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import graft.functions.SeedExprs
-import graft.pipeline.ImagePipeline
-import graft.plans.PipPrefilterRule
-import graft.spatial.BoundaryIndex
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.functions.PipOrdinal
 
 class PlanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("PipPrefilterRule injects a coarse-tile IN prefilter and preserves results") {
-    val index = new BoundaryIndex(ImagePipeline.metroBoundaries.toArray)
-    def query = ImagePipeline.fastFeatures(spark, 3000, 4)
-      .filter(SeedExprs.pipOrdinal(col("lon"), col("lat"), index) >= 0)
-
-    val before = query.collect().map(_.getLong(0)).sorted.toSeq
-
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ PipPrefilterRule
-    try {
-      val optimized = query
-      val planStr = optimized.queryExecution.optimizedPlan.toString
-      assert(planStr.contains("INSET") || planStr.contains(" IN "),
-        s"prefilter missing from plan:\n$planStr")
-      // fixpoint: exactly one prefilter injected even though the optimizer
-      // re-runs batches (the rewritten PipOrdinal is marked)
-      assert("pip_ordinal".r.findAllIn(planStr).size >= 1)
-      val after = optimized.collect().map(_.getLong(0)).sorted.toSeq
-      assert(after == before, "rule changed query results")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == PipPrefilterRule)
+  test("q17, q38 and q46 probe pip_ordinal and run no ScalaUDF over the point coordinates") {
+    // every action a query runs counts, the eager checkpoints of q38 included
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    val aqe = new AdaptiveSparkPlanHelper {}
+    spark.listenerManager.register(listener)
+    try Seq("q17_pip_join", "q38_team_pivot_dynamic", "q46_centroid_agg").foreach { q =>
+      plans.clear()
+      SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").collect()
+      GraftShim.drainListenerBus(spark.sparkContext)
+      val exprs = plans.asScala.toSeq.flatMap(p => aqe.flatMap(p)(_.expressions))
+      assert(exprs.exists(_.exists(_.isInstanceOf[PipOrdinal])), s"$q: no pip_ordinal")
+      val udfs = exprs.flatMap(_.collect { case u: ScalaUDF => u })
+        .filter(_.references.exists(a => a.name == "lon" || a.name == "lat"))
+      assert(udfs.isEmpty, s"$q: UDF over the point coordinates: ${udfs.mkString(", ")}")
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("bucketed checkpoint layout: partition pruning reaches the scan (Iceberg-style)") {

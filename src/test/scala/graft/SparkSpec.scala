@@ -16,6 +16,7 @@ object TestSpark {
 
 class PipelineSpec extends AnyFunSuite {
   import graft.pipeline.{ImagePipeline, Validate}
+  import graft.spatial.PipJoin
   import graft.synth.{ImageSynth, Geotag}
   import graft.index.Quadkey
   import org.apache.spark.sql.functions._
@@ -54,8 +55,8 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("pipeline rollup: team columns sum to team_sum_e; joined rows preserved") {
-    val joined = ImagePipeline.pipJoin(ImagePipeline.features(spark, 2000, 4),
-      ImagePipeline.metroBoundaries)
+    val joined = PipJoin.join(ImagePipeline.features(spark, 2000, 4).toDF(),
+      ImagePipeline.metroBoundaries, "lon", "lat")
     val nJoined = joined.count()
     assert(nJoined > 1000, s"expected most rows in metros, got $nJoined") // ~70% clustered
     val pivot = ImagePipeline.tileTeamPivot(joined)
@@ -65,14 +66,17 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("PIP join assigns only real metro boundaries and respects containment") {
-    val joined = ImagePipeline.pipJoin(ImagePipeline.features(spark, 1000, 4),
-      ImagePipeline.metroBoundaries).collect()
-    val byId = ImagePipeline.metroBoundaries.map(b => b.id -> b).toMap
-    joined.foreach { r =>
-      val b = byId(r.getAs[String]("boundary_id"))
-      assert(b.containsPoint(r.getAs[Double]("lon"), r.getAs[Double]("lat")))
-    }
-    assert(!joined.exists(_.getAs[String]("boundary_id") == "nowhere"))
+    val feats = ImagePipeline.features(spark, 1000, 4)
+    val joined = PipJoin.join(feats.toDF(), ImagePipeline.metroBoundaries, "lon", "lat")
+      .collect().map(r => r.getAs[String]("image_id") -> r.getAs[String]("boundary_id")).toMap
+    // brute force: the lowest-id boundary whose ring contains the point
+    val brute = feats.collect().flatMap { f =>
+      ImagePipeline.metroBoundaries.filter(_.containsPoint(f.lon, f.lat)).map(_.id)
+        .sorted.headOption.map(f.image_id -> _)
+    }.toMap
+    assert(brute.size > 500, s"expected most rows in metros, got ${brute.size}")
+    assert(joined == brute)
+    assert(!joined.values.exists(_ == "nowhere"))
   }
 
   test("skew exists by construction (metro cells are dense at z8)") {
@@ -476,8 +480,14 @@ class FastPathSpec extends AnyFunSuite {
     val fast = ImagePipeline.run(spark, 4000, 4).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))).toSet
-    val typed = ImagePipeline.tileTeamPivot(ImagePipeline.pipJoin(
-        ImagePipeline.features(spark, 4000, 4), ImagePipeline.metroBoundaries))
+    // the typed side joins by brute force, independent of the BoundaryIndex
+    val bs = ImagePipeline.metroBoundaries
+    val lowestContaining = udf { (lon: Double, lat: Double) =>
+      bs.filter(_.containsPoint(lon, lat)).map(_.id).sorted.headOption.orNull
+    }
+    val typed = ImagePipeline.tileTeamPivot(ImagePipeline.features(spark, 4000, 4).toDF()
+        .withColumn("boundary_id", lowestContaining(col("lon"), col("lat")))
+        .filter(col("boundary_id").isNotNull))
       .select(col("tile"), col("boundary_id"), col("kll_e"), col("msf_e"),
         col("dcx_e"), col("hot_e"), col("team_sum_e"), col("n_users")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
