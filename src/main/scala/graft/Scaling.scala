@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One leg of the two-parallelism scaling evidence (north_rule). Run via
-  * `tools/scaling.sh`, which pins the JVM to N / 4N CPUs with `taskset` —
+  * `tools/scaling_r5.sh`, which pins the JVM to N / 4N CPUs with `taskset` —
   * local[N] on an unrestricted 32-core host is NOT an N-core cluster (GC and
   * JIT threads spill onto the idle cores and inflate the small-N baseline;
   * measured: local[8] unpinned looks 1.7x faster than pinned).
@@ -64,27 +64,22 @@ object Scaling {
     // dependent (measured in one window: integer 0.87, transcendental 0.60 —
     // all-core FP/AVX frequency + hypervisor contention), so raw workload
     // efficiency is only interpretable against the anchor measured in the
-    // SAME window; scaling.sh reports both raw and host-normalized numbers.
+    // SAME window.
     def spin(kind: String): Double = {
-      val itersInt = 150000000L; val itersTrig = 6000000L
-      val sink = new java.util.concurrent.atomic.AtomicLong()
-      val t0 = System.nanoTime()
-      val threads = (0 until cpus).map { ti =>
-        new Thread(() => {
-          if (kind == "int") {
-            var x = ti + 1L; var j = 0L
-            while (j < itersInt) { x = x * 6364136223846793005L + 1442695040888963407L; j += 1 }
-            sink.addAndGet(x)
-          } else {
-            var x = ti + 1.5; var j = 0L
-            while (j < itersTrig) { x = math.log(math.abs(math.tan(x)) + 1.000001); j += 1 }
-            sink.addAndGet(java.lang.Double.doubleToLongBits(x))
-          }
-        })
+      val iters = if (kind == "int") 150000000L else 6000000L
+      val (sec, _) = Dev.onThreads(cpus) { ti =>
+        var j = 0L
+        if (kind == "int") {
+          var x = ti + 1L
+          while (j < iters) { x = x * 6364136223846793005L + 1442695040888963407L; j += 1 }
+          x
+        } else {
+          var x = ti + 1.5
+          while (j < iters) { x = math.log(math.abs(math.tan(x)) + 1.000001); j += 1 }
+          java.lang.Double.doubleToLongBits(x)
+        }
       }
-      threads.foreach(_.start()); threads.foreach(_.join())
-      val sec = (System.nanoTime() - t0) / 1e9
-      cpus * (if (kind == "int") itersInt else itersTrig) / sec
+      cpus * iters / sec
     }
     spin("int"); spin("trig") // JIT warm-up
     // per-section steal: the spin (calibration) section and the Spark

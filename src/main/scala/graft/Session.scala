@@ -35,8 +35,7 @@ object Session {
       // let the planner pick shuffled-hash join where its size conditions
       // hold (guide §9): no sort on either side; SMJ remains the fallback
       // whenever the build side estimate is too large to hash in memory
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
+      .config("spark.sql.join.preferSortMergeJoin", "false")
       // static: sizes the cache when the JVM compiles its first class
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.sql.session.timeZone", "UTC")

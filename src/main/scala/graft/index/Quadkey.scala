@@ -26,22 +26,27 @@ object Quadkey {
     math.min(n - 1, math.max(0L, x)).toInt
   }
 
-  /** lon/lat -> tile y at zoom z (web mercator).
+  /** Unfloored web-mercator y at zoom z: `(1 − atanh(sinφ)/π) / 2 · 2^z`.
     *
     * The Gudermannian term uses `atanh(sinφ) = 0.5·ln((1+sinφ)/(1−sinφ))`
     * — 2 transcendentals — instead of the textbook `ln(tanφ + 1/cosφ)` — 3.
     * Identical mathematically; in FP the two differ by final ulps, so the
-    * DuckDB oracle replica (OracleSql.pipelineCtes) uses the SAME form, and
-    * a 2M-sample Java-vs-DuckDB sweep (graft.MercParity +
-    * tools/merc_parity.py) measured ZERO tile-level disagreements (max raw
-    * deviation 5.5e-12 tile units; only floor(ty) is ever consumed). This is
-    * the hot-scan transcendental cut deferred in round 4. */
+    * DuckDB oracle replica (OracleSql.pipelineCtes) uses the SAME form.
+    * The radians differ: `Math.toRadians` multiplies by π/180 where the
+    * oracle computes `lat / 180 · π`. A Java-vs-DuckDB sweep of this
+    * function over 2M geotag latitudes at z12 (`graft.Dev merc` +
+    * tools/merc_parity.py) found 172,107 raw values that differ, by at most
+    * 1.0e-11 tile units, and ZERO tile-level disagreements; only the floor
+    * is ever consumed. */
+  def tileYRaw(lat: Double, z: Int): Double = {
+    val s = math.sin(math.toRadians(clampLat(lat)))
+    (1.0 - 0.5 * math.log((1.0 + s) / (1.0 - s)) / math.Pi) / 2.0 * (1L << z)
+  }
+
+  /** lon/lat -> tile y at zoom z (web mercator). */
   def tileY(lat: Double, z: Int): Int = {
     val n = 1L << z
-    val latRad = math.toRadians(clampLat(lat))
-    val s = math.sin(latRad)
-    val y = ((1.0 - 0.5 * math.log((1.0 + s) / (1.0 - s)) / math.Pi) / 2.0 * n).toLong
-    math.min(n - 1, math.max(0L, y)).toInt
+    math.min(n - 1, math.max(0L, tileYRaw(lat, z).toLong)).toInt
   }
 
   /** Pack (z, x, y) into a sortable long cell id. */

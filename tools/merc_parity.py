@@ -1,9 +1,10 @@
 #!/usr/bin/env python3
 """Java-vs-DuckDB libm parity check for the mercator-ty reformulation.
 
-Reads the CSV dumped by `runMain graft.MercParity` (lat/ty as raw IEEE bits
-from the JVM), reconstructs the exact doubles, evaluates the SAME expression
-in DuckDB — `(1 - 0.5*ln((1+sin(r))/(1-sin(r)))/pi())/2*4096` with
+Reads the CSV dumped by `runMain graft.Dev merc` (the latitude and the
+engine's `Quadkey.tileYRaw` at z12 as raw IEEE bits, plus its `tileY`),
+reconstructs the exact doubles, evaluates the oracle's expression in DuckDB
+— `(1 - 0.5*ln((1+sin(r))/(1-sin(r)))/pi())/2*4096` with
 r = clamp(lat)/180*pi() — and counts bit-level and tile-level mismatches.
 Run: python3 tools/merc_parity.py [/tmp/merc_parity.csv]
 """
