@@ -1,18 +1,38 @@
 package graft.ann
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Session.table
+import graft.ops.TopK
 
-/** Approximate-nearest-neighbour search over the `embeddings` table
-  * (`embedding: array<float>`).
+/** Nearest-neighbour search over the `embeddings` table
+  * (`embedding: array<float>`), in eight tiers.
   *
-  * - [[bruteTopK]] — exact cosine top-k: queries broadcast, per-partition
-  *   bounded heaps, only Q·k rows shuffle. The correctness baseline.
-  * - [[lshTopK]] — random-hyperplane LSH (deterministic seed): sign-bit
-  *   signature → multi-probe bucket join → exact rerank of candidates. The
-  *   scale path: at 10^12 rows the bucket join touches a vanishing fraction
-  *   of the corpus per query.
+  * Top-k per query, ranked by (cosine desc, vec_id asc):
+  * - [[bruteTopK]] / [[filteredTopK]] — exact; the correctness baseline.
+  * - [[sqTopK]] — exhaustive over the int8 (SQ8) reconstruction.
+  * - [[ivfTopK]] / [[ivfSqTopK]] — the IVF coarse quantizer probes `nprobe`
+  *   lists, scored in full precision / through SQ8.
+  * - [[pqTopK]] — product quantization trained on the integer lattice.
+  * - [[lshTopK]] — random-hyperplane LSH bucket join, then an exact rerank
+  *   of the candidates.
+  *
+  * All pairs:
+  * - [[cosineNearDupPairs]] — every pair over a cosine threshold, exact;
+  *   [[cosineNearDupLshTier]] is its LSH scale path.
+  * - [[knnGraph]] — every vector's exact top-k neighbours.
+  * - [[semDedup]] — SemDeDup: dedup within k-means clusters.
+  *
+  * The kernels are shared. Every top-k tier but LSH is one [[topKScan]]:
+  * queries broadcast, per-partition bounded heaps ([[graft.ops.TopK.Heap]]),
+  * one rank window. The tiers differ only in which queries score a stored
+  * row (the IVF probe, [[probedBy]]) and the vector they score it on (the
+  * row, [[sqDecode]] or [[pqDecode]]). [[blockPairs]] is the triangle block
+  * enumeration under [[cosineNearDupPairs]] and [[knnGraph]], and
+  * [[nearest]] the one centroid assignment.
   */
 object Ann {
 
@@ -31,6 +51,12 @@ object Ann {
     table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
+  private def asVecs(vecs: DataFrame): Dataset[(Long, Array[Double])] = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    vecs.as[(Long, Array[Double])]
+  }
+
   /** First Q vectors (by vec_id) used as the deterministic query set. */
   def queriesFrom(spark: SparkSession, dir: String, q: Int): Seq[EmbQuery] =
     loadVecs(spark, dir).filter(col("vec_id") < q).collect()
@@ -39,7 +65,7 @@ object Ann {
 
   /** Exact top-k by (cosine desc, vec_id asc); returns (qid, vec_id, rank). */
   def bruteTopK(spark: SparkSession, dir: String, q: Int = 5, k: Int = 10): DataFrame =
-    bruteTopKOver(spark, loadVecs(spark, dir), queriesFrom(spark, dir, q), k)
+    bruteTopKFrom(loadVecs(spark, dir), queriesFrom(spark, dir, q), k)
 
   /** Metadata-FILTERED vector search — top-k restricted to candidates
     * matching a structured predicate (the `label` column), the filtered-ANN
@@ -54,43 +80,48 @@ object Ann {
     val cands = table(spark, dir, "embeddings")
       .filter(col("label") === label)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    bruteTopKOver(spark, cands, queriesFrom(spark, dir, q), k)
+    bruteTopKFrom(cands, queriesFrom(spark, dir, q), k)
   }
 
-  private def bruteTopKOver(spark: SparkSession, vecs: DataFrame,
-                            queries: Seq[EmbQuery], k: Int): DataFrame = {
+  /** [[bruteTopK]] over any (vec_id, v) relation. */
+  def bruteTopKFrom(vecs: DataFrame, queries: Seq[EmbQuery], k: Int): DataFrame =
+    topKScan(asVecs(vecs), queries, k)(identity)
+
+  /** The scan under every heap tier. Queries are broadcast; each partition
+    * keeps a bounded heap per query on (−cos, vec_id)
+    * ([[graft.ops.TopK.perQuery]]), so only Q·k rows per partition reach the
+    * one rank window. A tier is `decode`, the vector its queries score a
+    * stored row on (the row itself, or its SQ8 or PQ reconstruction), and,
+    * for IVF, `probe`: the queries that score the row. A row no query probes
+    * is never decoded. The cosine is `dot(q, r) / (‖q‖·‖r‖)`, each dot left
+    * to right, as every oracle replays it. */
+  private def topKScan[P](rows: Dataset[(Long, P)], queries: Seq[EmbQuery], k: Int,
+                          probe: Option[P => Array[Int]] = None)
+                         (decode: P => Array[Double]): DataFrame = {
+    val spark = rows.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(queries.toArray)
     val kk = k
-    val partial = vecs.mapPartitions { it =>
+    val partial = rows.mapPartitions { it =>
       val qs = bc.value
-      // max-heap on (negCos, id): head = worst of the kept k
-      val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-      val heaps = Array.fill(qs.length)(
-        scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
-      it.foreach { row =>
-        val id = row.getLong(0)
-        val v = row.getSeq[Double](1).toArray
-        var i = 0
-        while (i < qs.length) {
-          val c = cosine(qs(i).vec, v)
-          val key = (-c, id)
-          val h = heaps(i)
-          if (h.size < kk) h.enqueue(key)
-          else if (ord.lt(key, h.head)) { h.dequeue(); h.enqueue(key) }
-          i += 1
-        }
-      }
-      heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
-        h.iterator.map { case (nc, id) => (qs(i).qid, id, nc) }
-      }
+      val qn = qs.map(qq => math.sqrt(dot(qq.vec, qq.vec)))
+      val all = qs.indices.toArray
+      val route = probe.getOrElse((_: P) => all)
+      TopK.perQuery(it, qs.length, kk)(_._1, r => route(r._2), { r =>
+        val v = decode(r._2); val vn = math.sqrt(dot(v, v))
+        qi => -(dot(qs(qi).vec, v) / (qn(qi) * vn))
+      }).map { case (qi, id, negCos) => (qs(qi).qid, id, negCos) }
     }.toDF("qid", "vec_id", "neg_cos")
-    partial.withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("qid")).orderBy(col("neg_cos"), col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"))
+    ranked(partial, "qid", "vec_id", k)
   }
+
+  /** The rank window of every ANN tier: the k best rows per `group` by
+    * (neg_cos, `id`), as (group, id, rank). */
+  private def ranked(scored: DataFrame, group: String, id: String, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy(col(group)).orderBy(col("neg_cos"), col(id))))
+      .filter(col("rank") <= k)
+      .select(col(group), col(id), col("rank"))
 
   /** Deterministic pseudo-random hyperplanes (seeded xorshift — from scratch,
     * no wall-clock / Random). */
@@ -109,6 +140,28 @@ object Ann {
     sig
   }
 
+  /** The LSH band rows (vec_id, band, bucket) of every vector: its `nBits`
+    * signature cut into `bands` buckets of `nBits / bands` bits. The planes
+    * follow from each vector's length — [[hyperplanes]] is deterministic —
+    * so a partition draws them once per length it meets. Only ids and
+    * buckets leave the scan, never the embedding. */
+  private def bandRows(vecs: DataFrame, nBits: Int, bands: Int): DataFrame = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    val bitsPerBand = nBits / bands
+    val mask = (1L << bitsPerBand) - 1
+    val nb = nBits; val nbands = bands
+    asVecs(vecs.select(col("vec_id"), col("v"))).mapPartitions { it =>
+      var dim = -1
+      var planes = Array.empty[Array[Double]]
+      it.flatMap { case (id, v) =>
+        if (v.length != dim) { dim = v.length; planes = hyperplanes(nb, dim) }
+        val sig = signature(v, planes)
+        Iterator.tabulate(nbands)(b => (id, b, (sig >>> (b * bitsPerBand)) & mask))
+      }
+    }.toDF("vec_id", "band", "bucket")
+  }
+
   /** LSH-bucketed ANN: sign-bit signature over deterministic hyperplanes;
     * candidates = rows matching a query in ≥1 band; exact cosine rerank of
     * candidates only, so the output equals brute-force top-k whenever recall
@@ -116,7 +169,7 @@ object Ann {
     *
     * Shuffle discipline at 10^12 rows (the round-1 version violated all
     * three): the embedding column NEVER enters the band explode or the
-    * distinct — only (vec_id, band, vband) rows move; candidate ids
+    * distinct — only (vec_id, band, bucket) rows move; candidate ids
     * deduplicate BEFORE vectors are fetched; vectors are joined back exactly
     * once for the rerank. Query vectors resolve via a broadcast hash Map,
     * not a linear scan. */
@@ -150,22 +203,37 @@ object Ann {
   def cosineNearDupPairs(spark: SparkSession, dir: String, minCos: Double = 0.45,
                          blocks: Int = 8): DataFrame = {
     import spark.implicits._
-    val b = blocks
     val thr = minCos
-    val withNorm = loadVecs(spark, dir).as[(Long, Array[Double])]
-      .mapPartitions(_.map { case (id, v) => (id, v, math.sqrt(dot(v, v))) })
-    // triangle replication: a vector in block p is the "row" side of pairs
-    // (p, j≥p) and the "column" side of pairs (i<p, p) — every unordered
-    // block pair lands in exactly one group, every vector in `blocks` groups
-    val keyed = withNorm.flatMap { case (id, v, n) =>
+    blockPairs(loadVecs(spark, dir), blocks)(_.collect {
+      case (a, b, c) if c >= thr =>
+        (math.min(a, b), math.max(a, b), math.floor(c * 10000.0 + 0.5).toLong)
+    }).toDF("a", "b", "cos_e4")
+  }
+
+  /** Every unordered pair of vectors exactly once, with its cosine, grouped
+    * by the triangle block decomposition. Vectors go to `blocks` disjoint
+    * blocks by id; a vector in block p is the row side of the block pairs
+    * (p, j ≥ p) and the column side of (i < p, p), so every unordered block
+    * pair is one group of a groupByKey and every vector ships to exactly
+    * `blocks` groups. Norms are computed once per vector, and
+    * cos = dot(a, b) / (‖a‖·‖b‖) uses the left-to-right dot the all-pairs
+    * oracles replay. `perGroup` folds one group's (a, b, cos) pairs into
+    * that group's output rows. */
+  private def blockPairs[T: Encoder](vecs: DataFrame, blocks: Int)
+                                    (perGroup: Iterator[(Long, Long, Double)] => Iterator[T]): Dataset[T] = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    val b = blocks
+    val keyed = asVecs(vecs).mapPartitions(_.flatMap { case (id, v) =>
+      val n = math.sqrt(dot(v, v))
       val p = (id % b).toInt
       Iterator.range(p, b).map(j => (p * b + j, id, v, n)) ++
         Iterator.range(0, p).map(i => (i * b + p, id, v, n))
-    }
+    })
     keyed.groupByKey(_._1).flatMapGroups { (key, it) =>
       val bi = key / b; val bj = key % b
-      val rows = new scala.collection.mutable.ArrayBuffer[(Long, Array[Double], Double)]
-      val cols = new scala.collection.mutable.ArrayBuffer[(Long, Array[Double], Double)]
+      val rows = mutable.ArrayBuffer.empty[(Long, Array[Double], Double)]
+      val cols = mutable.ArrayBuffer.empty[(Long, Array[Double], Double)]
       it.foreach { case (_, id, v, n) =>
         val p = (id % b).toInt
         if (p == bi) rows += ((id, v, n))
@@ -173,91 +241,37 @@ object Ann {
       }
       val left = rows.toArray
       val right = if (bi == bj) left else cols.toArray
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]
-      var x = 0
-      while (x < left.length) {
-        val (ida, va, na) = left(x)
-        var y = if (bi == bj) x + 1 else 0
-        while (y < right.length) {
-          val (idb, vb, nb) = right(y)
-          val c = dot(va, vb) / (na * nb)
-          if (c >= thr) {
-            val lo = math.min(ida, idb); val hi = math.max(ida, idb)
-            out += ((lo, hi, math.floor(c * 10000.0 + 0.5).toLong))
-          }
-          y += 1
-        }
-        x += 1
-      }
-      out.iterator
-    }.toDF("a", "b", "cos_e4")
+      perGroup(for {
+        x <- left.indices.iterator
+        y <- (if (bi == bj) x + 1 else 0).until(right.length).iterator
+      } yield {
+        val (ida, va, na) = left(x); val (idb, vb, nb) = right(y)
+        (ida, idb, dot(va, vb) / (na * nb))
+      })
+    }
   }
 
   /** kNN-GRAPH construction — every vector's exact top-k neighbors, the
     * graph that clustering, SemDeDup-style analyses and graph-based ANN
-    * indexes (HNSW/NSG) are built from. Same triangle block decomposition as
-    * [[cosineNearDupPairs]] (each unordered block pair is one group, each
-    * vector replicates to `blocks` groups), but instead of emitting
-    * threshold pairs each group keeps PER-VECTOR bounded heaps for BOTH
-    * sides and emits at most k candidates per vector per group — the
-    * exchange after the quadratic is ≤ N·blocks·k rows, never N². A global
-    * window reduces the per-group candidates to the true top-k (every
-    * other vector is met exactly once across groups, so the union of group
-    * heaps contains the global top-k). Cosine = dot/(‖a‖·‖b‖) with
-    * per-vector norms computed once (the q44 kernel, replicated in the q77
-    * oracle's all-pairs window). */
+    * indexes (HNSW/NSG) are built from. Runs over [[blockPairs]] like
+    * [[cosineNearDupPairs]], but instead of emitting threshold pairs each
+    * group keeps a bounded heap per vector for BOTH sides of every pair and
+    * emits at most k candidates per vector per group — the exchange after
+    * the quadratic is ≤ N·blocks·k rows, never N². A global window reduces
+    * the per-group candidates to the true top-k (every other vector is met
+    * exactly once across groups, so the union of group heaps contains the
+    * global top-k), replicated in the q77 oracle's all-pairs window. */
   def knnGraph(spark: SparkSession, dir: String, k: Int = 4, blocks: Int = 8): DataFrame = {
     import spark.implicits._
-    val b = blocks; val kk = k
-    val withNorm = loadVecs(spark, dir).as[(Long, Array[Double])]
-      .mapPartitions(_.map { case (id, v) => (id, v, math.sqrt(dot(v, v))) })
-    val keyed = withNorm.flatMap { case (id, v, n) =>
-      val p = (id % b).toInt
-      Iterator.range(p, b).map(j => (p * b + j, id, v, n)) ++
-        Iterator.range(0, p).map(i => (i * b + p, id, v, n))
-    }
-    val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-    val partial = keyed.groupByKey(_._1).flatMapGroups { (key, it) =>
-      val bi = key / b; val bj = key % b
-      val rows = new scala.collection.mutable.ArrayBuffer[(Long, Array[Double], Double)]
-      val cols = new scala.collection.mutable.ArrayBuffer[(Long, Array[Double], Double)]
-      it.foreach { case (_, id, v, n) =>
-        val p = (id % b).toInt
-        if (p == bi) rows += ((id, v, n))
-        if (p == bj && bi != bj) cols += ((id, v, n))
-      }
-      val left = rows.toArray
-      val right = if (bi == bj) left else cols.toArray
-      val heaps = new scala.collection.mutable.HashMap[
-        Long, scala.collection.mutable.PriorityQueue[(Double, Long)]]()
-      def offer(id: Long, key: (Double, Long)): Unit = {
-        val h = heaps.getOrElseUpdate(id,
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
-        if (h.size < kk) h.enqueue(key)
-        else if (ord.lt(key, h.head)) { h.dequeue(); h.enqueue(key) }
-      }
-      var x = 0
-      while (x < left.length) {
-        val (ida, va, na) = left(x)
-        var y = if (bi == bj) x + 1 else 0
-        while (y < right.length) {
-          val (idb, vb, nb) = right(y)
-          val c = dot(va, vb) / (na * nb)
-          offer(ida, (-c, idb))
-          offer(idb, (-c, ida))
-          y += 1
-        }
-        x += 1
-      }
-      heaps.iterator.flatMap { case (id, h) =>
-        h.iterator.map { case (nc, nbr) => (id, nbr, nc) }
-      }
+    val kk = k
+    val partial = blockPairs(loadVecs(spark, dir), blocks) { pairs =>
+      val heaps = mutable.HashMap.empty[Long, TopK.Heap]
+      def offer(id: Long, negCos: Double, nbr: Long): Unit =
+        heaps.getOrElseUpdate(id, new TopK.Heap(kk)).offer(negCos, nbr)
+      pairs.foreach { case (a, b, c) => offer(a, -c, b); offer(b, -c, a) }
+      heaps.iterator.flatMap { case (id, h) => h.iterator.map { case (nc, nbr) => (id, nbr, nc) } }
     }.toDF("vec_id", "nbr", "neg_cos")
-    partial.withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id")).orderBy(col("neg_cos"), col("nbr"))))
-      .filter(col("rank") <= k)
-      .select(col("vec_id"), col("nbr"), col("rank"))
+    ranked(partial, "vec_id", "nbr", k)
   }
 
   /** LSH-bucketed near-dup tier — the scale path of [[cosineNearDupPairs]]
@@ -282,19 +296,11 @@ object Ann {
     * mapPartitions kernel over primitive arrays — cosine once per candidate,
     * never in a join condition. */
   def cosineNearDupLshTier(vecs: DataFrame, minCos: Double,
-                           nBits: Int = 64, bands: Int = 8, dim: Int = 64,
+                           nBits: Int = 64, bands: Int = 8,
                            maxBucket: Int = 64): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val planes = hyperplanes(nBits, dim)
-    val bcP = spark.sparkContext.broadcast(planes)
-    val bitsPerBand = nBits / bands
-    val mask = (1L << bitsPerBand) - 1
-    val sigUdf = udf { (v: Seq[Double]) => signature(v.toArray, bcP.value) }
-    val banded = vecs.withColumn("sig", sigUdf(col("v")))
-      .select(col("vec_id"), posexplode(array((0 until bands).map(b =>
-        shiftright(col("sig"), b * bitsPerBand).bitwiseAND(lit(mask))): _*)))
-      .toDF("doc_id", "band", "bucket")
+    val banded = bandRows(vecs, nBits, bands).withColumnRenamed("vec_id", "doc_id")
     val cand = graft.text.Dedup.boundedPairs(banded, maxBucket)
     // vectors join back exactly once per side; the verify kernel runs over
     // primitive arrays inside the partition
@@ -346,45 +352,14 @@ object Ann {
     * the whole tier; AnnSpec separately pins recall@k against the
     * full-precision brute answer (quantization loses information — the
     * RECALL is the honest quality metric, the gate pins the mechanics). */
-  def sqTopK(spark: SparkSession, dir: String, q: Int = 5, k: Int = 10): DataFrame = {
-    import spark.implicits._
-    val queries = queriesFrom(spark, dir, q)
-    val bc = spark.sparkContext.broadcast(queries.toArray)
-    val kk = k
-    val partial = loadVecs(spark, dir).as[(Long, Array[Double])].mapPartitions { it =>
-      val qs = bc.value
-      val qn = qs.map(qq => math.sqrt(dot(qq.vec, qq.vec)))
-      val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-      val heaps = Array.fill(qs.length)(
-        scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
-      it.foreach { case (id, v) =>
-        val (lo, step, codes) = sqQuantize(v)
-        var qi = 0
-        while (qi < qs.length) {
-          val qv = qs(qi).vec
-          var s = 0.0; var rr = 0.0; var i = 0
-          while (i < codes.length) {
-            val r = lo + (codes(i) + 128).toDouble * step
-            s += qv(i) * r; rr += r * r
-            i += 1
-          }
-          val c = s / (qn(qi) * math.sqrt(rr))
-          val key = (-c, id)
-          val h = heaps(qi)
-          if (h.size < kk) h.enqueue(key)
-          else if (ord.lt(key, h.head)) { h.dequeue(); h.enqueue(key) }
-          qi += 1
-        }
-      }
-      heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
-        h.iterator.map { case (nc, id) => (qs(i).qid, id, nc) }
-      }
-    }.toDF("qid", "vec_id", "neg_cos")
-    partial.withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("qid")).orderBy(col("neg_cos"), col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"))
+  def sqTopK(spark: SparkSession, dir: String, q: Int = 5, k: Int = 10): DataFrame =
+    topKScan(asVecs(loadVecs(spark, dir)), queriesFrom(spark, dir, q), k)(sqDecode)
+
+  /** The SQ8 reconstruction `lo + code·step` of a stored vector, the vector
+    * the SQ8 tiers score (replayed by the q66 oracle). */
+  private def sqDecode(v: Array[Double]): Array[Double] = {
+    val (lo, step, codes) = sqQuantize(v)
+    codes.map(c => lo + (c + 128).toDouble * step)
   }
 
   /** IVF routing composed over the SQ8 index — the standard two-lever memory
@@ -406,67 +381,22 @@ object Ann {
     ivfSqTopKFrom(loadVecs(spark, dir), queriesFrom(spark, dir, q), k, nlist, nprobe, iters)
 
   def ivfSqTopKFrom(vecs: DataFrame, queries: Seq[EmbQuery], k: Int,
-                    nlist: Int, nprobe: Int, iters: Int = 2): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
+                    nlist: Int, nprobe: Int, iters: Int = 2): DataFrame =
+    topKScan(asVecs(vecs), queries, k,
+      Some(probedBy(vecs, queries, nlist, nprobe, iters)))(sqDecode)
+
+  /** The IVF probe as a row router. Trains [[ivfCentroids]], gives each query
+    * the `nprobe` lists nearest it by (cosine desc, list), and returns, for a
+    * stored vector, the indices of the queries probing its list (its
+    * [[nearest]] centroid). Routing stays full precision in every IVF tier. */
+  private def probedBy(vecs: DataFrame, queries: Seq[EmbQuery], nlist: Int, nprobe: Int,
+                       iters: Int): Array[Double] => Array[Int] = {
     val cents = ivfCentroids(vecs, nlist, iters)
-    val probes: Map[Long, Array[Int]] = queries.map { qq =>
-      qq.qid -> cents.indices
-        .sortBy(ci => (-cosine(cents(ci), qq.vec), ci)).take(nprobe).toArray
-    }.toMap
-    val bcC = spark.sparkContext.broadcast(cents)
-    val bcQ = spark.sparkContext.broadcast(queries.toArray)
-    val bcProbes = spark.sparkContext.broadcast(probes)
-    val kk = k
-    // one scan: assign the list (full-precision router), quantize once,
-    // score through the reconstruction for every query probing that list —
-    // vectors never shuffle, only Q·k heap survivors per partition do
-    val partial = vecs.as[(Long, Array[Double])].mapPartitions { it =>
-      val cs = bcC.value; val qs = bcQ.value; val pr = bcProbes.value
-      val qn = qs.map(qq => math.sqrt(dot(qq.vec, qq.vec)))
-      val probed = qs.map(qq => pr(qq.qid))
-      val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-      val heaps = Array.fill(qs.length)(
-        scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
-      it.foreach { case (id, v) =>
-        var best = 0; var bestC = Double.NegativeInfinity
-        var ci = 0
-        while (ci < cs.length) {
-          val c = cosine(cs(ci), v)
-          if (c > bestC) { bestC = c; best = ci }
-          ci += 1
-        }
-        var quant: (Double, Double, Array[Byte]) = null
-        var qi = 0
-        while (qi < qs.length) {
-          if (probed(qi).contains(best)) {
-            if (quant == null) quant = sqQuantize(v)
-            val (lo, step, codes) = quant
-            val qv = qs(qi).vec
-            var s = 0.0; var rr = 0.0; var i = 0
-            while (i < codes.length) {
-              val r = lo + (codes(i) + 128).toDouble * step
-              s += qv(i) * r; rr += r * r
-              i += 1
-            }
-            val c = s / (qn(qi) * math.sqrt(rr))
-            val key = (-c, id)
-            val h = heaps(qi)
-            if (h.size < kk) h.enqueue(key)
-            else if (ord.lt(key, h.head)) { h.dequeue(); h.enqueue(key) }
-          }
-          qi += 1
-        }
-      }
-      heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
-        h.iterator.map { case (nc, id) => (qs(i).qid, id, nc) }
-      }
-    }.toDF("qid", "vec_id", "neg_cos")
-    partial.withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("qid")).orderBy(col("neg_cos"), col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"))
+    val probes = queries.map(qq =>
+      cents.indices.sortBy(ci => (-cosine(cents(ci), qq.vec), ci)).take(nprobe).toSet)
+    val byList = cents.indices.map(ci => queries.indices.filter(qi => probes(qi)(ci)).toArray)
+    val bc = vecs.sparkSession.sparkContext.broadcast((cents, byList.toArray))
+    v => { val (cs, by) = bc.value; by(nearest(cs, v)) }
   }
 
   /** Deterministic planted near-dup corpus for gating the LSH tier: ids
@@ -512,40 +442,20 @@ object Ann {
     ivfTopKFrom(loadVecs(spark, dir), queriesFrom(spark, dir, q), k, nlist, nprobe, iters)
 
   def ivfTopKFrom(vecs: DataFrame, queries: Seq[EmbQuery], k: Int,
-                  nlist: Int, nprobe: Int, iters: Int = 2): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val cents = ivfCentroids(vecs, nlist, iters)
-    val bcC = spark.sparkContext.broadcast(cents)
-    // probe sets per query: nprobe centroids nearest by cosine
-    val probes: Map[Long, Array[Int]] = queries.map { qq =>
-      qq.qid -> cents.indices
-        .sortBy(ci => (-cosine(cents(ci), qq.vec), ci)).take(nprobe).toArray
-    }.toMap
-    val bcQ = spark.sparkContext.broadcast(queries.map(qq => qq.qid -> qq.vec).toMap)
-    val bcProbes = spark.sparkContext.broadcast(probes)
-    // one scan: assign list, emit (qid, vec_id, cos) for probed members only;
-    // vectors never shuffle — only the Q·|probed| candidate rows do
-    val scored = vecs.as[(Long, Array[Double])].mapPartitions { it =>
-      val cs = bcC.value; val qs = bcQ.value; val pr = bcProbes.value
-      it.flatMap { case (id, v) =>
-        var best = 0; var bestC = Double.NegativeInfinity
-        var ci = 0
-        while (ci < cs.length) {
-          val c = cosine(cs(ci), v)
-          if (c > bestC) { bestC = c; best = ci }
-          ci += 1
-        }
-        pr.iterator.collect {
-          case (qid, lists) if lists.contains(best) => (qid, id, cosine(qs(qid), v))
-        }
-      }
-    }.toDF("qid", "vec_id", "cos")
-    scored.withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"))
+                  nlist: Int, nprobe: Int, iters: Int = 2): DataFrame =
+    topKScan(asVecs(vecs), queries, k,
+      Some(probedBy(vecs, queries, nlist, nprobe, iters)))(identity)
+
+  /** Index of the centroid nearest `v` by cosine; ties go to the lower index. */
+  private def nearest(cs: Array[Array[Double]], v: Array[Double]): Int = {
+    var best = 0; var bestC = Double.NegativeInfinity
+    var ci = 0
+    while (ci < cs.length) {
+      val c = cosine(cs(ci), v)
+      if (c > bestC) { bestC = c; best = ci }
+      ci += 1
+    }
+    best
   }
 
   /** Deterministic IVF centroids: seeded from the `nlist` lowest vec_ids,
@@ -572,13 +482,7 @@ object Ann {
         val sums = Array.fill(cs.length)(new Array[Double](cs.head.length))
         val counts = new Array[Long](cs.length)
         it.foreach { case (_, v) =>
-          var best = 0; var bestC = Double.NegativeInfinity
-          var ci = 0
-          while (ci < cs.length) {
-            val c = cosine(cs(ci), v)
-            if (c > bestC) { bestC = c; best = ci }
-            ci += 1
-          }
+          val best = nearest(cs, v)
           var i = 0
           while (i < v.length) { sums(best)(i) += v(i); i += 1 }
           counts(best) += 1
@@ -702,48 +606,21 @@ object Ann {
     }
     // one search scan: assign final codes, reconstruct, exact q66 kernel
     val bcC = spark.sparkContext.broadcast(cents)
-    val bcQ = spark.sparkContext.broadcast(queries.toArray)
-    val kk = k
-    val partial = lats.mapPartitions { it =>
-      val cs = bcC.value; val qs = bcQ.value
-      val qn = qs.map(qq => math.sqrt(dot(qq.vec, qq.vec)))
-      val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-      val heaps = Array.fill(qs.length)(
-        scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
-      val recon = new Array[Double](mm * dss)
-      it.foreach { case (id, lat) =>
-        var s = 0
-        while (s < mm) {
-          val j = pqAssign(cs, lat, s, dss)
-          var d = 0
-          while (d < dss) { recon(s * dss + d) = cs(s)(j)(d).toDouble / 1e6; d += 1 }
-          s += 1
-        }
-        var rr = 0.0; var i = 0
-        while (i < recon.length) { rr += recon(i) * recon(i); i += 1 }
-        val rn = math.sqrt(rr)
-        var qi = 0
-        while (qi < qs.length) {
-          val qv = qs(qi).vec
-          var sd = 0.0; i = 0
-          while (i < recon.length) { sd += qv(i) * recon(i); i += 1 }
-          val c = sd / (qn(qi) * rn)
-          val key = (-c, id)
-          val h = heaps(qi)
-          if (h.size < kk) h.enqueue(key)
-          else if (ord.lt(key, h.head)) { h.dequeue(); h.enqueue(key) }
-          qi += 1
-        }
-      }
-      heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
-        h.iterator.map { case (nc, id) => (qs(i).qid, id, nc) }
-      }
-    }.toDF("qid", "vec_id", "neg_cos")
-    partial.withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("qid")).orderBy(col("neg_cos"), col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"))
+    topKScan(lats, queries, k)(lat => pqDecode(bcC.value, lat, dss))
+  }
+
+  /** A lattice vector's PQ reconstruction: each subvector becomes its
+    * assigned centroid, back at unit scale. */
+  private def pqDecode(cs: Array[Array[Array[Long]]], lat: Array[Long], dsub: Int): Array[Double] = {
+    val recon = new Array[Double](cs.length * dsub)
+    var s = 0
+    while (s < cs.length) {
+      val j = pqAssign(cs, lat, s, dsub)
+      var d = 0
+      while (d < dsub) { recon(s * dsub + d) = cs(s)(j)(d).toDouble / 1e6; d += 1 }
+      s += 1
+    }
+    recon
   }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -780,17 +657,7 @@ object Ann {
       if (nlist <= 1) vecs.withColumn("list", lit(0))
       else {
         val bcC = spark.sparkContext.broadcast(ivfCentroids(vecs, nlist, iters))
-        val assignUdf = udf { (v: Seq[Double]) =>
-          val cs = bcC.value; val arr = v.toArray
-          var best = 0; var bestC = Double.NegativeInfinity
-          var ci = 0
-          while (ci < cs.length) {
-            val c = cosine(cs(ci), arr)
-            if (c > bestC) { bestC = c; best = ci }
-            ci += 1
-          }
-          best
-        }
+        val assignUdf = udf { (v: Seq[Double]) => nearest(bcC.value, v.toArray) }
         vecs.withColumn("list", assignUdf(col("v")))
       }
     // each vector shuffles ONCE on its cluster id (a self-join would move
@@ -820,29 +687,20 @@ object Ann {
   }
 
   /** Candidate id pairs (qid, vec_id) from the band join — only
-    * (vec_id, band, vband) rows ever move; no embedding in the exchange. */
+    * (vec_id, band, bucket) rows ever move; no embedding in the exchange. */
   def lshCandidates(vecs: DataFrame, queries: Seq[EmbQuery],
                     nBits: Int, bands: Int): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val dim = queries.head.vec.length
-    val planes = hyperplanes(nBits, dim)
-    val bcP = spark.sparkContext.broadcast(planes)
+    val planes = hyperplanes(nBits, queries.head.vec.length)
     val bitsPerBand = nBits / bands
     val mask = (1L << bitsPerBand) - 1
-    val sigUdf = udf { (v: Seq[Double]) => signature(v.toArray, bcP.value) }
-    val signed = vecs.withColumn("sig", sigUdf(col("v")))
     val qBands = queries.flatMap { qq =>
       val sig = signature(qq.vec, planes)
       (0 until bands).map(b => (qq.qid, b, (sig >>> (b * bitsPerBand)) & mask))
     }.toDF("qid", "qband_idx", "qband")
-    // bitwiseAND, not %: shiftright sign-extends and signed % is not a mask
-    val vBands = signed.select(col("vec_id"), posexplode(
-        array((0 until bands).map(b =>
-          shiftright(col("sig"), b * bitsPerBand).bitwiseAND(lit(mask))): _*)))
-      .toDF("vec_id", "band", "vband")
-    vBands.join(broadcast(qBands),
-        col("band") === col("qband_idx") && col("vband") === col("qband"))
+    bandRows(vecs, nBits, bands).join(broadcast(qBands),
+        col("band") === col("qband_idx") && col("bucket") === col("qband"))
       .select(col("qid"), col("vec_id")).distinct()
   }
 
@@ -871,13 +729,8 @@ object Ann {
     val cand = lshCandidates(vecs, queries, nBits, bands)
     // single vector fetch for the rerank — the only time embeddings shuffle,
     // and only for candidate ids
-    val cosUdf = udf { (qid: Long, v: Seq[Double]) => cosine(bcQ.value(qid), v.toArray) }
-    cand.join(vecs, Seq("vec_id"))
-      .withColumn("cos", cosUdf(col("qid"), col("v")))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank"))
+    val negCosUdf = udf { (qid: Long, v: Seq[Double]) => -cosine(bcQ.value(qid), v.toArray) }
+    ranked(cand.join(vecs, Seq("vec_id")).withColumn("neg_cos", negCosUdf(col("qid"), col("v"))),
+      "qid", "vec_id", k)
   }
 }

@@ -31,15 +31,14 @@ object Quadkey {
     * The Gudermannian term uses `atanh(sinφ) = 0.5·ln((1+sinφ)/(1−sinφ))`
     * — 2 transcendentals — instead of the textbook `ln(tanφ + 1/cosφ)` — 3.
     * Identical mathematically; in FP the two differ by final ulps, so the
-    * DuckDB oracle replica (OracleSql.pipelineCtes) uses the SAME form.
-    * The radians differ: `Math.toRadians` multiplies by π/180 where the
-    * oracle computes `lat / 180 · π`. A Java-vs-DuckDB sweep of this
-    * function over 2M geotag latitudes at z12 (`graft.Dev merc` +
-    * tools/merc_parity.py) found 172,107 raw values that differ, by at most
-    * 1.0e-11 tile units, and ZERO tile-level disagreements; only the floor
-    * is ever consumed. */
+    * DuckDB oracle replica (OracleSql.pipelineCtes) uses the SAME form, and
+    * the radians are spelled as the oracle spells them, `lat / 180 · π`
+    * (`Math.toRadians` multiplies by π/180 and differs in the last ulp on
+    * some latitudes). [[tileYCol]] spells them the same way. `graft.Dev
+    * merc` + tools/merc_parity.py compare this function with DuckDB's over
+    * 2M geotag latitudes at z12. */
   def tileYRaw(lat: Double, z: Int): Double = {
-    val s = math.sin(math.toRadians(clampLat(lat)))
+    val s = math.sin(clampLat(lat) / 180.0 * math.Pi)
     (1.0 - 0.5 * math.log((1.0 + s) / (1.0 - s)) / math.Pi) / 2.0 * (1L << z)
   }
 
@@ -122,16 +121,16 @@ object Quadkey {
       floor((lon + lit(180.0)) / lit(360.0) * lit(n.toDouble)).cast("long"))).cast("int")
   }
 
-  /** Tile y as a pure Column expression — same atanh(sinφ) form as the
-    * scalar [[tileY]] (the two must assign identical tiles or the cell
-    * cover `PipJoin.joinViaCellCover` builds from the scalar could drop
-    * boundary rows). The
+  /** Tile y as a pure Column expression — same atanh(sinφ) form and the
+    * same `lat / 180 · π` radians as the scalar [[tileYRaw]] (the two must
+    * assign identical tiles or the cell cover `PipJoin.joinViaCellCover`
+    * builds from the scalar could drop boundary rows). The
     * repeated `sin(latRad)` subtree is shared by whole-stage codegen's
     * subexpression elimination: one sin + one log per row. */
   def tileYCol(lat: Column, z: Int): Column = {
     val n = 1L << z
     val latC = greatest(lit(-MaxLat), least(lit(MaxLat), lat))
-    val s = sin(radians(latC))
+    val s = sin(latC / lit(180.0) * lit(math.Pi))
     val yRaw = (lit(1.0) - lit(0.5) * log((lit(1.0) + s) / (lit(1.0) - s)) / lit(math.Pi)) / lit(2.0) * lit(n.toDouble)
     least(lit(n - 1), greatest(lit(0L), floor(yRaw).cast("long"))).cast("int")
   }

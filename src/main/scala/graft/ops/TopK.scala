@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -18,8 +20,52 @@ import graft.Session.table
   * TopKSpec pins equality against Spark's own window plan and that the
   * executed plan contains partial_topk (objectagg) below the exchange
   * rather than a Window above it.
+  *
+  * [[Heap]] and [[perQuery]] are the bounded top-k that every
+  * nearest-neighbour scan keeps per partition (`graft.ann.Ann`,
+  * `graft.spatial.Knn`).
   */
 object TopK {
+
+  /** The bounded top-k of every nearest-neighbour path: the k least
+    * (key, id) pairs under `Ordering.Double.TotalOrdering`, then id. Ties at
+    * an equal key keep the lower id; NaN sorts after +∞ and −0.0 before 0.0.
+    * Which candidates survive a partition is decided here, so this is the
+    * one order the paths' rank windows and merges must agree with. */
+  final class Heap(k: Int) {
+    private val pq = mutable.PriorityQueue.empty[(Double, Long)](Heap.order)
+    def offer(key: Double, id: Long): Unit =
+      if (pq.size < k) pq.enqueue((key, id))
+      else if (k > 0 && Heap.order.lt((key, id), pq.head)) { pq.dequeue(); pq.enqueue((key, id)) }
+    def iterator: Iterator[(Double, Long)] = pq.iterator
+    /** The kept pairs, best first. */
+    def sorted: Seq[(Double, Long)] = pq.toSeq.sorted(Heap.order)
+  }
+
+  object Heap {
+    val order: Ordering[(Double, Long)] =
+      Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
+  }
+
+  /** One partition of a per-query top-k scan, the loop under every
+    * nearest-neighbour path: one [[Heap]] per query index `0 until nq`. Per
+    * row, `queries` names the query indices that score it (all of them, or
+    * the subset an index routes it to; an empty array skips the row) and
+    * `keys(row)` gives its key for one of them. Yields every heap's
+    * survivors as (query index, id, key). */
+  def perQuery[R](rows: Iterator[R], nq: Int, k: Int)(
+      id: R => Long, queries: R => Array[Int], keys: R => Int => Double): Iterator[(Int, Long, Double)] = {
+    val heaps = Array.fill(nq)(new Heap(k))
+    rows.foreach { r =>
+      val qs = queries(r)
+      if (qs.length > 0) {
+        val key = keys(r); val rid = id(r)
+        var i = 0
+        while (i < qs.length) { heaps(qs(i)).offer(key(qs(i)), rid); i += 1 }
+      }
+    }
+    for ((h, q) <- heaps.iterator.zipWithIndex; (key, rid) <- h.iterator) yield (q, rid, key)
+  }
 
   final case class TopKBuf(items: Seq[(Long, Long)]) // (value, key), value desc
   final case class SegTop(seg: String, items: Seq[(Long, Long)])

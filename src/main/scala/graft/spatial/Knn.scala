@@ -1,7 +1,8 @@
 package graft.spatial
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import graft.index.Hex
+import graft.ops.TopK
 
 /** k-nearest-neighbour over a big point table vs a small query set
   * (north_rule: "kNN via H3 ring expansion").
@@ -17,12 +18,14 @@ import graft.index.Hex
   *     holding ≥ k points bounds the kth distance by r·2·inradius + 2·edge,
   *     so ring R = 2r+4 provably covers the true kNN (any point outside
   *     ring R is ≥ (R−1)·inradius away — farther than that bound).
-  *  3. *Top-k pass*: per-partition bounded heaps over ring candidates — only
-  *     Q·k rows leave each partition.
+  *  3. *Top-k pass*: [[topKScan]] scores each point against the queries
+  *     whose ring holds its cell, in per-partition bounded heaps — only Q·k
+  *     rows leave each partition.
   *  4. The exactness condition (k found ∧ kth distance ≤ safe radius) is
   *     re-verified on the merged result; queries that fail it (under-dense
   *     neighborhoods with < k points inside `RingCap`) fall back to one
-  *     exact brute-force scan and the fallback is LOGGED — never silent.
+  *     exact brute-force scan — the same [[topKScan]] over every point — and
+  *     the fallback is LOGGED, never silent.
   *
   * Distance metric: Euclidean in degree space (documented; callers wanting
   * great-circle rank should pre-project). Ties broken by point id so results
@@ -79,34 +82,37 @@ object Knn {
 
     // ---- pass 2: one top-k pass at the certified per-query rings ------
     val cand =
-      if (sized.isEmpty) Array.empty[(Long, Long, Double)]
-      else candidatesWithin(pts, sized.map(q => (q, ringOf(q.qid).get)), k, res)
+      if (sized.isEmpty) Map.empty[Long, Seq[(Double, Long)]]
+      else {
+        // candidate cells per query (driver-side; |disk| = 3r(r+1)+1, fine for small Q)
+        val near = sized.zipWithIndex
+          .flatMap { case (q, i) => Hex.disk(qCells(q.qid), ringOf(q.qid).get).map(c => (c, i)) }
+          .groupBy(_._1).map { case (c, xs) => (c, xs.map(_._2).toArray) }
+        topKScan(pts, sized, Some(near), k, res)
+      }
 
     // exactness re-check (belt and braces: doesn't trust the ring math)
     val (exact, failed) = sized.partition { q =>
-      val mine = cand.filter(_._1 == q.qid)
+      val mine = cand.getOrElse(q.qid, Nil)
       val safe = (ringOf(q.qid).get - 1).toDouble * inradius
-      mine.length >= k && mine.map(_._3).max <= safe * safe
+      mine.length >= k && mine.forall(_._1 <= safe * safe)
     }
 
     val fallbackQs = underdense ++ failed
     val fallback =
-      if (fallbackQs.isEmpty) Array.empty[(Long, Long, Double)]
+      if (fallbackQs.isEmpty) Map.empty[Long, Seq[(Double, Long)]]
       else {
         System.err.println(s"[graft.Knn] exact brute-force fallback for queries " +
           s"${fallbackQs.map(_.qid).sorted.mkString(",")} (under-dense: <$k points within ring $RingCap, " +
           s"or ring certification failed) — one extra full scan")
-        bruteTopK(pts, fallbackQs, k)
+        topKScan(pts, fallbackQs, None, k, res)
       }
 
-    // rank driver-side too (the rows are already a driver-local Q·k merge) —
-    // a Spark window here would cost an extra exchange for nothing
-    val keep = exact.map(_.qid).toSet
-    val ranked = (cand.filter(x => keep(x._1)) ++ fallback)
-      .groupBy(_._1).toSeq.flatMap { case (qid, xs) =>
-        xs.sortBy(x => (x._3, x._2)).take(k).zipWithIndex
-          .map { case ((_, pid, _), i) => (qid, pid, i + 1) }
-      }
+    // both are merged per-query top-k already: rank driver-side — a Spark
+    // window here would cost an extra exchange for nothing
+    val ranked = (exact.map(q => q.qid -> cand(q.qid)) ++ fallback).flatMap { case (qid, best) =>
+      best.zipWithIndex.map { case ((_, pid), i) => (qid, pid, i + 1) }
+    }
     ranked.toDF("qid", "pid", "rank")
   }
 
@@ -131,87 +137,34 @@ object Knn {
     merged.toMap
   }
 
-  /** One prefilter+topk pass with a per-query ring radius. Returns per query
-    * the best-k (qid, pid, dist²) found among ring candidates. */
-  private def candidatesWithin(pts: DataFrame, queries: Seq[(QueryPoint, Int)], k: Int,
-                               res: Int): Array[(Long, Long, Double)] = {
-    val spark = pts.sparkSession
-    // candidate cell set per query (driver-side; |disk| = 3r(r+1)+1, fine for small Q)
-    val cellToQids: Map[Long, Array[Long]] = queries
-      .flatMap { case (q, ring) =>
-        Hex.disk(Hex.latLngToCell(q.lat, q.lon, res), ring).map(c => (c, q.qid)) }
-      .groupBy(_._1).map { case (c, xs) => (c, xs.map(_._2).toArray) }
-    val bcCells = spark.sparkContext.broadcast(cellToQids)
-    val bcQ = spark.sparkContext.broadcast(queries.map { case (q, _) => q.qid -> (q.lon, q.lat) }.toMap)
-    val kk = k
-
-    // per-partition bounded heaps: only Q*k rows leave each partition
-    val partial = pts.mapPartitions { it =>
-      val cells = bcCells.value; val qs = bcQ.value
-      val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-      val heaps = scala.collection.mutable.Map.empty[Long, scala.collection.mutable.PriorityQueue[(Double, Long)]]
-      it.foreach { row =>
-        val pid = row.getLong(0); val lon = row.getDouble(1); val lat = row.getDouble(2)
-        val cell = Hex.latLngToCell(lat, lon, res)
-        cells.get(cell).foreach { qids =>
-          var i = 0
-          while (i < qids.length) {
-            val qid = qids(i)
-            val (qlon, qlat) = qs(qid)
-            val dx = lon - qlon; val dy = lat - qlat
-            val d2 = dx * dx + dy * dy
-            val h = heaps.getOrElseUpdate(qid,
-              scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
-            if (h.size < kk) h.enqueue((d2, pid))
-            else if (ord.lt((d2, pid), h.head)) { h.dequeue(); h.enqueue((d2, pid)) }
-            i += 1
-          }
-        }
-      }
-      heaps.iterator.flatMap { case (qid, h) => h.iterator.map { case (d2, pid) => (qid, pid, d2) } }
-    }(org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaDouble)).collect()
-
-    // driver merge (Q*k*partitions rows — tiny)
-    partial.groupBy(_._1).iterator.flatMap { case (_, xs) =>
-      xs.sortBy(x => (x._3, x._2)).take(kk)
-    }.toArray
-  }
-
-  /** Exact brute force for the (rare, logged) fallback queries: no cell
-    * filter, same bounded-heap shape — still only Q·k rows per partition. */
-  private def bruteTopK(pts: DataFrame, queries: Seq[QueryPoint], k: Int): Array[(Long, Long, Double)] = {
+  /** The one top-k scan: each point is scored (d²) against the queries
+    * `near` lists for its cell, or against every query when `near` is empty
+    * (the brute-force fallback), in per-partition bounded heaps — only Q·k
+    * rows leave each partition — and the driver merges those rows through
+    * the same heap. Returns each query's k best (d², pid), best first. */
+  private def topKScan(pts: DataFrame, queries: Seq[QueryPoint], near: Option[Map[Long, Array[Int]]],
+                       k: Int, res: Int): Map[Long, Seq[(Double, Long)]] = {
     val spark = pts.sparkSession
     val bcQ = spark.sparkContext.broadcast(queries.toArray)
+    val bcNear = spark.sparkContext.broadcast(near)
     val kk = k
     val partial = pts.mapPartitions { it =>
       val qs = bcQ.value
-      val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-      val heaps = Array.fill(qs.length)(
-        scala.collection.mutable.PriorityQueue.empty[(Double, Long)](ord))
-      it.foreach { row =>
-        val pid = row.getLong(0); val lon = row.getDouble(1); val lat = row.getDouble(2)
-        var i = 0
-        while (i < qs.length) {
-          val dx = lon - qs(i).lon; val dy = lat - qs(i).lat
-          val d2 = dx * dx + dy * dy
-          val h = heaps(i)
-          if (h.size < kk) h.enqueue((d2, pid))
-          else if (ord.lt((d2, pid), h.head)) { h.dequeue(); h.enqueue((d2, pid)) }
-          i += 1
-        }
+      val all = qs.indices.toArray
+      val scoredBy: Row => Array[Int] = bcNear.value match {
+        case Some(cells) => row =>
+          cells.getOrElse(Hex.latLngToCell(row.getDouble(2), row.getDouble(1), res), Array.emptyIntArray)
+        case None => _ => all
       }
-      heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
-        h.iterator.map { case (d2, pid) => (qs(i).qid, pid, d2) }
-      }
-    }(org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaDouble)).collect()
-    partial.groupBy(_._1).iterator.flatMap { case (_, xs) =>
-      xs.sortBy(x => (x._3, x._2)).take(kk)
-    }.toArray
+      TopK.perQuery(it, qs.length, kk)(_.getLong(0), scoredBy, { row =>
+        val lon = row.getDouble(1); val lat = row.getDouble(2)
+        qi => { val dx = lon - qs(qi).lon; val dy = lat - qs(qi).lat; dx * dx + dy * dy }
+      }).map { case (qi, pid, d2) => (qs(qi).qid, pid, d2) }
+    }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble)).collect()
+    partial.groupBy(_._1).map { case (qid, xs) =>
+      val h = new TopK.Heap(k)
+      xs.foreach { case (_, pid, d2) => h.offer(d2, pid) }
+      qid -> h.sorted
+    }
   }
 }

@@ -79,6 +79,41 @@ class TopKSpec extends AnyFunSuite {
     }
     assert(agg.finish(whole) == Seq((7L, 1L), (7L, 8L), (5L, 2L)))
   }
+
+  private def heapOf(k: Int, items: Seq[(Double, Long)]): Seq[(Double, Long)] = {
+    val h = new TopK.Heap(k)
+    items.foreach { case (key, id) => h.offer(key, id) }
+    h.sorted
+  }
+
+  test("nearest-neighbour heap: equal keys keep the lower id, in any offer order") {
+    val items = Seq((0.5, 9L), (0.5, 2L), (0.1, 7L), (0.5, 4L), (0.9, 1L), (0.5, 3L))
+    for (order <- items.permutations)
+      assert(heapOf(3, order) == Seq((0.1, 7L), (0.5, 2L), (0.5, 3L)), s"order=$order")
+  }
+
+  test("nearest-neighbour heap: k beyond the input keeps every row best first; k = 0 keeps none") {
+    val items = Seq((3.0, 1L), (-1.0, 5L), (2.0, 2L))
+    assert(heapOf(10, items) == Seq((-1.0, 5L), (2.0, 2L), (3.0, 1L)))
+    assert(heapOf(0, items).isEmpty)
+  }
+
+  test("nearest-neighbour heap: NaN sorts after +Inf and -0.0 before 0.0 (TotalOrdering)") {
+    val items = Seq((Double.NaN, 1L), (0.0, 2L), (Double.PositiveInfinity, 3L), (-0.0, 4L))
+    val all = heapOf(4, items)
+    assert(all.map(_._2) == Seq(4L, 2L, 3L, 1L))
+    assert(java.lang.Double.doubleToRawLongBits(all.head._1) == java.lang.Double.doubleToRawLongBits(-0.0))
+    assert(heapOf(3, items).map(_._2) == Seq(4L, 2L, 3L), "NaN must be the first row evicted")
+    assert(heapOf(1, items.reverse).map(_._2) == Seq(4L))
+  }
+
+  test("perQuery scores a row only for the queries it names and keeps k per query") {
+    // rows (id, queries, key); key = id for query 0 and -id for query 1
+    val rows = Seq((1L, Array(0, 1)), (2L, Array(1)), (3L, Array.emptyIntArray), (4L, Array(0, 1)))
+    val got = TopK.perQuery(rows.iterator, 2, 2)(_._1, _._2,
+      r => q => if (q == 0) r._1.toDouble else -r._1.toDouble).toSet
+    assert(got == Set((0, 1L, 1.0), (0, 4L, 4.0), (1, 4L, -4.0), (1, 2L, -2.0)))
+  }
 }
 
 class SortedGroupsSpec extends AnyFunSuite {

@@ -260,6 +260,31 @@ class AnnSparkSpec extends AnyFunSuite {
     assert(part == want, s"IVF+SQ8 nprobe=3 missed: ${(want -- part).take(5)}")
   }
 
+  test("brute top-k over duplicated vectors ranks ties by vec_id, the same at 1 and 4 partitions") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val r = new Prop.Rng(47)
+    val dim = 8
+    val bases = Array.fill(40)(Array.fill(dim)(r.double(-1, 1)))
+    // three copies of every base, copy c of base b as vec_id c*1000 + b: the
+    // copies score bit-identically, so ranks 1..3 and the k = 5 cut are ties
+    val rows = for (c <- 0 until 3; (v, b) <- bases.zipWithIndex) yield (c * 1000L + b, v)
+    val queries = (0 until 5).map(b => Ann.EmbQuery(b.toLong, bases(b)))
+    val want = queries.flatMap { q =>
+      rows.map { case (id, v) => (id, Ann.cosine(q.vec, v)) }
+        .sortBy { case (id, c) => (-c, id) }.take(5).zipWithIndex
+        .map { case ((id, _), i) => (q.qid, id, i + 1) }
+    }.toSet
+    val schema = StructType(Seq(StructField("vec_id", LongType), StructField("v", ArrayType(DoubleType))))
+    for (p <- Seq(1, 4)) {
+      val vecs = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.map { case (id, v) => Row(id, v.toSeq) }, p), schema)
+      val got = Ann.bruteTopKFrom(vecs, queries, k = 5)
+        .collect().map(x => (x.getLong(0), x.getLong(1), x.getInt(2))).toSet
+      assert(got == want, s"partitions=$p: missed=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
+    }
+  }
+
   test("filteredTopK: only qualifying candidates ranked; predicate reaches the scan") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
@@ -417,7 +442,7 @@ class AnnSparkSpec extends AnyFunSuite {
     // PRODUCTION defaults, cap included: with 8-bit bands the 440-vector
     // benign corpus spreads ~2/bucket so the cap never engages, while the
     // planted near-identical pairs collide in ≥1 band deterministically
-    val got = Ann.cosineNearDupLshTier(vecs, minCos = 0.95, dim = dim)
+    val got = Ann.cosineNearDupLshTier(vecs, minCos = 0.95)
       .collect().map(x => (x.getLong(0), x.getLong(1))).toSet
     // exact truth from plain loops
     val want = (for {
@@ -572,7 +597,7 @@ class DedupHotBucketSpec extends AnyFunSuite {
     // every band has one 1000-member bucket; with the default cap the
     // candidate set is the 2m-3 dual-hub stars — and since every vector is
     // identical, cosine verify keeps them all (1997 rows, not 499,500)
-    val rows = Ann.cosineNearDupLshTier(vecs, minCos = 0.95, dim = 16).collect()
+    val rows = Ann.cosineNearDupLshTier(vecs, minCos = 0.95).collect()
     assert(rows.length == 1997, s"expected 1997, got ${rows.length}")
     assert(rows.forall(r => (r.getLong(0) == 0L || r.getLong(1) == 999L) && r.getLong(2) == 10000L))
   }
