@@ -59,7 +59,10 @@ object Ann {
 
   /** First Q vectors (by vec_id) used as the deterministic query set. */
   def queriesFrom(spark: SparkSession, dir: String, q: Int): Seq[EmbQuery] =
-    loadVecs(spark, dir).filter(col("vec_id") < q).collect()
+    queriesOf(loadVecs(spark, dir), q)
+
+  private def queriesOf(vecs: DataFrame, q: Int): Seq[EmbQuery] =
+    vecs.filter(col("vec_id") < q).collect()
       .map(r => EmbQuery(r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_.qid).toSeq
 
@@ -711,9 +714,12 @@ object Ann {
     * drift in lock-step. */
   def lshRecall(spark: SparkSession, dir: String, q: Int = 5, k: Int = 10,
                 nBits: Int = 16, bands: Int = 4): DataFrame = {
-    val lsh = lshTopK(spark, dir, q, k, nBits, bands)
+    // one table open and one query collect, shared by both tiers
+    val vecs = loadVecs(spark, dir)
+    val queries = queriesOf(vecs, q)
+    val lsh = lshTopKFrom(vecs, queries, k, nBits, bands)
       .select(col("qid"), col("vec_id")).withColumn("hit", lit(1L))
-    val brute = bruteTopK(spark, dir, q, k).select(col("qid"), col("vec_id"))
+    val brute = bruteTopKFrom(vecs, queries, k).select(col("qid"), col("vec_id"))
     brute.join(lsh, Seq("qid", "vec_id"), "left")
       .groupBy(col("qid"))
       .agg(count(lit(1)).as("k_total"),

@@ -219,10 +219,17 @@ object Checkpoint {
     *
     * ONE synthesis pass: every id in [idStart, idEnd) is bucket-assigned
     * from its seed (arithmetic only — skipped ids never render pixels),
-    * uncommitted buckets render and write in a single
-    * `partitionBy("bucket")` job under `data/epoch=E/` with dynamic
-    * partition overwrite (committed buckets' files are untouched; other
-    * epochs' directories are untouched by construction).
+    * uncommitted buckets render and write under `data/epoch=E/` with
+    * dynamic partition overwrite (committed buckets' files are untouched;
+    * other epochs' directories are untouched by construction).
+    *
+    * The rows are rebalanced by bucket before the `partitionBy("bucket")`
+    * write (Iceberg's hash write distribution), so each bucket is ONE file
+    * instead of one per range task × bucket; under AQE a bucket larger than
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` splits into
+    * advisory-sized files, so a large epoch keeps its write parallelism.
+    * Under AQE the rebalance's shuffle map stage (which renders the pixels)
+    * runs as its own job ahead of the write job.
     *
     * ONE stats action: manifests derive from the WRITTEN files — proving
     * the committed bytes — in a single grouped pass (per-row hex cell +
@@ -260,7 +267,8 @@ object Checkpoint {
     // per-write option, NOT a session-conf mutation: concurrent writers in
     // the same session must not race into static-overwrite semantics
     val epochPath = s"$outDir/data/epoch=$epoch"
-    rows.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    rows.hint("rebalance", col("bucket"))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket").parquet(epochPath)
     lastRangeEvals = evals.value
 
@@ -277,8 +285,9 @@ object Checkpoint {
         // lineage + validation metrics from what was just written (re-read →
         // proves the committed bytes, not the in-flight ones), ALL buckets in
         // one grouped action. Resumed runs must not re-derive committed
-        // buckets: filter to this run's `todo` partitions.
-        val written = spark.read.parquet(epochPath)
+        // buckets: filter to this run's `todo` partitions. The schema is the
+        // one just written, so the open runs no footer-inference job.
+        val written = spark.read.schema(rows.schema).parquet(epochPath)
           .filter(col("bucket").isin(todo: _*))
         written.select(col("bucket"), col("image_id"), col("bytes"),
             col("fmt"), col("caption"), col("phash"))

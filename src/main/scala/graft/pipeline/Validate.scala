@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import java.io.ByteArrayInputStream
+import java.awt.image.{BufferedImage, ComponentColorModel, DataBufferByte, DataBufferInt,
+  PixelInterleavedSampleModel, SinglePixelPackedSampleModel}
 import javax.imageio.ImageIO
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -25,7 +26,7 @@ object Validate {
   private val inStream = ThreadLocal.withInitial[graft.synth.ByteArrayImageInputStream](() =>
     new graft.synth.ByteArrayImageInputStream())
 
-  def decode(bytes: Array[Byte], fmt: String): java.awt.image.BufferedImage = {
+  def decode(bytes: Array[Byte], fmt: String): BufferedImage = {
     val reader = if (fmt == "jpg") jpegReader.get() else pngReader.get()
     // reused per-thread Disposer/finalizer-free stream (graft.synth.ByteStreams)
     val iis = inStream.get().setBytes(bytes)
@@ -43,35 +44,54 @@ object Validate {
   private val pixBufA = ThreadLocal.withInitial[Array[Int]](() => new Array[Int](64 * 64))
   private val pixBufB = ThreadLocal.withInitial[Array[Int]](() => new Array[Int](64 * 64))
 
-  /** Packed ARGB pixels of `img`: the backing array directly for
-    * TYPE_INT_RGB (zero copy), one batch getRGB into the reused buffer
-    * otherwise (decoded JPEGs are TYPE_3BYTE_BGR). */
-  private def packedPixels(img: java.awt.image.BufferedImage, buf: ThreadLocal[Array[Int]]): Array[Int] = {
+  /** Packed ARGB pixels of `img`, as `getRGB` packs them: the backing array
+    * directly for TYPE_INT_RGB (zero copy); a direct byte read for 8-bit
+    * sRGB interleaved rasters (decoded PNGs and JPEGs are TYPE_3BYTE_BGR),
+    * which honours the DataBuffer offset as `Raster.getPixel` does; one
+    * batch getRGB into the reused buffer for every other layout. */
+  private[graft] def packedPixels(img: BufferedImage, buf: ThreadLocal[Array[Int]]): Array[Int] = {
     // the zero-copy path needs the backing array to be exactly w*h contiguous
     // ints from offset 0 — NOT true for subimages or strided rasters, which
-    // must take the batch-conversion path or PSNR reads the wrong pixels
-    val sm = img.getSampleModel
-    val direct = img.getType == java.awt.image.BufferedImage.TYPE_INT_RGB &&
-      img.getRaster.getDataBuffer.getOffset == 0 &&
-      img.getRaster.getSampleModelTranslateX == 0 &&
-      img.getRaster.getSampleModelTranslateY == 0 &&
-      (sm match {
-        case c: java.awt.image.SinglePixelPackedSampleModel => c.getScanlineStride == img.getWidth
+    // must take a copying path or PSNR reads the wrong pixels
+    val raster = img.getRaster
+    val tx = raster.getSampleModelTranslateX
+    val ty = raster.getSampleModelTranslateY
+    val direct = img.getType == BufferedImage.TYPE_INT_RGB &&
+      raster.getDataBuffer.getOffset == 0 && tx == 0 && ty == 0 &&
+      (img.getSampleModel match {
+        case c: SinglePixelPackedSampleModel => c.getScanlineStride == img.getWidth
         case _ => false
       })
-    if (direct)
-      img.getRaster.getDataBuffer.asInstanceOf[java.awt.image.DataBufferInt].getData
-    else {
-      val n = img.getWidth * img.getHeight
-      var b = buf.get()
-      if (b.length < n) { b = new Array[Int](n); buf.set(b) }
-      img.getRGB(0, 0, img.getWidth, img.getHeight, b, 0, img.getWidth)
-      b
+    if (direct) return raster.getDataBuffer.asInstanceOf[DataBufferInt].getData
+    val w = img.getWidth; val h = img.getHeight
+    var b = buf.get()
+    if (b.length < w * h) { b = new Array[Int](w * h); buf.set(b) }
+    (img.getSampleModel, raster.getDataBuffer, img.getColorModel) match {
+      // an 8-bit sRGB component model maps band i to component i unchanged
+      case (sm: PixelInterleavedSampleModel, db: DataBufferByte, cm: ComponentColorModel)
+          if sm.getNumBands == 3 && db.getNumBanks == 1 && !cm.hasAlpha &&
+            cm.getColorSpace.isCS_sRGB && cm.getComponentSize.forall(_ == 8) =>
+        val data = db.getData
+        val bo = sm.getBandOffsets
+        val ps = sm.getPixelStride; val ss = sm.getScanlineStride
+        var y = 0
+        while (y < h) {
+          var o = db.getOffset + (y - ty) * ss - tx * ps
+          var i = y * w; val end = i + w
+          while (i < end) {
+            b(i) = 0xFF000000 | (data(o + bo(0)) & 0xFF) << 16 |
+              (data(o + bo(1)) & 0xFF) << 8 | (data(o + bo(2)) & 0xFF)
+            o += ps; i += 1
+          }
+          y += 1
+        }
+      case _ => img.getRGB(0, 0, w, h, b, 0, w)
     }
+    b
   }
 
   /** PSNR in dB between two same-size images; +Infinity if identical. */
-  def psnr(a: java.awt.image.BufferedImage, b: java.awt.image.BufferedImage): Double = {
+  def psnr(a: BufferedImage, b: BufferedImage): Double = {
     if (a.getWidth != b.getWidth || a.getHeight != b.getHeight) return 0.0
     val pa = packedPixels(a, pixBufA)
     val pb = packedPixels(b, pixBufB)

@@ -15,6 +15,20 @@ class CheckpointSpec extends AnyFunSuite {
     Checkpoint.deleteRecursively(p)
   }
 
+  /** Parquet data files per `bucket=B` directory of one epoch. */
+  private def filesPerBucket(dir: String, epoch: Int): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    def list(p: java.nio.file.Path) = {
+      val s = java.nio.file.Files.list(p)
+      try s.iterator().asScala.toList finally s.close()
+    }
+    list(java.nio.file.Paths.get(s"$dir/data/epoch=$epoch"))
+      .filter(_.getFileName.toString.startsWith("bucket="))
+      .map(b => b.getFileName.toString ->
+        list(b).count(_.getFileName.toString.startsWith("part-")))
+      .toMap
+  }
+
   test("kill-after-K resume: identical manifests, no double counting") {
     val dirA = "/tmp/ckpt_spec_resume"; val dirB = "/tmp/ckpt_spec_fresh"
     rmrf(dirA); rmrf(dirB)
@@ -38,6 +52,37 @@ class CheckpointSpec extends AnyFunSuite {
     (r1 ++ r2).foreach { m =>
       assert(m.nPixelsOk == m.rowCount && m.nCaptionsOk == m.rowCount, m.toString)
     }
+    // the write is rebalanced by bucket: one data file per bucket, whether
+    // the epoch was written in one call or stopped and resumed
+    Seq(dirA, dirB).foreach { d =>
+      val files = filesPerBucket(d, 0)
+      assert(files.size == fresh.count(_.rowCount > 0) && files.values.forall(_ == 1), s"$d: $files")
+    }
+  }
+
+  test("a bucket above the advisory size splits into several files; manifests unchanged") {
+    val dirD = "/tmp/ckpt_spec_default"; val dirS = "/tmp/ckpt_spec_split"
+    rmrf(dirD); rmrf(dirS)
+    val n = 600L; val buckets = 4
+    val default = Checkpoint.run(spark, n, dirD, buckets, parts = 4)
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prior = spark.conf.getOption(key)
+    val split = try {
+      spark.conf.set(key, "1k")
+      Checkpoint.run(spark, n, dirS, buckets, parts = 4)
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    assert(Checkpoint.lastRangeEvals == n)
+    val files = filesPerBucket(dirS, 0)
+    assert(files.values.exists(_ > 1), s"no bucket split at a 1k advisory size: $files")
+    assert(filesPerBucket(dirD, 0).values.forall(_ == 1))
+    // rowCount, phashDigest, cellMin/cellMax and validation counts are all
+    // content-derived, so the file layout cannot change them
+    assert(split == default, s"split $split != default $default")
+    split.foreach(m => assert(m.nPixelsOk == m.rowCount && m.nCaptionsOk == m.rowCount))
+    assert(split.map(_.rowCount).sum == n)
   }
 
   test("append: two incremental epoch runs == one-shot batch over the union") {
