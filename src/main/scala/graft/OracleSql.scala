@@ -36,15 +36,6 @@ object OracleSql {
     s"xor($z3, $z3 >> 31)"
   }
 
-  /** Like [[mix]] but staged through named CTE columns for readability/speed:
-    * emits `(selectExprs, finalCol)` to be placed in successive CTEs.
-    * Stage i consumes column `prev` and defines `out`. */
-  def mixStages(prev: String, out: String): Seq[String] = Seq(
-    s"((($prev)::HUGEINT + 11400714819323198485) % $M64)::UBIGINT AS ${out}_z1",
-    mulmod(s"xor(${out}_z1, ${out}_z1 >> 30)::HUGEINT", 0xBF58476D1CE4E5B9L) + s"::UBIGINT AS ${out}_z2",
-    mulmod(s"xor(${out}_z2, ${out}_z2 >> 27)::HUGEINT", 0x94D049BB133111EBL) + s"::UBIGINT AS ${out}_z3",
-    s"xor(${out}_z3, ${out}_z3 >> 31) AS $out")
-
   /** FNV-1a 64 (graft.text.Dedup.hash64) of a VARCHAR expression `tok`,
     * via list_reduce over its UTF-16 code units (corpus is ASCII — code
     * points == code units, parity asserted in TextSpec). */
@@ -211,7 +202,7 @@ object OracleSql {
     * columns idx, seed, sel, hdx, hdy, hlon, hlat, huid, hteam (+ any
     * `extra` draws a specific oracle needs, so queries that don't use them
     * don't pay for them). */
-  private def geotagCtes(n: Long, extra: Seq[(String, Long)] = Nil): String = {
+  private def geotagCtes(n: Long, extra: Seq[(String, Long)]): String = {
     val hashes = Seq(("sel", 41L), ("hdx", 43L), ("hdy", 47L), ("hlon", 53L),
       ("hlat", 59L), ("huid", 17L), ("hteam", 19L),
       ("hnoun", 13L), ("hsdx", 61L), ("hsdy", 67L), ("hday", 23L)) ++ extra

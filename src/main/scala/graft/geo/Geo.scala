@@ -7,28 +7,6 @@ object Geo {
   val EarthRadiusKm = 6371.0088 // IUGG mean radius
   val TurfRadiusM = 6378137.0   // what turf.js uses (WGS84 equatorial) for length/area
 
-  /** Great-circle distance in km (haversine).
-    * Re-expresses turf.lineDistance per segment
-    * (reference: util/map-contribution-extractor.js:21-33, turf length). */
-  def haversineKm(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double = {
-    val sLat = math.sin(math.toRadians(lat2 - lat1) / 2)
-    val sLon = math.sin(math.toRadians(lon2 - lon1) / 2)
-    val a = sLat * sLat +
-      math.cos(math.toRadians(lat1)) * math.cos(math.toRadians(lat2)) * sLon * sLon
-    2.0 * EarthRadiusKm * math.asin(math.min(1.0, math.sqrt(a)))
-  }
-
-  /** Line length in km over a lon/lat coordinate sequence. */
-  def lineLengthKm(lons: Array[Double], lats: Array[Double]): Double = {
-    var s = 0.0
-    var i = 1
-    while (i < lons.length) {
-      s += haversineKm(lats(i - 1), lons(i - 1), lats(i), lons(i))
-      i += 1
-    }
-    s
-  }
-
   /** Spherical ring area in m² (positive, shoelace on the sphere — the same
     * formula family turf.area uses; reference: changesets/map-changeset-parser.js:24). */
   def sphericalRingAreaM2(lons: Array[Double], lats: Array[Double]): Double = {
@@ -59,50 +37,6 @@ object Geo {
     sphericalRingAreaM2(lons, lats) / 1e6
   }
 
-  /** Planar signed-area |A| of a ring (shoelace) — the MASS of a polygon for
-    * mass-weighted center of mass (turf.centerOfMass weighs member polygons
-    * by exactly this planar area). Open or closed rings both accepted. */
-  def ringPlanarAreaAbs(lons: Array[Double], lats: Array[Double]): Double = {
-    val n = lons.length
-    if (n < 3) return 0.0
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      val j = (i + 1) % n
-      s += lons(i) * lats(j) - lons(j) * lats(i)
-      i += 1
-    }
-    math.abs(s * 0.5)
-  }
-
-  /** Polygon center of mass — the area-weighted centroid formula
-    * turf.centerOfMass uses (reference consumer:
-    * util/map-contribution-extractor.js:203-207 over geometry collections),
-    * including turf's translate-to-vertex-mean stabilization and its
-    * degenerate fallback to the vertex mean when the signed area vanishes. */
-  def ringCenterOfMass(lons: Array[Double], lats: Array[Double]): (Double, Double) = {
-    val n = lons.length
-    var mx = 0.0; var my = 0.0
-    var i = 0
-    while (i < n) { mx += lons(i); my += lats(i); i += 1 }
-    mx /= n; my /= n
-    var sx = 0.0; var sy = 0.0; var sArea = 0.0
-    i = 0
-    while (i < n) {
-      val j = (i + 1) % n
-      val xi = lons(i) - mx; val yi = lats(i) - my
-      val xj = lons(j) - mx; val yj = lats(j) - my
-      val a = xi * yj - xj * yi
-      sArea += a; sx += (xi + xj) * a; sy += (yi + yj) * a
-      i += 1
-    }
-    if (sArea == 0.0) (mx, my)
-    else {
-      val area = sArea * 0.5
-      (mx + sx / (6.0 * area), my + sy / (6.0 * area))
-    }
-  }
-
   /** Ray-casting point-in-polygon over a simple ring (lon/lat arrays, closed
     * or open). Boundary points are implementation-defined (consistent). */
   def pointInRing(lon: Double, lat: Double, lons: Array[Double], lats: Array[Double]): Boolean = {
@@ -120,7 +54,4 @@ object Geo {
     }
     inside
   }
-
-  /** Epoch-day floor (reference: util/map-contribution-extractor.js:89). */
-  @inline def epochDay(ts: Long): Long = math.floorDiv(ts, 86400L)
 }

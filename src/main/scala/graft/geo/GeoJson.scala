@@ -36,11 +36,6 @@ object GeoJson {
   def pointGeometry(lon: Double, lat: Double): String =
     s"""{"type":"Point","coordinates":[${num(lon)},${num(lat)}]}"""
 
-  def polygonGeometry(lons: Array[Double], lats: Array[Double]): String = {
-    val ring = lons.indices.map(i => s"[${num(lons(i))},${num(lats(i))}]").mkString(",")
-    s"""{"type":"Polygon","coordinates":[[$ring]]}"""
-  }
-
   /** One feature line: properties key-sorted; numeric/boolean values pass
     * through, everything else is escaped as a string. */
   def feature(geometry: String, props: Seq[(String, Any)]): String = {
@@ -64,7 +59,6 @@ object GeoJson {
     * the e6/cents sums diverge), and that every property survives emission —
     * content-level verification of the sink without pinning bytes. */
   def roundTripSummary(pts: DataFrame): DataFrame = {
-    val spark = pts.sparkSession
     val lines = pointFeatures(pts)
     val ddl = "type STRING, properties STRUCT<event_id: BIGINT, event_type: STRING, " +
       "user_id: BIGINT, value: DOUBLE>, geometry STRUCT<type: STRING, coordinates: ARRAY<DOUBLE>>"

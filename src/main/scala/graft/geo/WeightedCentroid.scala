@@ -18,18 +18,18 @@ object WeightedCentroid {
     * empty group → null (matches turf's behavior on empty collections). */
   val agg: Aggregator[(Double, Double, Double), CentroidBuf, Point] =
     new Aggregator[(Double, Double, Double), CentroidBuf, Point] {
-      def zero: CentroidBuf = CentroidBuf(0.0, 0.0, 0.0)
-      def reduce(b: CentroidBuf, in: (Double, Double, Double)): CentroidBuf = {
+      override def zero: CentroidBuf = CentroidBuf(0.0, 0.0, 0.0)
+      override def reduce(b: CentroidBuf, in: (Double, Double, Double)): CentroidBuf = {
         val (lon, lat, w) = in
         b.sx += lon * w; b.sy += lat * w; b.sw += w; b
       }
-      def merge(a: CentroidBuf, b: CentroidBuf): CentroidBuf = {
+      override def merge(a: CentroidBuf, b: CentroidBuf): CentroidBuf = {
         a.sx += b.sx; a.sy += b.sy; a.sw += b.sw; a
       }
-      def finish(b: CentroidBuf): Point =
+      override def finish(b: CentroidBuf): Point =
         if (b.sw == 0.0) null else Point(b.sx / b.sw, b.sy / b.sw)
-      def bufferEncoder: Encoder[CentroidBuf] = Encoders.product[CentroidBuf]
-      def outputEncoder: Encoder[Point] = Encoders.product[Point]
+      override def bufferEncoder: Encoder[CentroidBuf] = Encoders.product[CentroidBuf]
+      override def outputEncoder: Encoder[Point] = Encoders.product[Point]
     }
 
   /** Typed column for use in `Dataset.groupByKey(...).agg(...)`. */

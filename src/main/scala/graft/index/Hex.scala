@@ -122,11 +122,4 @@ object Hex {
     }
     buf.toArray
   }
-
-  /** Axial hex distance between two cells of the same res. */
-  def distance(a: Long, b: Long): Int = {
-    require(res(a) == res(b), "res mismatch")
-    val dq = q(a) - q(b); val dr = r(a) - r(b)
-    (math.abs(dq) + math.abs(dr) + math.abs(dq + dr)) / 2
-  }
 }

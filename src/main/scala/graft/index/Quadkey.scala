@@ -61,40 +61,6 @@ object Quadkey {
   def cellIdOf(lon: Double, lat: Double, z: Int): Long =
     cellId(tileX(lon, z), tileY(lat, z), z)
 
-  /** Quadkey string of a tile (bit-interleaved base-4 digits), matching the
-    * tilebelt/Bing convention: digit = (yBit << 1) | xBit, MSB first. */
-  def toQuadkey(x: Int, y: Int, z: Int): String = {
-    val sb = new java.lang.StringBuilder(z)
-    var i = z
-    while (i > 0) {
-      val mask = 1 << (i - 1)
-      var d = 0
-      if ((x & mask) != 0) d += 1
-      if ((y & mask) != 0) d += 2
-      sb.append(('0' + d).toChar)
-      i -= 1
-    }
-    sb.toString
-  }
-
-  def fromQuadkey(qk: String): (Int, Int, Int) = {
-    var x = 0; var y = 0
-    val z = qk.length
-    var i = 0
-    while (i < z) {
-      val mask = 1 << (z - i - 1)
-      qk.charAt(i) match {
-        case '0' =>
-        case '1' => x |= mask
-        case '2' => y |= mask
-        case '3' => x |= mask; y |= mask
-        case c   => throw new IllegalArgumentException(s"bad quadkey digit $c")
-      }
-      i += 1
-    }
-    (x, y, z)
-  }
-
   /** Tile bounds (west, south, east, north) in degrees. */
   def tileBounds(x: Int, y: Int, z: Int): (Double, Double, Double, Double) = {
     val n = (1L << z).toDouble

@@ -141,35 +141,4 @@ object S2Like {
     val r = math.sqrt(x * x + y * y + z * z)
     (math.toDegrees(math.asin(z / r)), math.toDegrees(math.atan2(y, x)))
   }
-
-  /** Cover a lon/lat bbox with cell ranges at a fixed level: encode a grid of
-    * sample points one-cell-dense over the bbox, dedupe, merge adjacent leaf
-    * ranges. Returns sorted disjoint [rangeMin, rangeMax] intervals. */
-  def coverBBox(west: Double, south: Double, east: Double, north: Double, level: Int): Array[(Long, Long)] = {
-    // cell angular size ~ 90deg / 2^level on a face; sample at half that pitch
-    val step = math.max(1e-7, 45.0 / (1L << level).toDouble)
-    val cells = scala.collection.mutable.TreeSet.empty[Long]
-    var lat = south
-    while (lat <= north + step) {
-      var lon = west
-      val la = math.min(lat, north)
-      while (lon <= east + step) {
-        cells += cellIdAt(math.max(-89.999, math.min(89.999, la)), math.min(lon, east), level)
-        lon += step
-      }
-      lat += step
-    }
-    mergeRanges(cells.toArray.map(c => (rangeMin(c), rangeMax(c))))
-  }
-
-  def mergeRanges(sorted: Array[(Long, Long)]): Array[(Long, Long)] = {
-    if (sorted.isEmpty) return sorted
-    val out = scala.collection.mutable.ArrayBuffer[(Long, Long)](sorted.head)
-    for (r <- sorted.tail) {
-      val last = out.last
-      if (r._1 <= last._2 + 2) out(out.size - 1) = (last._1, math.max(last._2, r._2))
-      else out += r
-    }
-    out.toArray
-  }
 }

@@ -169,8 +169,6 @@ object Pyramid {
       }(Encoders.product[BlobRow])
       .toDF()
 
-  final case class LutRow(idx: Long, value: Int, lut: Long)
-
   /** Gate query (q179): per-image histogram-equalization lookup table —
     * lut(v) = (255·cdf(v)) div (w·h) over the decoded pixel histogram, the
     * contrast-normalization step a vision pipeline applies before feature

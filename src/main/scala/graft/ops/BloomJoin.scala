@@ -44,8 +44,8 @@ object BloomJoin {
   /** Typed aggregator: Long keys → OR-merged bit array of `m` bits. */
   private def bloomAgg(m: Int, k: Int): Aggregator[Long, BloomBuf, BloomBuf] =
     new Aggregator[Long, BloomBuf, BloomBuf] {
-      def zero: BloomBuf = BloomBuf(new Array[Long](m / 64))
-      def reduce(b: BloomBuf, key: Long): BloomBuf = {
+      override def zero: BloomBuf = BloomBuf(new Array[Long](m / 64))
+      override def reduce(b: BloomBuf, key: Long): BloomBuf = {
         var i = 0
         while (i < k) {
           val pos = (ImageSynth.mix(key ^ salt(i)) & (m - 1)).toInt
@@ -54,14 +54,14 @@ object BloomJoin {
         }
         b
       }
-      def merge(a: BloomBuf, b: BloomBuf): BloomBuf = {
+      override def merge(a: BloomBuf, b: BloomBuf): BloomBuf = {
         var i = 0
         while (i < a.words.length) { a.words(i) |= b.words(i); i += 1 }
         a
       }
-      def finish(b: BloomBuf): BloomBuf = b
-      def bufferEncoder: Encoder[BloomBuf] = Encoders.product[BloomBuf]
-      def outputEncoder: Encoder[BloomBuf] = Encoders.product[BloomBuf]
+      override def finish(b: BloomBuf): BloomBuf = b
+      override def bufferEncoder: Encoder[BloomBuf] = Encoders.product[BloomBuf]
+      override def outputEncoder: Encoder[BloomBuf] = Encoders.product[BloomBuf]
     }
 
   /** Build the filter over the distinct values of `keyCol` (one pass,

@@ -9,7 +9,7 @@ import graft.geo.Geo
   * map-changeset-parser.js): CSV rows with a JSON tag bag → bbox polygon (or
   * degenerate point), spherical area with a < 2500 km² filter, hashtag
   * tokenizing, `hotosm` detection, date parse — re-expressed as one
-  * declarative Column chain over `spark.read.csv`.
+  * declarative Column chain over rows under the reference's header list.
   */
 object Changesets {
 
@@ -33,13 +33,8 @@ object Changesets {
 
   val MaxAreaKm2 = 2500.0
 
-  /** CSV (no header row, quoted JSON field, possibly multiline) → parsed rows.
-    * Mirrors changesets/map-changeset-parser.js:13-80. Pass `enhanced = true`
-    * for the 15-header form. */
-  def readCsv(spark: SparkSession, path: String, enhanced: Boolean = false): DataFrame =
-    parse(spark.read.schema(if (enhanced) enhancedSchema else schema)
-      .option("header", "false").option("multiLine", "true").csv(path))
-
+  /** The reference's CSV rows (schema above) → parsed rows. Mirrors
+    * changesets/map-changeset-parser.js:13-80. */
   def parse(raw: DataFrame): DataFrame = {
     // enhanced-user columns appear iff the input carried the 15-header form
     // (reference checks HEADERS.indexOf('days') > -1)
@@ -119,9 +114,4 @@ object Changesets {
     parse(rows.toDF(schema.fieldNames.toIndexedSeq: _*)
       .withColumn("num_changes", col("num_changes").cast("int")))
   }
-
-  /** Hashtag counting across changesets (A13): explode + count. */
-  def hashtagCounts(parsed: DataFrame): DataFrame =
-    parsed.select(explode(col("hashtags")).as("tag"))
-      .groupBy(col("tag")).agg(count(lit(1)).as("n"))
 }

@@ -141,13 +141,6 @@ object Interactions {
         col("etype") === "relation" &&
           array_contains(map_keys(col("tags")), "restriction")).over(w))
 
-    // maps aren't orderable in Spark, so equality = no differing entry across
-    // the key union (map_zip_with pads missing keys with null)
-    val tagsDiffCount = size(map_filter(
-      map_zip_with(col("tags"), col("p_tags"), (_, a, b) =>
-        when(a <=> b, lit(null).cast("int")).otherwise(lit(1))),
-      (_, vv) => vv.isNotNull))
-    val tagsChanged = col("p_tags").isNull || tagsDiffCount > 0
     // normalized comparison via canonical keys (rotation/reversal-invariant
     // for nodes/ways; raw for relations — see canonicalKey)
     val geomChanged = !(col("geom_key") <=> col("p_geom_key"))

@@ -15,9 +15,8 @@ object Lateness {
     * per user stream (arrival order = event_id), a row is LATE iff its
     * event time is older than (running-max event time over prior arrivals)
     * − W. This is exactly Structured Streaming's per-key watermark drop
-    * rule (StreamingSpec asserts it live; this gates the same arithmetic
-    * under the DuckDB hash so the semantics are pinned cross-engine, not
-    * just asserted). Emits per-user late/total counts and the worst
+    * rule, gated under the DuckDB hash so the semantics are pinned
+    * cross-engine, not just asserted. Emits per-user late/total counts and the worst
     * disorder observed. One window exchange on the stream key. */
   def watermarkAudit(spark: SparkSession, dir: String,
                      lagUs: Long = 43200000000L): DataFrame = {

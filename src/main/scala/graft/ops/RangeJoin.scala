@@ -30,21 +30,6 @@ object RangeJoin {
   /** 24 h in microseconds — bin width AND window length. */
   val WindowUs: Long = 24L * 3600L * 1000000L
 
-  /** Naive theta-join formulation (spec baseline only — nested loop). */
-  def priorActivityNaive(ev: DataFrame): DataFrame = {
-    val e = ev.filter(col("event_type") === "error")
-      .select(col("event_id"), col("user_id").as("e_uid"),
-        unix_micros(col("ts").cast("timestamp")).as("e_us"))
-    val p = ev.select(col("user_id").as("p_uid"),
-      unix_micros(col("ts").cast("timestamp")).as("p_us"), col("value").as("p_value"))
-    e.join(p, col("p_uid") === col("e_uid") &&
-        col("p_us") >= col("e_us") - WindowUs && col("p_us") < col("e_us"))
-      .groupBy(col("event_id"))
-      .agg(count(lit(1)).as("n_prior"),
-        sum(floor(col("p_value") * lit(100.0) + lit(0.5)).cast("long"))
-          .as("prior_value_cents"))
-  }
-
   /** The binned equi-join. */
   def priorActivity(spark: SparkSession, dir: String): DataFrame = {
     val ev = table(spark, dir, "events")

@@ -68,21 +68,20 @@ object TopK {
   }
 
   final case class TopKBuf(items: Seq[(Long, Long)]) // (value, key), value desc
-  final case class SegTop(seg: String, items: Seq[(Long, Long)])
 
   private def ordered(items: Seq[(Long, Long)]): Seq[(Long, Long)] =
     items.sortBy { case (v, key) => (-v, key) }
 
   def topKAgg(k: Int): Aggregator[(Long, Long), TopKBuf, Seq[(Long, Long)]] =
     new Aggregator[(Long, Long), TopKBuf, Seq[(Long, Long)]] {
-      def zero: TopKBuf = TopKBuf(Vector.empty)
-      def reduce(b: TopKBuf, in: (Long, Long)): TopKBuf =
+      override def zero: TopKBuf = TopKBuf(Vector.empty)
+      override def reduce(b: TopKBuf, in: (Long, Long)): TopKBuf =
         TopKBuf(ordered(b.items :+ in).take(k))
-      def merge(a: TopKBuf, b: TopKBuf): TopKBuf =
+      override def merge(a: TopKBuf, b: TopKBuf): TopKBuf =
         TopKBuf(ordered(a.items ++ b.items).take(k))
-      def finish(b: TopKBuf): Seq[(Long, Long)] = ordered(b.items)
-      def bufferEncoder: Encoder[TopKBuf] = Encoders.product[TopKBuf]
-      def outputEncoder: Encoder[Seq[(Long, Long)]] =
+      override def finish(b: TopKBuf): Seq[(Long, Long)] = ordered(b.items)
+      override def bufferEncoder: Encoder[TopKBuf] = Encoders.product[TopKBuf]
+      override def outputEncoder: Encoder[Seq[(Long, Long)]] =
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
     }
 
@@ -105,19 +104,5 @@ object TopK {
         top.zipWithIndex.map { case ((bal, key), i) => (seg, i + 1L, key, bal) }
       }
       .toDF("c_mktsegment", "rank", "c_custkey", "bal_cents")
-  }
-
-  /** The window-plan reference (shuffles every row): used by TopKSpec as the
-    * in-Spark differential. */
-  def topCustomersWindow(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("c_mktsegment").orderBy(col("bal_cents").desc, col("c_custkey"))
-    table(spark, dir, "customer")
-      .select(col("c_mktsegment"),
-        floor(col("c_acctbal") * lit(100.0) + lit(0.5)).cast("long").as("bal_cents"),
-        col("c_custkey"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("c_mktsegment", "rank", "c_custkey", "bal_cents")
   }
 }

@@ -80,27 +80,6 @@ object Checkpoint {
       if Files.exists(p)
     } yield parseManifest(e, b, p)
 
-  /** Table-level snapshot (the Iceberg-snapshot analog): aggregates every
-    * (epoch, bucket) manifest into one JSON carrying total lineage — written
-    * only when ALL partitions are committed, so its presence certifies a
-    * complete, validated table at that epoch count. Appending a new epoch
-    * invalidates nothing: the next snapshot simply covers one more epoch. */
-  def writeSnapshot(outDir: String, buckets: Int, epochs: Int = 1): Option[String] = {
-    val ms = manifests(outDir, epochs, buckets)
-    if (ms.size != epochs * buckets) return None
-    def sumOf(f: Manifest => Long): Long = ms.map(f).sum
-    val paths = ms.map(m => s"\"_commits/epoch-${m.epoch}/bucket-${m.bucket}.json\"").mkString(",")
-    val json =
-      s"""{"epochs":$epochs,"buckets":$buckets,"rowCount":${sumOf(_.rowCount)},
-         |"phashDigest":${ms.map(_.phashDigest).reduce(_ ^ _)},
-         |"nPixelsOk":${sumOf(_.nPixelsOk)},"nCaptionsOk":${sumOf(_.nCaptionsOk)},
-         |"manifests":[$paths]}""".stripMargin.replace("\n", "")
-    val tmp = Paths.get(s"$outDir/.snapshot.json.tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, Paths.get(s"$outDir/snapshot.json"), StandardCopyOption.ATOMIC_MOVE)
-    Some(json)
-  }
-
   /** Gate shape for the checkpoint lineage manifests (S9, the north_rule's
     * "resumable from per-partition checkpoints recording lineage"): run a
     * FULL checkpointed build into a fresh scratch dir — synthesis, bucketed
@@ -179,29 +158,6 @@ object Checkpoint {
         .agg(count(lit(1)).as("row_count"), sum(col("idx")).as("sum_idx"),
           min(col("idx")).as("min_idx"), max(col("idx")).as("max_idx")))
     } finally deleteRecursively(dir)
-  }
-
-  /** Structured-Streaming face of the epoch-checkpointed layout: a file
-    * stream over `data/` whose partition discovery yields (epoch, bucket)
-    * columns. With `Trigger.AvailableNow` + a query checkpointLocation this
-    * is the push-button incremental consumer of the append-only table —
-    * each invocation processes exactly the files committed since the last
-    * one (the source's seen-files log plays the same role downstream that
-    * the (epoch, bucket) manifests play at ingest), then terminates like a
-    * batch job. The reference's "continually adding new weekly/monthly
-    * changesets" loop (changesets/README.md:47) is this shape. */
-  def epochStream(spark: SparkSession, outDir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("image_id", StringType), StructField("bytes", BinaryType),
-      StructField("w", IntegerType), StructField("h", IntegerType),
-      StructField("fmt", StringType), StructField("caption", StringType),
-      StructField("phash", LongType),
-      StructField("epoch", IntegerType), StructField("bucket", IntegerType)))
-    spark.readStream.schema(schema)
-      .option("basePath", s"$outDir/data")
-      .parquet(s"$outDir/data")
-      .select(col("epoch"), col("bucket"), col("image_id"), col("phash"))
   }
 
   /** Diagnostic: id-range rows scanned by the LAST run's synthesis pass —

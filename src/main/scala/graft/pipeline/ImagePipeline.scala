@@ -87,18 +87,6 @@ object ImagePipeline {
     }
   }
 
-  /** Per-tile per-team pivot — the `<team>-e` dynamic-column layer
-    * (map-contribution-extractor.js:295-311) with `teamSum` totals. */
-  def tileTeamPivot(joined: DataFrame): DataFrame =
-    joined.groupBy(col("tile"), col("boundary_id"))
-      .agg(
-        sum(when(col("team") === "kll", 1L).otherwise(0L)).as("kll_e"),
-        sum(when(col("team") === "msf", 1L).otherwise(0L)).as("msf_e"),
-        sum(when(col("team") === "dcx", 1L).otherwise(0L)).as("dcx_e"),
-        sum(when(col("team") === "hot", 1L).otherwise(0L)).as("hot_e"),
-        count(lit(1)).as("team_sum_e"),
-        countDistinct(col("uid")).as("n_users"))
-
   /** Dynamic per-team pivot — the reference emits `<team>-*` columns for
     * whatever teams EXIST in the data (map-contribution-extractor.js:293-313
     * `team+"-e"` + `teamSum*`), so the team list must be discovered, not
@@ -121,23 +109,6 @@ object ImagePipeline {
       df.withColumn(tm, coalesce(col(tm), lit(0L))).withColumnRenamed(tm, s"${tm}_e")
     }
     filled.join(totals, Seq("tile", "boundary_id"))
-  }
-
-  /** userDailyPointSummaries analog: weighted centroid per (uid, day) via the
-    * custom Aggregator (reference turf.centerOfMass per user/day collection,
-    * map-contribution-extractor.js:203-224). The shuffle carries 3 doubles
-    * per group — geometry never moves. */
-  def userDailyCentroids(joined: DataFrame): DataFrame = {
-    val spark = joined.sparkSession
-    import spark.implicits._
-    joined.select(col("uid"), col("day"), col("lon"), col("lat"))
-      .as[(Long, Long, Double, Double)]
-      .groupByKey { case (uid, day, _, _) => (uid, day) }
-      .mapValues { case (_, _, lon, lat) => (lon, lat, 1.0) }
-      .agg(graft.geo.WeightedCentroid.column)
-      // weight is 1.0 per row and groups are non-empty, so finish() never nulls
-      .map { case ((uid, day), c) => (uid, day, c.lon, c.lat) }
-      .toDF("uid", "day", "c_lon", "c_lat")
   }
 
   /** Gate shape for the Aggregator centroid layer (userDailyPointSummaries,
@@ -366,8 +337,8 @@ object ImagePipeline {
   private val teamNames = Seq("kll", "msf", "dcx", "hot")
 
   /** Codegen PIP join + per-tile per-team pivot — semantically identical to
-    * `tileTeamPivot` over the typed [[features]] joined to their metros
-    * (asserted in FastPathSpec). */
+    * a typed pivot over [[features]] joined to their metros (asserted in
+    * FastPathSpec). */
   def run(spark: SparkSession, n: Long, parts: Int = 32): DataFrame = {
     val names = metroBoundaries.map(_.id).toArray // ordinal = position in the index array
     val joined = pipFiltered(spark, n, parts)

@@ -70,9 +70,10 @@ object SpatialQueries {
     Knn.knn(eventPoints(spark, dir), knnQueries, k = 5,
       idCol = "event_id", lonCol = "lon", latCol = "lat", res = 3)
 
-  /** [[Geo.haversineKm]] as a pure Column expression — identical FP operation
-    * order (so results match the Scala fn bit-for-bit via java.lang.Math) but
-    * stays inside whole-stage codegen instead of breaking it with a UDF. */
+  /** Great-circle distance in km (haversine), re-expressing turf.lineDistance
+    * per segment (reference: util/map-contribution-extractor.js:21-33, turf
+    * length), as a pure Column expression that stays inside whole-stage
+    * codegen instead of breaking it with a UDF. */
   def haversineKmCol(la1: Column, lo1: Column, la2: Column, lo2: Column): Column = {
     val sLat = sin(radians(la2 - la1) / 2)
     val sLon = sin(radians(lo2 - lo1) / 2)

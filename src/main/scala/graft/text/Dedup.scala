@@ -32,13 +32,6 @@ object Dedup {
       max(col("n")).as("max_group"))
   }
 
-  /** Word w-shingles of a document. */
-  def shingles(text: String, w: Int): Array[String] = {
-    val t = text.split(' ')
-    if (t.length < w) Array(text)
-    else Array.tabulate(t.length - w + 1)(i => t.slice(i, i + w).mkString(" "))
-  }
-
   /** 64-bit from-scratch string hash (xor-fold FNV-1a) — the common base hash
     * all sketches derive from. */
   def hash64(s: String): Long = {
@@ -114,13 +107,6 @@ object Dedup {
       i += 1
     }
     sig
-  }
-
-  /** Backwards-compatible string-shingle signature (spec baseline). */
-  def minhashSignature(sh: Array[String], k: Int): Array[Long] = {
-    val hs = sh.map(hash64)
-    java.util.Arrays.sort(hs)
-    minhashSigFromHashes(hs, k)
   }
 
   /** MinHash + LSH near-dup pipeline, verification-grade: signature (k

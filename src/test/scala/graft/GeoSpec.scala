@@ -6,17 +6,25 @@ import graft.spatial.{Boundary, BoundaryIndex}
 import graft.Prop.forAllSeeded
 
 class GeoSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+
+  /** `SpatialQueries.haversineKmCol` evaluated on literal coordinates. */
+  private def haversineKm(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double = {
+    import org.apache.spark.sql.functions.lit
+    spark.range(1).select(graft.spatial.SpatialQueries.haversineKmCol(
+      lit(lat1), lit(lon1), lit(lat2), lit(lon2))).head().getDouble(0)
+  }
 
   test("haversine: London-Paris ~= 343.5 km") {
-    val d = Geo.haversineKm(51.5074, -0.1278, 48.8566, 2.3522)
+    val d = haversineKm(51.5074, -0.1278, 48.8566, 2.3522)
     assert(math.abs(d - 343.5) < 1.5, s"got $d")
   }
 
   test("haversine: zero distance, symmetry, antipodal cap") {
-    assert(Geo.haversineKm(10, 20, 10, 20) == 0.0)
-    val a = Geo.haversineKm(12, 34, -56, 78); val b = Geo.haversineKm(-56, 78, 12, 34)
+    assert(haversineKm(10, 20, 10, 20) == 0.0)
+    val a = haversineKm(12, 34, -56, 78); val b = haversineKm(-56, 78, 12, 34)
     assert(math.abs(a - b) < 1e-9)
-    val anti = Geo.haversineKm(0, 0, 0, 180)
+    val anti = haversineKm(0, 0, 0, 180)
     assert(math.abs(anti - math.Pi * Geo.EarthRadiusKm) < 1.0)
   }
 
@@ -99,11 +107,5 @@ class GeoSpec extends AnyFunSuite {
     val sq = (Array(10.0, 10.0009, 10.0009, 10.0, 10.0), Array(0.0, 0.0, 0.0009, 0.0009, 0.0))
     val d = Squaring.squaringDelta(sq._1, sq._2, sq._1, sq._2)
     assert(d == 0.0)
-  }
-
-  test("epoch day floor handles negatives") {
-    assert(Geo.epochDay(86399) == 0L)
-    assert(Geo.epochDay(86400) == 1L)
-    assert(Geo.epochDay(-1) == -1L)
   }
 }

@@ -1,48 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.multimodal.Multimodal
 import graft.pipeline.ImagePipeline
 import graft.geo.GeoJson
-
-class MultimodalSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
-
-  test("image feature extraction is real: dims match, phash equals stored phash") {
-    val table = ImagePipeline.synthTable(spark, 40, 2).toDF().cache()
-    val feats = Multimodal.imageFeatures(table).collect().map(f => f.image_id -> f).toMap
-    val rows = table.collect()
-    assert(feats.size == 40)
-    rows.foreach { r =>
-      val f = feats(r.getString(0))
-      assert(f.w == r.getInt(2) && f.h == r.getInt(3))
-      assert(f.mean_luma > 0 && f.mean_luma < 255)
-      if (r.getString(4) == "png") // lossless → decoded phash must equal stored
-        assert(f.phash == r.getLong(6), s"phash mismatch for ${f.image_id}")
-    }
-    table.unpersist()
-  }
-
-  test("resize produces decodable thumbnails bounded by maxDim") {
-    val table = ImagePipeline.synthTable(spark, 20, 2).toDF()
-    val thumbs = Multimodal.resize(table, 16).collect()
-    assert(thumbs.length == 20)
-    thumbs.foreach { t =>
-      assert(t.w <= 16 && t.h <= 16 && t.w >= 1)
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(t.bytes))
-      assert(img.getWidth == t.w && img.getHeight == t.h)
-    }
-  }
-
-  test("frame sampling: deterministic 1->N generator shape") {
-    val table = ImagePipeline.synthTable(spark, 5, 1).toDF()
-    val frames = Multimodal.sampleFrames(table, everyMs = 1000, durationMs = 5000).collect()
-    assert(frames.length == 25) // 5 media x 5 frames
-    val again = Multimodal.sampleFrames(table, 1000, 5000).collect()
-    assert(frames.map(f => (f.media_id, f.frame_idx, f.phash)).toSet ==
-      again.map(f => (f.media_id, f.frame_idx, f.phash)).toSet)
-  }
-}
 
 class GeoJsonSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -56,8 +16,6 @@ class GeoJsonSpec extends AnyFunSuite {
 
   test("polygon ring geometry + dataframe sink path") {
     import org.apache.spark.sql.functions._
-    val g = GeoJson.polygonGeometry(Array(0.0, 1.0, 1.0, 0.0, 0.0), Array(0.0, 0.0, 1.0, 1.0, 0.0))
-    assert(g == """{"type":"Polygon","coordinates":[[[0,0],[1,0],[1,1],[0,1],[0,0]]]}""")
     val df = graft.spatial.PipJoin.join(ImagePipeline.features(spark, 50, 2).toDF(),
       ImagePipeline.metroBoundaries, "lon", "lat")
       .select(col("lon"), col("lat"), col("uid"), col("boundary_id"))

@@ -45,12 +45,29 @@ class AsofSpec extends AnyFunSuite {
 }
 
 class RangeJoinSpec extends AnyFunSuite {
+  import RangeJoin.WindowUs
   lazy val spark = TestSpark.spark
   val dir = "/root/testdata/sf0.001"
 
+  /** The naive theta-join formulation of `RangeJoin.priorActivity` (nested
+    * loop): the reference the binned equi-join is compared against. */
+  private def priorActivityNaive(ev: org.apache.spark.sql.DataFrame) = {
+    val e = ev.filter(col("event_type") === "error")
+      .select(col("event_id"), col("user_id").as("e_uid"),
+        unix_micros(col("ts").cast("timestamp")).as("e_us"))
+    val p = ev.select(col("user_id").as("p_uid"),
+      unix_micros(col("ts").cast("timestamp")).as("p_us"), col("value").as("p_value"))
+    e.join(p, col("p_uid") === col("e_uid") &&
+        col("p_us") >= col("e_us") - WindowUs && col("p_us") < col("e_us"))
+      .groupBy(col("event_id"))
+      .agg(count(lit(1)).as("n_prior"),
+        sum(floor(col("p_value") * lit(100.0) + lit(0.5)).cast("long"))
+          .as("prior_value_cents"))
+  }
+
   test("binned range join equals the naive theta-join; plan is a real equi-join") {
     val binned = RangeJoin.priorActivity(spark, dir)
-    val naive = RangeJoin.priorActivityNaive(table(spark, dir, "events"))
+    val naive = priorActivityNaive(table(spark, dir, "events"))
     def toSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(toSet(binned) == toSet(naive))

@@ -27,12 +27,6 @@ class ChangesetsSpec extends AnyFunSuite {
     assert(r4.getAs[String]("comment") == "") // absent comment -> empty
     assert(r4.getAs[scala.collection.Seq[String]]("hashtags").isEmpty)
   }
-
-  test("hashtag counts explode correctly") {
-    val counts = Changesets.hashtagCounts(Changesets.fixture(spark)).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(counts == Map("#hotosm-task-123" -> 1L, "#buildings" -> 1L))
-  }
 }
 
 class CentroidSpec extends AnyFunSuite {
@@ -73,47 +67,20 @@ class CentroidSpec extends AnyFunSuite {
   }
 
   test("pipeline userDailyCentroids lie inside their boundary") {
-    val joined = graft.spatial.PipJoin.join(ImagePipeline.features(spark, 1500, 4).toDF(),
-      ImagePipeline.metroBoundaries, "lon", "lat")
-    val cents = ImagePipeline.userDailyCentroids(joined).collect()
+    val cents = ImagePipeline.userDailyCentroidGate(spark, 1500, 4).collect()
     assert(cents.nonEmpty)
     // every centroid is a plausible lon/lat (means of member points)
     cents.foreach { r =>
-      val lon = r.getDouble(2); val lat = r.getDouble(3)
+      val lon = r.getLong(2) / 1e6; val lat = r.getLong(3) / 1e6
       assert(lon >= -180 && lon <= 180 && lat >= -90 && lat <= 90)
     }
   }
 
-  test("mass-weighted center of mass (turf.centerOfMass parity)") {
-    import graft.geo.Geo
-    // exact shapes
-    val sq = Geo.ringCenterOfMass(Array(0.0, 1, 1, 0), Array(0.0, 0, 1, 1))
-    assert(math.abs(sq._1 - 0.5) < 1e-12 && math.abs(sq._2 - 0.5) < 1e-12)
-    val tri = Geo.ringCenterOfMass(Array(0.0, 1, 0), Array(0.0, 0, 1))
-    assert(math.abs(tri._1 - 1.0 / 3) < 1e-12 && math.abs(tri._2 - 1.0 / 3) < 1e-12)
-    // non-convex L-shape golden (0.75, 1.25) derived INDEPENDENTLY by
-    // rectangle decomposition: A=(0..2,0..1) area 2 c (1,.5); B=(0..1,1..3)
-    // area 2 c (.5,2) -> ((2*1+2*.5)/4, (2*.5+2*2)/4)
-    val l = Geo.ringCenterOfMass(Array(0.0, 2, 2, 1, 1, 0), Array(0.0, 0, 1, 1, 3, 3))
-    assert(math.abs(l._1 - 0.75) < 1e-12 && math.abs(l._2 - 1.25) < 1e-12)
-    // degenerate ring (zero area) falls back to the vertex mean like turf
-    val d = Geo.ringCenterOfMass(Array(2.0, 2, 2), Array(3.0, 3, 3))
-    assert(d == ((2.0, 3.0)))
-    assert(Geo.ringPlanarAreaAbs(Array(0.0, 1, 1, 0), Array(0.0, 0, 1, 1)) == 1.0)
-  }
-
   test("polygon collection: area-weighted combination through the Aggregator") {
     import spark.implicits._
-    import graft.geo.Geo
     // squares [0,1]^2 (mass 1, com (.5,.5)) and [2,4]^2 (mass 4, com (3,3))
     // -> combined ((1*.5+4*3)/5, ...) = (2.5, 2.5), hand-computed
-    val polys = Seq(
-      (1L, Array(0.0, 1, 1, 0), Array(0.0, 0, 1, 1)),
-      (1L, Array(2.0, 4, 4, 2), Array(2.0, 2, 4, 4)))
-    val rows = polys.map { case (g, lons, lats) =>
-      val (cx, cy) = Geo.ringCenterOfMass(lons, lats)
-      (g, cx, cy, Geo.ringPlanarAreaAbs(lons, lats))
-    }
+    val rows = Seq((1L, 0.5, 0.5, 1.0), (1L, 3.0, 3.0, 4.0))
     val out = rows.toDS().groupByKey(_._1)
       .mapValues { case (_, cx, cy, m) => (cx, cy, m) }
       .agg(graft.geo.WeightedCentroid.column).collect()

@@ -50,9 +50,23 @@ class TopKSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val dir = "/root/testdata/sf0.001"
 
+  /** The window-plan formulation of `TopK.topCustomers` (shuffles every row):
+    * the in-Spark reference the bounded heap is compared against. */
+  private def topCustomersWindow(k: Int = 3) = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("c_mktsegment").orderBy(col("bal_cents").desc, col("c_custkey"))
+    table(spark, dir, "customer")
+      .select(col("c_mktsegment"),
+        floor(col("c_acctbal") * lit(100.0) + lit(0.5)).cast("long").as("bal_cents"),
+        col("c_custkey"))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select("c_mktsegment", "rank", "c_custkey", "bal_cents")
+  }
+
   test("bounded-heap top-k equals the window plan; partial aggregation below the exchange") {
     val heap = TopK.topCustomers(spark, dir)
-    val win = TopK.topCustomersWindow(spark, dir)
+    val win = topCustomersWindow()
     def toSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(toSet(heap) == toSet(win))

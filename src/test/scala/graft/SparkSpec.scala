@@ -14,6 +14,25 @@ object TestSpark {
   }
 }
 
+/** The typed-path reference for `ImagePipeline.run`'s rollup: per-tile
+  * per-team pivot (the `<team>-e` dynamic-column layer,
+  * map-contribution-extractor.js:295-311, with `teamSum` totals) over
+  * features already joined to their metro `boundary_id`. */
+object TypedPivot {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions._
+
+  def tileTeamPivot(joined: DataFrame): DataFrame =
+    joined.groupBy(col("tile"), col("boundary_id"))
+      .agg(
+        sum(when(col("team") === "kll", 1L).otherwise(0L)).as("kll_e"),
+        sum(when(col("team") === "msf", 1L).otherwise(0L)).as("msf_e"),
+        sum(when(col("team") === "dcx", 1L).otherwise(0L)).as("dcx_e"),
+        sum(when(col("team") === "hot", 1L).otherwise(0L)).as("hot_e"),
+        count(lit(1)).as("team_sum_e"),
+        countDistinct(col("uid")).as("n_users"))
+}
+
 class PipelineSpec extends AnyFunSuite {
   import graft.pipeline.{ImagePipeline, Validate}
   import graft.spatial.PipJoin
@@ -59,7 +78,7 @@ class PipelineSpec extends AnyFunSuite {
       ImagePipeline.metroBoundaries, "lon", "lat")
     val nJoined = joined.count()
     assert(nJoined > 1000, s"expected most rows in metros, got $nJoined") // ~70% clustered
-    val pivot = ImagePipeline.tileTeamPivot(joined)
+    val pivot = TypedPivot.tileTeamPivot(joined)
     val bad = pivot.filter(col("kll_e") + col("msf_e") + col("dcx_e") + col("hot_e") =!= col("team_sum_e")).count()
     assert(bad == 0)
     assert(pivot.agg(sum(col("team_sum_e"))).head().getLong(0) == nJoined)
@@ -128,14 +147,7 @@ class KnnSparkSpec extends AnyFunSuite {
       // collect the result INSIDE the listener window; the final small toDF +
       // window runs on driver-local rows (one job)
       Knn.knn(df, Seq(Knn.QueryPoint(1, 0, 0), Knn.QueryPoint(2, -50, 20)), k = 5, res = 3).collect()
-      // poll until the async listener bus goes quiet (a fixed sleep was flaky
-      // on loaded hosts): stable count across 4 consecutive 50 ms polls
-      var last = -1; var stable = 0; var waited = 0
-      while (stable < 4 && waited < 5000) {
-        Thread.sleep(50); waited += 50
-        val cur = jobs.get()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
+      org.apache.spark.sql.GraftShim.drainListenerBus(spark.sparkContext)
       // density pass + top-k pass + tiny local-result job = 3 jobs ceiling;
       // the point TABLE itself is only read by the first two
       assert(jobs.get() <= 3, s"expected <=3 jobs (2 table scans), saw ${jobs.get()}")
@@ -510,7 +522,7 @@ class FastPathSpec extends AnyFunSuite {
     val lowestContaining = udf { (lon: Double, lat: Double) =>
       bs.filter(_.containsPoint(lon, lat)).map(_.id).sorted.headOption.orNull
     }
-    val typed = ImagePipeline.tileTeamPivot(ImagePipeline.features(spark, 4000, 4).toDF()
+    val typed = TypedPivot.tileTeamPivot(ImagePipeline.features(spark, 4000, 4).toDF()
         .withColumn("boundary_id", lowestContaining(col("lon"), col("lat")))
         .filter(col("boundary_id").isNotNull))
       .select(col("tile"), col("boundary_id"), col("kll_e"), col("msf_e"),

@@ -13,14 +13,25 @@ class DedupSpec extends AnyFunSuite {
   private def randText(r: Prop.Rng, n: Int): String =
     Array.fill(n)(vocab(r.int(0, vocab.length - 1))).mkString(" ")
 
+  /** Word w-shingles of a document: the string-shingle reference the
+    * Jaccard and MinHash properties below are stated over. */
+  private def shingles(text: String, w: Int): Array[String] = {
+    val t = text.split(' ')
+    if (t.length < w) Array(text)
+    else Array.tabulate(t.length - w + 1)(i => t.slice(i, i + w).mkString(" "))
+  }
+
+  private def signature(sh: Array[String], k: Int): Array[Long] =
+    Dedup.minhashSigFromHashes(sh.map(Dedup.hash64).sorted, k)
+
   test("shingles: count and content") {
-    val sh = Dedup.shingles("a b c d e", 3)
+    val sh = shingles("a b c d e", 3)
     assert(sh.toSeq == Seq("a b c", "b c d", "c d e"))
-    assert(Dedup.shingles("a b", 3).toSeq == Seq("a b"))
+    assert(shingles("a b", 3).toSeq == Seq("a b"))
   }
 
   private def trueJaccard(a: String, b: String, w: Int): Double = {
-    val sa = Dedup.shingles(a, w).toSet; val sb = Dedup.shingles(b, w).toSet
+    val sa = shingles(a, w).toSet; val sb = shingles(b, w).toSet
     sa.intersect(sb).size.toDouble / sa.union(sb).size
   }
 
@@ -32,8 +43,8 @@ class DedupSpec extends AnyFunSuite {
       val keep = r.int(10, 55)
       val b = base.split(' ').take(keep).mkString(" ") + " " + randText(r, 60 - keep)
       val t = trueJaccard(base, b, 3)
-      val sa = Dedup.minhashSignature(Dedup.shingles(base, 3), 128)
-      val sb = Dedup.minhashSignature(Dedup.shingles(b, 3), 128)
+      val sa = signature(shingles(base, 3), 128)
+      val sb = signature(shingles(b, 3), 128)
       val est = sa.zip(sb).count { case (x, y) => x == y } / 128.0
       sumErr += math.abs(est - t); n += 1
       assert(math.abs(est - t) < 0.25, s"est=$est true=$t")
@@ -43,11 +54,11 @@ class DedupSpec extends AnyFunSuite {
 
   test("minhash: identical docs -> identical signatures; disjoint docs -> low match") {
     val a = "alpha beta gamma delta epsilon zeta eta theta"
-    val sigA = Dedup.minhashSignature(Dedup.shingles(a, 3), 64)
-    val sigA2 = Dedup.minhashSignature(Dedup.shingles(a, 3), 64)
+    val sigA = signature(shingles(a, 3), 64)
+    val sigA2 = signature(shingles(a, 3), 64)
     assert(sigA.toSeq == sigA2.toSeq)
     val b = "one two three four five six seven eight nine ten"
-    val sigB = Dedup.minhashSignature(Dedup.shingles(b, 3), 64)
+    val sigB = signature(shingles(b, 3), 64)
     assert(sigA.zip(sigB).count { case (x, y) => x == y } <= 3)
   }
 
