@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line
   * `{"metric":...,"value":N,"unit":"sec","queries":{...},"sf":...}`.

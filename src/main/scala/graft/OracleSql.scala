@@ -1,5 +1,9 @@
 package graft
 
+import graft.ann.Ann
+import graft.ops.{Lakehouse, Sketches}
+import graft.pipeline.{Checkpoint, ImagePipeline}
+
 /** Builders for DuckDB oracle SQL that reproduces the engine's from-scratch
   * 64-bit hash arithmetic bit-exactly (splitmix64, FNV-1a, rotations).
   *
@@ -350,8 +354,8 @@ object OracleSql {
     * integer division of the z12 tx/ty — arithmetically identical to the
     * engine's bit-shift parent chain (floor(floor(v·2^12)/2^(12-z)) ==
     * floor(v·2^z), clamps included). */
-  def q49(n: Long, zooms: Seq[Int] = Seq(8, 10, 12)): String = {
-    val legs = zooms.map { z =>
+  def q49(n: Long): String = {
+    val legs = ImagePipeline.RollupZooms.map { z =>
       val d = 1L << (12 - z)
       s"""SELECT $z AS zoom, (${z}::BIGINT * 288230376151711744 + (tx // $d) * 536870912 + (ty // $d)) AS cell_id, team, uid
          |FROM f""".stripMargin
@@ -469,8 +473,8 @@ object OracleSql {
     * Constants are inlined from the Scala side via shortest-roundtrip
     * formatting so pow/sqrt library differences cannot bite — the SQL parses
     * the decimal back to the identical double. */
-  private def hexBucketCtes(n: Long, buckets: Int, hexRes: Int): String = {
-    val sz = graft.index.Hex.edgeDeg(hexRes).toString
+  private def hexBucketCtes(n: Long): String = {
+    val sz = graft.index.Hex.edgeDeg(Checkpoint.HexRes).toString
     val c1 = (math.sqrt(3.0) / 3.0).toString
     val c2 = (1.0 / 3.0).toString
     val c4 = (2.0 / 3.0).toString
@@ -485,12 +489,12 @@ object OracleSql {
        |       CASE WHEN dq > dr AND dq > ds THEN -r0 - s0 ELSE q0 END AS q,
        |       CASE WHEN NOT (dq > dr AND dq > ds) AND dr > ds THEN -q0 - s0 ELSE r0 END AS r
        |       FROM hx2),
-       |cell AS (SELECT idx, ($hexRes::BIGINT << 60) + ((q + $bias) << 30) + (r + $bias) AS cell FROM hx),
-       |bk AS (SELECT idx, cell, ((${mix("cell")} & 2147483647) % $buckets)::INT AS bucket FROM cell)""".stripMargin
+       |cell AS (SELECT idx, (${Checkpoint.HexRes}::BIGINT << 60) + ((q + $bias) << 30) + (r + $bias) AS cell FROM hx),
+       |bk AS (SELECT idx, cell, ((${mix("cell")} & 2147483647) % ${Checkpoint.GateBuckets})::INT AS bucket FROM cell)""".stripMargin
   }
 
-  def q62(n: Long, buckets: Int, hexRes: Int = 7): String =
-    s"""WITH ${hexBucketCtes(n, buckets, hexRes)},
+  def q62(n: Long): String =
+    s"""WITH ${hexBucketCtes(n)},
        |agg AS (SELECT bucket, min(cell) AS cell_min, max(cell) AS cell_max,
        |        count(*)::BIGINT AS row_count FROM bk GROUP BY 1)
        |SELECT b.b::INT AS bucket,
@@ -499,7 +503,7 @@ object OracleSql {
        |  coalesce(a.row_count, 0)::BIGINT AS row_count,
        |  coalesce(a.row_count, 0)::BIGINT AS n_pixels_ok,
        |  coalesce(a.row_count, 0)::BIGINT AS n_captions_ok
-       |FROM range(0, $buckets) b(b) LEFT JOIN agg a ON b.b = a.bucket""".stripMargin
+       |FROM range(0, ${Checkpoint.GateBuckets}) b(b) LEFT JOIN agg a ON b.b = a.bucket""".stripMargin
 
   /** Replica oracle for q64 (append-only incremental ingestion): the same
     * analytic hex-cell/bucket lineage derivation as q62, over the FULL grown
@@ -509,8 +513,8 @@ object OracleSql {
     * for empty partitions, a hash match proves the incremental manifests
     * jointly describe every row of the union: nothing appended was dropped
     * into an already-committed partition, nothing was double-counted. */
-  def q64(n0: Long, n1: Long, buckets: Int, hexRes: Int = 7): String =
-    s"""WITH ${hexBucketCtes(n1, buckets, hexRes)},
+  def q64(n0: Long, n1: Long): String =
+    s"""WITH ${hexBucketCtes(n1)},
        |bke AS (SELECT idx, cell, bucket,
        |        CASE WHEN idx < $n0 THEN 0 ELSE 1 END AS epoch FROM bk),
        |agg AS (SELECT epoch, bucket, min(cell) AS cell_min, max(cell) AS cell_max,
@@ -521,10 +525,15 @@ object OracleSql {
        |  coalesce(a.row_count, 0)::BIGINT AS row_count,
        |  coalesce(a.row_count, 0)::BIGINT AS n_pixels_ok,
        |  coalesce(a.row_count, 0)::BIGINT AS n_captions_ok
-       |FROM range(0, 2) e(e) CROSS JOIN range(0, $buckets) b(b)
+       |FROM range(0, 2) e(e) CROSS JOIN range(0, ${Checkpoint.GateBuckets}) b(b)
        |LEFT JOIN agg a ON e.e = a.epoch AND b.b = a.bucket""".stripMargin
 
   // ---- q31: full ANN-LSH replica oracle ------------------------------------
+
+  /** Left-to-right dot product of two 64-dim embedding expressions, the
+    * Scala dot loop's summation order. */
+  private def dot(a: String, b: String): String =
+    s"list_reduce(list_transform(range(1, 65), i -> ($a)[i] * ($b)[i]), (x, y) -> x + y)"
 
   /** Complete DuckDB replica of graft.ann.Ann.lshTopK: the deterministic
     * hyperplanes are inlined as literal constants (they're part of the
@@ -534,45 +543,42 @@ object OracleSql {
     * and ranks are bit-parity. On this corpus (uniform random vectors, no
     * planted clusters) recall-vs-brute is inherently partial — what this
     * oracle verifies is the LSH pipeline itself, end to end. */
-  def q31(planes: Array[Array[Double]], q: Int = 5, k: Int = 10, bands: Int = 4): String = {
-    val bitsPerBand = planes.length / bands
+  def q31(planes: Array[Array[Double]]): String = {
+    val bitsPerBand = planes.length / Ann.LshBands
     val mask = (1L << bitsPerBand) - 1
     val planeRows = planes.zipWithIndex.map { case (w, p) =>
       s"($p, [${w.mkString(", ")}]::DOUBLE[])"
     }.mkString(",\n  ")
-    // strict left-to-right sum of per-dim products == the Scala dot loop
-    def dot(a: String, b: String) =
-      s"list_reduce(list_transform(range(1, 65), i -> ($a)[i] * ($b)[i]), (x, y) -> x + y)"
     s"""WITH planes(p, w) AS (VALUES
        |  $planeRows),
        |v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
        |sig AS (
        |  SELECT vec_id, sum(CASE WHEN ${dot("e", "w")} >= 0 THEN (1::UBIGINT << p) ELSE 0 END)::UBIGINT AS s
        |  FROM v, planes GROUP BY 1),
-       |vb AS (SELECT vec_id, b, (s >> (b * $bitsPerBand)) & $mask AS band FROM sig, range($bands) r(b)),
-       |qb AS (SELECT vec_id AS qid, b, band AS qband FROM vb WHERE vec_id < $q),
+       |vb AS (SELECT vec_id, b, (s >> (b * $bitsPerBand)) & $mask AS band FROM sig, range(${Ann.LshBands}) r(b)),
+       |qb AS (SELECT vec_id AS qid, b, band AS qband FROM vb WHERE vec_id < ${Ann.Q}),
        |cand AS (SELECT DISTINCT qb.qid, vb.vec_id
        |         FROM vb JOIN qb ON vb.b = qb.b AND vb.band = qb.qband),
-       |qv AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < $q),
+       |qv AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < ${Ann.Q}),
        |rer AS (
        |  SELECT c.qid, c.vec_id,
        |    ${dot("qv.qe", "v.e")} / (sqrt(${dot("qv.qe", "qv.qe")}) * sqrt(${dot("v.e", "v.e")})) AS cos
        |  FROM cand c JOIN v ON c.vec_id = v.vec_id JOIN qv ON c.qid = qv.qid),
        |rk AS (SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rank FROM rer)
-       |SELECT qid, vec_id, rank::INT AS rank FROM rk WHERE rank <= $k""".stripMargin
+       |SELECT qid, vec_id, rank::INT AS rank FROM rk WHERE rank <= ${Ann.K}""".stripMargin
   }
 
   /** Oracle for q48 (ANN-LSH recall certification): brute-force top-k via
     * DuckDB's own cosine (independent of the engine) left-joined with the
     * q31 LSH replica; per-query hit counts and recall in basis points. */
-  def q48(planes: Array[Array[Double]], q: Int = 5, k: Int = 10, bands: Int = 4): String =
+  def q48(planes: Array[Array[Double]]): String =
     s"""WITH brute AS (
        |  WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |  q AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < $q),
+       |  q AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < ${Ann.Q}),
        |  d AS (SELECT q.qid, v.vec_id, list_cosine_similarity(q.qe, v.e) AS c FROM v CROSS JOIN q),
        |  r AS (SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY c DESC, vec_id) AS rk FROM d)
-       |  SELECT qid, vec_id FROM r WHERE rk <= $k),
-       |lsh AS (${q31(planes, q, k, bands)})
+       |  SELECT qid, vec_id FROM r WHERE rk <= ${Ann.K}),
+       |lsh AS (${q31(planes)})
        |SELECT b.qid, count(*)::BIGINT AS k_total,
        |  sum(CASE WHEN l.vec_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_hit,
        |  floor(sum(CASE WHEN l.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 10000.0 / count(*))::BIGINT AS recall_bp
@@ -583,8 +589,6 @@ object OracleSql {
     * threshold, cosine computed with the same left-to-right dot reduction as
     * the Scala kernel for FP bit-parity. */
   def q44(minCos: Double): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_transform(range(1, 65), i -> ($a)[i] * ($b)[i]), (x, y) -> x + y)"
     s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
        |p AS (SELECT l.vec_id AS a, r.vec_id AS b,
        |        ${dot("l.e", "r.e")} / (sqrt(${dot("l.e", "l.e")}) * sqrt(${dot("r.e", "r.e")})) AS c
@@ -600,18 +604,17 @@ object OracleSql {
     * engine runs the LSH TIER under production defaults against this exact
     * relation, so a hash match proves tier recall is exactly 1.0 AND that
     * the bucketed path's verify kernel is FP-bit-identical to exact. */
-  def q65(n: Int, minCos: Double, dim: Int = 64, groupSize: Int = 3,
-          eps: Double = 0.01): String = {
+  def q65(n: Int, minCos: Double): String = {
     def dot(a: String, b: String) =
-      s"list_reduce(list_transform(range(1, ${dim + 1}), i -> ($a)[i] * ($b)[i]), (x, y) -> x + y)"
+      s"list_reduce(list_transform(range(1, ${Ann.PlantedDim + 1}), i -> ($a)[i] * ($b)[i]), (x, y) -> x + y)"
     def unit(h: String) = s"((($h) >> 11)::DOUBLE / 4503599627370496.0 - 1.0)"
     s"""WITH ids AS (SELECT unnest(range(0, $n)) AS idx),
-       |dims AS (SELECT unnest(range(0, $dim)) AS i),
+       |dims AS (SELECT unnest(range(0, ${Ann.PlantedDim})) AS i),
        |hashed AS (SELECT idx, i,
-       |    ${mix(s"((idx // $groupSize) * $dim + i + 10000000)::UBIGINT")} AS hb,
-       |    ${mix(s"(idx * $dim + i + 20000000)::UBIGINT")} AS hn
+       |    ${mix(s"((idx // ${Ann.PlantedGroup}) * ${Ann.PlantedDim} + i + 10000000)::UBIGINT")} AS hb,
+       |    ${mix(s"(idx * ${Ann.PlantedDim} + i + 20000000)::UBIGINT")} AS hn
        |  FROM ids CROSS JOIN dims),
-       |comp AS (SELECT idx, i, ${unit("hb")} + $eps * ${unit("hn")} AS c FROM hashed),
+       |comp AS (SELECT idx, i, ${unit("hb")} + ${Ann.PlantedEps} * ${unit("hn")} AS c FROM hashed),
        |v AS (SELECT idx AS vec_id, list(c ORDER BY i) AS e FROM comp GROUP BY 1),
        |p AS (SELECT l.vec_id AS a, r.vec_id AS b,
        |        ${dot("l.e", "r.e")} / (sqrt(${dot("l.e", "l.e")}) * sqrt(${dot("r.e", "r.e")})) AS c
@@ -627,9 +630,7 @@ object OracleSql {
     * reconstruction and scoring end to end. (Recall vs the un-quantized
     * answer is pinned separately in AnnSpec: information loss is a quality
     * metric, not an oracle question.) */
-  def q66(q: Int = 5, k: Int = 10): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_transform(range(1, 65), i -> ($a)[i] * ($b)[i]), (x, y) -> x + y)"
+  def q66: String = {
     s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
        |b AS (SELECT vec_id, e, list_min(e) AS lo, list_max(e) AS hi FROM v),
        |c AS (SELECT vec_id, lo, (hi - lo) / 255.0 AS step,
@@ -638,12 +639,12 @@ object OracleSql {
        |          ELSE list_transform(range(1, 65), i -> 0.0) END AS code
        |      FROM b),
        |r AS (SELECT vec_id, list_transform(range(1, 65), i -> lo + code[i] * step) AS rl FROM c),
-       |qs AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < $q),
+       |qs AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < ${Ann.Q}),
        |sc AS (SELECT qs.qid, r.vec_id,
        |        ${dot("qs.qe", "r.rl")} / (sqrt(${dot("qs.qe", "qs.qe")}) * sqrt(${dot("r.rl", "r.rl")})) AS cos
        |      FROM r CROSS JOIN qs),
        |rk AS (SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rank FROM sc)
-       |SELECT qid, vec_id, rank::INT AS rank FROM rk WHERE rank <= $k""".stripMargin
+       |SELECT qid, vec_id, rank::INT AS rank FROM rk WHERE rank <= ${Ann.K}""".stripMargin
   }
 
   /** Replica oracle for q73 (SemDeDup at nlist = 1): with a single cluster
@@ -653,8 +654,6 @@ object OracleSql {
     * family — a different algorithm than the engine's label propagation),
     * keep = (vec_id == component minimum), singletons keep trivially. */
   def q73(minCos: Double): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_transform(range(1, 65), i -> ($a)[i] * ($b)[i]), (x, y) -> x + y)"
     s"""WITH RECURSIVE vv AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
        |p AS (SELECT l.vec_id AS a, r.vec_id AS b,
        |        ${dot("l.e", "r.e")} / (sqrt(${dot("l.e", "l.e")}) * sqrt(${dot("r.e", "r.e")})) AS c
@@ -685,26 +684,23 @@ object OracleSql {
     * every sum is exact 64-bit arithmetic, so the replay cannot drift with
     * aggregation order the way FP k-means would. Validated cross-engine
     * (tools-side prototype) at both gate scales before wiring. */
-  def q75(dim: Int = 64, m: Int = 8, ksub: Int = 16, iters: Int = 2,
-          q: Int = 5, k: Int = 10): String = {
-    val dsub = dim / m
-    def dot(a: String, b: String) =
-      s"list_reduce(list_transform(range(1, ${dim + 1}), i -> ($a)[i] * ($b)[i]), (x, y) -> x + y)"
+  def q75: String = {
+    val dsub = 64 / Ann.PqM
     s"""WITH RECURSIVE
        |v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
        |lat AS (SELECT vec_id, i-1 AS dim, floor(e[i]*1000000.0 + 0.5)::BIGINT AS q
-       |        FROM v, range(1, ${dim + 1}) r(i)),
+       |        FROM v, range(1, 65) r(i)),
        |lsub AS (SELECT vec_id, dim // $dsub AS sub, dim % $dsub AS sd, q FROM lat),
        |init AS (SELECT sub, row_number() OVER (PARTITION BY sub, sd ORDER BY vec_id) - 1 AS cid, sd, q AS c
-       |         FROM lsub WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT $ksub)),
+       |         FROM lsub WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT ${Ann.PqKsub})),
        |km(it, sub, cid, sd, c) AS (
        |  SELECT 0, sub, cid, sd, c FROM init
        |  UNION ALL
-       |  (WITH cur AS (SELECT * FROM km WHERE it < $iters),
+       |  (WITH cur AS (SELECT * FROM km WHERE it < ${Ann.LloydIters}),
        |   d AS (SELECT l.vec_id, l.sub, cur.cid, cur.it, sum((l.q - cur.c)*(l.q - cur.c)) AS dist
        |         FROM lsub l JOIN cur ON l.sub = cur.sub AND l.sd = cur.sd
        |         GROUP BY 1, 2, 3, 4),
-       |   a AS (SELECT vec_id, sub, it, (min(dist::BIGINT * $ksub + cid) % $ksub)::BIGINT AS cid
+       |   a AS (SELECT vec_id, sub, it, (min(dist::BIGINT * ${Ann.PqKsub} + cid) % ${Ann.PqKsub})::BIGINT AS cid
        |         FROM d GROUP BY 1, 2, 3),
        |   upd AS (SELECT a.it + 1 AS it, a.sub, a.cid, l.sd,
        |             (sum(l.q) // count(*))::BIGINT AS c
@@ -714,22 +710,22 @@ object OracleSql {
        |   FROM cur LEFT JOIN upd ON upd.it = cur.it + 1 AND upd.sub = cur.sub
        |        AND upd.cid = cur.cid AND upd.sd = cur.sd)
        |),
-       |fin AS (SELECT sub, cid, sd, c FROM km WHERE it = $iters),
+       |fin AS (SELECT sub, cid, sd, c FROM km WHERE it = ${Ann.LloydIters}),
        |dd AS (SELECT l.vec_id, l.sub, f.cid, sum((l.q - f.c)*(l.q - f.c)) AS dist
        |       FROM lsub l JOIN fin f ON l.sub = f.sub AND l.sd = f.sd
        |       GROUP BY 1, 2, 3),
-       |code AS (SELECT vec_id, sub, (min(dist::BIGINT * $ksub + cid) % $ksub)::BIGINT AS cid
+       |code AS (SELECT vec_id, sub, (min(dist::BIGINT * ${Ann.PqKsub} + cid) % ${Ann.PqKsub})::BIGINT AS cid
        |         FROM dd GROUP BY 1, 2),
        |rv AS (SELECT c2.vec_id, list(f.c ORDER BY c2.sub * $dsub + f.sd) AS rl
        |       FROM code c2 JOIN fin f ON c2.sub = f.sub AND c2.cid = f.cid
        |       GROUP BY 1),
        |rd AS (SELECT vec_id, list_transform(rl, x -> x::DOUBLE / 1000000.0) AS r FROM rv),
-       |qs AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < $q),
+       |qs AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < ${Ann.Q}),
        |sc AS (SELECT qs.qid, rd.vec_id,
        |         ${dot("qs.qe", "rd.r")} / (sqrt(${dot("qs.qe", "qs.qe")}) * sqrt(${dot("rd.r", "rd.r")})) AS cos
        |       FROM rd CROSS JOIN qs),
        |rk AS (SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rank FROM sc)
-       |SELECT qid, vec_id, rank::INT AS rank FROM rk WHERE rank <= $k""".stripMargin
+       |SELECT qid, vec_id, rank::INT AS rank FROM rk WHERE rank <= ${Ann.K}""".stripMargin
   }
 
   /** graft.multimodal.PhashDedup.plantedPhashCorpus replayed analytically →
@@ -760,21 +756,21 @@ object OracleSql {
     * bit_count(xor) ≤ maxHam over the replayed corpus — candidate-free, so
     * a hash match proves the engine's pigeonhole+bounded-bucket path finds
     * exactly the full relation (the 4-segment guarantee radius is 3). */
-  def q78(maxHam: Int = 3): String =
+  def q78: String =
     s"""WITH ${phashCorpusCte}
        |SELECT l.id AS a, r.id AS b, bit_count(xor(l.ph, r.ph))::INT AS ham
        |FROM corp l JOIN corp r ON l.id < r.id
-       |WHERE bit_count(xor(l.ph, r.ph)) <= $maxHam""".stripMargin
+       |WHERE bit_count(xor(l.ph, r.ph)) <= ${graft.text.Dedup.MaxHam}""".stripMargin
 
   /** Replica oracle for q79 (per-image dup decision + caption conflict):
     * recursive-CTE transitive closure over the all-pairs ham≤3 edges (the
     * q63/q73 oracle family — a different algorithm than the engine's label
     * propagation), min-id representative, conflict = component carries >1
     * distinct caption; singletons keep trivially with conflict 0. */
-  def q79(maxHam: Int = 3): String =
+  def q79: String =
     s"""WITH RECURSIVE ${phashCorpusCte},
        |p AS (SELECT l.id AS a, r.id AS b FROM corp l JOIN corp r ON l.id < r.id
-       |      WHERE bit_count(xor(l.ph, r.ph)) <= $maxHam),
+       |      WHERE bit_count(xor(l.ph, r.ph)) <= ${graft.text.Dedup.MaxHam}),
        |ed AS (SELECT a AS u, b AS w FROM p UNION ALL SELECT b, a FROM p),
        |verts AS (SELECT DISTINCT u AS id FROM ed),
        |reach(id, rr) AS (
@@ -797,7 +793,7 @@ object OracleSql {
     * and the 128-bit `(2·10⁶·num + den) // (2·den)` floor that both engines
     * define score_e6 by. No FP anywhere (the engine omits BM25's ln for
     * exactly this reason — see TextOps.bm25TopTerms). */
-  def q80(topK: Int = 5): String =
+  def q80: String =
     s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
        |tf AS (SELECT doc_id, term, count(*)::HUGEINT AS tf FROM tok GROUP BY 1, 2),
        |dl AS (SELECT doc_id, count(*)::HUGEINT AS dl FROM tok GROUP BY 1),
@@ -811,7 +807,7 @@ object OracleSql {
        |rk AS (SELECT doc_id, term, score_e6,
        |         row_number() OVER (PARTITION BY doc_id ORDER BY score_e6 DESC, term) AS rank
        |       FROM fin)
-       |SELECT doc_id, term, score_e6, rank::INT AS rank FROM rk WHERE rank <= $topK""".stripMargin
+       |SELECT doc_id, term, score_e6, rank::INT AS rank FROM rk WHERE rank <= ${graft.text.TextOps.Bm25TopK}""".stripMargin
 
   /** q83: the whole KMV sketch replayed in SQL — distinct splitmix64 of
     * l_partkey, k smallest in unsigned order (the UBIGINT domain IS unsigned
@@ -829,68 +825,66 @@ object OracleSql {
        |        ELSE (${k - 1}::HUGEINT * $M64::HUGEINT) // kth.mk END)::BIGINT AS est_distinct
        |FROM r, kth""".stripMargin
 
+  /** Register count and the ρ of an all-zero remainder at [[Sketches.HllP]]. */
+  private val HllM = 1 << Sketches.HllP
+  private val HllRmax = 64 - Sketches.HllP + 1
+
   /** q87: the HLL register file + raw estimate replayed in SQL. ρ uses the
     * bin()-length identity (clz(x) = 64 − length(bin(x)) for x ≠ 0 —
     * integer-string arithmetic, no FP log); the harmonic sum and the
     * α·m²·2^59/S estimate are HUGEINT-exact, mirroring the engine's BigInt. */
-  def q87(p: Int = 6): String = {
-    val m = 1 << p
-    val rmax = 64 - p + 1
+  def q87: String = {
     s"""WITH h AS (SELECT ${mix("l_partkey")} AS hm FROM lineitem),
-       |b AS (SELECT (hm >> ${64 - p}) AS bucket,
-       |        ((hm::HUGEINT * $m) % $M64)::UBIGINT AS rest FROM h),
+       |b AS (SELECT (hm >> ${64 - Sketches.HllP}) AS bucket,
+       |        ((hm::HUGEINT * $HllM) % $M64)::UBIGINT AS rest FROM h),
        |rh AS (SELECT bucket,
-       |        CASE WHEN rest = 0 THEN $rmax ELSE 65 - length(bin(rest)) END AS rho FROM b),
+       |        CASE WHEN rest = 0 THEN $HllRmax ELSE 65 - length(bin(rest)) END AS rho FROM b),
        |regs AS (SELECT r.b AS bucket, coalesce(max(rho), 0)::BIGINT AS r
-       |         FROM range($m) r(b) LEFT JOIN rh ON rh.bucket = r.b GROUP BY 1),
-       |s AS (SELECT sum((1::HUGEINT << ($rmax - r)))::HUGEINT AS sv FROM regs)
+       |         FROM range($HllM) r(b) LEFT JOIN rh ON rh.bucket = r.b GROUP BY 1),
+       |s AS (SELECT sum((1::HUGEINT << ($HllRmax - r)))::HUGEINT AS sv FROM regs)
        |SELECT regs.bucket::BIGINT AS bucket, regs.r,
-       |  ((709::HUGEINT * $m * $m * (1::HUGEINT << $rmax)) // (1000::HUGEINT * s.sv))::BIGINT AS est_distinct
+       |  ((709::HUGEINT * $HllM * $HllM * (1::HUGEINT << $HllRmax)) // (1000::HUGEINT * s.sv))::BIGINT AS est_distinct
        |FROM regs, s""".stripMargin
   }
 
   /** q99: per-group HLL raw estimates replayed (grouped q87 — same register
     * derivation, (group × bucket) grid via CROSS JOIN range(m)). */
-  def q99(p: Int = 6): String = {
-    val m = 1 << p
-    val rmax = 64 - p + 1
+  def q99: String = {
     s"""WITH h AS (SELECT event_type, ${mix("user_id")} AS hm FROM events),
-       |b AS (SELECT event_type, (hm >> ${64 - p}) AS bucket,
-       |        ((hm::HUGEINT * $m) % $M64)::UBIGINT AS rest FROM h),
+       |b AS (SELECT event_type, (hm >> ${64 - Sketches.HllP}) AS bucket,
+       |        ((hm::HUGEINT * $HllM) % $M64)::UBIGINT AS rest FROM h),
        |rh AS (SELECT event_type, bucket,
-       |        CASE WHEN rest = 0 THEN $rmax ELSE 65 - length(bin(rest)) END AS rho FROM b),
+       |        CASE WHEN rest = 0 THEN $HllRmax ELSE 65 - length(bin(rest)) END AS rho FROM b),
        |grp AS (SELECT DISTINCT event_type FROM h),
        |regs AS (SELECT g.event_type, r.b AS bucket, coalesce(max(rho), 0)::BIGINT AS r
-       |         FROM grp g CROSS JOIN range($m) r(b)
+       |         FROM grp g CROSS JOIN range($HllM) r(b)
        |         LEFT JOIN rh ON rh.event_type = g.event_type AND rh.bucket = r.b
        |         GROUP BY 1, 2),
-       |s AS (SELECT event_type, sum((1::HUGEINT << ($rmax - r)))::HUGEINT AS sv
+       |s AS (SELECT event_type, sum((1::HUGEINT << ($HllRmax - r)))::HUGEINT AS sv
        |      FROM regs GROUP BY 1)
        |SELECT event_type,
-       |  ((709::HUGEINT * $m * $m * (1::HUGEINT << $rmax)) // (1000::HUGEINT * sv))::BIGINT AS est_users
+       |  ((709::HUGEINT * $HllM * $HllM * (1::HUGEINT << $HllRmax)) // (1000::HUGEINT * sv))::BIGINT AS est_users
        |FROM s""".stripMargin
   }
 
   /** q103: the incremental rollup's target relation computed DIRECTLY (no
     * partial/merge step — that asymmetry is the point): per-day counts,
     * cent sums, and the q99-style per-day HLL raw estimate. */
-  def q103(p: Int = 6): String = {
-    val m = 1 << p
-    val rmax = 64 - p + 1
+  def q103: String = {
     s"""WITH e AS (SELECT floor(floor(epoch(ts)) / 86400)::BIGINT AS day, user_id,
        |        floor(value * 100.0 + 0.5)::BIGINT AS vc FROM events),
        |h AS (SELECT day, ${mix("user_id")} AS hm FROM e),
-       |b AS (SELECT day, (hm >> ${64 - p}) AS bucket,
-       |        ((hm::HUGEINT * $m) % $M64)::UBIGINT AS rest FROM h),
+       |b AS (SELECT day, (hm >> ${64 - Sketches.HllP}) AS bucket,
+       |        ((hm::HUGEINT * $HllM) % $M64)::UBIGINT AS rest FROM h),
        |rh AS (SELECT day, bucket,
-       |        CASE WHEN rest = 0 THEN $rmax ELSE 65 - length(bin(rest)) END AS rho FROM b),
+       |        CASE WHEN rest = 0 THEN $HllRmax ELSE 65 - length(bin(rest)) END AS rho FROM b),
        |grp AS (SELECT DISTINCT day FROM e),
        |regs AS (SELECT g.day, r.b AS bucket, coalesce(max(rho), 0)::BIGINT AS r
-       |         FROM grp g CROSS JOIN range($m) r(b)
+       |         FROM grp g CROSS JOIN range($HllM) r(b)
        |         LEFT JOIN rh ON rh.day = g.day AND rh.bucket = r.b GROUP BY 1, 2),
-       |s AS (SELECT day, sum((1::HUGEINT << ($rmax - r)))::HUGEINT AS sv FROM regs GROUP BY 1),
+       |s AS (SELECT day, sum((1::HUGEINT << ($HllRmax - r)))::HUGEINT AS sv FROM regs GROUP BY 1),
        |est AS (SELECT day,
-       |        ((709::HUGEINT * $m * $m * (1::HUGEINT << $rmax)) // (1000::HUGEINT * sv))::BIGINT AS est_users
+       |        ((709::HUGEINT * $HllM * $HllM * (1::HUGEINT << $HllRmax)) // (1000::HUGEINT * sv))::BIGINT AS est_users
        |        FROM s),
        |base AS (SELECT day, count(*)::BIGINT AS n_events, sum(vc)::BIGINT AS value_cents
        |         FROM e GROUP BY 1)
@@ -976,12 +970,12 @@ object OracleSql {
 
   /** q91: z-range-bucket rollup of the morton codes of the event points
     * (`pts` = the shared points CTE body). */
-  def q91(pts: String, bits: Int = 10): String = {
-    val n = 1L << bits
+  def q91(pts: String): String = {
+    val n = 1L << graft.spatial.ZOrder.RollupBits
     s"""WITH p AS ($pts),
        |g AS (SELECT least(floor((lon + 180.0) / 360.0 * $n.0), ${n - 1}.0)::BIGINT AS ix,
        |             least(floor((lat + 90.0) / 180.0 * $n.0), ${n - 1}.0)::BIGINT AS iy FROM p),
-       |m AS (SELECT (${mortonExpr("ix", "iy", bits)})::BIGINT AS morton FROM g)
+       |m AS (SELECT (${mortonExpr("ix", "iy", graft.spatial.ZOrder.RollupBits)})::BIGINT AS morton FROM g)
        |SELECT (morton >> 6)::BIGINT AS zbucket, count(*)::BIGINT AS n,
        |  min(morton)::BIGINT AS min_code, max(morton)::BIGINT AS max_code
        |FROM m GROUP BY 1""".stripMargin
@@ -989,7 +983,8 @@ object OracleSql {
 
   /** q94: geohash (graft.index.Geohash — lon-first MSB interleave, base32)
     * prefix rollup over the event points. */
-  def q94(pts: String, precision: Int = 6): String = {
+  def q94(pts: String): String = {
+    val precision = graft.index.Geohash.RollupPrecision
     val totalBits = 5 * precision
     val lonBits = (totalBits + 1) / 2
     val latBits = totalBits / 2
@@ -1343,8 +1338,8 @@ object OracleSql {
     * read must return exactly ids [0, n0) routed by the same hex-cell/bucket
     * arithmetic — a DATA-content rollup (id sums), independent of the
     * manifest lineage q62/q64 gate. */
-  def q119(n0: Long, buckets: Int, hexRes: Int = 7): String =
-    s"""WITH ${hexBucketCtes(n0, buckets, hexRes)}
+  def q119(n0: Long): String =
+    s"""WITH ${hexBucketCtes(n0)}
        |SELECT bucket::INT AS bucket, count(*)::BIGINT AS row_count,
        |  sum(idx)::BIGINT AS sum_idx, min(idx)::BIGINT AS min_idx,
        |  max(idx)::BIGINT AS max_idx
@@ -1352,14 +1347,14 @@ object OracleSql {
 
   /** The CDC fixture shared by q121/q122/q123 (Lakehouse.synthBase/
     * synthDelta), replayed via the shared splitmix arithmetic. */
-  private def cdcCtes(nBase: Int, nDelta: Int, keyspace: Int): String =
+  private def cdcCtes: String =
     s"""base AS (SELECT k AS key, (${mix("xor(k::UBIGINT, 47710::UBIGINT)")} & 65535)::BIGINT AS val
-       |         FROM range(0, $nBase) t(k)),
+       |         FROM range(0, ${Lakehouse.NBase}) t(k)),
        |delta AS (SELECT seq,
-       |    ((${mix("(5000000+seq)::UBIGINT")} & 2147483647) % $keyspace)::BIGINT AS key,
+       |    ((${mix("(5000000+seq)::UBIGINT")} & 2147483647) % ${Lakehouse.Keyspace})::BIGINT AS key,
        |    ((${mix("(6000000+seq)::UBIGINT")} & 2147483647) % 3)::BIGINT AS op,
        |    (${mix("(7000000+seq)::UBIGINT")} & 65535)::BIGINT AS val
-       |  FROM range(0, $nDelta) t(seq)),
+       |  FROM range(0, ${Lakehouse.NDelta}) t(seq)),
        |latest AS (SELECT key, op, val FROM (
        |    SELECT *, row_number() OVER (PARTITION BY key ORDER BY seq DESC) AS rn FROM delta) WHERE rn = 1),
        |merged AS (SELECT coalesce(b.key, l.key) AS key,
@@ -1369,22 +1364,22 @@ object OracleSql {
        |  WHERE NOT (l.key IS NOT NULL AND l.op = 2))""".stripMargin
 
   /** Replica oracle for q121 (Lakehouse.mergeApply). */
-  def q121(nBase: Int, nDelta: Int, keyspace: Int): String =
-    s"""WITH ${cdcCtes(nBase, nDelta, keyspace)}
+  def q121: String =
+    s"""WITH $cdcCtes
        |SELECT key, val, src FROM merged""".stripMargin
 
   /** Replica oracle for q122 (Lakehouse.scd2) — upserts open intervals, the
     * key's next op (any type) closes them. */
-  def q122(nBase: Int, nDelta: Int, keyspace: Int): String =
-    s"""WITH ${cdcCtes(nBase, nDelta, keyspace)},
+  def q122: String =
+    s"""WITH $cdcCtes,
        |v AS (SELECT key, seq, op, val, lead(seq) OVER (PARTITION BY key ORDER BY seq) AS nxt FROM delta)
        |SELECT key, seq AS valid_from, val, nxt AS valid_to,
        |  (nxt IS NULL)::BIGINT AS is_current
        |FROM v WHERE op <> 2""".stripMargin
 
   /** Replica oracle for q123 (Lakehouse.changeFeed). */
-  def q123(nBase: Int, nDelta: Int, keyspace: Int): String =
-    s"""WITH ${cdcCtes(nBase, nDelta, keyspace)}
+  def q123: String =
+    s"""WITH $cdcCtes
        |SELECT coalesce(b.key, m.key) AS key,
        |  CASE WHEN b.key IS NULL THEN 'insert' WHEN m.key IS NULL THEN 'delete' ELSE 'update' END AS change,
        |  b.val AS old_val, m.val AS new_val
@@ -1392,10 +1387,10 @@ object OracleSql {
        |WHERE b.key IS NULL OR m.key IS NULL OR b.val <> m.val""".stripMargin
 
   /** Replica oracle for q120 (Lakehouse.compactionPlan). */
-  def q120(nFiles: Int): String =
+  def q120: String =
     s"""WITH files AS (SELECT f, (f % 8)::BIGINT AS bucket,
        |    (1000000 + (${mix("(3000000+f)::UBIGINT")} & 2147483647) % 127000000)::BIGINT AS size
-       |  FROM range(0, $nFiles) t(f)),
+       |  FROM range(0, ${Lakehouse.NFiles}) t(f)),
        |cand AS (SELECT * FROM files WHERE size < 32000000),
        |j AS (SELECT bucket, f, size,
        |    (sum(size) OVER (PARTITION BY bucket ORDER BY f ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)) AS cum_before
@@ -1704,18 +1699,18 @@ object OracleSql {
 
   /** Replica oracle for q147 (Lakehouse.temporalJoin) — the same CDC/SCD2
     * fixture plus splitmix probes, matched by the validity predicate. */
-  def q147(nDelta: Int, nProbes: Int, keyspace: Int): String =
+  def q147: String =
     s"""WITH delta AS (SELECT seq,
-       |    ((${mix("(5000000+seq)::UBIGINT")} & 2147483647) % $keyspace)::BIGINT AS key,
+       |    ((${mix("(5000000+seq)::UBIGINT")} & 2147483647) % ${Lakehouse.Keyspace})::BIGINT AS key,
        |    ((${mix("(6000000+seq)::UBIGINT")} & 2147483647) % 3)::BIGINT AS op,
        |    (${mix("(7000000+seq)::UBIGINT")} & 65535)::BIGINT AS val
-       |  FROM range(0, $nDelta) t(seq)),
+       |  FROM range(0, ${Lakehouse.NDelta}) t(seq)),
        |scd AS (SELECT key, seq AS vf, val, lead(seq) OVER (PARTITION BY key ORDER BY seq) AS vt
        |        FROM delta QUALIFY op <> 2),
        |probes AS (SELECT i AS pid,
-       |    ((${mix("(8000000+i)::UBIGINT")} & 2147483647) % $keyspace)::BIGINT AS key,
+       |    ((${mix("(8000000+i)::UBIGINT")} & 2147483647) % ${Lakehouse.Keyspace})::BIGINT AS key,
        |    ((${mix("(9000000+i)::UBIGINT")} & 2147483647) % 450)::BIGINT AS t
-       |  FROM range(0, $nProbes) r(i))
+       |  FROM range(0, ${Lakehouse.NProbes}) r(i))
        |SELECT p.pid, p.key, p.t, s.val, s.vf
        |FROM probes p JOIN scd s ON s.key = p.key AND p.t >= s.vf AND (s.vt IS NULL OR p.t < s.vt)"""
       .stripMargin

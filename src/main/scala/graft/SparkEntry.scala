@@ -501,7 +501,7 @@ object SparkEntry {
     // IVF through its inverted-list plan at FULL probe: every list is
     // scanned, so the relation must equal brute-force exactly (q30's oracle)
     "q55_ann_ivf" -> ((s: SparkSession, d: String) =>
-      Ann.ivfTopK(s, d, nlist = 16, nprobe = 16)),
+      Ann.ivfTopK(s, d)),
     // embedding-cosine near-dup: dedup-grade exact pair extraction over the
     // embeddings table (block-pair partitioned all-pairs; the LSH prefilter
     // tier and when it applies are documented in Ann.cosineNearDupPairs)
@@ -516,7 +516,7 @@ object SparkEntry {
     // (the q55 plan-equivalence pattern); partial-probe recall is pinned in
     // AnnSparkSpec on planted clusters
     "q69_ann_ivf_sq8" -> ((s: SparkSession, d: String) =>
-      Ann.ivfSqTopK(s, d, nlist = 16, nprobe = 16)),
+      Ann.ivfSqTopK(s, d)),
     // product quantization trained on the e6 integer lattice: every Lloyd
     // sum is exact integer arithmetic (merge-order-free at any parallelism),
     // so the ENTIRE pipeline — training included — replays in the oracle
@@ -547,7 +547,7 @@ object SparkEntry {
     // the FULL tilePointSummaries measure matrix: tile totals + dynamic
     // per-team km/b/p/e pivot + team_sum rollups (extractor.js:279-313)
     "q45_tile_measure_matrix" -> ((s: SparkSession, _: String) =>
-      ImagePipeline.tileMeasureMatrix(s, 2000L, 16)),
+      ImagePipeline.tileMeasureMatrix(s, 2000L)),
     // userDailyPointSummaries through the typed WeightedCentroid Aggregator
     "q46_centroid_agg" -> ((s: SparkSession, _: String) =>
       ImagePipeline.userDailyCentroidGate(s, 2000L, 16)),
@@ -558,30 +558,30 @@ object SparkEntry {
     "q48_ann_lsh_recall" -> ((s: SparkSession, d: String) => Ann.lshRecall(s, d)),
     // per-tile inverse-mercator centers (X9, turf.center of the tile polygon)
     "q56_tile_centers" -> ((s: SparkSession, _: String) =>
-      ImagePipeline.tileCenters(s, 2000L, 16)),
+      ImagePipeline.tileCenters(s, 2000L)),
     // teamDailyPointSummaries: the per-(team, day) centroid + e/b/km/p
     // measures layer (extractor.js:241-275) — the last reference rollup layer
     "q60_daily_point_summaries" -> ((s: SparkSession, _: String) =>
-      ImagePipeline.dailyPointSummaries(s, 2000L, 16)),
+      ImagePipeline.dailyPointSummaries(s, 2000L)),
     // objects layer as per-feature emission with the short-key projection,
     // round-tripped through the REAL geojsonseq sink (extractor.js:164-192)
     "q61_object_features" -> ((s: SparkSession, _: String) =>
-      ImagePipeline.objectFeatures(s, 2000L, 16)),
+      ImagePipeline.objectFeatures(s, 2000L)),
     // checkpoint lineage manifests (S9): a full checkpointed build into a
     // fresh scratch dir, manifests emitted as rows and hash-verified against
     // the analytic bucket/cell-range/row-count derivation
     "q62_checkpoint_lineage" -> ((s: SparkSession, _: String) =>
-      graft.pipeline.Checkpoint.lineageGate(s, 800L, buckets = 8, parts = 8)),
+      graft.pipeline.Checkpoint.lineageGate(s, 800L)),
     // append-only incremental ingestion (epoch-scoped manifests): epoch 0
     // builds [0, 500), the input grows by [500, 800), an incremental run
     // ingests exactly the new epoch and a re-run is a no-op — the emitted
     // (epoch, bucket) manifests hash against the analytic derivation over
     // the full grown domain
     "q64_checkpoint_append" -> ((s: SparkSession, _: String) =>
-      graft.pipeline.Checkpoint.appendGate(s, 500L, 800L, buckets = 8, parts = 8)),
+      graft.pipeline.Checkpoint.appendGate(s, 500L, 800L)),
     // multi-zoom tile emission (zoom-band layers): bit-shift parent chain
     "q49_multizoom_rollup" -> ((s: SparkSession, _: String) =>
-      ImagePipeline.multiZoomRollup(s, 2000L, 16)),
+      ImagePipeline.multiZoomRollup(s, 2000L)),
     "q33_image_validate" -> ((s: SparkSession, _: String) =>
       Validate.summary(ImagePipeline.synthTable(s, 2000L, 16).toDF())),
     // full reference classifier over the closed-form synthetic versions table;
@@ -1174,21 +1174,21 @@ object SparkEntry {
     "q30_ann_brute" -> bruteTopKOracle,
     "q60_daily_point_summaries" -> OracleSql.q60(2000),
     "q61_object_features" -> OracleSql.q61(2000),
-    "q62_checkpoint_lineage" -> OracleSql.q62(800, 8),
-    "q64_checkpoint_append" -> OracleSql.q64(500, 800, 8),
+    "q62_checkpoint_lineage" -> OracleSql.q62(800),
+    "q64_checkpoint_append" -> OracleSql.q64(500, 800),
     // q31's oracle replicates the WHOLE LSH pipeline in SQL (inlined plane
     // constants, signatures, banding, dedup, exact rerank) — see OracleSql.q31
-    "q31_ann_lsh" -> OracleSql.q31(graft.ann.Ann.hyperplanes(16, 64)),
+    "q31_ann_lsh" -> OracleSql.q31(Ann.hyperplanes(Ann.LshBits, 64)),
     "q44_embed_neardup" -> OracleSql.q44(0.45),
-    "q66_ann_sq8" -> OracleSql.q66(),
+    "q66_ann_sq8" -> OracleSql.q66,
     // IVF+SQ8 at full probe ≡ exhaustive SQ8 — same relation by definition
-    "q69_ann_ivf_sq8" -> OracleSql.q66(),
-    "q75_ann_pq" -> OracleSql.q75(),
+    "q69_ann_ivf_sq8" -> OracleSql.q66,
+    "q75_ann_pq" -> OracleSql.q75,
     "q76_ann_filtered" -> filteredTopKOracle,
     "q77_knn_graph" -> knnGraphOracle,
-    "q78_phash_neardup" -> OracleSql.q78(),
-    "q79_phash_dup_decisions" -> OracleSql.q79(),
-    "q80_bm25_top_terms" -> OracleSql.q80(),
+    "q78_phash_neardup" -> OracleSql.q78,
+    "q79_phash_dup_decisions" -> OracleSql.q79,
+    "q80_bm25_top_terms" -> OracleSql.q80,
     // bucketing is invisible to the relation — the oracle joins raw parquet
     "q81_bucketed_join" ->
       """SELECT o_orderpriority,
@@ -1205,8 +1205,8 @@ object SparkEntry {
             floor(p.value * 100.0 + 0.5)::BIGINT AS p_value_cents
           FROM events e ASOF JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
             ON e.user_id = p.user_id AND e.ts >= p.ts""",
-    "q83_kmv_distinct" -> OracleSql.q83(64),
-    "q87_hll_distinct" -> OracleSql.q87(),
+    "q83_kmv_distinct" -> OracleSql.q83(graft.ops.Sketches.DistinctK),
+    "q87_hll_distinct" -> OracleSql.q87,
     // honest all-pairs distance join; `a.lat = b.lat` is a lattice fact
     // (integer-degree lats, sigma*R >= |dlat|*111.19 km > 15 km for any
     // cross-lat pair), NOT a copy of the engine's tile scheme
@@ -1279,17 +1279,17 @@ object SparkEntry {
     // full geohash encode replayed in SQL (scaled ints + interleave + base32)
     "q94_geohash" -> OracleSql.q94(pts),
     // the entire histogram sketch replayed: bins, cumulative ranks, estimates
-    "q95_hist_quantile" -> graft.ops.HistQuantile.oracle(),
+    "q95_hist_quantile" -> graft.ops.HistQuantile.oracle,
     // per-side sketches, union sketch, rho, and both estimates replayed
-    "q96_kmv_intersect" -> OracleSql.q96(256, "1998-06-01"),
+    "q96_kmv_intersect" -> OracleSql.q96(graft.ops.Sketches.IntersectK, graft.ops.Sketches.IntersectCut),
     // the full d×w counter matrix + min-over-rows estimates replayed
     "q97_countmin" -> OracleSql.q97(4, 256),
     // fmt coin + analytic pixels + tile assignment replayed in SQL
     "q98_tile_mosaic" -> OracleSql.q98(2000),
     // grouped register file + HUGEINT estimate per event_type
-    "q99_hll_per_group" -> OracleSql.q99(),
+    "q99_hll_per_group" -> OracleSql.q99,
     // DIRECT full recompute — merged partials must equal it as a relation
-    "q103_incremental_rollup" -> OracleSql.q103(),
+    "q103_incremental_rollup" -> OracleSql.q103,
     // the honest all-pairs levenshtein join (DuckDB's DP kernel)
     "q104_editdist_join" ->
       """WITH c AS (SELECT c_custkey, c_name FROM customer WHERE c_custkey <= 3000)
@@ -1313,24 +1313,24 @@ object SparkEntry {
           FROM v""",
     "q106_cohort_retention" -> OracleSql.q106,
     "q107_funnel" -> OracleSql.q107,
-    "q108_triangles" -> OracleSql.q108(250, 1500),
-    "q109_pagerank" -> OracleSql.q109(250, 1500, 10),
+    "q108_triangles" -> OracleSql.q108(graft.ops.Graph.GateNodes, graft.ops.Graph.GateEdges),
+    "q109_pagerank" -> OracleSql.q109(graft.ops.Graph.GateNodes, graft.ops.Graph.GateEdges, 10),
     "q110_ema" -> OracleSql.q110,
     "q111_pii_scrub" -> OracleSql.q111,
     "q112_bbox_overlap" -> OracleSql.q112(150, 600),
     "q113_tile_density" -> OracleSql.q113,
     "q114_grouped_median" -> OracleSql.q114,
     "q115_skyline" -> OracleSql.q115,
-    "q116_image_integral" -> OracleSql.q116(1200),
-    "q117_pyramid" -> OracleSql.q117(1200),
-    "q118_stay_segments" -> OracleSql.q118(6000.0),
-    "q119_time_travel" -> OracleSql.q119(400L, 8),
-    "q120_compaction_plan" -> OracleSql.q120(500),
-    "q121_cdc_merge" -> OracleSql.q121(800, 400, 1000),
-    "q122_scd2" -> OracleSql.q122(800, 400, 1000),
-    "q123_change_feed" -> OracleSql.q123(800, 400, 1000),
+    "q116_image_integral" -> OracleSql.q116(graft.multimodal.Pyramid.GateN),
+    "q117_pyramid" -> OracleSql.q117(graft.multimodal.Pyramid.GateN),
+    "q118_stay_segments" -> OracleSql.q118(graft.ops.Sessionize.StayRadiusKm),
+    "q119_time_travel" -> OracleSql.q119(400L),
+    "q120_compaction_plan" -> OracleSql.q120,
+    "q121_cdc_merge" -> OracleSql.q121,
+    "q122_scd2" -> OracleSql.q122,
+    "q123_change_feed" -> OracleSql.q123,
     "q124_bigram_lm" -> OracleSql.q124,
-    "q125_kcore" -> OracleSql.q125(250, 1500, 8, 10),
+    "q125_kcore" -> OracleSql.q125(graft.ops.Graph.GateNodes, graft.ops.Graph.GateEdges, 8, 10),
     "q126_inverted_query" -> OracleSql.q126(Seq("dup", "key", "fast")),
     "q127_adaptive_tiles" -> OracleSql.q127(15L),
     "q128_grouped_trend" -> OracleSql.q128,
@@ -1350,20 +1350,20 @@ object SparkEntry {
     "q142_tree_depths" -> OracleSql.q142(2000),
     "q143_interval_merge" -> OracleSql.q143,
     "q144_rolling_distinct" -> OracleSql.q144,
-    "q145_stratified_sample" -> OracleSql.q145(3),
+    "q145_stratified_sample" -> OracleSql.q145(graft.ops.Analytics.SampleK),
     "q146_share_of_total" -> OracleSql.q146,
-    "q147_temporal_join" -> OracleSql.q147(400, 600, 1000),
+    "q147_temporal_join" -> OracleSql.q147,
     "q148_skew_profile" -> OracleSql.q148,
     "q149_gini_splits" -> OracleSql.q149,
-    "q150_event_correlation" -> OracleSql.q150(43200000000L),
+    "q150_event_correlation" -> OracleSql.q150(graft.ops.Analytics.CorrelationWindowUs),
     "q151_metro_brightness" -> OracleSql.q151(2000),
-    "q152_image_tv" -> OracleSql.q152(1200),
+    "q152_image_tv" -> OracleSql.q152(graft.multimodal.Pyramid.GateN),
     "q153_segment_intersections" -> OracleSql.q153,
     "q154_polygon_measures" -> OracleSql.q154,
     "q155_encoding_advisor" -> OracleSql.q155,
     "q156_zonemap_sim" -> OracleSql.q156,
     "q157_merkle_diff" -> OracleSql.q157,
-    "q158_pixel_histogram" -> OracleSql.q158(1200),
+    "q158_pixel_histogram" -> OracleSql.q158(graft.multimodal.Pyramid.GateN),
     "q159_threshold_sweep" -> OracleSql.q159,
     "q160_auc_exact" -> OracleSql.q160,
     "q161_basket_rules" -> OracleSql.q161(3),
@@ -1375,16 +1375,16 @@ object SparkEntry {
     "q167_idw_surface" -> OracleSql.q167,
     "q168_cusum" -> OracleSql.q168,
     "q169_spearman" -> OracleSql.q169,
-    "q170_blob_count" -> OracleSql.q170(1200, 150),
-    "q171_rendezvous" -> OracleSql.q171(10),
+    "q170_blob_count" -> OracleSql.q170(graft.multimodal.Pyramid.GateN, 150),
+    "q171_rendezvous" -> OracleSql.q171(graft.ops.Sharding.Shards),
     "q172_lpm_join" -> OracleSql.q172,
     "q173_sssp" -> OracleSql.q173(6),
     "q174_twap" -> OracleSql.q174,
     "q175_tile_occupancy" -> OracleSql.q175,
     "q176_watermark_audit" -> OracleSql.q176(43200000000L),
-    "q177_topn_others" -> OracleSql.q177(2),
+    "q177_topn_others" -> OracleSql.q177(graft.ops.Lateness.TopN),
     "q178_weighted_median" -> OracleSql.q178,
-    "q179_equalization_lut" -> OracleSql.q179(1200),
+    "q179_equalization_lut" -> OracleSql.q179(graft.multimodal.Pyramid.GateN),
     "q180_z_outliers" -> OracleSql.q180,
     "q181_star_pip" -> OracleSql.q181,
     "q182_ks_drift" -> OracleSql.q182,
@@ -1392,7 +1392,7 @@ object SparkEntry {
     "q184_tail_shortfall" -> OracleSql.q184,
     "q185_winsorized" -> OracleSql.q185,
     "q186_nearest_asof" -> OracleSql.q186,
-    "q187_clustering_coeff" -> OracleSql.q187(250, 1500),
+    "q187_clustering_coeff" -> OracleSql.q187(graft.ops.Graph.GateNodes, graft.ops.Graph.GateEdges),
     "q188_autocorr" -> OracleSql.q188,
     // both outer null sides hashed row-for-row
     "q100_outer_join" ->
@@ -1461,7 +1461,7 @@ object SparkEntry {
            count(DISTINCT event_type)::BIGINT AS n_types,
            sum(floor(value * 100 + 0.5)::BIGINT)::BIGINT AS value_cents
          FROM p""",
-    "q48_ann_lsh_recall" -> OracleSql.q48(graft.ann.Ann.hyperplanes(16, 64)),
+    "q48_ann_lsh_recall" -> OracleSql.q48(Ann.hyperplanes(Ann.LshBits, 64)),
     "q49_multizoom_rollup" -> OracleSql.q49(2000),
     "q56_tile_centers" -> OracleSql.q56(2000),
     // the classifier's output is re-derived ANALYTICALLY from the generator

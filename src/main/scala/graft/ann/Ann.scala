@@ -47,9 +47,22 @@ object Ann {
   def cosine(a: Array[Double], b: Array[Double]): Double =
     dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
 
+  /** Query count and k of every `dir` entry point (their oracles read both). */
+  val Q = 5
+  val K = 10
+  /** The LSH signature width and band count of [[lshTopK]] and [[lshRecall]]. */
+  val LshBits = 16
+  val LshBands = 4
+  /** Lloyd refinement steps of every trained quantizer (IVF centroids, PQ codebooks). */
+  val LloydIters = 2
+  /** IVF lists of the `dir` tiers, all probed: the exhaustive degenerate the gates pin. */
+  private val NList = 16
+
   private def loadVecs(spark: SparkSession, dir: String): DataFrame =
-    table(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    vecsOf(table(spark, dir, "embeddings"))
+
+  private def vecsOf(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
   private def asVecs(vecs: DataFrame): Dataset[(Long, Array[Double])] = {
     val spark = vecs.sparkSession
@@ -57,18 +70,22 @@ object Ann {
     vecs.as[(Long, Array[Double])]
   }
 
-  /** First Q vectors (by vec_id) used as the deterministic query set. */
-  def queriesFrom(spark: SparkSession, dir: String, q: Int): Seq[EmbQuery] =
-    queriesOf(loadVecs(spark, dir), q)
+  /** A `dir` entry point: one `embeddings` open serves the tier and its queries. */
+  private def onDir(spark: SparkSession, dir: String)
+                   (tier: (DataFrame, Seq[EmbQuery]) => DataFrame): DataFrame = {
+    val vecs = loadVecs(spark, dir)
+    tier(vecs, queriesOf(vecs, Q))
+  }
 
+  /** First q vectors (by vec_id), the deterministic query set. */
   private def queriesOf(vecs: DataFrame, q: Int): Seq[EmbQuery] =
     vecs.filter(col("vec_id") < q).collect()
       .map(r => EmbQuery(r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_.qid).toSeq
 
   /** Exact top-k by (cosine desc, vec_id asc); returns (qid, vec_id, rank). */
-  def bruteTopK(spark: SparkSession, dir: String, q: Int = 5, k: Int = 10): DataFrame =
-    bruteTopKFrom(loadVecs(spark, dir), queriesFrom(spark, dir, q), k)
+  def bruteTopK(spark: SparkSession, dir: String): DataFrame =
+    onDir(spark, dir)(bruteTopKFrom(_, _, K))
 
   /** Metadata-FILTERED vector search — top-k restricted to candidates
     * matching a structured predicate (the `label` column), the filtered-ANN
@@ -80,10 +97,8 @@ object Ann {
     * pruning, not just row skipping. Same exact kernel as [[bruteTopK]]. */
   def filteredTopK(spark: SparkSession, dir: String, q: Int = 5, k: Int = 10,
                    label: Int = 3): DataFrame = {
-    val cands = table(spark, dir, "embeddings")
-      .filter(col("label") === label)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    bruteTopKFrom(cands, queriesFrom(spark, dir, q), k)
+    val emb = table(spark, dir, "embeddings")
+    bruteTopKFrom(vecsOf(emb.filter(col("label") === label)), queriesOf(vecsOf(emb), q), k)
   }
 
   /** [[bruteTopK]] over any (vec_id, v) relation. */
@@ -128,8 +143,8 @@ object Ann {
 
   /** Deterministic pseudo-random hyperplanes (seeded xorshift — from scratch,
     * no wall-clock / Random). */
-  def hyperplanes(nBits: Int, dim: Int, seed: Long = 42L): Array[Array[Double]] = {
-    var s = seed
+  def hyperplanes(nBits: Int, dim: Int): Array[Array[Double]] = {
+    var s = 42L
     def next(): Long = { s ^= s << 13; s ^= s >>> 7; s ^= s << 17; s }
     Array.fill(nBits, dim) {
       // uniform in [-1,1) from the top 53 bits
@@ -176,9 +191,8 @@ object Ann {
     * deduplicate BEFORE vectors are fetched; vectors are joined back exactly
     * once for the rerank. Query vectors resolve via a broadcast hash Map,
     * not a linear scan. */
-  def lshTopK(spark: SparkSession, dir: String, q: Int = 5, k: Int = 10,
-              nBits: Int = 16, bands: Int = 4): DataFrame =
-    lshTopKFrom(loadVecs(spark, dir), queriesFrom(spark, dir, q), k, nBits, bands)
+  def lshTopK(spark: SparkSession, dir: String): DataFrame =
+    onDir(spark, dir)(lshTopKFrom(_, _, K))
 
   /** Embedding-cosine near-dup: ALL pairs with cosine ≥ threshold — the exact
     * dedup-grade variant (reports in e4 fixed-point so the oracle hash is
@@ -298,13 +312,11 @@ object Ann {
     * pairs), vectors join back once, and the exact-cosine verify runs in a
     * mapPartitions kernel over primitive arrays — cosine once per candidate,
     * never in a join condition. */
-  def cosineNearDupLshTier(vecs: DataFrame, minCos: Double,
-                           nBits: Int = 64, bands: Int = 8,
-                           maxBucket: Int = 64): DataFrame = {
+  def cosineNearDupLshTier(vecs: DataFrame, minCos: Double): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val banded = bandRows(vecs, nBits, bands).withColumnRenamed("vec_id", "doc_id")
-    val cand = graft.text.Dedup.boundedPairs(banded, maxBucket)
+    val banded = bandRows(vecs, 64, 8).withColumnRenamed("vec_id", "doc_id")
+    val cand = graft.text.Dedup.boundedPairs(banded, 64)
     // vectors join back exactly once per side; the verify kernel runs over
     // primitive arrays inside the partition
     val withVecs = cand
@@ -355,8 +367,8 @@ object Ann {
     * the whole tier; AnnSpec separately pins recall@k against the
     * full-precision brute answer (quantization loses information — the
     * RECALL is the honest quality metric, the gate pins the mechanics). */
-  def sqTopK(spark: SparkSession, dir: String, q: Int = 5, k: Int = 10): DataFrame =
-    topKScan(asVecs(loadVecs(spark, dir)), queriesFrom(spark, dir, q), k)(sqDecode)
+  def sqTopK(spark: SparkSession, dir: String): DataFrame =
+    onDir(spark, dir)((vecs, queries) => topKScan(asVecs(vecs), queries, K)(sqDecode))
 
   /** The SQ8 reconstruction `lo + code·step` of a stored vector, the vector
     * the SQ8 tiers score (replayed by the q66 oracle). */
@@ -379,22 +391,20 @@ object Ann {
     * is how the q69 gate pins it (q66's replica oracle, reused verbatim);
     * AnnSparkSpec separately pins partial-probe recall on planted clusters
     * and full-probe equality to sqTopK. */
-  def ivfSqTopK(spark: SparkSession, dir: String, q: Int = 5, k: Int = 10,
-                nlist: Int = 16, nprobe: Int = 16, iters: Int = 2): DataFrame =
-    ivfSqTopKFrom(loadVecs(spark, dir), queriesFrom(spark, dir, q), k, nlist, nprobe, iters)
+  def ivfSqTopK(spark: SparkSession, dir: String): DataFrame =
+    onDir(spark, dir)(ivfSqTopKFrom(_, _, K, NList, NList))
 
   def ivfSqTopKFrom(vecs: DataFrame, queries: Seq[EmbQuery], k: Int,
-                    nlist: Int, nprobe: Int, iters: Int = 2): DataFrame =
-    topKScan(asVecs(vecs), queries, k,
-      Some(probedBy(vecs, queries, nlist, nprobe, iters)))(sqDecode)
+                    nlist: Int, nprobe: Int): DataFrame =
+    topKScan(asVecs(vecs), queries, k, Some(probedBy(vecs, queries, nlist, nprobe)))(sqDecode)
 
   /** The IVF probe as a row router. Trains [[ivfCentroids]], gives each query
     * the `nprobe` lists nearest it by (cosine desc, list), and returns, for a
     * stored vector, the indices of the queries probing its list (its
     * [[nearest]] centroid). Routing stays full precision in every IVF tier. */
-  private def probedBy(vecs: DataFrame, queries: Seq[EmbQuery], nlist: Int, nprobe: Int,
-                       iters: Int): Array[Double] => Array[Int] = {
-    val cents = ivfCentroids(vecs, nlist, iters)
+  private def probedBy(vecs: DataFrame, queries: Seq[EmbQuery], nlist: Int,
+                       nprobe: Int): Array[Double] => Array[Int] = {
+    val cents = ivfCentroids(vecs, nlist)
     val probes = queries.map(qq =>
       cents.indices.sortBy(ci => (-cosine(cents(ci), qq.vec), ci)).take(nprobe).toSet)
     val byList = cents.indices.map(ci => queries.indices.filter(qi => probes(qi)(ci)).toArray)
@@ -403,7 +413,7 @@ object Ann {
   }
 
   /** Deterministic planted near-dup corpus for gating the LSH tier: ids
-    * group in runs of `groupSize`; members of a group share a splitmix-drawn
+    * group in runs of [[PlantedGroup]]; members of a group share a splitmix-drawn
     * base vector plus a per-member eps-scaled perturbation, so within-group
     * cosines sit at ~0.9999 (≥ any dedup threshold) while cross-group
     * cosines are those of independent 64-dim uniform vectors (|cos| rarely
@@ -413,20 +423,23 @@ object Ann {
     * top-53-bit uniform, base + eps·noise) is replicated operation-for-
     * operation in the DuckDB oracle (OracleSql.q65), so the gate hashes the
     * tier's full output relation. */
-  def plantedNearDupVecs(spark: SparkSession, n: Int, dim: Int = 64,
-                         groupSize: Int = 3, eps: Double = 0.01): DataFrame = {
+  def plantedNearDupVecs(spark: SparkSession, n: Int): DataFrame = {
     import spark.implicits._
-    val d = dim; val gs = groupSize; val e = eps
     spark.range(0L, n.toLong, 1L, 8).map { idx =>
-      val g = idx / gs
-      val v = Array.tabulate(d) { i =>
-        val b = unitUniform(graft.synth.ImageSynth.mix(g * d + i + 10000000L))
-        val nz = unitUniform(graft.synth.ImageSynth.mix(idx * d + i + 20000000L))
-        b + e * nz
+      val g = idx / PlantedGroup
+      val v = Array.tabulate(PlantedDim) { i =>
+        val b = unitUniform(graft.synth.ImageSynth.mix(g * PlantedDim + i + 10000000L))
+        val nz = unitUniform(graft.synth.ImageSynth.mix(idx * PlantedDim + i + 20000000L))
+        b + PlantedEps * nz
       }
       (idx, v)
     }.toDF("vec_id", "v")
   }
+
+  /** The planted corpus' vector length, group run length and perturbation scale. */
+  val PlantedDim = 64
+  val PlantedGroup = 3
+  val PlantedEps = 0.01
 
   /** Uniform in [-1, 1) from the top 53 bits of a 64-bit hash (the
     * hyperplanes construction, shared with the q65 corpus). */
@@ -440,14 +453,12 @@ object Ann {
     * probe the `nprobe` nearest lists and exact-rerank only those lists'
     * members. `nprobe == nlist` degenerates to exhaustive search and must
     * equal [[bruteTopK]] exactly (asserted in AnnSparkSpec). */
-  def ivfTopK(spark: SparkSession, dir: String, q: Int = 5, k: Int = 10,
-              nlist: Int = 16, nprobe: Int = 4, iters: Int = 2): DataFrame =
-    ivfTopKFrom(loadVecs(spark, dir), queriesFrom(spark, dir, q), k, nlist, nprobe, iters)
+  def ivfTopK(spark: SparkSession, dir: String): DataFrame =
+    onDir(spark, dir)(ivfTopKFrom(_, _, K, NList, NList))
 
   def ivfTopKFrom(vecs: DataFrame, queries: Seq[EmbQuery], k: Int,
-                  nlist: Int, nprobe: Int, iters: Int = 2): DataFrame =
-    topKScan(asVecs(vecs), queries, k,
-      Some(probedBy(vecs, queries, nlist, nprobe, iters)))(identity)
+                  nlist: Int, nprobe: Int): DataFrame =
+    topKScan(asVecs(vecs), queries, k, Some(probedBy(vecs, queries, nlist, nprobe)))(identity)
 
   /** Index of the centroid nearest `v` by cosine; ties go to the lower index. */
   private def nearest(cs: Array[Array[Double]], v: Array[Double]): Int = {
@@ -462,7 +473,7 @@ object Ann {
   }
 
   /** Deterministic IVF centroids: seeded from the `nlist` lowest vec_ids,
-    * refined with `iters` Lloyd steps (assignment in mapPartitions over the
+    * refined with [[LloydIters]] Lloyd steps (assignment in mapPartitions over the
     * broadcast centroids; vectors are read, never shuffled: only the
     * nlist·parts (list, partitionId, sumVec, n) partials move — straight to
     * the driver, no shuffle stage at all). The cross-partition reduction is
@@ -471,13 +482,13 @@ object Ann {
     * assignment and any nprobe<nlist answer — is identical run to run
     * (a collect_list-based reduction was not: its element order is
     * nondeterministic and double addition does not commute in FP). */
-  def ivfCentroids(vecs: DataFrame, nlist: Int, iters: Int): Array[Array[Double]] = {
+  def ivfCentroids(vecs: DataFrame, nlist: Int): Array[Array[Double]] = {
     val spark = vecs.sparkSession
     import spark.implicits._
     var cents: Array[Array[Double]] = vecs.orderBy(col("vec_id")).limit(nlist)
       .as[(Long, Array[Double])].collect().sortBy(_._1).map(_._2)
     val dim = cents.head.length
-    for (_ <- 0 until iters) {
+    for (_ <- 0 until LloydIters) {
       val bc = spark.sparkContext.broadcast(cents)
       val partials = vecs.as[(Long, Array[Double])].mapPartitions { it =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
@@ -526,15 +537,18 @@ object Ann {
     * from the broadcast codebooks and applies the exact q66 cosine kernel
     * (production would precompute per-query ADC tables — an equivalent-up-
     * to-FP-regrouping optimization, documented not taken, since the oracle
-    * pins the reconstruction form). Training is `iters` scans emitting
+    * pins the reconstruction form). Training is [[LloydIters]] scans emitting
     * m·ksub·(dsub+1) integer partials per partition straight to the driver;
     * search is ONE scan with per-partition bounded heaps. Recall vs full
     * precision is pinned separately in AnnSparkSpec on planted clusters —
     * uniform-random vectors are PQ's worst case (measured ~0.38@10 there),
     * quality is a metric, never hidden in the oracle. */
-  def pqTopK(spark: SparkSession, dir: String, q: Int = 5, k: Int = 10,
-             m: Int = 8, ksub: Int = 16, iters: Int = 2): DataFrame =
-    pqTopKFrom(loadVecs(spark, dir), queriesFrom(spark, dir, q), k, m, ksub, iters)
+  def pqTopK(spark: SparkSession, dir: String): DataFrame =
+    onDir(spark, dir)(pqTopKFrom(_, _, K, PqM, PqKsub))
+
+  /** [[pqTopK]]'s sub-quantizer count and codebook size. */
+  val PqM = 8
+  val PqKsub = 16
 
   /** One sub-quantizer assignment: exact integer argmin of the L2 distance
     * on the lattice, ties to the lowest centroid index via the
@@ -559,7 +573,7 @@ object Ann {
   }
 
   def pqTopKFrom(vecs: DataFrame, queries: Seq[EmbQuery], k: Int,
-                 m: Int, ksub: Int, iters: Int = 2): DataFrame = {
+                 m: Int, ksub: Int): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
     val dim = queries.head.vec.length
@@ -575,7 +589,7 @@ object Ann {
       Array.tabulate(m)(s => Array.tabulate(ksub)(j =>
         java.util.Arrays.copyOfRange(seeds(j), s * dsub, (s + 1) * dsub)))
     }
-    for (_ <- 0 until iters) {
+    for (_ <- 0 until LloydIters) {
       val bc = spark.sparkContext.broadcast(cents)
       // integer partials: merge-order-free by construction, any reduce order
       val partials = lats.mapPartitions { it =>
@@ -648,18 +662,16 @@ object Ann {
     * all-pairs dedup, which the oracle re-derives via all-pairs cosine +
     * recursive-CTE closure (no centroid replay needed: at nlist = 1
     * clustering cannot change the answer, the q55 plan-equivalence trick). */
-  def semDedup(spark: SparkSession, dir: String, nlist: Int = 1,
-               theta: Double = 0.45, iters: Int = 2): DataFrame =
-    semDedupFrom(loadVecs(spark, dir), nlist, theta, iters)
+  def semDedup(spark: SparkSession, dir: String): DataFrame =
+    semDedupFrom(loadVecs(spark, dir), 1, 0.45)
 
-  def semDedupFrom(vecs: DataFrame, nlist: Int, theta: Double,
-                   iters: Int = 2): DataFrame = graft.CacheOps.scope { s =>
+  def semDedupFrom(vecs: DataFrame, nlist: Int, theta: Double): DataFrame = graft.CacheOps.scope { s =>
     val spark = vecs.sparkSession
     import spark.implicits._
     val assigned =
       if (nlist <= 1) vecs.withColumn("list", lit(0))
       else {
-        val bcC = spark.sparkContext.broadcast(ivfCentroids(vecs, nlist, iters))
+        val bcC = spark.sparkContext.broadcast(ivfCentroids(vecs, nlist))
         val assignUdf = udf { (v: Seq[Double]) => nearest(bcC.value, v.toArray) }
         vecs.withColumn("list", assignUdf(col("v")))
       }
@@ -712,14 +724,11 @@ object Ann {
     * itself is oracle-pinned, so any drift in the LSH pipeline (signatures,
     * banding, rerank) breaks the hash even when q31's replica oracle would
     * drift in lock-step. */
-  def lshRecall(spark: SparkSession, dir: String, q: Int = 5, k: Int = 10,
-                nBits: Int = 16, bands: Int = 4): DataFrame = {
+  def lshRecall(spark: SparkSession, dir: String): DataFrame = onDir(spark, dir) { (vecs, queries) =>
     // one table open and one query collect, shared by both tiers
-    val vecs = loadVecs(spark, dir)
-    val queries = queriesOf(vecs, q)
-    val lsh = lshTopKFrom(vecs, queries, k, nBits, bands)
+    val lsh = lshTopKFrom(vecs, queries, K)
       .select(col("qid"), col("vec_id")).withColumn("hit", lit(1L))
-    val brute = bruteTopKFrom(vecs, queries, k).select(col("qid"), col("vec_id"))
+    val brute = bruteTopKFrom(vecs, queries, K).select(col("qid"), col("vec_id"))
     brute.join(lsh, Seq("qid", "vec_id"), "left")
       .groupBy(col("qid"))
       .agg(count(lit(1)).as("k_total"),
@@ -728,11 +737,10 @@ object Ann {
         floor(col("n_hit") * lit(10000.0) / col("k_total")).cast("long"))
   }
 
-  def lshTopKFrom(vecs: DataFrame, queries: Seq[EmbQuery], k: Int,
-                  nBits: Int = 16, bands: Int = 4): DataFrame = {
+  def lshTopKFrom(vecs: DataFrame, queries: Seq[EmbQuery], k: Int): DataFrame = {
     val spark = vecs.sparkSession
     val bcQ = spark.sparkContext.broadcast(queries.map(qq => qq.qid -> qq.vec).toMap)
-    val cand = lshCandidates(vecs, queries, nBits, bands)
+    val cand = lshCandidates(vecs, queries, LshBits, LshBands)
     // single vector fetch for the rerank — the only time embeddings shuffle,
     // and only for candidate ids
     val negCosUdf = udf { (qid: Long, v: Seq[Double]) => -cosine(bcQ.value(qid), v.toArray) }

@@ -77,12 +77,12 @@ object GeoJson {
 
   /** Point-feature geojsonseq lines from a DataFrame with lon/lat columns;
     * remaining columns become properties. Write with `.write.text(path)`. */
-  def pointFeatures(df: DataFrame, lonCol: String = "lon", latCol: String = "lat"): Dataset[String] = {
+  def pointFeatures(df: DataFrame): Dataset[String] = {
     val spark = df.sparkSession
     import spark.implicits._
     val cols = df.schema.fieldNames.toSeq
-    val li = cols.indexOf(lonCol); val la = cols.indexOf(latCol)
-    require(li >= 0 && la >= 0, s"missing $lonCol/$latCol")
+    val li = cols.indexOf("lon"); val la = cols.indexOf("lat")
+    require(li >= 0 && la >= 0, "missing lon/lat")
     df.map { row =>
       val props = cols.indices.collect {
         case i if i != li && i != la => cols(i) -> row.get(i)

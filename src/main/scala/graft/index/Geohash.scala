@@ -64,9 +64,12 @@ object Geohash {
   /** Gate query (q94): precision-6 geohash of every event point, rolled up
     * by 4-char prefix (≈ 20 km cells) — count + distinct users per cell;
     * the prefix rollup IS the containment rollup. */
-  def prefixRollup(spark: SparkSession, dir: String, precision: Int = 6): DataFrame =
+  def prefixRollup(spark: SparkSession, dir: String): DataFrame =
     SpatialQueries.eventPoints(spark, dir)
-      .select(col("user_id"), geohashCol(col("lon"), col("lat"), precision).as("gh"))
+      .select(col("user_id"), geohashCol(col("lon"), col("lat"), RollupPrecision).as("gh"))
       .groupBy(substring(col("gh"), 1, 4).as("gh4"))
       .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("n_users"))
+
+  /** The geohash length [[prefixRollup]] encodes; its q94 oracle reads it. */
+  val RollupPrecision = 6
 }

@@ -49,14 +49,12 @@ object PhashDedup {
     }.toDF("image_id", "phash", "caption")
   }
 
-  /** Image pairs within hamming distance `maxHam` of each other's phash,
-    * via the shared pigeonhole candidate join (guarantee bound maxHam ≤ 3
-    * for 4 segments — enforced there). Returns (a, b, ham). */
-  def phashNearDupPairs(corpus: DataFrame, maxHam: Int = 3,
-                        maxBucket: Int = 1024): DataFrame =
+  /** Image pairs within hamming distance [[Dedup.MaxHam]] of each other's
+    * phash, via the shared pigeonhole candidate join. Returns (a, b, ham). */
+  def phashNearDupPairs(corpus: DataFrame): DataFrame =
     Dedup.simhashCandidatePairs(
       corpus.select(col("image_id").as("doc_id"), col("phash").as("sh")),
-      maxHam, maxBucket)
+      Dedup.MaxHam, Dedup.SegmentCap)
 
   /** Per-image dedup DECISION with cross-modal consistency: pairs →
     * connected components ([[graft.text.Dedup.componentLabels]]) → one
@@ -73,9 +71,8 @@ object PhashDedup {
     * checkpoints are freed on return; singletons arrive via an ids-only
     * left_anti with keep=1, conflict=0. Captions never enter the component
     * loop's shuffles. */
-  def phashDupDecisions(corpus: DataFrame, maxHam: Int = 3,
-                        maxBucket: Int = 1024): DataFrame = graft.CacheOps.scope { s =>
-    val pairs = phashNearDupPairs(corpus, maxHam, maxBucket)
+  def phashDupDecisions(corpus: DataFrame): DataFrame = graft.CacheOps.scope { s =>
+    val pairs = phashNearDupPairs(corpus)
     val labels = Dedup.componentLabels(pairs)
     val members = corpus.select(col("image_id"), col("caption"))
       .join(labels.withColumnRenamed("doc_id", "image_id"), Seq("image_id"))

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{ImagePipeline, Validate}
-import graft.synth.ImageSynth
 
 /** Full-frame raster kernels over the stored image table — the decode-heavy
   * pair to q98's 4-pixel sampling:
@@ -28,6 +27,10 @@ import graft.synth.ImageSynth
   */
 object Pyramid {
 
+  /** Image count (the oracles read it) and range partitions of the raster gates. */
+  val GateN = 1200L
+  private val GateParts = 16
+
   final case class IntRow(idx: Long, w: Int, h: Int, sum_brightness: Long)
   final case class PyrRow(idx: Long, lvl1_sum: Long, lvl2_sum: Long)
 
@@ -40,7 +43,7 @@ object Pyramid {
   }
 
   /** Gate query (q116): per-PNG-image full-frame brightness integral. */
-  def imageIntegral(spark: SparkSession, n: Long = 1200, parts: Int = 16): DataFrame =
+  def imageIntegral(spark: SparkSession, n: Long = GateN, parts: Int = GateParts): DataFrame =
     ImagePipeline.synthTable(spark, n, parts)
       .filter(_.fmt == "png")
       .mapPartitions { it =>
@@ -55,7 +58,7 @@ object Pyramid {
 
   /** Gate query (q117): per-PNG-image level-1 and level-2 pyramid sums
     * (2×2 floor-mean downsample applied once, then again to its output). */
-  def pyramidSums(spark: SparkSession, n: Long = 1200, parts: Int = 16): DataFrame =
+  def pyramidSums(spark: SparkSession, n: Long = GateN, parts: Int = GateParts): DataFrame =
     ImagePipeline.synthTable(spark, n, parts)
       .filter(_.fmt == "png")
       .mapPartitions { it =>
@@ -84,7 +87,7 @@ object Pyramid {
     * 8·|Δbase−21| and 8·|Δbase−28| per adjacent block pair — verified
     * against a direct render in Wave23Spec). Same no-shuffle scale shape
     * as q116: one number per image leaves the scan partition. */
-  def totalVariation(spark: SparkSession, n: Long = 1200, parts: Int = 16): DataFrame =
+  def totalVariation(spark: SparkSession, n: Long = GateN, parts: Int = GateParts): DataFrame =
     ImagePipeline.synthTable(spark, n, parts)
       .filter(_.fmt == "png")
       .mapPartitions { it =>
@@ -123,7 +126,7 @@ object Pyramid {
     * vertical (base_top+49 > thr ∧ base_bottom+21 > thr) — which DuckDB
     * closes with a recursive CTE (the q63/q131 different-family
     * discipline). */
-  def blobCount(spark: SparkSession, n: Long = 1200, parts: Int = 16,
+  def blobCount(spark: SparkSession, n: Long = GateN, parts: Int = GateParts,
                 thr: Int = 150): DataFrame =
     ImagePipeline.synthTable(spark, n, parts)
       .filter(_.fmt == "png")
@@ -174,7 +177,7 @@ object Pyramid {
     * contrast-normalization step a vision pipeline applies before feature
     * extraction. Composes q158's decode histogram with a per-image cumsum;
     * exact integers end to end. */
-  def equalizationLut(spark: SparkSession, n: Long = 1200, parts: Int = 16): DataFrame = {
+  def equalizationLut(spark: SparkSession, n: Long = GateN, parts: Int = GateParts): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val hist = pixelHistogram(spark, n, parts)
     val w = Window.partitionBy("idx").orderBy("value")
@@ -195,7 +198,7 @@ object Pyramid {
     * + 4·(y%8) has a fixed 64-entry multiplicity table, so count(idx, v) =
     * Σ_blocks mult(v − base). Same scale shape as q116: bins leave the
     * scan partition, bytes don't. */
-  def pixelHistogram(spark: SparkSession, n: Long = 1200, parts: Int = 16): DataFrame =
+  def pixelHistogram(spark: SparkSession, n: Long = GateN, parts: Int = GateParts): DataFrame =
     ImagePipeline.synthTable(spark, n, parts)
       .filter(_.fmt == "png")
       .mapPartitions { it =>

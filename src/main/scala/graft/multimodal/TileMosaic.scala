@@ -34,8 +34,7 @@ object TileMosaic {
 
   /** Gate query (q98): per-z12-tile count + summed 4-pixel brightness of
     * the PNG rows of the synthesized image table. */
-  def mosaic(spark: SparkSession, n: Long = 2000, parts: Int = 16,
-             tileZ: Int = 12): DataFrame = {
+  def mosaic(spark: SparkSession, n: Long = 2000, parts: Int = 16): DataFrame = {
     val px = ImagePipeline.synthTable(spark, n, parts)
       .filter(_.fmt == "png")
       .mapPartitions { it =>
@@ -52,7 +51,7 @@ object TileMosaic {
         }
       }(Encoders.product[PxRow])
       .toDF()
-    px.select(Quadkey.cellIdCol(col("lon"), col("lat"), tileZ).as("tile"),
+    px.select(Quadkey.cellIdCol(col("lon"), col("lat"), 12).as("tile"),
         col("brightness"))
       .groupBy(col("tile"))
       .agg(count(lit(1)).as("n_png"), sum(col("brightness")).as("sum_brightness"))

@@ -14,6 +14,10 @@ import graft.Session.table
   */
 object Analytics {
 
+  /** q150's purchase→error window (12 h), q145's per-stratum sample size. */
+  val CorrelationWindowUs = 43200000000L
+  val SampleK = 3
+
   /** Gate query (q106): classic cohort-retention matrix. Activity is a
     * deterministic sparse sample (event_id % 50 — the fixture's 150 users
     * are otherwise all first-active on day 1 and every cohort degenerates);
@@ -127,8 +131,7 @@ object Analytics {
     * (lag, running session id, first-row election, purchase join) key on
     * user_id — one exchange end to end; the attribution join is per
     * (user, session), never global. */
-  def firstTouchAttribution(spark: SparkSession, dir: String,
-                            gapUs: Long = 1800000000L): DataFrame = {
+  def firstTouchAttribution(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy("us")
     // the session's first event type rides along as one more window over the
@@ -141,7 +144,7 @@ object Analytics {
         unix_micros(col("ts").cast("timestamp")).as("us"))
       .withColumn("pus", lag(col("us"), 1).over(w))
       .withColumn("sid", sum(
-        when(col("pus").isNull || col("us") - col("pus") > gapUs, 1L)
+        when(col("pus").isNull || col("us") - col("pus") > 1800000000L, 1L)
           .otherwise(0L)).over(w))
       .withColumn("first_type", first(col("event_type")).over(
         Window.partitionBy("user_id", "sid").orderBy("us")))
@@ -172,8 +175,7 @@ object Analytics {
     * window as a residual predicate: per-user event counts bound the probe
     * fan-out, so the join never goes quadratic in the table — the q84
     * binned range join is the fallback when no shared key exists. */
-  def eventCorrelation(spark: SparkSession, dir: String,
-                       windowUs: Long = 43200000000L): DataFrame = {
+  def eventCorrelation(spark: SparkSession, dir: String): DataFrame = {
     val ev = table(spark, dir, "events")
       .select(col("user_id"), col("event_type"), col("event_id"),
         unix_micros(col("ts").cast("timestamp")).as("us"))
@@ -182,7 +184,7 @@ object Analytics {
     val e = ev.where(col("event_type") === "error")
       .select(col("user_id"), col("us").as("eus"))
     p.join(e, Seq("user_id"))
-      .where(col("eus") > col("pus") && col("eus") <= col("pus") + windowUs)
+      .where(col("eus") > col("pus") && col("eus") <= col("pus") + CorrelationWindowUs)
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_pairs"),
         countDistinct(col("pid")).as("n_purchases_hit"))
@@ -193,7 +195,7 @@ object Analytics {
     * per group: the hash IS the sampling coin, so reruns/backfills pick the
     * SAME rows — the q53 reproducibility discipline in top-k form). One
     * group-partitioned rank window. */
-  def stratifiedSample(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
+  def stratifiedSample(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("event_type")
       .orderBy(col("h"), col("event_id"))
@@ -205,7 +207,7 @@ object Analytics {
         graft.functions.SeedExprs.mix64(col("event_id"))
           .bitwiseAND(lit(Long.MaxValue)).as("h"))
       .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
+      .where(col("rn") <= SampleK)
       .select(col("event_type"), col("event_id"), col("rn").cast("long").as("rn"))
   }
 
@@ -239,8 +241,7 @@ object Analytics {
     * presence × window, never events × window, and there is no per-day
     * rescan. Activity is a sparse deterministic sample (the full fixture
     * saturates at every-user-every-day). */
-  def rollingDistinct(spark: SparkSession, dir: String,
-                      windowDays: Int = 7): DataFrame = {
+  def rollingDistinct(spark: SparkSession, dir: String): DataFrame = {
     val pres = table(spark, dir, "events")
       .where(col("event_id") % 29 === 0)
       .select(col("user_id"),
@@ -249,7 +250,7 @@ object Analytics {
       .distinct()
     val days = pres.select("day").distinct()
     pres.withColumn("target",
-        explode(sequence(col("day"), col("day") + (windowDays - 1))))
+        explode(sequence(col("day"), col("day") + 6)))
       .join(days.withColumnRenamed("day", "target"), Seq("target"))
       .groupBy(col("target").as("day"))
       .agg(countDistinct(col("user_id")).as("n_users_7d"))

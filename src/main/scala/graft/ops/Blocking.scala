@@ -21,10 +21,9 @@ object Blocking {
 
   /** Gate query (q165): sorted-neighborhood pairs over documents keyed by
     * (n_chars, doc_id), window w — emits (da, db, rank_dist, len_gap). */
-  def sortedNeighborhood(spark: SparkSession, dir: String, w: Int = 3,
-                         parts: Int = 8): DataFrame = {
+  def sortedNeighborhood(spark: SparkSession, dir: String, w: Int = 3): DataFrame = {
     val docs = table(spark, dir, "documents").select(col("doc_id"), col("n_chars"))
-    val ranked = OrderStats.distributedRowNumber(docs, parts,
+    val ranked = OrderStats.distributedRowNumber(docs, 8,
       col("n_chars"), col("doc_id"))
     val left = ranked.withColumn("k", explode(array((1 to w).map(lit): _*)))
       .select(col("doc_id").as("da"), col("n_chars").as("la"),

@@ -91,15 +91,14 @@ object BloomJoin {
     * bits (16 KB) over ~4.6k urgent orderkeys at sf0.01 (~9 bits/key,
     * k = 3 → ε ≈ 1%; still ≈ 2.8 bits/key, ε ≈ 33% at sf0.1 — pruning
     * degrades, correctness cannot). */
-  def urgentRevenue(spark: SparkSession, dir: String,
-                    m: Int = 1 << 17, k: Int = 3): DataFrame = {
+  def urgentRevenue(spark: SparkSession, dir: String): DataFrame = {
     val urgent = table(spark, dir, "orders")
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"))
-    val bloom = build(urgent, "o_orderkey", m, k)
+    val bloom = build(urgent, "o_orderkey", 1 << 17, 3)
     val pruned = table(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_returnflag"), col("l_extendedprice"))
-      .filter(mightContain(col("l_orderkey"), bloom, k))
+      .filter(mightContain(col("l_orderkey"), bloom, 3))
     pruned.hint("merge")
       .join(urgent, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("l_returnflag"))

@@ -68,9 +68,8 @@ object BucketedJoin {
   }
 
   /** Gate entry: layout + exchange-free join + rollup. */
-  def bucketedOrderRevenue(spark: SparkSession, dir: String,
-                           buckets: Int = 8): DataFrame = {
-    layout(spark, dir, buckets)
+  def bucketedOrderRevenue(spark: SparkSession, dir: String): DataFrame = {
+    layout(spark, dir)
     orderRevenueJoin(spark.table("graft_orders_b"), spark.table("graft_lineitem_b"))
   }
 }

@@ -55,9 +55,9 @@ object FuzzyJoin {
   /** Gate query (q104): all customer-name pairs within edit distance 1
     * (custkey ≤ maxKey keeps the honest all-pairs oracle tractable at
     * sf0.1). Output (a_key, b_key, dist), a < b. */
-  def nameNeighbors(spark: SparkSession, dir: String, maxKey: Long = 3000): DataFrame = {
+  def nameNeighbors(spark: SparkSession, dir: String): DataFrame = {
     val c = table(spark, dir, "customer")
-      .filter(col("c_custkey") <= maxKey)
+      .filter(col("c_custkey") <= 3000L)
       .select(col("c_custkey"), col("c_name"))
     val sigs = udf((s: String) => del1Keys(s))
     val a = c.select(col("c_custkey").as("a_key"), col("c_name").as("a_name"),

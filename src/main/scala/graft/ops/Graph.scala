@@ -17,6 +17,10 @@ import graft.functions.SeedExprs
   */
 object Graph {
 
+  /** Node count and edge draws of the gate graph (the oracles read both). */
+  val GateNodes = 250
+  val GateEdges = 1500
+
   /** Nonnegative mix draw in [0, n). */
   private def draw(i: Column, n: Int): Column =
     (SeedExprs.mix64(i).bitwiseAND(lit(0x7FFFFFFFL)) % n).cast("long")
@@ -48,7 +52,7 @@ object Graph {
     * quadratic in the max hub degree. Every step is an equi-join keyed on a
     * vertex id — three shuffles total, no driver state. Integer counts,
     * merge-order-free. */
-  def triangleCounts(spark: SparkSession, n: Int = 250, m: Int = 1500): DataFrame = {
+  def triangleCounts(spark: SparkSession, n: Int = GateNodes, m: Int = GateEdges): DataFrame = {
     val uedges = synthDraws(spark, n, m)
       .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
       .distinct()
@@ -85,15 +89,15 @@ object Graph {
     * degree relation via a LEFT join, so zero-triangle nodes keep their
     * row (coeff 0) — only d ≥ 2 nodes can close a wedge and d < 2 nodes
     * are excluded (coefficient undefined). */
-  def clusteringCoeff(spark: SparkSession, n: Int = 250, m: Int = 1500): DataFrame = {
-    val uedges = synthDraws(spark, n, m)
+  def clusteringCoeff(spark: SparkSession): DataFrame = {
+    val uedges = synthDraws(spark, GateNodes, GateEdges)
       .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
       .distinct()
     val deg = uedges.select(col("a").as("node"))
       .unionByName(uedges.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("d"))
     deg.where(col("d") >= 2)
-      .join(triangleCounts(spark, n, m), Seq("node"), "left")
+      .join(triangleCounts(spark), Seq("node"), "left")
       .na.fill(0L, Seq("tri_count"))
       .select(col("node"), col("d"), col("tri_count"),
         expr("(2 * tri_count * 1000000) div (d * (d - 1))").as("coeff_e6"))
@@ -110,7 +114,7 @@ object Graph {
     * u (outdeg is fused into the edge set once, up front), the contribution
     * sum re-keys on v. Rounds run on [[graft.CacheOps.Scope.fixpoint]], one
     * eager rank checkpoint per round. */
-  def pageRank(spark: SparkSession, n: Int = 250, m: Int = 1500,
+  def pageRank(spark: SparkSession, n: Int = GateNodes, m: Int = GateEdges,
                iters: Int = 10): DataFrame = CacheOps.scope { s =>
     require(iters >= 1, s"pageRank needs iters >= 1, got iters=$iters")
     val dedges = synthDraws(spark, n, m).distinct()
@@ -144,8 +148,7 @@ object Graph {
     * still-jumping count is the round's one action and convergence signal.
     * Oracle: recursive CTE walk (sequential chase — different algorithm
     * family). */
-  def treeDepths(spark: SparkSession, n: Int = 2000,
-                 maxRounds: Int = 64): DataFrame = CacheOps.scope { s =>
+  def treeDepths(spark: SparkSession, n: Int = 2000): DataFrame = CacheOps.scope { s =>
     val t = spark.range(0L, n.toLong, 1L, slicesFor(spark, n.toLong))
       .select(col("id").as("node"),
       when(col("id") === 0, 0L)
@@ -153,7 +156,7 @@ object Graph {
           .bitwiseAND(lit(Long.MaxValue)) % col("id")).as("parent"))
     val init = s.checkpoint(t.select(col("node"), col("parent").as("anc"),
       when(col("node") === 0, 0L).otherwise(1L).as("d")))
-    s.fixpoint("treeDepths", maxRounds, init) { (state, _) =>
+    s.fixpoint("treeDepths", 64, init) { (state, _) =>
       val lookup = state.select(col("node").as("lnode"), col("anc").as("lanc"),
         col("d").as("ld"))
       val next = s.checkpoint(state.join(lookup, col("anc") === col("lnode"))
@@ -173,7 +176,7 @@ object Graph {
     * converges regardless of order (the k-core is order-independent), and a
     * non-converged exit refuses rather than return a superset. Output: each
     * surviving node with its core-subgraph degree. */
-  def kCore(spark: SparkSession, n: Int = 250, m: Int = 1500, k: Int = 8,
+  def kCore(spark: SparkSession, n: Int = GateNodes, m: Int = GateEdges, k: Int = 8,
             maxRounds: Int = 64): DataFrame = CacheOps.scope { s =>
     val draws = s.checkpoint(synthDraws(spark, n, m)) // the driver sizes the loop from these bytes
     var cnt = -1L // unknown until the first round counts

@@ -26,37 +26,40 @@ import graft.Session.table
   */
 object HistQuantile {
 
+  /** Bin width (cents) and the quantiles (basis points) of q95. */
+  private val WidthCents = 50000L
+  private val QBps = Seq(5000, 9000, 9900)
+
   /** Gate query (q95): p50/p90/p99 of lineitem extendedprice (cents) from a
     * W = 50 000-cent histogram. Output: (q_bp, bin, est_cents). */
-  def quantiles(spark: SparkSession, dir: String, widthCents: Long = 50000,
-                qBps: Seq[Int] = Seq(5000, 9000, 9900)): DataFrame = {
+  def quantiles(spark: SparkSession, dir: String): DataFrame = {
     val cents = table(spark, dir, "lineitem")
       .select(floor(col("l_extendedprice") * lit(100.0) + lit(0.5)).cast("long")
         .as("cents"))
-    val hist = cents.groupBy(expr(s"cents div $widthCents").as("bin"))
+    val hist = cents.groupBy(expr(s"cents div $WidthCents").as("bin"))
       .agg(count(lit(1)).as("n"))
     val cum = hist.withColumn("cum_n",
       sum(col("n")).over(Window.orderBy("bin")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     val tot = cents.agg(count(lit(1)).as("total"))
     import spark.implicits._
-    val q = qBps.map(_.toLong).toDF("q_bp")
+    val q = QBps.map(_.toLong).toDF("q_bp")
     // first bin whose cumulative rank reaches ceil(q·N/10^4):
     // cum_n ≥ q_bp·N/10^4  ⇔  cum_n·10^4 ≥ q_bp·N (exact in 64-bit)
     cum.crossJoin(broadcast(tot)).crossJoin(broadcast(q))
       .filter(col("cum_n") * lit(10000L) >= col("q_bp") * col("total"))
       .groupBy(col("q_bp"))
       .agg(min(col("bin")).as("bin"))
-      .withColumn("est_cents", col("bin") * lit(widthCents))
+      .withColumn("est_cents", col("bin") * lit(WidthCents))
   }
 
   /** DuckDB replay of the identical sketch (shared by SparkEntry.oracleSql). */
-  def oracle(widthCents: Long = 50000, qBps: Seq[Int] = Seq(5000, 9000, 9900)): String =
+  def oracle: String =
     s"""WITH c AS (SELECT floor(l_extendedprice * 100.0 + 0.5)::BIGINT AS cents FROM lineitem),
-       |h AS (SELECT cents // $widthCents AS bin, count(*)::BIGINT AS n FROM c GROUP BY 1),
+       |h AS (SELECT cents // $WidthCents AS bin, count(*)::BIGINT AS n FROM c GROUP BY 1),
        |cu AS (SELECT bin, sum(n) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cum_n FROM h),
        |t AS (SELECT count(*)::BIGINT AS total FROM c),
-       |q AS (SELECT unnest([${qBps.mkString(", ")}])::BIGINT AS q_bp)
-       |SELECT q_bp, min(bin)::BIGINT AS bin, (min(bin) * $widthCents)::BIGINT AS est_cents
+       |q AS (SELECT unnest([${QBps.mkString(", ")}])::BIGINT AS q_bp)
+       |SELECT q_bp, min(bin)::BIGINT AS bin, (min(bin) * $WidthCents)::BIGINT AS est_cents
        |FROM cu, t, q WHERE cum_n * 10000 >= q_bp * total GROUP BY 1""".stripMargin
 }

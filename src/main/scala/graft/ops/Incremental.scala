@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Session.table
-import graft.functions.SeedExprs
 
 /** Incremental re-aggregation — the algebra that makes epoch-partitioned
   * ingestion (q64's layout) cheap: per-batch PARTIAL states merge into the
@@ -27,16 +26,9 @@ import graft.functions.SeedExprs
 object Incremental {
 
   /** Per-(day, bucket) partial state of `pred`'s slice. */
-  private def partial(ev: DataFrame, pred: org.apache.spark.sql.Column,
-                      p: Int): DataFrame = {
-    val rmax = 64 - p + 1
-    val rest = shiftleft(SeedExprs.mix64(col("user_id")), p)
+  private def partial(ev: DataFrame, pred: org.apache.spark.sql.Column): DataFrame = {
     ev.filter(pred)
-      .select(col("day"),
-        shiftrightunsigned(SeedExprs.mix64(col("user_id")), 64 - p).as("bucket"),
-        when(rest === 0L, lit(rmax.toLong))
-          .otherwise(SeedExprs.clz64(rest) + lit(1L)).as("rho"),
-        col("vc"))
+      .select((col("day") +: Sketches.hllCell(col("user_id"))) :+ col("vc"): _*)
       .groupBy(col("day"), col("bucket"))
       .agg(count(lit(1)).as("n"), sum(col("vc")).as("cents"), max(col("rho")).as("r"))
   }
@@ -44,21 +36,21 @@ object Incremental {
   /** Gate query (q103): merged two-epoch daily rollup — (day, n_events,
     * value_cents, est_users) where est_users is the raw per-day HLL
     * estimate from the MERGED register files. */
-  def mergedDailyRollup(spark: SparkSession, dir: String, p: Int = 6): DataFrame = {
-    val m = 1 << p
+  def mergedDailyRollup(spark: SparkSession, dir: String): DataFrame = {
+    val m = 1 << Sketches.HllP
     val ev = table(spark, dir, "events")
       .select(col("user_id"), col("event_id"),
         floor(floor(unix_timestamp(col("ts"))) / lit(86400)).cast("long").as("day"),
         floor(col("value") * lit(100.0) + lit(0.5)).cast("long").as("vc"))
-    val merged = partial(ev, col("event_id") % 2 === 0, p)
-      .unionByName(partial(ev, col("event_id") % 2 =!= 0, p))
+    val merged = partial(ev, col("event_id") % 2 === 0)
+      .unionByName(partial(ev, col("event_id") % 2 =!= 0))
       .groupBy(col("day"), col("bucket"))
       .agg(sum(col("n")).as("n"), sum(col("cents")).as("cents"), max(col("r")).as("r"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     val rows = merged.groupBy(_._1).toSeq.map { case (day, cells) =>
       val regs = new Array[Long](m)
       cells.foreach { case (_, b, _, _, r) => regs(b.toInt) = r }
-      Row(day, cells.map(_._3).sum, cells.map(_._4).sum, Sketches.hllEstimate(regs, p))
+      Row(day, cells.map(_._3).sum, cells.map(_._4).sum, Sketches.hllEstimate(regs))
     }
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1),

@@ -228,9 +228,9 @@ object Interactions {
     * ring rotations (normalized-equality proof), restriction-relation latch,
     * deletions, unchanged latest rows. ALL state is closed-form in (id, k) —
     * no sequential accumulation — so the gate oracle recomputes it in SQL. */
-  def synthVersions(spark: SparkSession, nEntities: Int, parts: Int = 4): Dataset[VersionRow] = {
+  def synthVersions(spark: SparkSession, nEntities: Int): Dataset[VersionRow] = {
     import spark.implicits._
-    spark.range(0, nEntities, 1, parts).flatMap { id =>
+    spark.range(0, nEntities, 1, 4).flatMap { id =>
       val etype = (id % 5) match {
         case 0 => "relation"
         case 1 | 2 => "way"

@@ -17,18 +17,24 @@ object Lakehouse {
   private def m31(e: org.apache.spark.sql.Column) =
     SeedExprs.mix64(e).bitwiseAND(lit(0x7FFFFFFFL))
 
-  /** Base snapshot: keys [0, nBase) with a seed-derived value. */
-  def synthBase(spark: SparkSession, nBase: Int = 800): DataFrame =
-    spark.range(0, nBase.toLong).select(col("id").as("key"),
+  /** Fixture sizes, which the q120-q123 and q147 oracles read. */
+  val NBase = 800
+  val NDelta = 400
+  val Keyspace = 1000
+  val NProbes = 600
+  val NFiles = 500
+
+  /** Base snapshot: keys [0, NBase) with a seed-derived value. */
+  def synthBase(spark: SparkSession): DataFrame =
+    spark.range(0, NBase.toLong).select(col("id").as("key"),
       SeedExprs.mix64(col("id").bitwiseXOR(lit(0xBA5EL)))
         .bitwiseAND(lit(0xFFFFL)).as("val"))
 
   /** Ordered CDC delta stream: seq, key (keyspace larger than base →
     * inserts), op (2 = delete, else upsert), value. */
-  def synthDelta(spark: SparkSession, nDelta: Int = 400,
-                 keyspace: Int = 1000): DataFrame =
-    spark.range(0, nDelta.toLong).select(col("id").as("seq"),
-      (m31(col("id") + 5000000L) % keyspace).as("key"),
+  def synthDelta(spark: SparkSession): DataFrame =
+    spark.range(0, NDelta.toLong).select(col("id").as("seq"),
+      (m31(col("id") + 5000000L) % Keyspace).as("key"),
       (m31(col("id") + 6000000L) % 3).as("op"),
       SeedExprs.mix64(col("id") + 7000000L).bitwiseAND(lit(0xFFFFL)).as("val"))
 
@@ -45,10 +51,9 @@ object Lakehouse {
     * through. The shape Iceberg calls merge-on-read compaction: a window on
     * the (small) delta + ONE full-outer join keyed on key; base never sorts
     * globally. */
-  def mergeApply(spark: SparkSession, nBase: Int = 800,
-                 nDelta: Int = 400): DataFrame = {
-    val b = synthBase(spark, nBase)
-    val l = latest(synthDelta(spark, nDelta))
+  def mergeApply(spark: SparkSession): DataFrame = {
+    val b = synthBase(spark)
+    val l = latest(synthDelta(spark))
       .withColumnRenamed("key", "dkey").withColumnRenamed("val", "dval")
     b.join(l, col("key") === col("dkey"), "full_outer")
       .where(!(col("dkey").isNotNull && col("op") === 2))
@@ -61,9 +66,9 @@ object Lakehouse {
     * upsert opens an interval at its seq; the key's NEXT op (any type)
     * closes it; open intervals are current. Deletes emit no row but still
     * close their predecessor. One window keyed on key. */
-  def scd2(spark: SparkSession, nDelta: Int = 400): DataFrame = {
+  def scd2(spark: SparkSession): DataFrame = {
     val w = Window.partitionBy("key").orderBy("seq")
-    synthDelta(spark, nDelta)
+    synthDelta(spark)
       .withColumn("valid_to", lead(col("seq"), 1).over(w))
       .where(col("op") =!= 2)
       .select(col("key"), col("seq").as("valid_from"), col("val"),
@@ -74,10 +79,9 @@ object Lakehouse {
   /** Gate query (q123): the change feed between the base snapshot and the
     * merged snapshot — insert/delete/value-update per key (no-op rewrites
     * excluded). Snapshot diff as a keyed full-outer join, never a sort. */
-  def changeFeed(spark: SparkSession, nBase: Int = 800,
-                 nDelta: Int = 400): DataFrame = {
-    val b = synthBase(spark, nBase)
-    val m = mergeApply(spark, nBase, nDelta)
+  def changeFeed(spark: SparkSession): DataFrame = {
+    val b = synthBase(spark)
+    val m = mergeApply(spark)
       .select(col("key").as("mkey"), col("val").as("mval"))
     b.join(m, col("key") === col("mkey"), "full_outer")
       .where(col("key").isNull || col("mkey").isNull || col("val") =!= col("mval"))
@@ -95,13 +99,12 @@ object Lakehouse {
     * range-partitioning machinery is needed; the q84 binned range join is
     * the fallback when the build side isn't keyed. This is the
     * dimension-at-time lookup every warehouse fact load runs. */
-  def temporalJoin(spark: SparkSession, nDelta: Int = 400,
-                   nProbes: Int = 600, keyspace: Int = 1000): DataFrame = {
-    val scd = scd2(spark, nDelta)
+  def temporalJoin(spark: SparkSession): DataFrame = {
+    val scd = scd2(spark)
       .select(col("key"), col("valid_from").as("vf"), col("val"),
         col("valid_to").as("vt"))
-    val probes = spark.range(0, nProbes.toLong).select(col("id").as("pid"),
-      (m31(col("id") + 8000000L) % keyspace).as("key"),
+    val probes = spark.range(0, NProbes.toLong).select(col("id").as("pid"),
+      (m31(col("id") + 8000000L) % Keyspace).as("key"),
       (m31(col("id") + 9000000L) % 450).as("t"))
     probes.join(scd, Seq("key"))
       .where(col("t") >= col("vf") && (col("vt").isNull || col("t") < col("vt")))
@@ -116,8 +119,8 @@ object Lakehouse {
     * Greedy-by-file-order is deterministic and keeps jobs contiguous in id,
     * which is what makes the plan replayable (bin-packing heuristics that
     * reorder by size are equally valid but no better bounded). */
-  def compactionPlan(spark: SparkSession, nFiles: Int = 500): DataFrame = {
-    val files = spark.range(0, nFiles.toLong).select(col("id").as("f"),
+  def compactionPlan(spark: SparkSession): DataFrame = {
+    val files = spark.range(0, NFiles.toLong).select(col("id").as("f"),
       (col("id") % 8).as("bucket"),
       (lit(1000000L) + m31(col("id") + 3000000L) % 127000000L).as("size"))
     val w = Window.partitionBy("bucket").orderBy("f")

@@ -11,6 +11,9 @@ import graft.Session.table
   */
 object Lateness {
 
+  /** The tiles' named buckets in q177; its oracle reads it. */
+  val TopN = 2
+
   /** Gate query (q176) — watermark late-data accounting, batch-replayed:
     * per user stream (arrival order = event_id), a row is LATE iff its
     * event time is older than (running-max event time over prior arrivals)
@@ -45,19 +48,19 @@ object Lateness {
     * Deterministic rank: count desc, then name. Counts aggregate map-side
     * before the (tile, type) exchange; the rank window runs on the rollup
     * relation, never the events. */
-  def topNOthers(spark: SparkSession, dir: String, n: Int = 2): DataFrame = {
+  def topNOthers(spark: SparkSession, dir: String): DataFrame = {
     val counts = table(spark, dir, "events").select(
         floor((col("value") % 360.0) / 360.0 * 8.0).cast("long").as("tile"),
         col("event_type"))
       .groupBy("tile", "event_type").agg(count(lit(1)).as("n"))
     val w = Window.partitionBy("tile").orderBy(col("n").desc, col("event_type"))
     val ranked = counts.withColumn("rk", row_number().over(w))
-    val top = ranked.where(col("rk") <= n)
+    val top = ranked.where(col("rk") <= TopN)
       .select(col("tile"), col("rk"), col("event_type").as("bucket"), col("n"))
-    val others = ranked.where(col("rk") > n)
+    val others = ranked.where(col("rk") > TopN)
       .groupBy("tile")
       .agg(sum(col("n")).as("n"))
-      .select(col("tile"), lit(n + 1).as("rk"), lit("OTHERS").as("bucket"), col("n"))
+      .select(col("tile"), lit(TopN + 1).as("rk"), lit("OTHERS").as("bucket"), col("n"))
     top.unionByName(others)
   }
 

@@ -67,12 +67,12 @@ object OrderStats {
     * from [[distributedRowNumber]] (never a single-task window); the
     * DuckDB oracle computes the SAME rank via a window row_number — a
     * different mechanism, so agreement pins the distributed ranking. */
-  def decileClassMix(spark: SparkSession, dir: String, parts: Int = 8): DataFrame = {
+  def decileClassMix(spark: SparkSession, dir: String): DataFrame = {
     val o = table(spark, dir, "orders")
       .select(floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("cents"),
         col("o_orderstatus"), col("o_orderkey"))
     val n = o.count()
-    distributedRowNumber(o, parts, col("cents"), col("o_orderkey"))
+    distributedRowNumber(o, 8, col("cents"), col("o_orderkey"))
       .select(col("o_orderstatus"),
         least(expr(s"((rn - 1) * 10) div $n"), lit(9L)).as("decile"))
       .groupBy("decile", "o_orderstatus").agg(count(lit(1)).as("n"))
@@ -83,7 +83,7 @@ object OrderStats {
     * rank via [[distributedRowNumber]] with (value, user_id) total orders.
     * Three small rankings over the USER-level rollup (users ≪ events), all
     * deterministic integers. */
-  def rfmScores(spark: SparkSession, dir: String, parts: Int = 4): DataFrame = {
+  def rfmScores(spark: SparkSession, dir: String): DataFrame = {
     val p = table(spark, dir, "events")
       .where(col("event_type") === "purchase")
       .groupBy("user_id")
@@ -92,7 +92,7 @@ object OrderStats {
         sum(floor(col("value") * 100.0 + 0.5).cast("long")).as("cents"))
     val n = p.count()
     def score(df: DataFrame, by: Column, out: String): DataFrame =
-      distributedRowNumber(df, parts, by, col("user_id"))
+      distributedRowNumber(df, 4, by, col("user_id"))
         .withColumn(out, least(expr(s"((rn - 1) * 5) div $n"), lit(4L)) + 1L)
         .drop("rn")
     val r = score(p, col("last_us"), "r_score")
@@ -109,10 +109,10 @@ object OrderStats {
     * top-1% mass, and the top-key share in e6. At 10^9 keys the ranking is
     * the only non-trivial step and it's the same two-pass range machinery
     * as q138/q141 — never a single-task window. */
-  def skewProfile(spark: SparkSession, dir: String, parts: Int = 8): DataFrame = {
+  def skewProfile(spark: SparkSession, dir: String): DataFrame = {
     val k = table(spark, dir, "lineitem")
       .groupBy(col("l_partkey").as("key")).agg(count(lit(1)).as("n"))
-    val ranked = distributedRowNumber(k, parts, col("n").desc, col("key"))
+    val ranked = distributedRowNumber(k, 8, col("n").desc, col("key"))
     val nk = ranked.count()
     val onePct = nk / 100 + 1
     ranked.agg(

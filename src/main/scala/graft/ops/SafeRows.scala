@@ -26,18 +26,16 @@ object SafeRows {
 
   /** Map each row through `fn`; failures become RowError rows instead of
     * killing the job. Returns a tagged dataset — split with [[ok]] /
-    * [[quarantined]]. `classify` buckets a throwable into an error class
+    * [[quarantined]]. A throwable's error class is its simple class name
     * (the reference's CRE_ERRORS / TAG_ERRORS / GEOM-style counters). */
-  def map[T, U: Encoder](ds: Dataset[T], fn: T => U, keyOf: T => String,
-                         counters: ErrorCounters,
-                         classify: Throwable => String = _.getClass.getSimpleName)(
+  def map[T, U](ds: Dataset[T], fn: T => U, keyOf: T => String, counters: ErrorCounters)(
       implicit tagEnc: Encoder[(Option[U], Option[RowError])]): Dataset[(Option[U], Option[RowError])] =
     ds.mapPartitions { it =>
       it.map { row =>
         Try(fn(row)) match {
           case Success(u) => (Some(u), None)
           case Failure(e) =>
-            val cls = classify(e)
+            val cls = e.getClass.getSimpleName
             counters.add(cls)
             (None, Some(RowError(keyOf(row), cls, String.valueOf(e.getMessage).take(200))))
         }

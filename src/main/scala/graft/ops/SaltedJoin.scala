@@ -31,12 +31,12 @@ object SaltedJoin {
   /** Gate query (q85): revenue by part type through a salted S=8 join of
     * lineitem (salted on l_linenumber, a non-join attribute) against part
     * replicated 8×. */
-  def revenueByType(spark: SparkSession, dir: String, salts: Int = 8): DataFrame = {
+  def revenueByType(spark: SparkSession, dir: String): DataFrame = {
     val fact = table(spark, dir, "lineitem")
       .select(col("l_partkey"), col("l_extendedprice"),
-        pmod(col("l_linenumber"), lit(salts)).as("salt"))
+        pmod(col("l_linenumber"), lit(8)).as("salt"))
     val dim = table(spark, dir, "part").select(col("p_partkey"), col("p_type"))
-      .withColumn("salt", explode(array((0 until salts).map(lit): _*)))
+      .withColumn("salt", explode(array((0 until 8).map(lit): _*)))
     fact.hint("merge")
       .join(dim, col("l_partkey") === col("p_partkey") &&
         fact("salt") === dim("salt"))

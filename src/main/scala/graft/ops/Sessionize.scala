@@ -9,7 +9,7 @@ import graft.Session.table
 /** Gap-based sessionization — the batch form of what Structured Streaming's
   * session windows compute incrementally: per user, a new session starts at
   * the first event and at every event whose gap from its predecessor
-  * exceeds `gapUs`; the session id is the running count of session starts.
+  * exceeds 30 minutes; the session id is the running count of session starts.
   *
   * Scale shape: ONE exchange total. The lag flag, the running sum, and the
   * final (user, session) rollup all key on `user_id` — Spark's
@@ -21,11 +21,13 @@ import graft.Session.table
   */
 object Sessionize {
 
+  /** q118's segment-break step; its oracle reads it. */
+  val StayRadiusKm = 6000.0
+
   /** Gate query (q90): 30-minute-gap sessions over the events table.
     * Output: one row per (user, session) with span, size, and value sum
     * (cents — integer, merge-order-free). */
-  def sessions(spark: SparkSession, dir: String,
-               gapUs: Long = 30L * 60 * 1000000): DataFrame = {
+  def sessions(spark: SparkSession, dir: String): DataFrame = {
     val ev = table(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts").cast("timestamp")).as("us"),
         col("value"))
@@ -34,7 +36,7 @@ object Sessionize {
     val w = Window.partitionBy("user_id").orderBy("us")
     ev.withColumn("prev_us", lag(col("us"), 1).over(w))
       .withColumn("new_sess",
-        when(col("prev_us").isNull || col("us") - col("prev_us") > gapUs, 1L)
+        when(col("prev_us").isNull || col("us") - col("prev_us") > 30L * 60 * 1000000, 1L)
           .otherwise(0L))
       .withColumn("sid", sum(col("new_sess")).over(w))
       .groupBy(col("user_id"), col("sid"))
@@ -51,12 +53,11 @@ object Sessionize {
     * CONTAINED intervals, which a lag-on-end comparison gets wrong). Emits
     * islands count and exact covered span per user. Same one-exchange shape
     * as [[sessions]]. */
-  def intervalCoalesce(spark: SparkSession, dir: String,
-                       durUs: Long = 600000000L): DataFrame = {
+  def intervalCoalesce(spark: SparkSession, dir: String): DataFrame = {
     val iv = table(spark, dir, "events")
       .select(col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("s"))
-      .withColumn("e", col("s") + durUs)
+      .withColumn("e", col("s") + 600000000L)
     val order = Window.partitionBy("user_id").orderBy(col("s"), col("e"))
     val stepped = iv
       .withColumn("pmax", max(col("e")).over(
@@ -72,14 +73,13 @@ object Sessionize {
 
   /** Gate query (q118): SPATIAL sessionization (trajectory segmentation /
     * stay-point detection) — per user, a new segment starts at the first
-    * point and at every point farther than `radiusKm` (haversine) from its
+    * point and at every point farther than [[StayRadiusKm]] (haversine) from its
     * predecessor. Same one-exchange shape as [[sessions]] (lag, running
     * sum, and rollup all key on user_id); the geometry rides the q20 FP
     * discipline — the haversine Column algebra is replicated term-for-term
     * in the oracle, and the per-step kms are e6-floored BEFORE summing so
     * the per-segment path length is an exact integer in any merge order. */
-  def staySegments(spark: SparkSession, dir: String,
-                   radiusKm: Double = 6000.0): DataFrame = {
+  def staySegments(spark: SparkSession, dir: String): DataFrame = {
     // the q20 point cloud, re-derived inline with the event timestamp
     val pts = table(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts").cast("timestamp")).as("us"),
@@ -92,7 +92,7 @@ object Sessionize {
       .withColumn("step_km", graft.spatial.SpatialQueries.haversineKmCol(
         col("plat"), col("plon"), col("lat"), col("lon")))
       .withColumn("brk",
-        when(col("plon").isNull || col("step_km") > radiusKm, 1L).otherwise(0L))
+        when(col("plon").isNull || col("step_km") > StayRadiusKm, 1L).otherwise(0L))
       .withColumn("sid", sum(col("brk")).over(w))
     stepped.groupBy(col("user_id"), col("sid"))
       .agg(count(lit(1)).as("n_points"),

@@ -10,6 +10,9 @@ import graft.functions.SeedExprs
   */
 object Sharding {
 
+  /** q171's shard count before the one-shard growth; its oracle reads it. */
+  val Shards = 10
+
   /** Gate query (q171) — rendezvous (highest-random-weight) sharding:
     * doc → argmax_s mix(doc_key ⊕ mix(s)) over S shards, the assignment
     * that moves only ~1/(S+1) of keys when a shard is added. Emits the
@@ -18,7 +21,7 @@ object Sharding {
     * a greatest() over S codegen'd splitmix columns (no explode: the S×n
     * candidate relation never materializes), and unsigned comparison is
     * restored by flipping the sign bit (Long order ≠ UBIGINT order). */
-  def rendezvous(spark: SparkSession, dir: String, s1: Int = 10): DataFrame = {
+  def rendezvous(spark: SparkSession, dir: String): DataFrame = {
     val key = col("doc_id")
     def h(s: Int) = SeedExprs.mix64(key.bitwiseXOR(lit(graft.synth.ImageSynth.mix(s.toLong))))
       .bitwiseXOR(lit(Long.MinValue)) // unsigned-order compare in signed Long
@@ -30,7 +33,7 @@ object Sharding {
       }
     }
     val d = table(spark, dir, "documents")
-      .select(key, assign(s1).as("shard_a"), assign(s1 + 1).as("shard_b"))
+      .select(key, assign(Shards).as("shard_a"), assign(Shards + 1).as("shard_b"))
     val moved = d.agg(sum(when(col("shard_a") =!= col("shard_b"), 1L)
       .otherwise(0L)).as("n_moved"), count(lit(1)).as("n_docs"))
     d.groupBy("shard_a")

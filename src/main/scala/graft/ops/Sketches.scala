@@ -1,7 +1,7 @@
 package graft.ops
 // (bitmap-index operator appended at the bottom of this file — q140)
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,6 +30,13 @@ object Sketches {
 
   private val Mask64 = (BigInt(1) << 64) - 1
 
+  /** HLL precision: m = 2^HllP registers (q87, q99, q103 and their oracles). */
+  val HllP = 6
+  /** KMV sizes of q83 and q96 and q96's ship-date split (their oracles read them). */
+  val DistinctK = 64
+  val IntersectK = 256
+  val IntersectCut = "1998-06-01"
+
   /** The k minimum distinct hash values (unsigned order) of `keyCol`. */
   def kmvHashes(df: DataFrame, keyCol: String, k: Int): Array[Long] =
     df.select(SeedExprs.mix64(col(keyCol)).as("h")).distinct()
@@ -57,17 +64,20 @@ object Sketches {
     * KMV this needs NO distinct pass — duplicates cannot move a max — so
     * the only exchange is the (bucket → partial-max) rollup: m rows. Empty
     * buckets surface with r = 0 via the range(m) left join. */
-  def hllRegisters(df: DataFrame, keyCol: String, p: Int = 6): DataFrame = {
-    val m = 1 << p
-    val spark = df.sparkSession
-    val rest = shiftleft(SeedExprs.mix64(col(keyCol)), p)
-    val regs = df
-      .select(shiftrightunsigned(SeedExprs.mix64(col(keyCol)), 64 - p).as("bucket"),
-        when(rest === 0L, lit((64 - p + 1).toLong))
-          .otherwise(SeedExprs.clz64(rest) + lit(1L)).as("rho"))
-      .groupBy("bucket").agg(max("rho").as("r"))
-    spark.range(m).select(col("id").as("bucket"))
+  def hllRegisters(df: DataFrame, keyCol: String): DataFrame = {
+    val regs = df.select(hllCell(col(keyCol)): _*).groupBy("bucket").agg(max("rho").as("r"))
+    df.sparkSession.range(1 << HllP).select(col("id").as("bucket"))
       .join(regs, Seq("bucket"), "left").na.fill(0L, Seq("r"))
+  }
+
+  /** A key's register `bucket` (the top HllP bits of its splitmix64) and
+    * `rho`, the register value it offers — the HLL row derivation of q87,
+    * q99 and q103. */
+  private[ops] def hllCell(key: Column): Seq[Column] = {
+    val rest = shiftleft(SeedExprs.mix64(key), HllP)
+    Seq(shiftrightunsigned(SeedExprs.mix64(key), 64 - HllP).as("bucket"),
+      when(rest === 0L, lit((64 - HllP + 1).toLong))
+        .otherwise(SeedExprs.clz64(rest) + lit(1L)).as("rho"))
   }
 
   /** Raw HLL estimate from the m register values, exact-integer: with
@@ -78,19 +88,19 @@ object Sketches {
     * Deliberately NO small/large-range corrections here: they need ln(),
     * which is not IEEE-pinned cross-engine; SketchSpec applies the
     * linear-counting correction Scala-side for the accuracy envelope. */
-  def hllEstimate(registers: Array[Long], p: Int = 6): Long = {
-    val m = 1 << p
-    val rmax = 64 - p + 1
+  def hllEstimate(registers: Array[Long]): Long = {
+    val m = 1 << HllP
+    val rmax = 64 - HllP + 1
     val s = registers.map(r => BigInt(1) << (rmax - r.toInt)).sum
     ((BigInt(709) * m * m * (BigInt(1) << rmax)) / (BigInt(1000) * s)).toLong
   }
 
   /** Gate query (q87): the 64 HLL registers of l_partkey with the raw
     * estimate on every row. */
-  def hllDistinct(spark: SparkSession, dir: String, p: Int = 6): DataFrame = {
-    val regs = hllRegisters(table(spark, dir, "lineitem"), "l_partkey", p)
+  def hllDistinct(spark: SparkSession, dir: String): DataFrame = {
+    val regs = hllRegisters(table(spark, dir, "lineitem"), "l_partkey")
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val est = hllEstimate(regs.map(_._2), p)
+    val est = hllEstimate(regs.map(_._2))
     val rows = regs.map { case (b, r) => Row(b, r, est) }
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
@@ -106,21 +116,15 @@ object Sketches {
     * estimate math runs on the collected groups·m scalars. This is the
     * sketch-column pattern (per-dimension approximate distincts in one
     * pass) that replaces G sequential countDistinct jobs at 100 TB. */
-  def hllDistinctPerGroup(spark: SparkSession, dir: String, p: Int = 6): DataFrame = {
-    val m = 1 << p
-    val rmax = 64 - p + 1
-    val rest = shiftleft(SeedExprs.mix64(col("user_id")), p)
+  def hllDistinctPerGroup(spark: SparkSession, dir: String): DataFrame = {
     val regs = table(spark, dir, "events").select(col("event_type"), col("user_id"))
-      .select(col("event_type"),
-        shiftrightunsigned(SeedExprs.mix64(col("user_id")), 64 - p).as("bucket"),
-        when(rest === 0L, lit(rmax.toLong))
-          .otherwise(SeedExprs.clz64(rest) + lit(1L)).as("rho"))
+      .select(col("event_type") +: hllCell(col("user_id")): _*)
       .groupBy(col("event_type"), col("bucket")).agg(max(col("rho")).as("r"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val rows = regs.groupBy(_._1).toSeq.map { case (etype, bs) =>
-      val full = new Array[Long](m)
+      val full = new Array[Long](1 << HllP)
       bs.foreach { case (_, b, r) => full(b.toInt) = r }
-      Row(etype, hllEstimate(full, p))
+      Row(etype, hllEstimate(full))
     }
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1),
@@ -130,10 +134,10 @@ object Sketches {
 
   /** Gate query (q83): the k=64 sketch of DISTINCT l_partkey with its rank
     * and the resulting estimate (same value on every row). */
-  def kmvDistinct(spark: SparkSession, dir: String, k: Int = 64): DataFrame = {
-    val hashes = kmvHashes(table(spark, dir, "lineitem"), "l_partkey", k)
+  def kmvDistinct(spark: SparkSession, dir: String): DataFrame = {
+    val hashes = kmvHashes(table(spark, dir, "lineitem"), "l_partkey", DistinctK)
     val sorted = hashes.sortBy(h => BigInt(h) & Mask64)
-    val est = estimate(sorted, k)
+    val est = estimate(sorted, DistinctK)
     val rows = sorted.zipWithIndex.map { case (h, i) => Row(i + 1, h, est) }
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
@@ -153,20 +157,19 @@ object Sketches {
     * floor division per estimate (BigInt on the Scala side), so the oracle
     * replays every number digit-for-digit.
     *
-    * Gate query (q96): A = orderkeys shipping before `cut`, B = after;
+    * Gate query (q96): A = orderkeys shipping before [[IntersectCut]], B = after;
     * output one row (rho, est_union, est_inter). If the union sketch never
     * filled, both side sketches are their full sets and ρ IS |A∩B|. */
-  def kmvIntersect(spark: SparkSession, dir: String, k: Int = 256,
-                   cut: String = "1998-06-01"): DataFrame = {
+  def kmvIntersect(spark: SparkSession, dir: String): DataFrame = {
     val li = table(spark, dir, "lineitem").select(col("l_orderkey"), col("l_shipdate"))
-    val cutTs = lit(cut).cast("timestamp")
-    val a = kmvHashes(li.filter(col("l_shipdate") < cutTs), "l_orderkey", k)
-    val b = kmvHashes(li.filter(col("l_shipdate") >= cutTs), "l_orderkey", k)
-    val u = merge(a, b, k)
-    val estU = estimate(u, k)
+    val cutTs = lit(IntersectCut).cast("timestamp")
+    val a = kmvHashes(li.filter(col("l_shipdate") < cutTs), "l_orderkey", IntersectK)
+    val b = kmvHashes(li.filter(col("l_shipdate") >= cutTs), "l_orderkey", IntersectK)
+    val u = merge(a, b, IntersectK)
+    val estU = estimate(u, IntersectK)
     val aSet = a.toSet; val bSet = b.toSet
     val rho = u.count(h => aSet(h) && bSet(h)).toLong
-    val estI = if (u.length < k) rho else (BigInt(rho) * BigInt(estU) / k).toLong
+    val estI = if (u.length < IntersectK) rho else (BigInt(rho) * BigInt(estU) / IntersectK).toLong
     spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row(rho, estU, estI)), 1),
       StructType(Seq(StructField("rho", LongType, nullable = false),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.CacheOps
 import graft.Session.table
+import graft.spatial.ZOrder
 
 /** Weighted shortest paths and time-weighted measures — the distance leg of
   * the graph family (q63/q67 connectivity, q109 PageRank, q125 k-core,
@@ -76,10 +77,8 @@ object Sssp {
         (col("value") % 360.0 - 180.0).as("lon"),
         (col("user_id") % 181 - 90).cast("double").as("lat"))
       .select(col("user_id"), col("event_id"), col("us"),
-        least(floor((col("lon") + 180.0) / 360.0 * 64.0), lit(63.0))
-          .cast("long").as("tx"),
-        least(floor((col("lat") + 90.0) / 180.0 * 64.0), lit(63.0))
-          .cast("long").as("ty"))
+        ZOrder.gridX(col("lon"), 6).as("tx"),
+        ZOrder.gridY(col("lat"), 6).as("ty"))
       .withColumn("next_us", lead(col("us"), 1).over(w))
       .where(col("next_us").isNotNull)
       .groupBy("tx", "ty")

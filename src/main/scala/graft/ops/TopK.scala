@@ -87,7 +87,7 @@ object TopK {
 
   /** Gate query (q92): top-3 customers by account balance (cents; ties by
     * custkey) per market segment. Oracle: DuckDB row_number window. */
-  def topCustomers(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
+  def topCustomers(spark: SparkSession, dir: String): DataFrame = {
     val cust = table(spark, dir, "customer")
       .select(col("c_mktsegment"),
         floor(col("c_acctbal") * lit(100.0) + lit(0.5)).cast("long").as("bal_cents"),
@@ -99,7 +99,7 @@ object TopK {
       .groupByKey(_._1)
       .mapValues { case (_, bal, key) => (bal, key) }(
         Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-      .agg(topKAgg(k).toColumn.name("top"))
+      .agg(topKAgg(3).toColumn.name("top"))
       .flatMap { case (seg, top) =>
         top.zipWithIndex.map { case ((bal, key), i) => (seg, i + 1L, key, bal) }
       }

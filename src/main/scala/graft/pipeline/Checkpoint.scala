@@ -36,9 +36,15 @@ object Checkpoint {
                             rowCount: Long, phashDigest: Long,
                             nPixelsOk: Long, nCaptionsOk: Long)
 
-  def bucketOf(seed: Long, hexRes: Int, buckets: Int): Int = {
+  /** The hex resolution of the cell that routes a row to its bucket. */
+  val HexRes = 7
+  /** Bucket and range-partition counts of the q62/q64/q119 gate stores. */
+  val GateBuckets = 8
+  private val GateParts = 8
+
+  def bucketOf(seed: Long, buckets: Int): Int = {
     val (lon, lat) = Geotag.of(seed)
-    val cell = Hex.latLngToCell(lat, lon, hexRes)
+    val cell = Hex.latLngToCell(lat, lon, HexRes)
     (ImageSynth.mix(cell) & 0x7FFFFFFF).toInt % buckets
   }
 
@@ -92,14 +98,13 @@ object Checkpoint {
     * The pixel-derived phashDigest stays OUT of the gate row (DuckDB cannot
     * re-render; it is spec-verified in CheckpointSpec), while the validation
     * counters assert all written rows decoded clean per bucket. */
-  def lineageGate(spark: SparkSession, n: Long, buckets: Int = 8,
-                  parts: Int = 8): DataFrame = {
+  def lineageGate(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_ckpt_gate")
     // the manifests are driver-side values once run() returns — the scratch
     // build (parquet + commits) is deleted before the gate row-set is built,
     // so repeated bench/gate invocations cannot accumulate tmp data
-    val ms = try run(spark, n, dir.toString, buckets, parts)
+    val ms = try run(spark, n, dir.toString, GateBuckets, GateParts)
              finally deleteRecursively(dir)
     ms.map(m => (m.bucket, m.cellMin, m.cellMax, m.rowCount, m.nPixelsOk, m.nCaptionsOk))
       .toDF("bucket", "cell_min", "cell_max", "row_count", "n_pixels_ok", "n_captions_ok")
@@ -116,16 +121,15 @@ object Checkpoint {
     * One-shot-vs-incremental byte equality is additionally pinned in
     * CheckpointSpec (the digests include the pixel-derived phash xor, which
     * DuckDB cannot re-render). */
-  def appendGate(spark: SparkSession, n0: Long, n1: Long, buckets: Int = 8,
-                 parts: Int = 8): DataFrame = {
+  def appendGate(spark: SparkSession, n0: Long, n1: Long): DataFrame = {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_ckpt_append")
     val ms = try {
-      runEpoch(spark, 0, 0L, n0, dir.toString, buckets, parts)
-      runEpoch(spark, 1, n0, n1, dir.toString, buckets, parts)
-      require(runEpoch(spark, 1, n0, n1, dir.toString, buckets, parts).isEmpty,
+      runEpoch(spark, 0, 0L, n0, dir.toString, GateBuckets, GateParts)
+      runEpoch(spark, 1, n0, n1, dir.toString, GateBuckets, GateParts)
+      require(runEpoch(spark, 1, n0, n1, dir.toString, GateBuckets, GateParts).isEmpty,
         "incremental re-run must be a no-op")
-      manifests(dir.toString, epochs = 2, buckets)
+      manifests(dir.toString, epochs = 2, GateBuckets)
     } finally deleteRecursively(dir)
     ms.map(m => (m.epoch, m.bucket, m.cellMin, m.cellMax, m.rowCount,
         m.nPixelsOk, m.nCaptionsOk))
@@ -134,7 +138,7 @@ object Checkpoint {
   }
 
   /** Gate shape for time-travel reads (q119): build the 2-epoch store, then
-    * read it AS OF epoch 0 — `epoch <= asOf` is a partition-column predicate,
+    * read it AS OF epoch 0 — `epoch <= 0` is a partition-column predicate,
     * so Spark's partition discovery prunes every epoch-1 directory before a
     * single byte is scanned (the Iceberg snapshot-isolation read re-expressed
     * as partition pruning; PlanSpec asserts the pruning reaches the scan).
@@ -143,16 +147,15 @@ object Checkpoint {
     * independent of the manifests q62/q64 gate, so a hash match proves the
     * as-of read returned exactly the rows committed at that snapshot: no
     * epoch-1 leakage, no epoch-0 loss. */
-  def timeTravelGate(spark: SparkSession, n0: Long, n1: Long, asOf: Int = 0,
-                     buckets: Int = 8, parts: Int = 8): DataFrame = CacheOps.scope { s =>
+  def timeTravelGate(spark: SparkSession, n0: Long, n1: Long): DataFrame = CacheOps.scope { s =>
     val dir = Files.createTempDirectory("graft_ckpt_tt")
     try {
-      runEpoch(spark, 0, 0L, n0, dir.toString, buckets, parts)
-      runEpoch(spark, 1, n0, n1, dir.toString, buckets, parts)
+      runEpoch(spark, 0, 0L, n0, dir.toString, GateBuckets, GateParts)
+      runEpoch(spark, 1, n0, n1, dir.toString, GateBuckets, GateParts)
       val idx = substring(col("image_id"), 4, 16).cast("long")
       // eager: the scratch store is deleted on return
       s.checkpoint(spark.read.parquet(s"$dir/data")
-        .where(col("epoch") <= asOf)
+        .where(col("epoch") <= 0)
         .select(col("bucket"), idx.as("idx"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("row_count"), sum(col("idx")).as("sum_idx"),
@@ -167,8 +170,8 @@ object Checkpoint {
 
   /** Single-epoch convenience (the fixed-input shape rounds 1-4 gated). */
   def run(spark: SparkSession, n: Long, outDir: String, buckets: Int = 8,
-          parts: Int = 32, hexRes: Int = 7, maxBuckets: Int = Int.MaxValue): Seq[Manifest] =
-    runEpoch(spark, 0, 0L, n, outDir, buckets, parts, hexRes, maxBuckets)
+          parts: Int = 32, maxBuckets: Int = Int.MaxValue): Seq[Manifest] =
+    runEpoch(spark, 0, 0L, n, outDir, buckets, parts, maxBuckets)
 
   /** Process one epoch's uncommitted buckets; optionally stop after
     * `maxBuckets` (the kill-after-K test hook).
@@ -197,13 +200,13 @@ object Checkpoint {
     * the sentinel manifest. Commits stay per-bucket atomic (tmp + rename). */
   def runEpoch(spark: SparkSession, epoch: Int, idStart: Long, idEnd: Long,
                outDir: String, buckets: Int = 8, parts: Int = 32,
-               hexRes: Int = 7, maxBuckets: Int = Int.MaxValue): Seq[Manifest] = {
+               maxBuckets: Int = Int.MaxValue): Seq[Manifest] = {
     import spark.implicits._
     Files.createDirectories(Paths.get(s"$outDir/_commits/epoch-$epoch"))
     val done = committed(outDir, epoch, buckets)
     val todo = (0 until buckets).filterNot(done.contains).take(maxBuckets)
     if (todo.isEmpty) { return Seq.empty }
-    val res = hexRes; val nb = buckets
+    val nb = buckets
     val bcTodo = spark.sparkContext.broadcast(todo.toSet)
     val evals = spark.sparkContext.longAccumulator("graft.ckpt.rangeEvals")
 
@@ -211,7 +214,7 @@ object Checkpoint {
       val t = bcTodo.value
       it.flatMap { i =>
         evals.add(1L)
-        val b = bucketOf(ImageSynth.seedOf(i), res, nb) // arithmetic-only skip
+        val b = bucketOf(ImageSynth.seedOf(i), nb) // arithmetic-only skip
         if (!t.contains(b)) None
         else {
           val r = ImageSynth.rowOf(i)
@@ -253,7 +256,7 @@ object Checkpoint {
               val seed = ImageSynth.seedOf(id.stripPrefix("img").toLong)
               val (lon, lat) = Geotag.of(seed)
               val v = Validate.verdictOf(id, bytes, fmt, caption, phash)
-              (b, Hex.latLngToCell(lat, lon, res), phash,
+              (b, Hex.latLngToCell(lat, lon, HexRes), phash,
                 if (v.pixels_ok) 1L else 0L, if (v.caption_ok) 1L else 0L)
             }
           }

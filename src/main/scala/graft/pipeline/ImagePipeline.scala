@@ -40,6 +40,13 @@ object ImagePipeline {
       Array(clat - pad, clat - pad, clat + pad, clat + pad, clat - pad))
   }.toSeq :+ Boundary("nowhere", Array(-10.0, -9.0, -9.0, -10.0, -10.0), Array(-89.9, -89.9, -89.0, -89.0, -89.9))
 
+  /** Hex resolution, tile zoom and S2 level of every feature path. */
+  private val HexRes = 7
+  private val TileZ = 12
+  private val S2Level = 12
+  /** Range partitions of the tile gate queries (q45, q49, q56, q60, q61). */
+  private val GateParts = 16
+
   /** Distributed synthesis of the full input table (Iceberg-shaped rows). */
   def synthTable(spark: SparkSession, n: Long, parts: Int): Dataset[ImageSynth.ImageRow] = {
     import spark.implicits._
@@ -49,42 +56,30 @@ object ImagePipeline {
   /** Feature derivation straight from row indices — cheap path that skips
     * pixel rendering entirely (phash re-derived from rendered pixels is only
     * needed by validation; here the phash comes with the row). */
-  def features(spark: SparkSession, n: Long, parts: Int,
-               hexRes: Int = 7, tileZ: Int = 12, s2Level: Int = 12): Dataset[Feature] = {
+  def features(spark: SparkSession, n: Long, parts: Int): Dataset[Feature] = {
     import spark.implicits._
-    spark.range(0L, n, 1L, parts).mapPartitions { it =>
-      // reused per-partition state: no per-row allocation beyond the Feature
-      it.map { i =>
-        val seed = ImageSynth.seedOf(i)
-        val (lon, lat) = Geotag.of(seed)
-        val (uid, team, day, _, _) = ImageSynth.metaOf(seed)
-        Feature(ImageSynth.idOf(i), 0L, lon, lat, uid, team, day,
-          Quadkey.cellIdOf(lon, lat, tileZ),
-          Hex.latLngToCell(lat, lon, hexRes),
-          S2Like.cellIdAt(lat, lon, s2Level))
-      }
-    }
+    // no per-row allocation beyond the Feature
+    spark.range(0L, n, 1L, parts).mapPartitions(_.map(i => featureOf(i, ImageSynth.idOf(i), 0L)))
+  }
+
+  /** Row `i`'s feature: geotag and meta derived from its id-seed, cells encoded. */
+  private def featureOf(i: Long, id: String, phash: Long): Feature = {
+    val seed = ImageSynth.seedOf(i)
+    val (lon, lat) = Geotag.of(seed)
+    val (uid, team, day, _, _) = ImageSynth.metaOf(seed)
+    Feature(id, phash, lon, lat, uid, team, day, Quadkey.cellIdOf(lon, lat, TileZ),
+      Hex.latLngToCell(lat, lon, HexRes), S2Like.cellIdAt(lat, lon, S2Level))
   }
 
   /** Feature extraction from a *stored* image table (the path a real Iceberg
     * table takes): derives geotag/meta from the id-seed, cells in
     * mapPartitions. Never touches `bytes`. */
-  def featuresFromTable(rows: DataFrame, hexRes: Int = 7, tileZ: Int = 12,
-                        s2Level: Int = 12): Dataset[Feature] = {
+  def featuresFromTable(rows: DataFrame): Dataset[Feature] = {
     val spark = rows.sparkSession
     import spark.implicits._
-    rows.select(col("image_id"), col("phash")).as[(String, Long)].mapPartitions { it =>
-      it.map { case (id, ph) =>
-        val i = id.stripPrefix("img").toLong
-        val seed = ImageSynth.seedOf(i)
-        val (lon, lat) = Geotag.of(seed)
-        val (uid, team, day, _, _) = ImageSynth.metaOf(seed)
-        Feature(id, ph, lon, lat, uid, team, day,
-          Quadkey.cellIdOf(lon, lat, tileZ),
-          Hex.latLngToCell(lat, lon, hexRes),
-          S2Like.cellIdAt(lat, lon, s2Level))
-      }
-    }
+    rows.select(col("image_id"), col("phash")).as[(String, Long)].mapPartitions(_.map {
+      case (id, ph) => featureOf(id.stripPrefix("img").toLong, id, ph)
+    })
   }
 
   /** Dynamic per-team pivot — the reference emits `<team>-*` columns for
@@ -144,6 +139,24 @@ object ImagePipeline {
   private def pipFiltered(spark: SparkSession, n: Long, parts: Int): DataFrame =
     PipJoin.withOrdinal(fastFeatures(spark, n, parts), metroBoundaries, "lon", "lat")
 
+  /** The tile summaries' (q45, q60) prologue: [[pipFiltered]] features with
+    * team name, e6 highway km (rounded per segment), building and POI flags. */
+  private def measured(spark: SparkSession, n: Long): DataFrame = {
+    import graft.functions.SeedExprs
+    val f = pipFiltered(spark, n, GateParts)
+      .withColumn("noun_id", SeedExprs.metaNounId(col("idx")))
+      .withColumn("dlon", SeedExprs.segDLon(col("idx")))
+      .withColumn("dlat", SeedExprs.segDLat(col("idx")))
+      .withColumn("team", element_at(lit(teamNames.toArray), col("team_id") + 1))
+    val kmE6 = when(col("noun_id") === 1,
+      floor(graft.spatial.SpatialQueries.haversineKmCol(
+        col("lat"), col("lon"), col("lat") + col("dlat"), col("lon") + col("dlon"))
+        * lit(1e6) + lit(0.5)).cast("long")).otherwise(0L)
+    f.withColumn("km_e6", kmE6)
+      .withColumn("is_b", when(col("noun_id") === 0, 1L).otherwise(0L))
+      .withColumn("is_p", when(col("noun_id").isin(3, 4), 1L).otherwise(0L))
+  }
+
   /** The reference's FULL tilePointSummaries measure matrix
     * (util/map-contribution-extractor.js:279-313; counters :21-62): per tile,
     * the four measures — highway-km (haversine over the feature's synthetic
@@ -161,27 +174,13 @@ object ImagePipeline {
     * operate on ~|tiles|·|teams|·2 rows. The pivot's team-discovery pass runs
     * on the pre-rollup, not the feature table; at 100 TB pass the known team
     * list to `pivot(col, values)` and the discovery job disappears. */
-  def tileMeasureMatrix(spark: SparkSession, n: Long, parts: Int = 16): DataFrame =
-    CacheOps.scope { s =>
-    import graft.functions.SeedExprs
-    val f = pipFiltered(spark, n, parts)
-      .withColumn("noun_id", SeedExprs.metaNounId(col("idx")))
-      .withColumn("dlon", SeedExprs.segDLon(col("idx")))
-      .withColumn("dlat", SeedExprs.segDLat(col("idx")))
-      .withColumn("team", element_at(lit(teamNames.toArray), col("team_id") + 1))
-    val kmE6 = when(col("noun_id") === 1,
-      floor(graft.spatial.SpatialQueries.haversineKmCol(
-        col("lat"), col("lon"), col("lat") + col("dlat"), col("lon") + col("dlon"))
-        * lit(1e6) + lit(0.5)).cast("long")).otherwise(0L)
+  def tileMeasureMatrix(spark: SparkSession, n: Long): DataFrame = CacheOps.scope { s =>
     // the totals / pivot / team_sum branches below each consume this
     // pre-rollup; without materialization Catalyst re-executes the full
     // scan+shuffle per branch (verified: 3 scans, no ReusedExchange).
     // The pre-rollup is ~|tiles|·|teams|·2 rows, so pinning it locally is
     // the scale-correct trade: ONE pass over the feature table, period.
-    val pre = s.checkpoint(f
-      .withColumn("km_e6", kmE6)
-      .withColumn("is_b", when(col("noun_id") === 0, 1L).otherwise(0L))
-      .withColumn("is_p", when(col("noun_id").isin(3, 4), 1L).otherwise(0L))
+    val pre = s.checkpoint(measured(spark, n)
       .withColumn("rostered", col("uid") % 5 =!= 0)
       .groupBy(col("tile"), col("team"), col("rostered"))
       .agg(count(lit(1)).as("e"), sum("km_e6").as("km_e6"),
@@ -219,20 +218,8 @@ object ImagePipeline {
     * division — q46), km rounded per segment then summed as longs (q45).
     * ONE shuffle on (team, day); partial aggregation absorbs the metro skew
     * map-side exactly like the tile rollups. */
-  def dailyPointSummaries(spark: SparkSession, n: Long, parts: Int = 16): DataFrame = {
-    import graft.functions.SeedExprs
-    val f = pipFiltered(spark, n, parts)
-      .withColumn("noun_id", SeedExprs.metaNounId(col("idx")))
-      .withColumn("dlon", SeedExprs.segDLon(col("idx")))
-      .withColumn("dlat", SeedExprs.segDLat(col("idx")))
-      .withColumn("team", element_at(lit(teamNames.toArray), col("team_id") + 1))
-    val kmE6 = when(col("noun_id") === 1,
-      floor(graft.spatial.SpatialQueries.haversineKmCol(
-        col("lat"), col("lon"), col("lat") + col("dlat"), col("lon") + col("dlon"))
-        * lit(1e6) + lit(0.5)).cast("long")).otherwise(0L)
-    f.withColumn("km_e6", kmE6)
-      .withColumn("is_b", when(col("noun_id") === 0, 1L).otherwise(0L))
-      .withColumn("is_p", when(col("noun_id").isin(3, 4), 1L).otherwise(0L))
+  def dailyPointSummaries(spark: SparkSession, n: Long): DataFrame =
+    measured(spark, n)
       .withColumn("lon_e6", floor(col("lon") * lit(1e6) + lit(0.5)).cast("long"))
       .withColumn("lat_e6", floor(col("lat") * lit(1e6) + lit(0.5)).cast("long"))
       .groupBy(col("team"), col("day"))
@@ -242,7 +229,6 @@ object ImagePipeline {
           .cast("long").as("c_lon_e6"),
         floor(sum(col("lat_e6")).cast("double") / count(lit(1)) + lit(0.5))
           .cast("long").as("c_lat_e6"))
-  }
 
   /** The `objects` layer as PER-FEATURE emission (map-contribution-extractor
     * .js:164-192): one output feature per input feature carrying the
@@ -251,10 +237,10 @@ object ImagePipeline {
     * with from_json, so the gate hashes the sink's actual output row for row
     * (the q47 pattern, but per-feature instead of aggregated). Scale shape:
     * pure map — no shuffle at all; the sink writes partition-local files. */
-  def objectFeatures(spark: SparkSession, n: Long, parts: Int = 16): DataFrame = {
+  def objectFeatures(spark: SparkSession, n: Long): DataFrame = {
     import graft.functions.SeedExprs
     val names = metroBoundaries.map(_.id).toArray
-    val f = pipFiltered(spark, n, parts)
+    val f = pipFiltered(spark, n, GateParts)
       .withColumn("team", element_at(lit(teamNames.toArray), col("team_id") + 1))
       .withColumn("noun_id", SeedExprs.metaNounId(col("idx")))
     val props = f.select(col("lon"), col("lat"), col("idx"),
@@ -286,23 +272,25 @@ object ImagePipeline {
     * [[graft.spatial.TileAssign.withTileMultiZoom]] emits every feature's cell at
     * every requested zoom via bit-shift parent derivation (one encode at
     * z-max, no re-encoding), then one rollup per (zoom, cell, team). */
-  def multiZoomRollup(spark: SparkSession, n: Long, parts: Int = 16,
-                      zooms: Seq[Int] = Seq(8, 10, 12)): DataFrame = {
-    val f = pipFiltered(spark, n, parts)
+  def multiZoomRollup(spark: SparkSession, n: Long): DataFrame = {
+    val f = pipFiltered(spark, n, GateParts)
       .withColumn("team", element_at(lit(teamNames.toArray), col("team_id") + 1))
-    graft.spatial.TileAssign.withTileMultiZoom(f, "lon", "lat", zooms)
+    graft.spatial.TileAssign.withTileMultiZoom(f, "lon", "lat", RollupZooms)
       .groupBy(col("zoom"), col("cell_id"), col("team"))
       .agg(count(lit(1)).as("n_edits"), countDistinct(col("uid")).as("n_users"))
   }
+
+  /** The zoom bands of [[multiZoomRollup]], which its q49 oracle reads. */
+  val RollupZooms = Seq(8, 10, 12)
 
   /** Per-tile center coordinates (X9 — the reference's
     * `turf.center(tilebelt.tileToGeoJSON(tile))` for its tilePointSummaries
     * point geometry, util/map-contribution-extractor.js:279): distinct AOI
     * tiles with their feature counts and inverse-web-mercator centers in e6
     * fixed-point. */
-  def tileCenters(spark: SparkSession, n: Long, parts: Int = 16): DataFrame = {
+  def tileCenters(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._
-    pipFiltered(spark, n, parts)
+    pipFiltered(spark, n, GateParts)
       .groupBy(col("tile")).agg(count(lit(1)).as("n_feats"))
       .as[(Long, Long)]
       .mapPartitions(_.map { case (t, nf) =>
@@ -319,8 +307,7 @@ object ImagePipeline {
     * whole scan→derive→encode→PIP→partial-agg pipeline is ONE WholeStageCodegen
     * span with zero per-row JVM allocation. 2.5-4x the Dataset path at high
     * core counts, where the typed path is allocator-bound. */
-  def fastFeatures(spark: SparkSession, n: Long, parts: Int,
-                   hexRes: Int = 7, tileZ: Int = 12, s2Level: Int = 12): DataFrame = {
+  def fastFeatures(spark: SparkSession, n: Long, parts: Int): DataFrame = {
     import graft.functions.SeedExprs
     spark.range(0L, n, 1L, parts).toDF("idx")
       .select(col("idx"),
@@ -329,9 +316,9 @@ object ImagePipeline {
         SeedExprs.metaUid(col("idx")).as("uid"),
         SeedExprs.metaDay(col("idx")).as("day"),
         SeedExprs.metaTeamId(col("idx")).as("team_id"))
-      .withColumn("tile", graft.index.Quadkey.cellIdCol(col("lon"), col("lat"), tileZ))
-      .withColumn("hex", SeedExprs.hexCell(col("lat"), col("lon"), hexRes))
-      .withColumn("s2", SeedExprs.s2Cell(col("lat"), col("lon"), s2Level))
+      .withColumn("tile", graft.index.Quadkey.cellIdCol(col("lon"), col("lat"), TileZ))
+      .withColumn("hex", SeedExprs.hexCell(col("lat"), col("lon"), HexRes))
+      .withColumn("s2", SeedExprs.s2Cell(col("lat"), col("lon"), S2Level))
   }
 
   private val teamNames = Seq("kll", "msf", "dcx", "hot")

@@ -3,7 +3,7 @@ package graft.pipeline
 import java.awt.image.{BufferedImage, ComponentColorModel, DataBufferByte, DataBufferInt,
   PixelInterleavedSampleModel, SinglePixelPackedSampleModel}
 import javax.imageio.ImageIO
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.synth.ImageSynth
 

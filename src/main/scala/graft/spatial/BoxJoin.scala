@@ -82,10 +82,8 @@ object BoxJoin {
         lit(if (dx == 0 && dy == 0) 4L else if (dx == 0 || dy == 0) 2L else 1L)
           .as("w"))): _*)
     pts.select(
-        least(floor((col("lon") + 180.0) / 360.0 * 64.0), lit(63.0))
-          .cast("long").as("tx"),
-        least(floor((col("lat") + 90.0) / 180.0 * 64.0), lit(63.0))
-          .cast("long").as("ty"))
+        ZOrder.gridX(col("lon"), 6).as("tx"),
+        ZOrder.gridY(col("lat"), 6).as("ty"))
       .withColumn("o", explode(offs))
       .select((col("tx") + col("o.dx")).as("x"), (col("ty") + col("o.dy")).as("y"),
         col("o.w"))
@@ -104,10 +102,8 @@ object BoxJoin {
     * table needs before bucketing (SkewSpec's subject, as an operator). */
   def adaptiveTiles(spark: SparkSession, dir: String, cap: Long = 15L): DataFrame = {
     val g = SpatialQueries.eventPoints(spark, dir).select(
-      least(floor((col("lon") + 180.0) / 360.0 * 256.0), lit(255.0))
-        .cast("long").as("x8"),
-      least(floor((col("lat") + 90.0) / 180.0 * 256.0), lit(255.0))
-        .cast("long").as("y8"))
+      ZOrder.gridX(col("lon"), 8).as("x8"),
+      ZOrder.gridY(col("lat"), 8).as("y8"))
     val c8 = g.groupBy(col("x8"), col("y8"),
         expr("x8 div 4").as("x6"), expr("y8 div 4").as("y6"))
       .agg(count(lit(1)).as("n"))
@@ -134,10 +130,8 @@ object BoxJoin {
       struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy"),
         lit(1000000L / (1L + dx * dx + dy * dy)).as("w"))): _*)
     pts.select(
-        least(floor((col("lon") + 180.0) / 360.0 * 64.0), lit(63.0))
-          .cast("long").as("tx"),
-        least(floor((col("lat") + 90.0) / 180.0 * 64.0), lit(63.0))
-          .cast("long").as("ty"),
+        ZOrder.gridX(col("lon"), 6).as("tx"),
+        ZOrder.gridY(col("lat"), 6).as("ty"),
         floor(col("value") * 100.0 + 0.5).cast("long").as("cents"))
       .withColumn("o", explode(offs))
       .select((col("tx") + col("o.dx")).as("x"), (col("ty") + col("o.dy")).as("y"),
@@ -170,10 +164,8 @@ object BoxJoin {
     val total = table(spark, dir, "events").count()
     val minPts = math.max(1L, minPtsBp * total / 10000L)
     val hot = s.checkpoint(SpatialQueries.eventPoints(spark, dir).select(
-        least(floor((col("lon") + 180.0) / 360.0 * 64.0), lit(63.0))
-          .cast("long").as("x"),
-        least(floor((col("lat") + 90.0) / 180.0 * 64.0), lit(63.0))
-          .cast("long").as("y"))
+        ZOrder.gridX(col("lon"), 6).as("x"),
+        ZOrder.gridY(col("lat"), 6).as("y"))
       .groupBy("x", "y").agg(count(lit(1)).as("n"))
       .where(col("n") >= minPts)
       .withColumn("tid", col("x") * 64 + col("y"))) // consumed by 2 adjacency joins + the final rollup

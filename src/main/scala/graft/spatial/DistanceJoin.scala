@@ -41,8 +41,8 @@ object DistanceJoin {
     * per axis (round-5 measurement: 6.1 s → ~1 s at sf0.1, identical
     * 144,788-pair output, still gated against the honest all-pairs
     * oracle). */
-  def pairsWithin(spark: SparkSession, dir: String,
-                  dKm: Double = 15.0, zoom: Int = 8): DataFrame = {
+  def pairsWithin(spark: SparkSession, dir: String): DataFrame = {
+    val dKm = 15.0; val zoom = 8
     val n = 1 << zoom
     val pts = SpatialQueries.eventPoints(spark, dir)
       .filter(abs(col("lat")) <= lit(84.0))

@@ -39,18 +39,17 @@ object Knn {
   val RingCap = 64
 
   /** Exact kNN: returns (qid, point_id, rank) with rank 1..k by
-    * (distance, point_id). `points` needs columns (idCol, lonCol, latCol). */
+    * (distance, point_id). `points` needs columns (idCol, lon, lat). */
   def knn(points: DataFrame, queries: Seq[QueryPoint], k: Int,
-          idCol: String = "id", lonCol: String = "lon", latCol: String = "lat",
-          res: Int = 7): DataFrame = {
+          idCol: String = "id", res: Int = 7): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions.col
 
     val pts = points.select(
       col(idCol).cast("long").as("pid"),
-      col(lonCol).cast("double").as("lon"),
-      col(latCol).cast("double").as("lat"))
+      col("lon").cast("double").as("lon"),
+      col("lat").cast("double").as("lat"))
 
     // ---- pass 1: per-cell density near the queries --------------------
     val qCells = queries.map(q => q.qid -> Hex.latLngToCell(q.lat, q.lon, res)).toMap

@@ -68,7 +68,7 @@ object SpatialQueries {
 
   def knnHexRing(spark: SparkSession, dir: String): DataFrame =
     Knn.knn(eventPoints(spark, dir), knnQueries, k = 5,
-      idCol = "event_id", lonCol = "lon", latCol = "lat", res = 3)
+      idCol = "event_id", res = 3)
 
   /** Great-circle distance in km (haversine), re-expressing turf.lineDistance
     * per segment (reference: util/map-contribution-extractor.js:21-33, turf

@@ -27,9 +27,9 @@ object ZOrder {
         (shiftright(iy, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i + 1)))
     }.reduce(_ + _)
 
-  /** Web-mercator grid coordinate at 2^bits resolution (same tile math as
-    * Quadkey, linear in lat for the oracle's benefit — the clustering key
-    * needs monotonicity, not conformality). */
+  /** Equirectangular grid coordinate at 2^bits cells per axis, clamped to the
+    * last cell (the clustering key needs monotonicity, not conformality);
+    * every grid-tiled query shares it. */
   def gridX(lon: Column, bits: Int): Column =
     least(floor((lon + lit(180.0)) / lit(360.0) * lit((1L << bits).toDouble)),
       lit((1L << bits) - 1.0)).cast("long")
@@ -40,11 +40,14 @@ object ZOrder {
   /** Gate query (q91): morton code at 10 bits/axis over the event points,
     * rolled up by 64-code z-range bucket — counts plus the bucket's code
     * span (the min/max that file-skipping statistics would record). */
-  def mortonRollup(spark: SparkSession, dir: String, bits: Int = 10): DataFrame =
+  def mortonRollup(spark: SparkSession, dir: String): DataFrame =
     SpatialQueries.eventPoints(spark, dir)
-      .select(mortonCol(gridX(col("lon"), bits), gridY(col("lat"), bits), bits)
+      .select(mortonCol(gridX(col("lon"), RollupBits), gridY(col("lat"), RollupBits), RollupBits)
         .as("morton"))
       .groupBy(shiftright(col("morton"), 6).as("zbucket"))
       .agg(count(lit(1)).as("n"), min(col("morton")).as("min_code"),
         max(col("morton")).as("max_code"))
+
+  /** [[mortonRollup]]'s bits per axis; its q91 oracle reads it. */
+  val RollupBits = 10
 }

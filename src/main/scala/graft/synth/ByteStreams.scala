@@ -44,8 +44,8 @@ final class ByteArrayImageInputStream extends ImageInputStreamImpl {
   override def close(): Unit = () // reusable — never actually closes
 }
 
-final class ByteArrayImageOutputStream(initial: Int = 8192) extends ImageOutputStreamImpl {
-  private var buf = new Array[Byte](initial)
+final class ByteArrayImageOutputStream extends ImageOutputStreamImpl {
+  private var buf = new Array[Byte](8192)
   private var size = 0
 
   /** Rewind for the next image (reuse path). */

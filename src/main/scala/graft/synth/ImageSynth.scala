@@ -143,7 +143,7 @@ object ImageSynth {
   private val pngWriter = ThreadLocal.withInitial[javax.imageio.ImageWriter](() =>
     ImageIO.getImageWritersByFormatName("png").next())
   private val outStream = ThreadLocal.withInitial[ByteArrayImageOutputStream](() =>
-    new ByteArrayImageOutputStream())
+    new ByteArrayImageOutputStream)
 
   def encode(img: BufferedImage, fmt: String): Array[Byte] = {
     // reused per-thread Disposer/finalizer-free stream (see ByteStreams)

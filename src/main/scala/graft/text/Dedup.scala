@@ -112,18 +112,16 @@ object Dedup {
   /** MinHash + LSH near-dup pipeline, verification-grade: signature (k
     * hashes) → bands → band-hash bucket join → candidate pairs → EXACT
     * Jaccard verification of candidates only (shingle-hash equi-join) →
-    * pairs with true Jaccard ≥ threshold.
+    * pairs with true Jaccard ≥ 0.5.
     *
     * Scale shape: documents are read once in mapPartitions (signer); only
     * (doc_id, band, bucket) rows enter the banding shuffle (no signatures, no
     * vectors, no text); exact verification touches only candidate pairs.
     * The gate oracle computes all-pairs exact Jaccard in SQL — so the gate
     * ALSO proves LSH recall = 1.0 at this threshold on this corpus. */
-  def minhashLsh(spark: SparkSession, dir: String, k: Int = 32, bands: Int = 8,
-                 w: Int = 3, threshold: Double = 0.5, maxBucket: Int = 64): DataFrame =
+  def minhashLsh(spark: SparkSession, dir: String, maxBucket: Int = 64): DataFrame =
     CacheOps.scope { s =>
     import spark.implicits._
-    val kk = k; val ww = w
     // one pass: doc -> (id, signature, distinct shingle hashes),
     // localCheckpoint'ed ONCE because THREE consumers read it (banding, and
     // both sides of the exact-verify join) — without it the scan + shingling
@@ -137,8 +135,8 @@ object Dedup {
       .as[(Long, String)]
       .mapPartitions { it =>
         it.map { case (id, text) =>
-          val shs = shingleHashes(text, ww)
-          (id, minhashSigFromHashes(shs, kk), shs)
+          val shs = shingleHashes(text, ShingleW)
+          (id, minhashSigFromHashes(shs, MinhashK), shs)
         }
       }.toDF("doc_id", "sig", "shs"))
     // (A static-planner loop-width wrapper around the verify was tried
@@ -146,7 +144,7 @@ object Dedup {
     // builds, so AQE-off bought nothing measurable, and it would forfeit
     // AQE's skew-join splitting exactly where a production-scale verify
     // falls back to shuffle joins.)
-    val cand = minhashCandidates(signed, bands, k / bands, maxBucket)
+    val cand = minhashCandidates(signed, MinhashBands, MinhashK / MinhashBands, maxBucket)
     // exact verification: intersect candidate pairs' shingle-hash sets
     val ex = signed.select(col("doc_id"), size(col("shs")).as("n_sh"),
       explode(col("shs")).as("gh"))
@@ -162,9 +160,14 @@ object Dedup {
     // splits, the gate count) read the small materialized pairs
     s.checkpoint(inter
       .withColumn("j_bp", floor(col("common") * 10000.0 / (col("na") + col("nb") - col("common"))).cast("long"))
-      .filter(col("j_bp") >= (threshold * 10000).toLong)
+      .filter(col("j_bp") >= 5000L)
       .select(col("a"), col("b"), col("common"), col("j_bp")))
   }
+
+  /** Shingle width of every n-gram path; [[minhashLsh]]'s signature length and bands. */
+  private val ShingleW = 3
+  private val MinhashK = 32
+  private val MinhashBands = 8
 
   /** LSH band-bucket candidate pairs with a hot-bucket bound: band the
     * signatures, then delegate to [[boundedPairs]]. The bucket-size agg and
@@ -246,12 +249,16 @@ object Dedup {
     * (4 equal minhashes), so its buckets stay small on benign corpora
     * (measured max 5 at sf0.1) and a tight 64 cap only engages on true
     * dup-cluster blowups. */
-  def simhashPairs(spark: SparkSession, dir: String, maxHam: Int = 3,
-                   maxBucket: Int = 1024): DataFrame = {
+  def simhashPairs(spark: SparkSession, dir: String, maxBucket: Int = SegmentCap): DataFrame = {
     val sh = udf(simhash64 _)
     val df = table(spark, dir, "documents").select(col("doc_id"), sh(col("text")).as("sh"))
-    simhashCandidatePairs(df, maxHam, maxBucket)
+    simhashCandidatePairs(df, MaxHam, maxBucket)
   }
+
+  /** Hamming radius (the 4-segment pigeonhole guarantee) and hot-segment cap
+    * of the simhash and phash near-dup paths. */
+  val MaxHam = 3
+  val SegmentCap = 1024
 
   /** Pigeonhole candidate join over a (doc_id, sh) fingerprint table, with
     * the same hot-bucket dual-star bound as [[boundedPairs]] (a segment
@@ -476,12 +483,11 @@ object Dedup {
 
   /** n-gram Jaccard near-dup, exact (the verification-grade variant):
     * explode distinct shingles, DROP shingles with document frequency >
-    * `maxDf` (standard near-dup practice — one hot boilerplate shingle
+    * 5 (standard near-dup practice — one hot boilerplate shingle
     * otherwise makes the self-join quadratic at scale), equi-join on
     * shingle, count intersection, Jaccard over the CAPPED shingle sets.
     * Bucketed by `source` to bound pairs. */
-  def ngramJaccard(spark: SparkSession, dir: String, w: Int = 3, minJ: Double = 0.2,
-                   maxDf: Int = 5): DataFrame = CacheOps.scope { s =>
+  def ngramJaccard(spark: SparkSession, dir: String): DataFrame = CacheOps.scope { s =>
     import spark.implicits._
     // distinct shingle HASHES, not strings: the df rollup and both sides of
     // the intersection self-join exchange 8-byte longs instead of w-token
@@ -494,13 +500,13 @@ object Dedup {
     val d = table(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("text"))
       .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, src, text) => (id, src, shingleHashes(text, w)) })
+      .mapPartitions(_.map { case (id, src, text) => (id, src, shingleHashes(text, ShingleW)) })
       .toDF("doc_id", "source", "sh")
     val ex = d.select(col("doc_id"), col("source"), explode(col("sh")).as("g"))
     // document-frequency cap: the df agg and the semi-join both shuffle on g,
     // the same key as the intersection self-join below — one partitioning
     val dfok = ex.groupBy(col("g")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf).select(col("g"))
+      .filter(col("df") <= 5).select(col("g"))
     val exc = ex.join(dfok, Seq("g"))
     val n = exc.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     val exn = s.checkpoint(exc.join(n, Seq("doc_id")))
@@ -512,7 +518,7 @@ object Dedup {
       .agg(count(lit(1)).as("common"))
     inter
       .withColumn("j_bp", floor(col("common") * 10000.0 / (col("na") + col("nb") - col("common"))).cast("long"))
-      .filter(col("j_bp") >= (minJ * 10000).toLong)
+      .filter(col("j_bp") >= 2000L)
       .select(col("a"), col("b"), col("common"), col("j_bp"))
   }
 
@@ -556,16 +562,14 @@ object Dedup {
     * representation that catches a 64-bit collision. Output: every train doc
     * with its distinct-shingle count, overlap count, overlap in basis points
     * and the contaminated verdict. */
-  def decontaminate(spark: SparkSession, dir: String, evalMax: Long = 25L,
-                    w: Int = 3, minOverlapBp: Long = 2000L): DataFrame = {
+  def decontaminate(spark: SparkSession, dir: String, evalMax: Long = 25L): DataFrame = {
     import spark.implicits._
-    val ww = w
     // filter BEFORE the typed shingling map — a predicate above mapPartitions
     // cannot push past it, so each side's doc_id range reaches the parquet
     // scan (PushedFilters) and neither pass shingles the other side's docs
     def shingled(pred: org.apache.spark.sql.Column) = table(spark, dir, "documents")
       .select(col("doc_id"), col("text")).filter(pred).as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) => (id, shingleHashes(text, ww)) })
+      .mapPartitions(_.map { case (id, text) => (id, shingleHashes(text, ShingleW)) })
       .toDF("doc_id", "sh")
     val evalSet = shingled(col("doc_id") < evalMax)
       .select(explode(col("sh")).as("g")).distinct()
@@ -581,7 +585,7 @@ object Dedup {
       }
       .toDF("doc_id", "n_sh", "n_overlap", "overlap_bp")
       .withColumn("contaminated",
-        when(col("overlap_bp") >= minOverlapBp, 1L).otherwise(0L))
+        when(col("overlap_bp") >= 2000L, 1L).otherwise(0L))
   }
 
   /** Cross-document duplicated-SPAN detection — substring-level exact dedup

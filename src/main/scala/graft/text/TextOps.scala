@@ -61,8 +61,7 @@ object TextOps {
     * algebra (split → slide → array_distinct → aggregate over
     * sorted tokens for the mode count), so the whole thing stays inside
     * whole-stage codegen; one scan, no shuffle. */
-  def repetitionFilter(spark: SparkSession, dir: String,
-                       maxRepBp: Long = 3000L): DataFrame = {
+  def repetitionFilter(spark: SparkSession, dir: String): DataFrame = {
     val t = toks
     val n = size(t)
     // word bigrams: tok[i] + ' ' + tok[i+1] for i in 0..n-2 (degenerate
@@ -89,7 +88,7 @@ object TextOps {
       nDist.cast("long").as("n_distinct_bigrams"),
       (((nBg - nDist) * 10000L) / nBg).cast("long").as("dup_bigram_bp"),
       ((mode * 10000L) / n).cast("long").as("top_token_bp"),
-      ((((nBg - nDist) * 10000L) / nBg) < maxRepBp).as("kept"))
+      ((((nBg - nDist) * 10000L) / nBg) < 3000L).as("kept"))
   }
 
   /** Token counting: whitespace tokens + a BPE-ish estimate (ceil(chars/4) —
@@ -230,7 +229,10 @@ object TextOps {
       .toDF("fp_bucket", "n")
   }
 
-  /** BM25 term salience, EXACT-RATIONAL variant — per document, the topK
+  /** [[bm25TopTerms]]' terms per document; its q80 oracle reads it. */
+  val Bm25TopK = 5
+
+  /** BM25 term salience, EXACT-RATIONAL variant — per document, the [[Bm25TopK]]
     * highest-weighted terms under Okapi BM25 with k1 = 6/5, b = 3/4 and the
     * Robertson idf kept as a RATIO instead of its logarithm:
     *
@@ -255,7 +257,7 @@ object TextOps {
     * tf already carries. Strings shuffle once (tokens are the payload);
     * at 10^12 rows the term dictionary would be hash-encoded first, which
     * is q02's keytables operator composed in front. */
-  def bm25TopTerms(spark: SparkSession, dir: String, topK: Int = 5): DataFrame = {
+  def bm25TopTerms(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val tok = table(spark, dir, "documents")
       .select(col("doc_id"), explode(toks).as("term"))
@@ -275,7 +277,7 @@ object TextOps {
       }.toDF("doc_id", "term", "score_e6")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("score_e6").desc, col("term"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= topK)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= Bm25TopK)
       .select(col("doc_id"), col("term"), col("score_e6"),
         col("rank").cast("int").as("rank"))
   }

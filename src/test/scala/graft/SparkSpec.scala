@@ -297,6 +297,27 @@ class AnnSparkSpec extends AnyFunSuite {
     }
   }
 
+  test("a dir tier opens embeddings once: bruteTopK's construction infers the schema in one job") {
+    import spark.implicits._
+    val r = new Prop.Rng(43)
+    val dir = java.nio.file.Files.createTempDirectory("annopen").toString
+    (0 until 50).map(i => (i.toLong, Array.fill(4)(r.double(-1, 1))))
+      .toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")
+    val sc = spark.sparkContext
+    org.apache.spark.sql.GraftShim.drainListenerBus(sc)
+    val inference = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.stageInfos.exists(_.name.startsWith("parquet at "))) inference.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      Ann.bruteTopK(spark, dir)
+      org.apache.spark.sql.GraftShim.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(inference.get() == 1, s"schema-inference jobs: ${inference.get()}")
+  }
+
   test("filteredTopK: only qualifying candidates ranked; predicate reaches the scan") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
