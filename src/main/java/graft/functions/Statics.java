@@ -14,26 +14,24 @@ public final class Statics {
   }
 
   public static double geotagLon(long i) {
-    return (Double) graft.synth.Geotag$.MODULE$.of(seedOf(i))._1();
+    return graft.synth.Geotag$.MODULE$.lonOf(seedOf(i));
   }
 
   public static double geotagLat(long i) {
-    return (Double) graft.synth.Geotag$.MODULE$.of(seedOf(i))._2();
+    return graft.synth.Geotag$.MODULE$.latOf(seedOf(i));
   }
 
   public static long metaUid(long i) {
-    return (Long) graft.synth.ImageSynth$.MODULE$.metaOf(seedOf(i))._1();
+    return graft.synth.ImageSynth$.MODULE$.uidOf(seedOf(i));
   }
 
   public static long metaDay(long i) {
-    return (Long) graft.synth.ImageSynth$.MODULE$.metaOf(seedOf(i))._3();
+    return graft.synth.ImageSynth$.MODULE$.dayOf(seedOf(i));
   }
 
   /** Team ordinal 0..3 (kll, msf, dcx, hot) — string resolved post-agg. */
   public static int metaTeamId(long i) {
-    long seed = seedOf(i);
-    long m = graft.synth.ImageSynth$.MODULE$.mix(seed ^ 19L);
-    return (int) ((m & 0x7FFFFFFFL) % 4L);
+    return graft.synth.ImageSynth$.MODULE$.teamIdOf(seedOf(i));
   }
 
   /** splitmix64(x) reduced to basis points [0, 10000) — the deterministic
@@ -47,13 +45,12 @@ public final class Statics {
     return graft.synth.ImageSynth$.MODULE$.nounIdOf(seedOf(i));
   }
 
-  /** Changeset id draw — metaOf._4 inlined (the Tuple5 path would box 5
-   *  fields and fetch the team string per row inside codegen). */
+  /** Changeset id draw, the `@c` of ImageSynth's editing metadata. */
   public static long metaCs(long i) {
     return (graft.synth.ImageSynth$.MODULE$.mix(seedOf(i) ^ 29L) & 0x7FFFFFFFL) % 100000L;
   }
 
-  /** Version draw — metaOf._5 inlined, same reason. */
+  /** Version draw, the `@v` of ImageSynth's editing metadata. */
   public static long metaVer(long i) {
     return 1L + (graft.synth.ImageSynth$.MODULE$.mix(seedOf(i) ^ 31L) & 0x7FFFFFFFL) % 9L;
   }

@@ -220,7 +220,7 @@ object Dev {
       w.print("lat_bits,ty_bits,ty_tile\n")
       var i = 0L
       while (i < n) {
-        val (_, lat) = Geotag.of(ImageSynth.seedOf(i))
+        val lat = Geotag.latOf(ImageSynth.seedOf(i))
         w.print(s"${java.lang.Double.doubleToRawLongBits(lat)}," +
           s"${java.lang.Double.doubleToRawLongBits(Quadkey.tileYRaw(lat, 12))},${Quadkey.tileY(lat, 12)}\n")
         i += 1

@@ -228,10 +228,10 @@ object OracleSql {
   }
 
   /** Geotag/meta/tile/PIP derivation CTEs shared by q32/q38/q45/q46/q49/q56
-    * and the round-4 layers — mirrors Geotag.of + ImageSynth.metaOf + Quadkey
-    * z12 + the metro-box PIP with the identical double-arithmetic operation
-    * order. Ends in `pj` with columns (idx, uid, team, lon, lat, tile,
-    * boundary_id). Oracles needing additional seed draws pass them via
+    * and the round-4 layers — mirrors Geotag.lonOf/latOf + ImageSynth.uidOf/
+    * teamOf/dayOf + Quadkey z12 + the metro-box PIP with the identical
+    * double-arithmetic operation order. Ends in `pj` with columns (idx, uid,
+    * team, lon, lat, tile, boundary_id). Oracles needing additional seed draws pass them via
     * `extraHashes` (name → xor constant) with the derived columns in
     * `extraG` (expressions over the hash columns) — carried through pt by
     * name. */
@@ -414,7 +414,7 @@ object OracleSql {
     * map-contribution-extractor.js:164-192): ONE ROW PER FEATURE with the
     * short-key property projection (u,h,c,t,v,m,n,r — uid, handle,
     * changeset, timestamp-day, version, team, noun class, region) and the
-    * e6 geometry. The changeset/version draws mirror ImageSynth.metaOf
+    * e6 geometry. The changeset/version draws mirror Statics.metaCs/metaVer
     * (mix(seed^29) % 100000, 1 + mix(seed^31) % 9). The engine side must
     * round-trip every row through the REAL geojsonseq sink (emit → from_json
     * parse-back), so a hash match proves the emission, the short-key
@@ -829,68 +829,72 @@ object OracleSql {
   private val HllM = 1 << Sketches.HllP
   private val HllRmax = 64 - Sketches.HllP + 1
 
-  /** q87: the HLL register file + raw estimate replayed in SQL. ρ uses the
-    * bin()-length identity (clz(x) = 64 − length(bin(x)) for x ≠ 0 —
-    * integer-string arithmetic, no FP log); the harmonic sum and the
-    * α·m²·2^59/S estimate are HUGEINT-exact, mirroring the engine's BigInt. */
-  def q87: String = {
-    s"""WITH h AS (SELECT ${mix("l_partkey")} AS hm FROM lineitem),
-       |b AS (SELECT (hm >> ${64 - Sketches.HllP}) AS bucket,
+  /** The HLL register CTEs over `h(hm)`: `b` (bucket and remainder), `rh`
+    * (ρ), `regs` (the register file) and `s` (its harmonic sum `sv`), one
+    * register file per value of `group` (grid via CROSS JOIN range(m)), or
+    * one for the whole relation. ρ uses the bin()-length identity
+    * (clz(x) = 64 − length(bin(x)) for x ≠ 0 — integer-string arithmetic, no
+    * FP log). */
+  private def hllCtes(group: Option[String]): String = {
+    val sum = s"sum((1::HUGEINT << ($HllRmax - r)))::HUGEINT AS sv"
+    val regs = group match {
+      case None =>
+        s"""regs AS (SELECT r.b AS bucket, coalesce(max(rho), 0)::BIGINT AS r
+           |         FROM range($HllM) r(b) LEFT JOIN rh ON rh.bucket = r.b GROUP BY 1),
+           |s AS (SELECT $sum FROM regs)"""
+      case Some(g) =>
+        s"""grp AS (SELECT DISTINCT $g FROM h),
+           |regs AS (SELECT g.$g, r.b AS bucket, coalesce(max(rho), 0)::BIGINT AS r
+           |         FROM grp g CROSS JOIN range($HllM) r(b)
+           |         LEFT JOIN rh ON rh.$g = g.$g AND rh.bucket = r.b
+           |         GROUP BY 1, 2),
+           |s AS (SELECT $g, $sum
+           |      FROM regs GROUP BY 1)"""
+    }
+    val g = group.fold("")(_ + ", ")
+    s"""b AS (SELECT $g(hm >> ${64 - Sketches.HllP}) AS bucket,
        |        ((hm::HUGEINT * $HllM) % $M64)::UBIGINT AS rest FROM h),
-       |rh AS (SELECT bucket,
+       |rh AS (SELECT ${g}bucket,
        |        CASE WHEN rest = 0 THEN $HllRmax ELSE 65 - length(bin(rest)) END AS rho FROM b),
-       |regs AS (SELECT r.b AS bucket, coalesce(max(rho), 0)::BIGINT AS r
-       |         FROM range($HllM) r(b) LEFT JOIN rh ON rh.bucket = r.b GROUP BY 1),
-       |s AS (SELECT sum((1::HUGEINT << ($HllRmax - r)))::HUGEINT AS sv FROM regs)
-       |SELECT regs.bucket::BIGINT AS bucket, regs.r,
-       |  ((709::HUGEINT * $HllM * $HllM * (1::HUGEINT << $HllRmax)) // (1000::HUGEINT * s.sv))::BIGINT AS est_distinct
-       |FROM regs, s""".stripMargin
+       |$regs""".stripMargin
   }
 
-  /** q99: per-group HLL raw estimates replayed (grouped q87 — same register
-    * derivation, (group × bucket) grid via CROSS JOIN range(m)). */
-  def q99: String = {
+  /** The raw HLL estimate α·m²·2^59/S from the harmonic sum `sv`, HUGEINT-exact,
+    * mirroring the engine's BigInt. */
+  private def hllEstimate(sv: String): String =
+    s"((709::HUGEINT * $HllM * $HllM * (1::HUGEINT << $HllRmax)) // (1000::HUGEINT * $sv))::BIGINT"
+
+  /** q87: the HLL register file + raw estimate replayed in SQL. */
+  def q87: String =
+    s"""WITH h AS (SELECT ${mix("l_partkey")} AS hm FROM lineitem),
+       |${hllCtes(None)}
+       |SELECT regs.bucket::BIGINT AS bucket, regs.r,
+       |  ${hllEstimate("s.sv")} AS est_distinct
+       |FROM regs, s""".stripMargin
+
+  /** q99: per-group HLL raw estimates replayed (grouped q87). */
+  def q99: String =
     s"""WITH h AS (SELECT event_type, ${mix("user_id")} AS hm FROM events),
-       |b AS (SELECT event_type, (hm >> ${64 - Sketches.HllP}) AS bucket,
-       |        ((hm::HUGEINT * $HllM) % $M64)::UBIGINT AS rest FROM h),
-       |rh AS (SELECT event_type, bucket,
-       |        CASE WHEN rest = 0 THEN $HllRmax ELSE 65 - length(bin(rest)) END AS rho FROM b),
-       |grp AS (SELECT DISTINCT event_type FROM h),
-       |regs AS (SELECT g.event_type, r.b AS bucket, coalesce(max(rho), 0)::BIGINT AS r
-       |         FROM grp g CROSS JOIN range($HllM) r(b)
-       |         LEFT JOIN rh ON rh.event_type = g.event_type AND rh.bucket = r.b
-       |         GROUP BY 1, 2),
-       |s AS (SELECT event_type, sum((1::HUGEINT << ($HllRmax - r)))::HUGEINT AS sv
-       |      FROM regs GROUP BY 1)
+       |${hllCtes(Some("event_type"))}
        |SELECT event_type,
-       |  ((709::HUGEINT * $HllM * $HllM * (1::HUGEINT << $HllRmax)) // (1000::HUGEINT * sv))::BIGINT AS est_users
+       |  ${hllEstimate("sv")} AS est_users
        |FROM s""".stripMargin
-  }
 
   /** q103: the incremental rollup's target relation computed DIRECTLY (no
     * partial/merge step — that asymmetry is the point): per-day counts,
     * cent sums, and the q99-style per-day HLL raw estimate. */
-  def q103: String = {
+  def q103: String =
     s"""WITH e AS (SELECT floor(floor(epoch(ts)) / 86400)::BIGINT AS day, user_id,
        |        floor(value * 100.0 + 0.5)::BIGINT AS vc FROM events),
        |h AS (SELECT day, ${mix("user_id")} AS hm FROM e),
-       |b AS (SELECT day, (hm >> ${64 - Sketches.HllP}) AS bucket,
-       |        ((hm::HUGEINT * $HllM) % $M64)::UBIGINT AS rest FROM h),
-       |rh AS (SELECT day, bucket,
-       |        CASE WHEN rest = 0 THEN $HllRmax ELSE 65 - length(bin(rest)) END AS rho FROM b),
-       |grp AS (SELECT DISTINCT day FROM e),
-       |regs AS (SELECT g.day, r.b AS bucket, coalesce(max(rho), 0)::BIGINT AS r
-       |         FROM grp g CROSS JOIN range($HllM) r(b)
-       |         LEFT JOIN rh ON rh.day = g.day AND rh.bucket = r.b GROUP BY 1, 2),
-       |s AS (SELECT day, sum((1::HUGEINT << ($HllRmax - r)))::HUGEINT AS sv FROM regs GROUP BY 1),
+       |${hllCtes(Some("day"))},
        |est AS (SELECT day,
-       |        ((709::HUGEINT * $HllM * $HllM * (1::HUGEINT << $HllRmax)) // (1000::HUGEINT * sv))::BIGINT AS est_users
+       |        ${hllEstimate("sv")} AS est_users
        |        FROM s),
        |base AS (SELECT day, count(*)::BIGINT AS n_events, sum(vc)::BIGINT AS value_cents
        |         FROM e GROUP BY 1)
        |SELECT base.day, base.n_events, base.value_cents, est.est_users
        |FROM base JOIN est ON base.day = est.day""".stripMargin
-  }
 
   /** q98: the tile-mosaic brightness layer replayed analytically — fmt coin
     * (q33's split) + the four sampled pixels from the synth formula

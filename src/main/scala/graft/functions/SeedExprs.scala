@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftShim
 import org.apache.spark.sql.types._
 import graft.spatial.BoundaryIndex
@@ -66,10 +67,12 @@ case class CellScalar(left: Expression, right: Expression, res: Int, fn: String)
 }
 
 /** (lon, lat) → ordinal of the lowest-id containing boundary (−1 = outside
-  * all), the one point-in-polygon predicate behind every broadcast PIP
-  * ([[graft.spatial.PipJoin]]). The boundary index ships with the serialized
-  * plan and is referenced from generated code via addReferenceObj — the
-  * broadcast-R-tree-per-partition pattern without leaving codegen. */
+  * all) through [[BoundaryIndex.queryFirstOrdinal]], the kernel of every
+  * broadcast PIP. The boundary index ships with the serialized plan and is
+  * referenced from generated code via addReferenceObj — the
+  * broadcast-R-tree-per-partition pattern without leaving codegen. The
+  * engine's joins probe through [[PipHits]]; this scalar form serves
+  * perfbench's traced `pip` prefix. */
 case class PipOrdinal(left: Expression, right: Expression, index: BoundaryIndex)
     extends BinaryExpression with Serializable {
   override def dataType: DataType = IntegerType
@@ -81,6 +84,34 @@ case class PipOrdinal(left: Expression, right: Expression, index: BoundaryIndex)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val idxRef = ctx.addReferenceObj("pipIndex", index, classOf[BoundaryIndex].getName)
     defineCodeGen(ctx, ev, (lo, la) => s"$idxRef.queryFirstOrdinal($lo, $la)")
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** (lon, lat) → the same ordinal as [[PipOrdinal]], as an array of zero or
+  * one element for `explode`: the broadcast PIP probe of [[graft.spatial.PipJoin]].
+  * Under a generator the probe cannot be copied into a pushed-down filter,
+  * so it runs once per row. The arrays are shared, one empty and one per
+  * ordinal, so a row allocates nothing. */
+case class PipHits(left: Expression, right: Expression, index: BoundaryIndex)
+    extends BinaryExpression with Serializable {
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def prettyName: String = "pip_hits"
+
+  // hits(o + 1) is the result for ordinal o; hits(0), for -1, is empty
+  @transient private lazy val hits: Array[ArrayData] =
+    (-1 until index.boundaries.length).map(o =>
+      UnsafeArrayData.fromPrimitiveArray(if (o < 0) Array.emptyIntArray else Array(o)): ArrayData).toArray
+
+  override protected def nullSafeEval(lon: Any, lat: Any): Any =
+    hits(index.queryFirstOrdinal(lon.asInstanceOf[Double], lat.asInstanceOf[Double]) + 1)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val idxRef = ctx.addReferenceObj("pipIndex", index, classOf[BoundaryIndex].getName)
+    val hitsRef = ctx.addReferenceObj("pipHits", hits, s"${classOf[ArrayData].getName}[]")
+    defineCodeGen(ctx, ev, (lo, la) => s"$hitsRef[$idxRef.queryFirstOrdinal($lo, $la) + 1]")
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
@@ -109,4 +140,6 @@ object SeedExprs {
     co(CellScalar(ex(lat), ex(lon), level, "s2Cell"))
   def pipOrdinal(lon: Column, lat: Column, index: BoundaryIndex): Column =
     co(PipOrdinal(ex(lon), ex(lat), index))
+  def pipHits(lon: Column, lat: Column, index: BoundaryIndex): Column =
+    co(PipHits(ex(lon), ex(lat), index))
 }

@@ -34,8 +34,7 @@ object MetroBrightness {
         it.flatMap { r =>
           val i = r.image_id.stripPrefix("img").toLong
           val seed = ImageSynth.seedOf(i)
-          val (lon, lat) = Geotag.of(seed)
-          val b = index.queryFirst(lon, lat)
+          val b = index.queryFirst(Geotag.lonOf(seed), Geotag.latOf(seed))
           if (b == null) None
           else {
             val img = Validate.decode(r.bytes, r.fmt)
@@ -43,7 +42,7 @@ object MetroBrightness {
             var c = 0
             val xs = Array(0, 9, 0, 9); val ys = Array(0, 0, 9, 9)
             while (c < 4) { s += (img.getRGB(xs(c), ys(c)) & 0xFF); c += 1 }
-            Some(BRow(b, ImageSynth.metaOf(seed)._2, s))
+            Some(BRow(b, ImageSynth.teamOf(seed), s))
           }
         }
       }(Encoders.product[BRow])

@@ -41,13 +41,12 @@ object TileMosaic {
         it.map { r =>
           val i = r.image_id.stripPrefix("img").toLong
           val seed = ImageSynth.seedOf(i)
-          val (lon, lat) = Geotag.of(seed)
           val img = Validate.decode(r.bytes, r.fmt)
           var b = 0L
           var c = 0
           val xs = Array(0, 9, 0, 9); val ys = Array(0, 0, 9, 9)
           while (c < 4) { b += (img.getRGB(xs(c), ys(c)) & 0xFF); c += 1 }
-          PxRow(lon, lat, b)
+          PxRow(Geotag.lonOf(seed), Geotag.latOf(seed), b)
         }
       }(Encoders.product[PxRow])
       .toDF()

@@ -43,8 +43,7 @@ object Checkpoint {
   private val GateParts = 8
 
   def bucketOf(seed: Long, buckets: Int): Int = {
-    val (lon, lat) = Geotag.of(seed)
-    val cell = Hex.latLngToCell(lat, lon, HexRes)
+    val cell = Hex.latLngToCell(Geotag.latOf(seed), Geotag.lonOf(seed), HexRes)
     (ImageSynth.mix(cell) & 0x7FFFFFFF).toInt % buckets
   }
 
@@ -254,9 +253,8 @@ object Checkpoint {
           .mapPartitions { it =>
             it.map { case (b, id, bytes, fmt, caption, phash) =>
               val seed = ImageSynth.seedOf(id.stripPrefix("img").toLong)
-              val (lon, lat) = Geotag.of(seed)
               val v = Validate.verdictOf(id, bytes, fmt, caption, phash)
-              (b, Hex.latLngToCell(lat, lon, HexRes), phash,
+              (b, Hex.latLngToCell(Geotag.latOf(seed), Geotag.lonOf(seed), HexRes), phash,
                 if (v.pixels_ok) 1L else 0L, if (v.caption_ok) 1L else 0L)
             }
           }

@@ -65,9 +65,10 @@ object ImagePipeline {
   /** Row `i`'s feature: geotag and meta derived from its id-seed, cells encoded. */
   private def featureOf(i: Long, id: String, phash: Long): Feature = {
     val seed = ImageSynth.seedOf(i)
-    val (lon, lat) = Geotag.of(seed)
-    val (uid, team, day, _, _) = ImageSynth.metaOf(seed)
-    Feature(id, phash, lon, lat, uid, team, day, Quadkey.cellIdOf(lon, lat, TileZ),
+    val lon = Geotag.lonOf(seed)
+    val lat = Geotag.latOf(seed)
+    Feature(id, phash, lon, lat, ImageSynth.uidOf(seed), ImageSynth.teamOf(seed),
+      ImageSynth.dayOf(seed), Quadkey.cellIdOf(lon, lat, TileZ),
       Hex.latLngToCell(lat, lon, HexRes), S2Like.cellIdAt(lat, lon, S2Level))
   }
 
@@ -131,13 +132,15 @@ object ImagePipeline {
       .toDF("uid", "day", "c_lon_e6", "c_lat_e6", "n_pts")
   }
 
-  /** AOI-filtered codegen feature stream: [[fastFeatures]] through
-    * [[PipJoin.withOrdinal]], the one broadcast PIP prologue, which also backs
-    * [[PipJoin.join]] (q17, q38, q46). Every tile gate query (measure matrix,
+  /** AOI-filtered codegen feature stream: the [[fastFeatures]] columns plus
+    * `b_ord`, through [[PipJoin.withOrdinal]], the one broadcast PIP
+    * prologue, which also backs [[PipJoin.join]] (q17, q38, q46). The probe
+    * runs on (idx, lon, lat) before the rest of the feature is derived, so a
+    * row outside every metro pays for no meta or cell encode. Every tile gate query (measure matrix,
     * daily summaries, objects, multi-zoom, centers, flagship run) reads the
     * metro ordinal from its `b_ord` column. */
   private def pipFiltered(spark: SparkSession, n: Long, parts: Int): DataFrame =
-    PipJoin.withOrdinal(fastFeatures(spark, n, parts), metroBoundaries, "lon", "lat")
+    derived(PipJoin.withOrdinal(geotagged(spark, n, parts), metroBoundaries, "lon", "lat"))
 
   /** The tile summaries' (q45, q60) prologue: [[pipFiltered]] features with
     * team name, e6 highway km (rounded per segment), building and POI flags. */
@@ -307,15 +310,25 @@ object ImagePipeline {
     * whole scan→derive→encode→PIP→partial-agg pipeline is ONE WholeStageCodegen
     * span with zero per-row JVM allocation. 2.5-4x the Dataset path at high
     * core counts, where the typed path is allocator-bound. */
-  def fastFeatures(spark: SparkSession, n: Long, parts: Int): DataFrame = {
+  def fastFeatures(spark: SparkSession, n: Long, parts: Int): DataFrame =
+    derived(geotagged(spark, n, parts))
+
+  /** Row indices with their geotag: (idx, lon, lat). */
+  private def geotagged(spark: SparkSession, n: Long, parts: Int): DataFrame = {
     import graft.functions.SeedExprs
     spark.range(0L, n, 1L, parts).toDF("idx")
       .select(col("idx"),
         SeedExprs.geotagLon(col("idx")).as("lon"),
-        SeedExprs.geotagLat(col("idx")).as("lat"),
-        SeedExprs.metaUid(col("idx")).as("uid"),
-        SeedExprs.metaDay(col("idx")).as("day"),
-        SeedExprs.metaTeamId(col("idx")).as("team_id"))
+        SeedExprs.geotagLat(col("idx")).as("lat"))
+  }
+
+  /** [[geotagged]] rows with the rest of the feature: meta and cells. */
+  private def derived(points: DataFrame): DataFrame = {
+    import graft.functions.SeedExprs
+    points
+      .withColumn("uid", SeedExprs.metaUid(col("idx")))
+      .withColumn("day", SeedExprs.metaDay(col("idx")))
+      .withColumn("team_id", SeedExprs.metaTeamId(col("idx")))
       .withColumn("tile", graft.index.Quadkey.cellIdCol(col("lon"), col("lat"), TileZ))
       .withColumn("hex", SeedExprs.hexCell(col("lat"), col("lon"), HexRes))
       .withColumn("s2", SeedExprs.s2Cell(col("lat"), col("lon"), S2Level))

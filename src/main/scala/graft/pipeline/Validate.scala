@@ -122,10 +122,8 @@ object Validate {
     val reference = ImageSynth.render(seed, decoded.getWidth, decoded.getHeight)
     val p = psnr(decoded, reference)
     val pixelsOk = if (fmt == "png") p.isPosInfinity else p >= JpgPsnrFloor
-    val (uid, team, day, _, _) = ImageSynth.metaOf(seed)
-    val expectCaption = ImageSynth.captionOf(seed, uid, team, day)
     Verdict(id, fmt, if (p.isPosInfinity) 99.0 else p,
-      pixelsOk, caption == expectCaption, phash == ImageSynth.phashOf(reference))
+      pixelsOk, caption == ImageSynth.captionOf(seed), phash == ImageSynth.phashOf(reference))
   }
 
   /** Validate a stored image table (must carry image_id, bytes, w, h, fmt,

@@ -9,12 +9,14 @@ import graft.index.Quadkey
   *
   * Two algorithms, one per size of the polygon side:
   *  - [[withOrdinal]] / [[join]]: the polygon set ships with the plan as a
-  *    [[BoundaryIndex]] and every point is probed by the codegen
-  *    `pip_ordinal` expression ([[SeedExprs.pipOrdinal]]): scan → one
-  *    whole-stage-codegen filter, zero shuffles, no per-row JVM object. The
-  *    index's 64×64 grid rejects points far from every boundary with two
-  *    divisions and an array read before any ray-cast runs. This is the one
-  *    broadcast PIP path; the flagship pipeline and the gate queries all run it.
+  *    [[BoundaryIndex]] and every point is probed once, by `explode` over
+  *    the codegen `pip_hits` expression ([[SeedExprs.pipHits]]): scan → one
+  *    whole-stage-codegen generator, zero shuffles, no per-row JVM object.
+  *    The index's 64×64 grid rejects points far from every boundary with two
+  *    divisions and an array read, and each boundary's bbox raster decides
+  *    most of the rest; only points near a ring edge ray-cast. This is the
+  *    one broadcast PIP path; the flagship pipeline and the gate queries all
+  *    run it.
   *  - [[joinViaCellCover]]: a distributed equi-join on cell ids, for polygon
   *    sets too large to ship with every task.
   *
@@ -30,14 +32,14 @@ object PipJoin {
 
   /** Rows whose (lonCol, latCol) fall inside a boundary get the ordinal (the
     * position in `boundaries`) of the lowest-id containing boundary in
-    * `b_ord`; rows outside every boundary, or with a null, NaN or
-    * out-of-range coordinate, drop. */
+    * `b_ord`, the highest position among equal lowest ids; rows outside
+    * every boundary, or with a null, NaN or out-of-range coordinate, drop.
+    * The probe is a generator of 0 or 1 rows, so Catalyst cannot push a
+    * copy of it into a filter: it runs once per row. */
   def withOrdinal(points: DataFrame, boundaries: Seq[Boundary],
                   lonCol: String, latCol: String): DataFrame =
-    points
-      .withColumn("b_ord", SeedExprs.pipOrdinal(col(lonCol), col(latCol),
-        new BoundaryIndex(boundaries.toArray)))
-      .filter(col("b_ord") >= 0)
+    points.withColumn("b_ord", explode(SeedExprs.pipHits(col(lonCol), col(latCol),
+      new BoundaryIndex(boundaries.toArray))))
 
   /** Inner PIP join: [[withOrdinal]] with the boundary's id in `boundary_id`
     * in place of its ordinal. */

@@ -13,10 +13,10 @@ import javax.imageio.ImageIO
   * re-synthesized anywhere (executor-side re-render IS the per-row source of
   * truth the PSNR/caption validators compare against).
   *
-  * Geotags are *derived*, not stored: [[Geotag.of]] maps (image_id-seed) to a
-  * point, 70% clustered into 3 dense "metros" (manufactured skew — the dense
-  * z12-tile problem of the reference, SURVEY.md §4 "Skew handling") and 30%
-  * uniform tail.
+  * Geotags are *derived*, not stored: [[Geotag.lonOf]]/[[Geotag.latOf]] map
+  * (image_id-seed) to a point, 70% clustered into 3 dense "metros"
+  * (manufactured skew — the dense z12-tile problem of the reference,
+  * SURVEY.md §4 "Skew handling") and 30% uniform tail.
   */
 object ImageSynth {
 
@@ -184,22 +184,22 @@ object ImageSynth {
   def segDLat(seed: Long): Double =
     (((mix(seed ^ 67) & 0xFFFFF).toDouble / 0xFFFFF) - 0.5) * 0.02
 
-  def captionOf(seed: Long, uid: Long, team: String, day: Long): String = {
+  /** Editing metadata derived from the seed, one field per function
+    * (uid/team/day here; changeset and version in [[graft.functions.Statics]])
+    * — the `@uid/@c/@v/@timestamp` analog of the reference's QA-tile props
+    * (util/map-contribution-extractor.js:88-96). */
+  def uidOf(seed: Long): Long = (mix(seed ^ 17) & 0x7FFFFFFF) % 500
+  /** Team ordinal 0..3 into kll, msf, dcx, hot. */
+  def teamIdOf(seed: Long): Int = ((mix(seed ^ 19) & 0x7FFFFFFF) % Teams.length).toInt
+  def teamOf(seed: Long): String = Teams(teamIdOf(seed))
+  def dayOf(seed: Long): Long = 18000L + (mix(seed ^ 23) & 0x7FFFFFFF) % 365 // epoch days
+
+  /** The row's caption, as [[rowOf]] writes it and [[graft.pipeline.Validate]]
+    * expects it. */
+  def captionOf(seed: Long): String = {
     val v = CaptionVerbs((mix(seed ^ 11) & 0x7FFFFFFF).toInt % CaptionVerbs.length)
     val n = CaptionNouns(nounIdOf(seed))
-    s"user$uid of $team $v $n on day $day"
-  }
-
-  /** Editing metadata derived from the seed (uid/team/day/changeset/version) —
-    * the `@uid/@c/@v/@timestamp` analog of the reference's QA-tile props
-    * (util/map-contribution-extractor.js:88-96). */
-  def metaOf(seed: Long): (Long, String, Long, Long, Int) = {
-    val uid = (mix(seed ^ 17) & 0x7FFFFFFF) % 500
-    val team = Teams(((mix(seed ^ 19) & 0x7FFFFFFF) % Teams.length).toInt)
-    val day = 18000L + (mix(seed ^ 23) & 0x7FFFFFFF) % 365 // epoch days
-    val changeset = (mix(seed ^ 29) & 0x7FFFFFFF) % 100000
-    val version = 1 + ((mix(seed ^ 31) & 0x7FFFFFFF) % 9).toInt
-    (uid, team, day, changeset, version)
+    s"user${uidOf(seed)} of ${teamOf(seed)} $v $n on day ${dayOf(seed)}"
   }
 
   /** Full row synthesis for index i. */
@@ -209,9 +209,7 @@ object ImageSynth {
     val h = Sizes((mix(seed ^ 3) & 0x7FFFFFFF).toInt % Sizes.length)
     val fmt = if ((mix(seed ^ 5) & 1L) == 0L) "png" else "jpg"
     val img = render(seed, w, h)
-    val (uid, team, day, _, _) = metaOf(seed)
-    ImageRow(idOf(i), encode(img, fmt), w, h, fmt,
-      captionOf(seed, uid, team, day), phashOf(img))
+    ImageRow(idOf(i), encode(img, fmt), w, h, fmt, captionOf(seed), phashOf(img))
   }
 }
 
@@ -225,18 +223,27 @@ object Geotag {
     (2.35, 48.86, 0.25),    // "Paris"
     (106.85, -6.21, 0.45))  // "Jakarta"
 
-  /** Seed → (lon, lat): 70% metro-clustered (skew!), 30% uniform tail. */
-  def of(seed: Long): (Double, Double) = {
+  // the metros' fields as primitive arrays, read per row without unboxing
+  private val MetroLon = Metros.map(_._1)
+  private val MetroLat = Metros.map(_._2)
+  private val MetroSpread = Metros.map(_._3)
+
+  /** Seed → (lon, lat): 70% metro-clustered (skew!), 30% uniform tail. The
+    * two coordinates are separate primitive functions so a per-row caller
+    * allocates no tuple; both branch on the same `mix(seed ^ 41)` draw. */
+  def lonOf(seed: Long): Double = {
     val sel = mix(seed ^ 41)
     if ((sel & 0x7FFFFFFF) % 10 < 7) {
-      val m = Metros(((sel >>> 33) % Metros.length).toInt)
-      val dx = (((mix(seed ^ 43) & 0xFFFFF).toDouble / 0xFFFFF) - 0.5) * 2 * m._3
-      val dy = (((mix(seed ^ 47) & 0xFFFFF).toDouble / 0xFFFFF) - 0.5) * 2 * m._3
-      (m._1 + dx, m._2 + dy)
-    } else {
-      val lon = (mix(seed ^ 53) & 0xFFFFFF).toDouble / 0xFFFFFF * 360.0 - 180.0
-      val lat = (mix(seed ^ 59) & 0xFFFFFF).toDouble / 0xFFFFFF * 170.0 - 85.0
-      (lon, lat)
-    }
+      val m = ((sel >>> 33) % Metros.length).toInt
+      MetroLon(m) + (((mix(seed ^ 43) & 0xFFFFF).toDouble / 0xFFFFF) - 0.5) * 2 * MetroSpread(m)
+    } else (mix(seed ^ 53) & 0xFFFFFF).toDouble / 0xFFFFFF * 360.0 - 180.0
+  }
+
+  def latOf(seed: Long): Double = {
+    val sel = mix(seed ^ 41)
+    if ((sel & 0x7FFFFFFF) % 10 < 7) {
+      val m = ((sel >>> 33) % Metros.length).toInt
+      MetroLat(m) + (((mix(seed ^ 47) & 0xFFFFF).toDouble / 0xFFFFF) - 0.5) * 2 * MetroSpread(m)
+    } else (mix(seed ^ 59) & 0xFFFFFF).toDouble / 0xFFFFFF * 170.0 - 85.0
   }
 }

@@ -3,35 +3,66 @@ package graft
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.GraftShim
-import org.apache.spark.sql.catalyst.expressions.ScalaUDF
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
-import graft.functions.PipOrdinal
+import graft.functions.{PipHits, PipOrdinal, SeedScalar}
 
 class PlanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+  private val fixtureDir = "/root/testdata/sf0.001"
 
-  test("q17, q38 and q46 probe pip_ordinal and run no ScalaUDF over the point coordinates") {
-    // every action a query runs counts, the eager checkpoints of q38 included
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+  /** The query execution of every action `run` takes, the eager
+    * checkpoints of a query included. */
+  private def executions(run: => Unit): Seq[QueryExecution] = {
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = qes.add(qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    val aqe = new AdaptiveSparkPlanHelper {}
     spark.listenerManager.register(listener)
-    try Seq("q17_pip_join", "q38_team_pivot_dynamic", "q46_centroid_agg").foreach { q =>
-      plans.clear()
-      SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").collect()
-      GraftShim.drainListenerBus(spark.sparkContext)
-      val exprs = plans.asScala.toSeq.flatMap(p => aqe.flatMap(p)(_.expressions))
-      assert(exprs.exists(_.exists(_.isInstanceOf[PipOrdinal])), s"$q: no pip_ordinal")
+    try { run; GraftShim.drainListenerBus(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    qes.asScala.toSeq
+  }
+
+  test("q17, q38 and q46 probe pip_hits and run no ScalaUDF over the point coordinates") {
+    val aqe = new AdaptiveSparkPlanHelper {}
+    Seq("q17_pip_join", "q38_team_pivot_dynamic", "q46_centroid_agg").foreach { q =>
+      val exprs = executions(SparkEntry.queries(q)(spark, fixtureDir).collect())
+        .flatMap(qe => aqe.flatMap(qe.executedPlan)(_.expressions))
+      assert(exprs.exists(_.exists(_.isInstanceOf[PipHits])), s"$q: no pip_hits")
       val udfs = exprs.flatMap(_.collect { case u: ScalaUDF => u })
         .filter(_.references.exists(a => a.name == "lon" || a.name == "lat"))
       assert(udfs.isEmpty, s"$q: UDF over the point coordinates: ${udfs.mkString(", ")}")
-    } finally spark.listenerManager.unregister(listener)
+    }
+  }
+
+  test("every broadcast PIP probes each row once, and the flagship derives its geotag once") {
+    def count(p: LogicalPlan)(hit: PartialFunction[Expression, Unit]): Int =
+      p.collect { case node => node.expressions.map(_.collect(hit).size).sum }.sum
+    val probe: PartialFunction[Expression, Unit] = { case _: PipHits | _: PipOrdinal => }
+    val geotagLon: PartialFunction[Expression, Unit] = { case SeedScalar(_, "geotagLon", _) => }
+    val frames: Seq[(String, () => DataFrame)] =
+      Seq("q17_pip_join", "q38_team_pivot_dynamic", "q46_centroid_agg").map(q =>
+        q -> (() => SparkEntry.queries(q)(spark, fixtureDir))) :+
+        ("ImagePipeline.run" -> (() => pipeline.ImagePipeline.run(spark, 2000L, 4)))
+    frames.foreach { case (name, df) =>
+      val probing = executions(df().collect()).map(_.optimizedPlan).filter(count(_)(probe) > 0)
+      assert(probing.nonEmpty, s"$name: no PIP probe")
+      probing.foreach { p =>
+        assert(count(p)(probe) == 1, s"$name: ${count(p)(probe)} probes in one plan:\n$p")
+        assert(count(p)(geotagLon) <= 1, s"$name: geotagLon derived twice:\n$p")
+      }
+    }
+    // the timed flagship pass: `count()` prunes every aggregate of `run`
+    val timed = executions(pipeline.ImagePipeline.run(spark, 2000L, 4).count()).map(_.optimizedPlan)
+    assert(timed.map(count(_)(probe)) == Seq(1) && timed.map(count(_)(geotagLon)) == Seq(1),
+      timed.mkString("\n"))
   }
 
   test("bucketed checkpoint layout: partition pruning reaches the scan (Iceberg-style)") {

@@ -67,7 +67,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(feats.length == 200)
     feats.foreach { f =>
       val seed = ImageSynth.seedOf(f.image_id.stripPrefix("img").toLong)
-      val (lon, lat) = Geotag.of(seed)
+      val lon = Geotag.lonOf(seed)
+      val lat = Geotag.latOf(seed)
       assert(f.tile == Quadkey.cellIdOf(lon, lat, 12))
       assert(math.abs(f.lon - lon) < 1e-12 && math.abs(f.lat - lat) < 1e-12)
     }

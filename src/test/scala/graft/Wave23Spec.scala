@@ -20,12 +20,11 @@ class Wave23Spec extends AnyFunSuite {
     val rows = ImagePipeline.synthTable(spark, n, 4).collect()
     val expect = rows.filter(_.fmt == "png").flatMap { r =>
       val seed = ImageSynth.seedOf(r.image_id.stripPrefix("img").toLong)
-      val (lon, lat) = Geotag.of(seed)
-      Option(index.queryFirst(lon, lat)).map { b =>
+      Option(index.queryFirst(Geotag.lonOf(seed), Geotag.latOf(seed))).map { b =>
         val img = Validate.decode(r.bytes, r.fmt)
         val s = Seq((0, 0), (9, 0), (0, 9), (9, 9))
           .map { case (x, y) => (img.getRGB(x, y) & 0xFF).toLong }.sum
-        ((b, ImageSynth.metaOf(seed)._2), s)
+        ((b, ImageSynth.teamOf(seed)), s)
       }
     }.groupBy(_._1).map { case (k, vs) => (k, (vs.length.toLong, vs.map(_._2).sum)) }
     assert(got == expect && got.nonEmpty)
