@@ -44,10 +44,12 @@ final class BoundaryIndex(val boundaries: Array[Boundary]) extends Serializable 
   // 64×64 cells of 5.6°×2.8°
   private val cellW = 360.0 / GridN
   private val cellH = 180.0 / GridN
-  // grid cell -> ordinals of the boundaries whose bbox intersects it, stably
-  // sorted by id: among duplicate ids the highest ordinal comes first,
-  // because each list is built by prepending
-  private val grid: Array[Array[Int]] = {
+  // grid cell c -> the ordinals grid(grid(c) until grid(c + 1)) of the
+  // boundaries whose bbox intersects it, stably sorted by id: among duplicate
+  // ids the highest ordinal comes first, because each list is built by
+  // prepending. Offsets and ordinals share one flat array, so the index
+  // ships with each task as a handful of objects, not one per cell.
+  private val grid: Array[Int] = {
     val tmp = Array.fill(GridN * GridN)(List.empty[Int])
     var b = 0
     while (b < boundaries.length) {
@@ -64,11 +66,12 @@ final class BoundaryIndex(val boundaries: Array[Boundary]) extends Serializable 
       }
       b += 1
     }
-    tmp.map(_.sortBy(boundaries(_).id).toArray)
+    val lists = tmp.map(_.sortBy(boundaries(_).id))
+    lists.scanLeft(GridN * GridN + 1)(_ + _.length) ++ lists.flatten
   }
-  // per boundary: its bbox raster, or null where the bbox has no area or a
-  // non-finite bound (every point in the bbox ray-casts)
-  private val rasters: Array[Array[Byte]] = boundaries.map(rasterOf)
+  // the R×R bbox raster of boundary o at o·R·R, all *edge* where the bbox
+  // has no area or a non-finite bound (every point in it ray-casts)
+  private val rasters: Array[Byte] = boundaries.flatMap(rasterOf)
 
   /** First (lowest-id) boundary containing the point, or null. */
   def queryFirst(lon: Double, lat: Double): String = {
@@ -84,10 +87,10 @@ final class BoundaryIndex(val boundaries: Array[Boundary]) extends Serializable 
     if (lon < -180 || lon > 180 || lat < -90 || lat > 90) return -1
     val x = math.min(GridN - 1, math.max(0, ((lon + 180.0) / cellW).toInt))
     val y = math.min(GridN - 1, math.max(0, ((lat + 90.0) / cellH).toInt))
-    val cands = grid(y * GridN + x)
-    var i = 0
-    while (i < cands.length) {
-      if (contains(cands(i), lon, lat)) return cands(i)
+    val c = y * GridN + x
+    var i = grid(c)
+    while (i < grid(c + 1)) {
+      if (contains(grid(i), lon, lat)) return grid(i)
       i += 1
     }
     -1
@@ -97,9 +100,8 @@ final class BoundaryIndex(val boundaries: Array[Boundary]) extends Serializable 
     * cell is not *edge*. */
   private def contains(o: Int, lon: Double, lat: Double): Boolean = {
     val b = boundaries(o)
-    val r = rasters(o)
-    if (r != null && lon >= b.minLon && lon <= b.maxLon && lat >= b.minLat && lat <= b.maxLat) {
-      val cell = r(cellOf(lat, b.minLat, b.maxLat) * R + cellOf(lon, b.minLon, b.maxLon))
+    if (lon >= b.minLon && lon <= b.maxLon && lat >= b.minLat && lat <= b.maxLat) {
+      val cell = rasters((o * R + cellOf(lat, b.minLat, b.maxLat)) * R + cellOf(lon, b.minLon, b.maxLon))
       if (cell != Edge) return cell == Inside
     }
     b.containsPoint(lon, lat)
@@ -125,7 +127,7 @@ object BoundaryIndex {
   private def rasterOf(b: Boundary): Array[Byte] = {
     val bounds = Array(b.minLon, b.maxLon, b.minLat, b.maxLat)
     if (!bounds.forall(java.lang.Double.isFinite) || b.maxLon <= b.minLon || b.maxLat <= b.minLat)
-      return null
+      return Array.fill[Byte](R * R)(Edge)
     val m = Margin * math.max(1.0, bounds.map(math.abs).max)
     val w = (b.maxLon - b.minLon) / R
     val h = (b.maxLat - b.minLat) / R
