@@ -1,8 +1,12 @@
 package graft
 
 import graft.ann.Ann
-import graft.ops.{Lakehouse, Sketches}
+import graft.multimodal.Pyramid
+import graft.ops.{Analytics, Baskets, Blocking, CountMin, Graph, Interactions, Lakehouse, Lateness,
+  Sessionize, Sharding, Sketches, Sssp}
 import graft.pipeline.{Checkpoint, ImagePipeline}
+import graft.spatial.{BoxJoin, Simplify}
+import graft.text.{Dedup, TextOps}
 
 /** Builders for DuckDB oracle SQL that reproduces the engine's from-scratch
   * 64-bit hash arithmetic bit-exactly (splitmix64, FNV-1a, rotations).
@@ -14,12 +18,28 @@ import graft.pipeline.{Checkpoint, ImagePipeline}
   * — every term fits INT128. These fragments make the sketch queries
   * (simhash, fingerprint, seed-derived tables) verifiable by a REAL
   * independent oracle instead of rows-only checks.
+  *
+  * Every gate input a builder needs (sizes, thresholds, windows, round
+  * counts) is read from the engine constant its query runs on, so the
+  * registry in [[SparkEntry]] passes none; only [[q32]] keeps its row count,
+  * which the flagship benchmark sets.
   */
 object OracleSql {
 
   val M64 = "18446744073709551616" // 2^64 as a HUGEINT literal
   val FnvOffset = 1469598103934665603L // graft.text.Dedup.hash64 offset (from-scratch)
   val FnvPrime = 1099511628211L
+
+  /** The event points (lon from value, lat from user_id) shared by the
+    * spatial oracles in [[SparkEntry.oracleSql]] and [[q91]]/[[q94]]. */
+  val pts =
+    "SELECT event_id, event_type, user_id, value, value % 360.0 - 180.0 AS lon, (user_id % 181 - 90)::DOUBLE AS lat FROM events"
+  /** The embeddings table's vector length: the engine reads it off each
+    * vector, the LSH oracles need it to rebuild the hyperplanes. */
+  private val EmbeddingDim = 64
+  /** q125's unrolled peeling rounds: the engine's kCore converges in fewer
+    * at the gate graph, and the extra rounds are idempotent past the fixpoint. */
+  private val KCoreRounds = 10
 
   /** `(a * bconst) mod 2^64` — `a` must be a HUGEINT-typed SQL expression in
     * [0, 2^64); bconst an unsigned 64-bit constant (given as Scala Long bits). */
@@ -88,14 +108,14 @@ object OracleSql {
 
   /** Shared generator CTE for q34/q39: the synthetic versions table's
     * (id, k, kind, etype, restr) grid, closed-form. */
-  private def q34Ev(n: Int): String =
+  private def q34Ev: String =
     s"""ev AS (
        |  SELECT t.id, r.k,
        |    2 + (t.id*7+3)%5 AS nv,
        |    (t.id*13 + r.k*37)%10 AS kind,
        |    CASE WHEN t.id%5=0 THEN 'relation' WHEN t.id%5 IN (1,2) THEN 'way' ELSE 'node' END AS etype,
        |    (t.id%5=0 AND t.id%10=0) AS restr
-       |  FROM range(0, $n) t(id), range(0, 6) r(k)
+       |  FROM range(0, ${Interactions.GateEntities}) t(id), range(0, 6) r(k)
        |  WHERE r.k < 2 + (t.id*7+3)%5
        |)""".stripMargin
 
@@ -103,10 +123,10 @@ object OracleSql {
     * (edit class incl. normalized-geometry/latch effects, tag-diff strings,
     * validity intervals, mv counter, sq presence) from the (id, k) formulas —
     * completely independent of the Spark window-algebra implementation. */
-  def q34(n: Int): String = {
+  def q34: String = {
     val (verK, bldK, tagsK) = q34State("k")
     val (_, bldP, tagsP) = q34State("(k-1)")
-    s"""WITH ${q34Ev(n)},
+    s"""WITH $q34Ev,
        |st AS (
        |  SELECT *,
        |    1500000000 + id*1000 + k*10 AS vs,
@@ -144,8 +164,9 @@ object OracleSql {
 
   /** Analytic oracle for q43 (old-schema MV_BEFORE/MV_AFTER/DELETION interval
     * filters, docs/js/map.js:244-271) over the same generator. */
-  def q43(n: Int, start: Long, end: Long): String =
-    s"""WITH ${q34Ev(n)},
+  def q43: String = {
+    val (start, end) = (Interactions.IntervalStart, Interactions.IntervalEnd)
+    s"""WITH $q34Ev,
        |st AS (
        |  SELECT *, 1500000000 + id*1000 + k*10 AS vs,
        |    CASE WHEN k=0 THEN 'CRE'
@@ -168,11 +189,12 @@ object OracleSql {
        |   OR (edit='MV_AFTER' AND valid_since >= $start AND valid_since < $end)
        |   OR (edit='DELETION' AND valid_until > $start AND valid_until < $end)
        |GROUP BY 1""".stripMargin
+  }
 
   /** Analytic oracle for q39 (map-column tag-KEY filter rollup). */
-  def q39(n: Int): String = {
+  def q39: String = {
     val (verK, _, _) = q34State("k")
-    s"""WITH ${q34Ev(n)},
+    s"""WITH $q34Ev,
        |st AS (
        |  SELECT *, $verK AS version,
        |    (restr OR (k >= 2 AND (id*13 + 2*37)%10 = 3)) AS m
@@ -308,7 +330,7 @@ object OracleSql {
     s"2*6371.0088*asin(least(1.0, sqrt($sLat*$sLat + cos((lat/180.0)*pi())*cos(((lat + sdlat)/180.0)*pi())*$sLon*$sLon)))"
   }
 
-  def q45(n: Long): String = {
+  def q45: String = {
     val teams = Seq("kll", "msf", "dcx", "hot")
     val teamCols = teams.map { t =>
       s"""  sum(CASE WHEN rostered AND team='$t' THEN 1 ELSE 0 END)::BIGINT AS ${t}_e,
@@ -316,7 +338,7 @@ object OracleSql {
          |  sum(CASE WHEN rostered AND team='$t' THEN is_b ELSE 0 END)::BIGINT AS ${t}_b,
          |  sum(CASE WHEN rostered AND team='$t' THEN is_p ELSE 0 END)::BIGINT AS ${t}_p,""".stripMargin
     }.mkString("\n")
-    s"""WITH ${pipelineCtes(n)},
+    s"""WITH ${pipelineCtes(ImagePipeline.GateRows)},
        |feat AS (SELECT tile, team, (uid % 5 <> 0) AS rostered,
        |  CASE WHEN noun_id = 1 THEN floor($segKm * 1000000.0 + 0.5)::BIGINT ELSE 0 END AS km_e6,
        |  CASE WHEN noun_id = 0 THEN 1 ELSE 0 END AS is_b,
@@ -339,8 +361,8 @@ object OracleSql {
     * exact in any accumulation order and the Aggregator's distributed merge
     * cannot perturb the hash; the final mean is one correctly-rounded
     * division each side. */
-  def q46(n: Long): String =
-    s"""WITH ${pipelineCtes(n)},
+  def q46: String =
+    s"""WITH ${pipelineCtes(ImagePipeline.GateRows)},
        |c AS (SELECT uid, day,
        |        floor(lon * 1000000.0 + 0.5)::BIGINT AS lon_e6, floor(lat * 1000000.0 + 0.5)::BIGINT AS lat_e6
        |      FROM pj WHERE boundary_id IS NOT NULL)
@@ -354,13 +376,13 @@ object OracleSql {
     * integer division of the z12 tx/ty — arithmetically identical to the
     * engine's bit-shift parent chain (floor(floor(v·2^12)/2^(12-z)) ==
     * floor(v·2^z), clamps included). */
-  def q49(n: Long): String = {
+  def q49: String = {
     val legs = ImagePipeline.RollupZooms.map { z =>
       val d = 1L << (12 - z)
       s"""SELECT $z AS zoom, (${z}::BIGINT * 288230376151711744 + (tx // $d) * 536870912 + (ty // $d)) AS cell_id, team, uid
          |FROM f""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH ${pipelineCtes(n)},
+    s"""WITH ${pipelineCtes(ImagePipeline.GateRows)},
        |f AS (SELECT tx, ty, team, uid FROM pj WHERE boundary_id IS NOT NULL),
        |mz AS (
        |$legs)
@@ -373,14 +395,14 @@ object OracleSql {
     * same operation order as Quadkey.tileBounds/tileCenter (w and e computed
     * separately then averaged; lat via degrees(atan(sinh(π(1−2y/n))))),
     * e6-rounded to absorb Java-vs-libm ulp differences in atan/sinh. */
-  def q56(n: Long): String = {
+  def q56: String = {
     // DuckDB has no sinh: (exp(t)-exp(-t))/2 differs from Java's Math.sinh
     // only in final ulps, absorbed by the e6 rounding
     def latOf(yy: String) = {
       val t = s"(pi() * (1.0 - 2.0 * ($yy) / 4096.0))"
       s"degrees(atan((exp($t) - exp(-$t)) / 2.0))"
     }
-    s"""WITH ${pipelineCtes(n)},
+    s"""WITH ${pipelineCtes(ImagePipeline.GateRows)},
        |g2 AS (SELECT tile, tx, ty, count(*)::BIGINT AS n_feats
        |       FROM pj WHERE boundary_id IS NOT NULL GROUP BY 1, 2, 3)
        |SELECT tile, n_feats,
@@ -396,8 +418,8 @@ object OracleSql {
     * (exact integer sums, one correctly-rounded division — the q46 FP
     * discipline) plus edit/building/POI counts and the per-segment-rounded km
     * sum (the q45 measure discipline). */
-  def q60(n: Long): String =
-    s"""WITH ${pipelineCtes(n)},
+  def q60: String =
+    s"""WITH ${pipelineCtes(ImagePipeline.GateRows)},
        |f AS (SELECT team, day,
        |  floor(lon * 1000000.0 + 0.5)::BIGINT AS lon_e6, floor(lat * 1000000.0 + 0.5)::BIGINT AS lat_e6,
        |  CASE WHEN noun_id = 1 THEN floor($segKm * 1000000.0 + 0.5)::BIGINT ELSE 0 END AS km_e6,
@@ -419,8 +441,8 @@ object OracleSql {
     * round-trip every row through the REAL geojsonseq sink (emit → from_json
     * parse-back), so a hash match proves the emission, the short-key
     * projection, and the shortest-roundtrip numeric formatting row for row. */
-  def q61(n: Long): String =
-    s"""WITH ${pipelineCtes(n,
+  def q61: String =
+    s"""WITH ${pipelineCtes(ImagePipeline.GateRows,
          Seq(("hcs", 29L), ("hver", 31L)),
          Seq(("cs", "((hcs & 2147483647) % 100000)::BIGINT"),
              ("ver", "(1 + (hver & 2147483647) % 9)::BIGINT")))}
@@ -431,7 +453,7 @@ object OracleSql {
        |FROM pj WHERE boundary_id IS NOT NULL""".stripMargin
 
   /** Analytic oracle for q33 (pixel/caption/phash validation summary): the
-    * row total comes from the generator domain (range(0,n)) and the per-
+    * row total comes from the generator domain (range(0, GateRows)) and the per-
     * format split is re-derived from the seed arithmetic (fmt = png iff
     * mix(seed^5) bit 0 is 0 — ImageSynth.rowOf), so the oracle now
     * cross-checks the engine's observed decode verdicts per format against
@@ -439,12 +461,12 @@ object OracleSql {
     * validate" expectation (n_pixels_ok = n etc.) is the gate's substance on
     * the Spark side: DuckDB cannot decode images, so those columns assert
     * the engine-side decode/re-render/compare found zero failures. */
-  def q33(n: Long): String = {
+  def q33: String = {
     val stages = mixStageDefs("xor(seed, 5::UBIGINT)", "hfmt")
     var prev = "i"
     var cols = Seq("idx")
     val ctes = scala.collection.mutable.ArrayBuffer(
-      s"i AS (SELECT unnest(range(0, $n)) AS idx)")
+      s"i AS (SELECT unnest(range(0, ${ImagePipeline.GateRows})) AS idx)")
     (seedStageDefs ++ stages).foreach { case (name, expr) =>
       ctes += s"f_$name AS MATERIALIZED (SELECT ${cols.mkString(", ")}, $expr AS $name FROM $prev)"
       prev = s"f_$name"; cols = cols :+ name
@@ -493,8 +515,8 @@ object OracleSql {
        |bk AS (SELECT idx, cell, ((${mix("cell")} & 2147483647) % ${Checkpoint.GateBuckets})::INT AS bucket FROM cell)""".stripMargin
   }
 
-  def q62(n: Long): String =
-    s"""WITH ${hexBucketCtes(n)},
+  def q62: String =
+    s"""WITH ${hexBucketCtes(Checkpoint.LineageRows)},
        |agg AS (SELECT bucket, min(cell) AS cell_min, max(cell) AS cell_max,
        |        count(*)::BIGINT AS row_count FROM bk GROUP BY 1)
        |SELECT b.b::INT AS bucket,
@@ -507,16 +529,16 @@ object OracleSql {
 
   /** Replica oracle for q64 (append-only incremental ingestion): the same
     * analytic hex-cell/bucket lineage derivation as q62, over the FULL grown
-    * domain [0, n1) with the epoch inferred from the id (idx < n0 → epoch 0,
-    * else epoch 1) — exactly the split the engine saw as two successive
+    * domain [0, AppendRows) with the epoch inferred from the id
+    * (idx < AppendSplit → epoch 0, else epoch 1) — exactly the split the engine saw as two successive
     * incremental runs. Grouping by (epoch, bucket) and emitting the sentinel
     * for empty partitions, a hash match proves the incremental manifests
     * jointly describe every row of the union: nothing appended was dropped
     * into an already-committed partition, nothing was double-counted. */
-  def q64(n0: Long, n1: Long): String =
-    s"""WITH ${hexBucketCtes(n1)},
+  def q64: String =
+    s"""WITH ${hexBucketCtes(Checkpoint.AppendRows)},
        |bke AS (SELECT idx, cell, bucket,
-       |        CASE WHEN idx < $n0 THEN 0 ELSE 1 END AS epoch FROM bk),
+       |        CASE WHEN idx < ${Checkpoint.AppendSplit} THEN 0 ELSE 1 END AS epoch FROM bk),
        |agg AS (SELECT epoch, bucket, min(cell) AS cell_min, max(cell) AS cell_max,
        |        count(*)::BIGINT AS row_count FROM bke GROUP BY 1, 2)
        |SELECT e.e::INT AS epoch, b.b::INT AS bucket,
@@ -543,7 +565,8 @@ object OracleSql {
     * and ranks are bit-parity. On this corpus (uniform random vectors, no
     * planted clusters) recall-vs-brute is inherently partial — what this
     * oracle verifies is the LSH pipeline itself, end to end. */
-  def q31(planes: Array[Array[Double]]): String = {
+  def q31: String = {
+    val planes = Ann.hyperplanes(Ann.LshBits, EmbeddingDim)
     val bitsPerBand = planes.length / Ann.LshBands
     val mask = (1L << bitsPerBand) - 1
     val planeRows = planes.zipWithIndex.map { case (w, p) =>
@@ -571,14 +594,14 @@ object OracleSql {
   /** Oracle for q48 (ANN-LSH recall certification): brute-force top-k via
     * DuckDB's own cosine (independent of the engine) left-joined with the
     * q31 LSH replica; per-query hit counts and recall in basis points. */
-  def q48(planes: Array[Array[Double]]): String =
+  def q48: String =
     s"""WITH brute AS (
        |  WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
        |  q AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < ${Ann.Q}),
        |  d AS (SELECT q.qid, v.vec_id, list_cosine_similarity(q.qe, v.e) AS c FROM v CROSS JOIN q),
        |  r AS (SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY c DESC, vec_id) AS rk FROM d)
        |  SELECT qid, vec_id FROM r WHERE rk <= ${Ann.K}),
-       |lsh AS (${q31(planes)})
+       |lsh AS ($q31)
        |SELECT b.qid, count(*)::BIGINT AS k_total,
        |  sum(CASE WHEN l.vec_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_hit,
        |  floor(sum(CASE WHEN l.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 10000.0 / count(*))::BIGINT AS recall_bp
@@ -588,12 +611,12 @@ object OracleSql {
   /** Oracle for q44 (embedding-cosine near-dup): all pairs with cosine ≥
     * threshold, cosine computed with the same left-to-right dot reduction as
     * the Scala kernel for FP bit-parity. */
-  def q44(minCos: Double): String = {
+  def q44: String = {
     s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
        |p AS (SELECT l.vec_id AS a, r.vec_id AS b,
        |        ${dot("l.e", "r.e")} / (sqrt(${dot("l.e", "l.e")}) * sqrt(${dot("r.e", "r.e")})) AS c
        |      FROM v l JOIN v r ON l.vec_id < r.vec_id)
-       |SELECT a, b, floor(c * 10000.0 + 0.5)::BIGINT AS cos_e4 FROM p WHERE c >= $minCos""".stripMargin
+       |SELECT a, b, floor(c * 10000.0 + 0.5)::BIGINT AS cos_e4 FROM p WHERE c >= ${Ann.DedupCos}""".stripMargin
   }
 
   /** Replica oracle for q65 (ANN LSH near-dup tier on the planted corpus):
@@ -604,11 +627,11 @@ object OracleSql {
     * engine runs the LSH TIER under production defaults against this exact
     * relation, so a hash match proves tier recall is exactly 1.0 AND that
     * the bucketed path's verify kernel is FP-bit-identical to exact. */
-  def q65(n: Int, minCos: Double): String = {
+  def q65: String = {
     def dot(a: String, b: String) =
       s"list_reduce(list_transform(range(1, ${Ann.PlantedDim + 1}), i -> ($a)[i] * ($b)[i]), (x, y) -> x + y)"
     def unit(h: String) = s"((($h) >> 11)::DOUBLE / 4503599627370496.0 - 1.0)"
-    s"""WITH ids AS (SELECT unnest(range(0, $n)) AS idx),
+    s"""WITH ids AS (SELECT unnest(range(0, ${Ann.PlantedRows})) AS idx),
        |dims AS (SELECT unnest(range(0, ${Ann.PlantedDim})) AS i),
        |hashed AS (SELECT idx, i,
        |    ${mix(s"((idx // ${Ann.PlantedGroup}) * ${Ann.PlantedDim} + i + 10000000)::UBIGINT")} AS hb,
@@ -619,7 +642,7 @@ object OracleSql {
        |p AS (SELECT l.vec_id AS a, r.vec_id AS b,
        |        ${dot("l.e", "r.e")} / (sqrt(${dot("l.e", "l.e")}) * sqrt(${dot("r.e", "r.e")})) AS c
        |      FROM v l JOIN v r ON l.vec_id < r.vec_id)
-       |SELECT a, b, floor(c * 10000.0 + 0.5)::BIGINT AS cos_e4 FROM p WHERE c >= $minCos""".stripMargin
+       |SELECT a, b, floor(c * 10000.0 + 0.5)::BIGINT AS cos_e4 FROM p WHERE c >= ${Ann.PlantedCos}""".stripMargin
   }
 
   /** Replica oracle for q66 (int8 scalar-quantized ANN): replays the SQ8
@@ -653,12 +676,12 @@ object OracleSql {
     * left-to-right dot), recursive-CTE transitive closure (the q63 oracle
     * family — a different algorithm than the engine's label propagation),
     * keep = (vec_id == component minimum), singletons keep trivially. */
-  def q73(minCos: Double): String = {
+  def q73: String = {
     s"""WITH RECURSIVE vv AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
        |p AS (SELECT l.vec_id AS a, r.vec_id AS b,
        |        ${dot("l.e", "r.e")} / (sqrt(${dot("l.e", "l.e")}) * sqrt(${dot("r.e", "r.e")})) AS c
        |      FROM vv l JOIN vv r ON l.vec_id < r.vec_id),
-       |pr AS (SELECT a, b FROM p WHERE c >= $minCos),
+       |pr AS (SELECT a, b FROM p WHERE c >= ${Ann.DedupCos}),
        |ed AS (SELECT a AS u, b AS w FROM pr UNION ALL SELECT b, a FROM pr),
        |verts AS (SELECT DISTINCT u AS vec_id FROM ed),
        |reach(vec_id, r) AS (
@@ -813,7 +836,8 @@ object OracleSql {
     * l_partkey, k smallest in unsigned order (the UBIGINT domain IS unsigned
     * order), ranks, and the (k−1)·2⁶⁴ // h₍ₖ₎ estimate as one HUGEINT floor
     * division. `h` is re-signed to match the engine's Long column. */
-  def q83(k: Int): String =
+  def q83: String = {
+    val k = Sketches.DistinctK
     s"""WITH hs AS (SELECT DISTINCT ${mix("l_partkey")} AS m FROM lineitem),
        |top AS (SELECT m FROM hs ORDER BY m LIMIT $k),
        |r AS (SELECT m, row_number() OVER (ORDER BY m) AS rank FROM top),
@@ -824,6 +848,7 @@ object OracleSql {
        |  (CASE WHEN kth.cnt < $k THEN kth.cnt
        |        ELSE (${k - 1}::HUGEINT * $M64::HUGEINT) // kth.mk END)::BIGINT AS est_distinct
        |FROM r, kth""".stripMargin
+  }
 
   /** Register count and the ρ of an all-zero remainder at [[Sketches.HllP]]. */
   private val HllM = 1 << Sketches.HllP
@@ -902,8 +927,8 @@ object OracleSql {
     * + (x mod 8)·3 + (y mod 8)·4 at (0,0)/(9,0)/(0,9)/(9,9), per z12 tile.
     * A hash match proves the engine's REAL PNG decode returned exactly the
     * bytes the synthesizer wrote — per tile, against independent SQL. */
-  def q98(n: Long): String =
-    s"""WITH ${pipelineCtes(n,
+  def q98: String =
+    s"""WITH ${pipelineCtes(ImagePipeline.GateRows,
          Seq(("hfmt", 5L), ("hp00", 0L), ("hp90", 1L),
            ("hp09", 4294967296L), ("hp99", 4294967297L)),
          Seq(("is_png", "(hfmt & 1) = 0"),
@@ -916,8 +941,8 @@ object OracleSql {
     * vector→rollup chain analytically — q98's four sampled pixels, the
     * geotag, the metro-box PIP, and the team draw, grouped per (boundary,
     * team) over PNG rows. */
-  def q151(n: Long): String =
-    s"""WITH ${pipelineCtes(n,
+  def q151: String =
+    s"""WITH ${pipelineCtes(ImagePipeline.GateRows,
          Seq(("hfmt", 5L), ("hp00", 0L), ("hp90", 1L),
            ("hp09", 4294967296L), ("hp99", 4294967297L)),
          Seq(("is_png", "(hfmt & 1) = 0"),
@@ -930,7 +955,8 @@ object OracleSql {
   /** q96: KMV union/intersection estimates replayed — per-side top-k
     * sketches, merged union sketch, ρ membership count, and both HUGEINT
     * floor-division estimates (mirrors Sketches.kmvIntersect). */
-  def q96(k: Int, cut: String): String =
+  def q96: String = {
+    val (k, cut) = (Sketches.IntersectK, Sketches.IntersectCut)
     s"""WITH a AS (SELECT DISTINCT ${mix("l_orderkey")} AS m FROM lineitem
        |           WHERE l_shipdate < TIMESTAMP '$cut'),
        |b AS (SELECT DISTINCT ${mix("l_orderkey")} AS m FROM lineitem
@@ -947,11 +973,13 @@ object OracleSql {
        |SELECT rho.r::BIGINT AS rho, est.eu::BIGINT AS est_union,
        |  (CASE WHEN kth.cnt < $k THEN rho.r ELSE (rho.r * est.eu) // $k END)::BIGINT AS est_inter
        |FROM rho, est, kth""".stripMargin
+  }
 
   /** q97: the Count-Min estimate for every distinct partkey, replayed —
     * salted-mix column hashing, d×w counter sums, min over rows (mirrors
     * CountMin.partkeyFreq; salt j = (j+1)·golden). */
-  def q97(d: Int, w: Int): String = {
+  def q97: String = {
+    val (d, w) = (CountMin.Depth, CountMin.Width)
     val hashes = (0 until d).map { j =>
       val salted = s"xor(l_partkey::UBIGINT, ${java.lang.Long.toUnsignedString((j + 1).toLong * 0x9E3779B97F4A7C15L)}::UBIGINT)"
       s"SELECT $j AS j, (${mix(salted)} & ${w - 1}) AS col, l_partkey FROM lineitem"
@@ -972,9 +1000,8 @@ object OracleSql {
       s"(($ix >> $i) & 1) * ${1L << (2 * i)} + (($iy >> $i) & 1) * ${1L << (2 * i + 1)}"
     }.mkString(" + ")
 
-  /** q91: z-range-bucket rollup of the morton codes of the event points
-    * (`pts` = the shared points CTE body). */
-  def q91(pts: String): String = {
+  /** q91: z-range-bucket rollup of the morton codes of the event points. */
+  def q91: String = {
     val n = 1L << graft.spatial.ZOrder.RollupBits
     s"""WITH p AS ($pts),
        |g AS (SELECT least(floor((lon + 180.0) / 360.0 * $n.0), ${n - 1}.0)::BIGINT AS ix,
@@ -987,7 +1014,7 @@ object OracleSql {
 
   /** q94: geohash (graft.index.Geohash — lon-first MSB interleave, base32)
     * prefix rollup over the event points. */
-  def q94(pts: String): String = {
+  def q94: String = {
     val precision = graft.index.Geohash.RollupPrecision
     val totalBits = 5 * precision
     val lonBits = (totalBits + 1) / 2
@@ -1015,10 +1042,10 @@ object OracleSql {
     * mix(2i) % n — mix(2i+1) % n, self-loops dropped. Defines CTEs
     * `uedges(a,b)` (undirected, a<b, distinct) and `dedges(u,v)`
     * (directed, distinct). */
-  def graphCtes(n: Int, m: Int): String =
-    s"""draws AS (SELECT i, (${mix("(2*i)::UBIGINT")} & 2147483647) % $n AS u,
-       |                    (${mix("(2*i+1)::UBIGINT")} & 2147483647) % $n AS v
-       |          FROM range(0, $m) t(i)),
+  private def graphCtes: String =
+    s"""draws AS (SELECT i, (${mix("(2*i)::UBIGINT")} & 2147483647) % ${Graph.GateNodes} AS u,
+       |                    (${mix("(2*i+1)::UBIGINT")} & 2147483647) % ${Graph.GateNodes} AS v
+       |          FROM range(0, ${Graph.GateEdges}) t(i)),
        |uedges AS (SELECT DISTINCT least(u, v)::BIGINT AS a, greatest(u, v)::BIGINT AS b
        |           FROM draws WHERE u <> v),
        |dedges AS (SELECT DISTINCT u::BIGINT AS u, v::BIGINT AS v FROM draws WHERE u <> v)"""
@@ -1028,8 +1055,8 @@ object OracleSql {
     * oriented compact-forward enumeration in SQL — orient edges toward
     * higher (degree, id), wedge-join at the low apex, close against the
     * undirected edge set, explode each triangle to its three corners. */
-  def q108(n: Int, m: Int): String =
-    s"""WITH ${graphCtes(n, m)},
+  def q108: String =
+    s"""WITH $graphCtes,
        |deg AS (SELECT node, count(*)::BIGINT AS d FROM
        |        (SELECT a AS node FROM uedges UNION ALL SELECT b FROM uedges) GROUP BY 1),
        |o AS (SELECT CASE WHEN (da.d, e.a) < (db.d, e.b) THEN e.a ELSE e.b END AS lo,
@@ -1045,8 +1072,8 @@ object OracleSql {
 
   /** Replica oracle for q187 (Graph.clusteringCoeff): q108's triangle
     * replay + the exact e6 wedge ratio, zero-triangle d≥2 nodes kept. */
-  def q187(n: Int, m: Int): String =
-    s"""WITH ${graphCtes(n, m)},
+  def q187: String =
+    s"""WITH $graphCtes,
        |deg AS (SELECT node, count(*)::BIGINT AS d FROM
        |        (SELECT a AS node FROM uedges UNION ALL SELECT b FROM uedges) GROUP BY 1),
        |o AS (SELECT CASE WHEN (da.d, e.a) < (db.d, e.b) THEN e.a ELSE e.b END AS lo,
@@ -1067,7 +1094,8 @@ object OracleSql {
     * unrolled as one CTE per iteration (DuckDB recursive CTEs disallow the
     * aggregate in the recursive term) — every rank replays digit-for-digit
     * because all arithmetic is BIGINT floor division. */
-  def q109(n: Int, m: Int, iters: Int): String = {
+  def q109: String = {
+    val (n, iters) = (Graph.GateNodes, Graph.PageRankIters)
     val r0 = BigInt(10).pow(12) / n
     val base = BigInt(15) * BigInt(10).pow(12) / (BigInt(100) * n)
     val rounds = (1 to iters).map { t =>
@@ -1078,7 +1106,7 @@ object OracleSql {
          |    JOIN outdeg o ON o.u = e.u GROUP BY 1) s ON s.node = n.node)"""
         .stripMargin
     }
-    s"""WITH ${graphCtes(n, m)},
+    s"""WITH $graphCtes,
        |pr0 AS (SELECT node::BIGINT AS node, $r0::BIGINT AS r FROM range(0,$n) t(node)),
        |outdeg AS (SELECT u, count(*)::BIGINT AS od FROM dedges GROUP BY 1),
        |${rounds.mkString(",\n")}
@@ -1158,9 +1186,9 @@ object OracleSql {
   /** Replica oracle for q112 (BoxJoin.overlapJoin) — the HONEST all-pairs
     * overlap predicate (no candidate pruning), so the hash match proves the
     * cell-cover candidate set has recall 1. */
-  def q112(na: Int, nb: Int): String =
-    s"""WITH ba AS ${boxCte(na, 1000L, 5000L, 7000L, "a")},
-       |bb AS ${boxCte(nb, 9000L, 13000L, 17000L, "b")}
+  def q112: String =
+    s"""WITH ba AS ${boxCte(BoxJoin.OverlapA, 1000L, 5000L, 7000L, "a")},
+       |bb AS ${boxCte(BoxJoin.OverlapB, 9000L, 13000L, 17000L, "b")}
        |SELECT aid, bid FROM ba JOIN bb ON
        |  ax0 <= bx0 + bw AND bx0 <= ax0 + aw AND ay0 <= by0 + bh AND by0 <= ay0 + ah"""
       .stripMargin
@@ -1208,8 +1236,8 @@ object OracleSql {
     * & 0xBF — ImageSynth.render's block hash with VARIABLE xor, so it can't
     * ride geotagCtes' constant-xor extraHashes). Ends in `blk(idx, w, h,
     * base)` over PNG rows only. */
-  private def imageBlockCtes(n: Long): String =
-    s"""${geotagCtes(n, Seq(("hw", 2L), ("hh", 3L), ("hfmt", 5L)))},
+  private def imageBlockCtes: String =
+    s"""${geotagCtes(Pyramid.GateN, Seq(("hw", 2L), ("hh", 3L), ("hfmt", 5L)))},
        |img AS (SELECT idx, seed,
        |  [16,32,64][((hw & 2147483647) % 3)::INT + 1] AS w,
        |  [16,32,64][((hh & 2147483647) % 3)::INT + 1] AS h
@@ -1223,8 +1251,8 @@ object OracleSql {
     * integral in closed form — per 8×8 block, Σ pixels = 64·base + 1568
     * (Σ 3·(x%8) + 4·(y%8) over the block = 1568; verified against a direct
     * per-pixel render in Wave13Spec). */
-  def q116(n: Long): String =
-    s"""WITH ${imageBlockCtes(n)}
+  def q116: String =
+    s"""WITH $imageBlockCtes
        |SELECT idx::BIGINT AS idx, max(w)::INT AS w, max(h)::INT AS h,
        |  (sum(64 * base) + count(*) * 1568)::BIGINT AS sum_brightness
        |FROM blk GROUP BY idx""".stripMargin
@@ -1233,8 +1261,8 @@ object OracleSql {
     * downsample in closed form — level-1 block sum = 16·base + 384,
     * level-2 = 4·base + 96 (floor-exact because the in-block ramp terms
     * are even; verified against a direct downsample in Wave13Spec). */
-  def q117(n: Long): String =
-    s"""WITH ${imageBlockCtes(n)}
+  def q117: String =
+    s"""WITH $imageBlockCtes
        |SELECT idx::BIGINT AS idx,
        |  (sum(16 * base) + count(*) * 384)::BIGINT AS lvl1_sum,
        |  (sum(4 * base) + count(*) * 96)::BIGINT AS lvl2_sum
@@ -1246,8 +1274,8 @@ object OracleSql {
     * are 8·|Δbase−21| (horizontal neighbors) and 8·|Δbase−28| (vertical),
     * since the 8-step ramp resets across the boundary. Derived once,
     * verified against a direct per-pixel render in Wave23Spec. */
-  def q152(n: Long): String =
-    s"""WITH ${imageBlockCtes(n)},
+  def q152: String =
+    s"""WITH $imageBlockCtes,
        |pairs AS (
        |  SELECT a.idx, 8 * abs(b.base - a.base - 21) AS t
        |  FROM blk a JOIN blk b ON a.idx = b.idx AND b.bx = a.bx + 1 AND b.by = a.by
@@ -1264,8 +1292,8 @@ object OracleSql {
     * offset t = 3·(x%8) + 4·(y%8) has a FIXED multiplicity table over the
     * 64 block positions, so the per-image histogram is
     * count(idx, base + t) = Σ_blocks mult(t) — pure integer closed form. */
-  def q158(n: Long): String =
-    s"""WITH ${imageBlockCtes(n)},
+  def q158: String =
+    s"""WITH $imageBlockCtes,
        |offm AS (SELECT 3 * (i % 8) + 4 * (i // 8) AS t, count(*)::BIGINT AS m
        |         FROM range(0, 64) r(i) GROUP BY 1)
        |SELECT idx::BIGINT AS idx, (base + t)::INT AS value, sum(m)::BIGINT AS cnt
@@ -1276,8 +1304,9 @@ object OracleSql {
     * image components = components of the block adjacency graph, whose
     * edges are pure base-threshold tests (see Pyramid.blobCount doc).
     * Closure by recursive reach (the q131 pattern), per image. */
-  def q170(n: Long, thr: Int): String =
-    s"""WITH RECURSIVE ${imageBlockCtes(n)},
+  def q170: String = {
+    val thr = Pyramid.BlobThr
+    s"""WITH RECURSIVE $imageBlockCtes,
        |offm AS (SELECT 3 * (i % 8) + 4 * (i // 8) AS t, count(*)::BIGINT AS m
        |         FROM range(0, 64) r(i) GROUP BY 1),
        |hotb AS (SELECT idx, bx, by, by * 8 + bx AS nid, base FROM blk
@@ -1310,12 +1339,14 @@ object OracleSql {
        |  coalesce(hp.n_hot, 0)::BIGINT AS n_hot
        |FROM img i LEFT JOIN blobs bl ON bl.idx = i.idx
        |LEFT JOIN hotpx hp ON hp.idx = i.idx""".stripMargin
+  }
 
   /** Replica oracle for q118 (Sessionize.staySegments) — identical lag/
     * running-sum segmentation with the haversine spelled term-for-term as
     * SpatialQueries.haversineKmCol (the q86 FP discipline) and per-step
     * e6-floored km so segment sums are exact integers. */
-  def q118(radiusKm: Double): String = {
+  def q118: String = {
+    val radiusKm = Sessionize.StayRadiusKm
     val hav =
       """2*6371.0088*asin(least(1.0, sqrt(
         | sin((((lat - plat)/180.0)*pi())/2)*sin((((lat - plat)/180.0)*pi())/2)
@@ -1339,11 +1370,11 @@ object OracleSql {
   }
 
   /** Replica oracle for q119 (Checkpoint.timeTravelGate): the as-of-epoch-0
-    * read must return exactly ids [0, n0) routed by the same hex-cell/bucket
+    * read must return exactly ids [0, TravelSplit) routed by the same hex-cell/bucket
     * arithmetic — a DATA-content rollup (id sums), independent of the
     * manifest lineage q62/q64 gate. */
-  def q119(n0: Long): String =
-    s"""WITH ${hexBucketCtes(n0)}
+  def q119: String =
+    s"""WITH ${hexBucketCtes(Checkpoint.TravelSplit)}
        |SELECT bucket::INT AS bucket, count(*)::BIGINT AS row_count,
        |  sum(idx)::BIGINT AS sum_idx, min(idx)::BIGINT AS min_idx,
        |  max(idx)::BIGINT AS max_idx
@@ -1418,9 +1449,10 @@ object OracleSql {
       |GROUP BY 1""".stripMargin
 
   /** Replica oracle for q125 (Graph.kCore) — the peeling recurrence unrolled
-    * as MATERIALIZED CTE rounds (two idempotent rounds past the fixpoint;
-    * plain CTEs re-inline per reference and blow up exponentially). */
-  def q125(n: Int, m: Int, k: Int, rounds: Int): String = {
+    * as [[KCoreRounds]] MATERIALIZED CTE rounds (plain CTEs re-inline per
+    * reference and blow up exponentially). */
+  def q125: String = {
+    val (n, m, k, rounds) = (Graph.GateNodes, Graph.GateEdges, Graph.CoreK, KCoreRounds)
     val steps = (1 to rounds).map { t =>
       val prev = if (t == 1) "e0" else s"e${t - 1}"
       s"""s$t AS MATERIALIZED (SELECT node FROM
@@ -1442,7 +1474,8 @@ object OracleSql {
   }
 
   /** Replica oracle for q126 (TextOps.invertedQuery). */
-  def q126(terms: Seq[String]): String = {
+  def q126: String = {
+    val terms = TextOps.QueryTerms
     val in = terms.map(t => s"'$t'").mkString(", ")
     s"""WITH tf AS (SELECT doc_id, w, count(*)::BIGINT AS tf FROM
        |    (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
@@ -1456,13 +1489,13 @@ object OracleSql {
 
   /** Replica oracle for q127 (BoxJoin.adaptiveTiles) — same one-pass fine
     * counts + coarse rollup + hot-tile classification. */
-  def q127(cap: Long): String =
+  def q127: String =
     s"""WITH p AS (SELECT fmod(value, 360.0) - 180.0 AS lon, (user_id % 181 - 90)::DOUBLE AS lat FROM events),
        |g AS (SELECT least(floor((lon+180)/360.0*256), 255)::BIGINT AS x8,
        |             least(floor((lat+90)/180.0*256), 255)::BIGINT AS y8 FROM p),
        |c8 AS (SELECT x8, y8, x8 // 4 AS x6, y8 // 4 AS y6, count(*)::BIGINT AS n FROM g GROUP BY 1, 2, 3, 4),
        |c6 AS (SELECT x6, y6, sum(n)::BIGINT AS n FROM c8 GROUP BY 1, 2),
-       |hot AS (SELECT x6, y6 FROM c6 WHERE n > $cap),
+       |hot AS (SELECT x6, y6 FROM c6 WHERE n > ${BoxJoin.TileCap}),
        |fine AS (SELECT c8.x8 AS x, c8.y8 AS y, 8::BIGINT AS z, c8.n
        |         FROM c8 JOIN hot ON c8.x6 = hot.x6 AND c8.y6 = hot.y6),
        |coarse AS (SELECT c6.x6 AS x, c6.y6 AS y, 6::BIGINT AS z, c6.n FROM c6 ANTI JOIN hot USING (x6, y6))
@@ -1482,7 +1515,7 @@ object OracleSql {
   /** Replica oracle for q129 (Dedup.prefixFilterJoin) — the HONEST all-pairs
     * Jaccard join over the same word-3-gram sets (no prefix pruning), so the
     * hash match proves the prefix-filter candidate set has recall 1. */
-  def q129(tauNum: Int, tauDen: Int): String =
+  def q129: String =
     s"""WITH sh AS (SELECT DISTINCT doc_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS s
        |       FROM (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
        |            range(1, 2000) t(i) WHERE i + 2 <= len(ts)),
@@ -1491,7 +1524,7 @@ object OracleSql {
        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
        |SELECT da, db, c AS n_inter, (za.n + zb.n - c)::BIGINT AS n_union
        |FROM inter JOIN sz za ON za.doc_id = da JOIN sz zb ON zb.doc_id = db
-       |WHERE $tauDen * c >= $tauNum * (za.n + zb.n - c)""".stripMargin
+       |WHERE ${Dedup.TauDen} * c >= ${Dedup.TauNum} * (za.n + zb.n - c)""".stripMargin
 
   /** Replica oracle for q130 (Analytics.markovTransitions). */
   val q130: String =
@@ -1505,9 +1538,9 @@ object OracleSql {
   /** Replica oracle for q131 (BoxJoin.gridClusters) — same hot tiles and
     * adjacency, components via recursive-CTE closure (a different algorithm
     * family from the engine's label propagation — the q63 discipline). */
-  def q131(minPtsBp: Long): String =
+  def q131: String =
     s"""WITH RECURSIVE p AS (SELECT fmod(value, 360.0) - 180.0 AS lon, (user_id % 181 - 90)::DOUBLE AS lat FROM events),
-       |mp AS (SELECT greatest(1, (count(*) * $minPtsBp) // 10000) AS v FROM events),
+       |mp AS (SELECT greatest(1, (count(*) * ${BoxJoin.ClusterMinPtsBp}) // 10000) AS v FROM events),
        |g AS (SELECT least(floor((lon+180)/360.0*64), 63)::BIGINT AS x,
        |             least(floor((lat+90)/180.0*64), 63)::BIGINT AS y FROM p),
        |c AS (SELECT x, y, count(*)::BIGINT AS n FROM g GROUP BY 1, 2),
@@ -1528,7 +1561,7 @@ object OracleSql {
        |FROM lab l JOIN hot h ON h.tid = l.tid GROUP BY 1""".stripMargin
 
   /** Replica oracle for q132 (TextOps.termLift). */
-  def q132(minCab: Long): String =
+  def q132: String =
     s"""WITH t AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
        |cw AS (SELECT w, count(*)::BIGINT AS c FROM t GROUP BY 1),
        |pair AS (SELECT a.w AS wa, b.w AS wb, count(*)::BIGINT AS cab
@@ -1536,7 +1569,7 @@ object OracleSql {
        |n AS (SELECT count(DISTINCT doc_id)::BIGINT AS nd FROM t)
        |SELECT wa, wb, cab, (1000000 * n.nd * cab) // (ca.c * cb.c) AS lift_e6
        |FROM pair, n JOIN cw ca ON ca.w = wa JOIN cw cb ON cb.w = wb
-       |WHERE cab >= $minCab""".stripMargin
+       |WHERE cab >= ${TextOps.LiftMinCab}""".stripMargin
 
   /** Replica oracle for q133 (ArrayFns.minMaxScale). */
   val q133: String =
@@ -1653,10 +1686,10 @@ object OracleSql {
   /** Replica oracle for q142 (Graph.treeDepths) — the synthetic parent
     * function replayed, depths via a SEQUENTIAL recursive-CTE chase (the
     * engine uses O(log D) pointer jumping — different algorithm family). */
-  def q142(n: Int): String =
+  def q142: String =
     s"""WITH RECURSIVE t AS (SELECT i AS node,
        |  CASE WHEN i = 0 THEN 0 ELSE ((${mix("(61453 + i)::UBIGINT")} & 9223372036854775807::UBIGINT) % i)::BIGINT END AS parent
-       |  FROM range(0, $n) r(i)),
+       |  FROM range(0, ${Graph.TreeNodes}) r(i)),
        |walk(node, anc, d) AS (
        |  SELECT node, parent, CASE WHEN node = 0 THEN 0 ELSE 1 END FROM t
        |  UNION ALL
@@ -1686,10 +1719,10 @@ object OracleSql {
       |GROUP BY 1""".stripMargin
 
   /** Replica oracle for q145 (Analytics.stratifiedSample). */
-  def q145(k: Int): String =
+  def q145: String =
     s"""WITH e AS (SELECT event_id, event_type, (${mix("event_id::UBIGINT")} & 9223372036854775807::UBIGINT) AS h FROM events),
        |r AS (SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY h, event_id) AS rn FROM e)
-       |SELECT event_type, event_id, rn::BIGINT AS rn FROM r WHERE rn <= $k""".stripMargin
+       |SELECT event_type, event_id, rn::BIGINT AS rn FROM r WHERE rn <= ${Analytics.SampleK}""".stripMargin
 
   /** Replica oracle for q146 (Analytics.shareOfTotal). */
   val q146: String =
@@ -1741,11 +1774,11 @@ object OracleSql {
       |SELECT day, n, (((n * n - ssq) * 1000000) // (n * n))::BIGINT AS gini_e6 FROM g""".stripMargin
 
   /** Replica oracle for q150 (Analytics.eventCorrelation). */
-  def q150(windowUs: Long): String =
+  def q150: String =
     s"""WITH p AS (SELECT user_id, epoch_us(ts) AS pus, event_id AS pid FROM events WHERE event_type = 'purchase'),
        |e AS (SELECT user_id AS eu, epoch_us(ts) AS eus FROM events WHERE event_type = 'error')
        |SELECT p.user_id, count(*)::BIGINT AS n_pairs, count(DISTINCT p.pid)::BIGINT AS n_purchases_hit
-       |FROM p JOIN e ON e.eu = p.user_id AND e.eus > p.pus AND e.eus <= p.pus + $windowUs
+       |FROM p JOIN e ON e.eu = p.user_id AND e.eus > p.pus AND e.eus <= p.pus + ${Analytics.CorrelationWindowUs}
        |GROUP BY 1""".stripMargin
 
   /** Replica oracle for q153 (SegmentJoin.intersectionCounts): the same
@@ -1894,13 +1927,13 @@ object OracleSql {
       |FROM f""".stripMargin
 
   /** Replica oracle for q161 (Baskets.pairRules). */
-  def q161(minSup: Long): String =
+  def q161: String =
     s"""WITH b AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
        |item AS (SELECT p, count(*)::BIGINT AS cnt FROM b GROUP BY 1),
        |tot AS (SELECT count(DISTINCT o)::BIGINT AS n_orders FROM b),
        |pr AS (SELECT a.p AS pa, c.p AS pb, count(*)::BIGINT AS sup
        |       FROM b a JOIN b c ON a.o = c.o AND a.p < c.p
-       |       GROUP BY 1, 2 HAVING count(*) >= $minSup)
+       |       GROUP BY 1, 2 HAVING count(*) >= ${Baskets.MinSup})
        |SELECT pa, pb, sup, ia.cnt AS cnt_a, ib.cnt AS cnt_b,
        |  ((sup * n_orders * 1000000) // (ia.cnt * ib.cnt))::BIGINT AS lift_e6
        |FROM pr JOIN item ia ON pr.pa = ia.p JOIN item ib ON pr.pb = ib.p, tot""".stripMargin
@@ -1912,7 +1945,7 @@ object OracleSql {
     * kept of 10,000 at sf0.01, exact). Same integer metric: split iff
     * max cross² > ε²·len², argmax ties to the smallest index; degenerate
     * chords never split (cross ≡ 0 on both sides by construction). */
-  def q162(eps2: Long): String =
+  def q162: String =
     s"""WITH RECURSIVE pts AS (
        |  SELECT user_id AS u,
        |    row_number() OVER (PARTITION BY user_id ORDER BY event_id) - 1 AS i,
@@ -1938,7 +1971,7 @@ object OracleSql {
        |      ORDER BY m DESC, p.i ASC LIMIT 1
        |    ) b
        |    WHERE r.e > r.s + 1
-       |      AND b.m > $eps2 * ((pe.x-ps.x)*(pe.x-ps.x) + (pe.y-ps.y)*(pe.y-ps.y))
+       |      AND b.m > ${Simplify.GateEps2} * ((pe.x-ps.x)*(pe.x-ps.x) + (pe.y-ps.y)*(pe.y-ps.y))
        |  ) sp, (VALUES (0), (1)) c(half)
        |),
        |kept AS (
@@ -1978,12 +2011,12 @@ object OracleSql {
   /** Replica oracle for q165 (Blocking.sortedNeighborhood): the single-
     * window row_number rank vs the engine's distributed two-pass ranking
     * (the q138 discipline — different mechanism, same total order). */
-  def q165(w: Int): String =
+  def q165: String =
     s"""WITH r AS (SELECT doc_id, n_chars,
        |  row_number() OVER (ORDER BY n_chars, doc_id) AS rn FROM documents)
        |SELECT a.doc_id AS da, b.doc_id AS db, (b.rn - a.rn)::INT AS rank_dist,
        |  abs(a.n_chars - b.n_chars)::BIGINT AS len_gap
-       |FROM r a JOIN r b ON b.rn BETWEEN a.rn + 1 AND a.rn + $w""".stripMargin
+       |FROM r a JOIN r b ON b.rn BETWEEN a.rn + 1 AND a.rn + ${Blocking.GateW}""".stripMargin
 
   /** Replica oracle for q166 (Corr.corrMatrix): identical quantization,
     * exact integer moments, and the identical floor(cov·10⁶/(√·√)+0.5)
@@ -2077,7 +2110,8 @@ object OracleSql {
     * splitmix scores (shard salt constants embedded as UBIGINT literals),
     * argmax in NATIVE unsigned order (the engine flips the sign bit to get
     * the same order in signed Long), first-wins tie chain. */
-  def q171(s1: Int): String = {
+  def q171: String = {
+    val s1 = Sharding.Shards
     def salt(s: Int) = java.lang.Long.toUnsignedString(graft.synth.ImageSynth.mix(s.toLong))
     def hcol(s: Int) = s"${mix(s"xor(doc_id::UBIGINT, ${salt(s)}::UBIGINT)")} AS h$s"
     def pick(nS: Int, best: String) =
@@ -2116,7 +2150,8 @@ object OracleSql {
     * unrolled as MATERIALIZED CTEs (DuckDB inlines single-use CTEs and the
     * round tree would re-explode exponentially otherwise — the q63
     * lesson). */
-  def q173(hops: Int): String = {
+  def q173: String = {
+    val hops = Sssp.GateHops
     val rounds = (1 to hops).map { k =>
       s"""d$k AS MATERIALIZED (SELECT node, min(d) AS d FROM (
          |  SELECT node, d FROM d${k - 1}
@@ -2154,19 +2189,20 @@ object OracleSql {
       |FROM l WHERE next_us IS NOT NULL GROUP BY 1, 2""".stripMargin
 
   /** Replica oracle for q176 (Lateness.watermarkAudit). */
-  def q176(lagUs: Long): String =
+  def q176: String =
     s"""WITH s AS (SELECT user_id, event_id,
        |  (event_id * 2654435761) % 1099511627776 AS ak,
        |  epoch_us(ts) AS us FROM events),
        |h AS (SELECT *, max(us) OVER (PARTITION BY user_id ORDER BY ak, event_id
        |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS hwm FROM s)
        |SELECT user_id, count(*)::BIGINT AS n_total,
-       |  sum(CASE WHEN hwm IS NOT NULL AND us < hwm - $lagUs THEN 1 ELSE 0 END)::BIGINT AS n_late,
+       |  sum(CASE WHEN hwm IS NOT NULL AND us < hwm - ${Lateness.LagUs} THEN 1 ELSE 0 END)::BIGINT AS n_late,
        |  max(CASE WHEN hwm IS NOT NULL THEN greatest(hwm - us, 0) ELSE 0 END)::BIGINT AS max_disorder_us
        |FROM h GROUP BY 1""".stripMargin
 
   /** Replica oracle for q177 (Lateness.topNOthers). */
-  def q177(n: Int): String =
+  def q177: String = {
+    val n = Lateness.TopN
     s"""WITH c AS (SELECT floor(fmod(value, 360.0) / 360.0 * 8.0)::BIGINT AS tile,
        |  event_type, count(*)::BIGINT AS n FROM events GROUP BY 1, 2),
        |r AS (SELECT *, row_number() OVER (PARTITION BY tile ORDER BY n DESC, event_type) AS rk FROM c)
@@ -2174,6 +2210,7 @@ object OracleSql {
        |UNION ALL
        |SELECT tile, ${n + 1} AS rk, 'OTHERS' AS bucket, sum(n)::BIGINT AS n
        |FROM r WHERE rk > $n GROUP BY 1""".stripMargin
+  }
 
   /** Replica oracle for q178 (Lateness.weightedMedian). */
   def q178: String =
@@ -2189,8 +2226,8 @@ object OracleSql {
 
   /** Replica oracle for q179 (Pyramid.equalizationLut): q158's closed-form
     * histogram + the same per-image cumsum LUT. */
-  def q179(n: Long): String =
-    s"""WITH ${imageBlockCtes(n)},
+  def q179: String =
+    s"""WITH $imageBlockCtes,
        |offm AS (SELECT 3 * (i % 8) + 4 * (i // 8) AS t, count(*)::BIGINT AS m
        |         FROM range(0, 64) r(i) GROUP BY 1),
        |hist AS (SELECT idx, (base + t)::INT AS value, sum(m)::BIGINT AS cnt

@@ -13,6 +13,7 @@ import graft.pipeline.{ImagePipeline, Validate}
   * column names/types matched to the Spark output.
   */
 object SparkEntry {
+  import OracleSql.pts
 
   /** Flagship: the spatial-join + tiling pipeline over the synthesized
     * image+caption table (north_rule) — geotag derivation, H3/S2/quadkey cell
@@ -367,7 +368,7 @@ object SparkEntry {
     // time-travel read of the epoch-checkpointed store: as-of filter is a
     // partition-column predicate -> epoch-1 dirs pruned before any scan
     "q119_time_travel" -> ((s: SparkSession, _: String) =>
-      graft.pipeline.Checkpoint.timeTravelGate(s, 400L, 650L)),
+      graft.pipeline.Checkpoint.timeTravelGate(s)),
     // compaction planning: per-bucket running-size threshold, one exchange
     "q120_compaction_plan" -> ((s: SparkSession, _: String) =>
       graft.ops.Lakehouse.compactionPlan(s)),
@@ -536,21 +537,23 @@ object SparkEntry {
     // re-running the generator through every consumer tripled the plan and
     // dominated the gate's wall time (8.2 s -> see PLANS.md r5)
     "q65_ann_neardup_lsh_tier" -> ((s: SparkSession, _: String) => CacheOps.scope(c =>
-      Ann.cosineNearDupLshTier(c.checkpoint(Ann.plantedNearDupVecs(s, 900)), minCos = 0.95))),
+      Ann.cosineNearDupLshTier(c.checkpoint(Ann.plantedNearDupVecs(s))))),
     // image pipeline (north_rule flagship; input synthesized deterministically)
-    "q32_image_tile_pivot" -> ((s: SparkSession, _: String) => ImagePipeline.run(s, 2000L, 16)),
+    "q32_image_tile_pivot" -> ((s: SparkSession, _: String) =>
+      ImagePipeline.run(s, ImagePipeline.GateRows, ImagePipeline.GateParts)),
     // the same rollup with teams DISCOVERED dynamically via pivot() over the
     // typed Dataset path — must agree with q32's codegen path and the oracle
     "q38_team_pivot_dynamic" -> ((s: SparkSession, _: String) =>
       ImagePipeline.tileTeamPivotDynamic(PipJoin.join(
-        ImagePipeline.features(s, 2000L, 16).toDF(), ImagePipeline.metroBoundaries, "lon", "lat"))),
+        ImagePipeline.features(s, ImagePipeline.GateRows, ImagePipeline.GateParts).toDF(),
+        ImagePipeline.metroBoundaries, "lon", "lat"))),
     // the FULL tilePointSummaries measure matrix: tile totals + dynamic
     // per-team km/b/p/e pivot + team_sum rollups (extractor.js:279-313)
     "q45_tile_measure_matrix" -> ((s: SparkSession, _: String) =>
-      ImagePipeline.tileMeasureMatrix(s, 2000L)),
+      ImagePipeline.tileMeasureMatrix(s)),
     // userDailyPointSummaries through the typed WeightedCentroid Aggregator
     "q46_centroid_agg" -> ((s: SparkSession, _: String) =>
-      ImagePipeline.userDailyCentroidGate(s, 2000L, 16)),
+      ImagePipeline.userDailyCentroidGate(s)),
     // geojsonseq sink: emit real feature lines, parse back, content invariants
     "q47_geojson_sink" -> ((s: SparkSession, d: String) =>
       graft.geo.GeoJson.roundTripSummary(graft.spatial.SpatialQueries.eventPoints(s, d))),
@@ -558,32 +561,33 @@ object SparkEntry {
     "q48_ann_lsh_recall" -> ((s: SparkSession, d: String) => Ann.lshRecall(s, d)),
     // per-tile inverse-mercator centers (X9, turf.center of the tile polygon)
     "q56_tile_centers" -> ((s: SparkSession, _: String) =>
-      ImagePipeline.tileCenters(s, 2000L)),
+      ImagePipeline.tileCenters(s)),
     // teamDailyPointSummaries: the per-(team, day) centroid + e/b/km/p
     // measures layer (extractor.js:241-275) — the last reference rollup layer
     "q60_daily_point_summaries" -> ((s: SparkSession, _: String) =>
-      ImagePipeline.dailyPointSummaries(s, 2000L)),
+      ImagePipeline.dailyPointSummaries(s)),
     // objects layer as per-feature emission with the short-key projection,
     // round-tripped through the REAL geojsonseq sink (extractor.js:164-192)
     "q61_object_features" -> ((s: SparkSession, _: String) =>
-      ImagePipeline.objectFeatures(s, 2000L)),
+      ImagePipeline.objectFeatures(s)),
     // checkpoint lineage manifests (S9): a full checkpointed build into a
     // fresh scratch dir, manifests emitted as rows and hash-verified against
     // the analytic bucket/cell-range/row-count derivation
     "q62_checkpoint_lineage" -> ((s: SparkSession, _: String) =>
-      graft.pipeline.Checkpoint.lineageGate(s, 800L)),
+      graft.pipeline.Checkpoint.lineageGate(s)),
     // append-only incremental ingestion (epoch-scoped manifests): epoch 0
     // builds [0, 500), the input grows by [500, 800), an incremental run
     // ingests exactly the new epoch and a re-run is a no-op — the emitted
     // (epoch, bucket) manifests hash against the analytic derivation over
     // the full grown domain
     "q64_checkpoint_append" -> ((s: SparkSession, _: String) =>
-      graft.pipeline.Checkpoint.appendGate(s, 500L, 800L)),
+      graft.pipeline.Checkpoint.appendGate(s)),
     // multi-zoom tile emission (zoom-band layers): bit-shift parent chain
     "q49_multizoom_rollup" -> ((s: SparkSession, _: String) =>
-      ImagePipeline.multiZoomRollup(s, 2000L)),
+      ImagePipeline.multiZoomRollup(s)),
     "q33_image_validate" -> ((s: SparkSession, _: String) =>
-      Validate.summary(ImagePipeline.synthTable(s, 2000L, 16).toDF())),
+      Validate.summary(ImagePipeline.synthTable(s, ImagePipeline.GateRows,
+        ImagePipeline.GateParts).toDF())),
     // full reference classifier over the closed-form synthetic versions table;
     // map columns canonicalized to sorted k=v strings so the ENTIRE classifier
     // output (incl. tag diffs, latch, normalized-equality effects) is oracle-
@@ -591,7 +595,7 @@ object SparkEntry {
     "q34_interactions_versions" -> ((s: SparkSession, _: String) => {
       import org.apache.spark.sql.functions._
       import graft.ops.Interactions
-      Interactions.classify(Interactions.synthVersions(s, 500).toDF()).select(
+      Interactions.classify(Interactions.synthVersions(s).toDF()).select(
         col("id"), col("etype"), col("v"), col("uid"), col("c"), col("e"),
         col("vs"), col("vu"), col("duid"), col("mv"),
         Interactions.mapToStr(col("a_a")).as("a_a_s"),
@@ -603,7 +607,7 @@ object SparkEntry {
     // A12 edit-class counters: per-class rollup of the classifier stream
     "q57_edit_class_counts" -> ((s: SparkSession, _: String) => {
       import org.apache.spark.sql.functions._
-      graft.ops.Interactions.classify(graft.ops.Interactions.synthVersions(s, 500).toDF())
+      graft.ops.Interactions.classify(graft.ops.Interactions.synthVersions(s).toDF())
         .groupBy(col("e"))
         .agg(count(lit(1)).as("n"), countDistinct(col("id")).as("n_entities"))
     }),
@@ -611,7 +615,7 @@ object SparkEntry {
     // columns): filter the versions table on map_contains_key, roll up by type
     "q39_tag_key_filter" -> ((s: SparkSession, _: String) => {
       import org.apache.spark.sql.functions._
-      graft.ops.Interactions.synthVersions(s, 500).toDF()
+      graft.ops.Interactions.synthVersions(s).toDF()
         .filter(map_contains_key(col("tags"), "restriction") ||
           map_contains_key(col("tags"), "k2"))
         .groupBy(col("etype"))
@@ -645,7 +649,7 @@ object SparkEntry {
     // distinct-key dictionary, then filter/rollup rows by resolved keys
     "q41_key_like_resolution" -> ((s: SparkSession, _: String) => {
       import org.apache.spark.sql.functions._
-      val versions = graft.ops.Interactions.synthVersions(s, 500).toDF()
+      val versions = graft.ops.Interactions.synthVersions(s).toDF()
       val dict = versions.select(explode(map_keys(col("tags"))).as("key")).distinct()
       val pattern = "K%".toLowerCase // case-insensitive: both sides lowered
       val resolved = dict.filter(lower(col("key")).like(pattern))
@@ -660,8 +664,8 @@ object SparkEntry {
     "q43_interval_filters" -> ((s: SparkSession, _: String) => {
       import org.apache.spark.sql.functions._
       val inter = graft.ops.Interactions.classify(
-        graft.ops.Interactions.synthVersions(s, 500).toDF())
-      val start = 1500150000L; val end = 1500300000L
+        graft.ops.Interactions.synthVersions(s).toDF())
+      val (start, end) = (graft.ops.Interactions.IntervalStart, graft.ops.Interactions.IntervalEnd)
       val mv = inter.filter(col("e") === "MIV")
       val before = mv.select(lit("MV_BEFORE").as("edit"),
         lit(null).cast("long").as("valid_since"), col("vs").as("valid_until"))
@@ -740,9 +744,6 @@ object SparkEntry {
        rk AS (SELECT vec_id, nbr, row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, nbr) AS rank FROM d)
        SELECT vec_id, nbr, rank::INT AS rank FROM rk WHERE rank <= 4"""
   }
-
-  private val pts =
-    s"SELECT event_id, event_type, user_id, value, value % 360.0 - 180.0 AS lon, (user_id % 181 - 90)::DOUBLE AS lat FROM events"
 
   /** ALL-PAIRS exact Jaccard over string shingles — shared verbatim by q27
     * (uncapped LSH pipeline) and q58 (the same pipeline under the production
@@ -857,7 +858,8 @@ object SparkEntry {
     * the independent representation that would catch a 64-bit collision
     * instead of inheriting it), the same document-frequency cap, distinct
     * shared spans counted per pair. */
-  private def spanDupOracle(k: Int, maxDf: Int) =
+  private val spanDupOracle = {
+    val (k, maxDf) = (Dedup.SpanTokens, Dedup.SpanMaxDf)
     s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
        w AS (SELECT DISTINCT doc_id,
                unnest(list_transform(range(1, len(toks) - ${k - 2}),
@@ -868,6 +870,7 @@ object SparkEntry {
        SELECT l.doc_id AS a, r.doc_id AS b, count(*)::BIGINT AS n_spans
        FROM wc l JOIN wc r ON l.span = r.span AND l.doc_id < r.doc_id
        GROUP BY 1, 2"""
+  }
 
   /** Full FNV/bit-vote simhash recomputation + all-pairs hamming — shared by
     * q28 (uncapped) and q59 (default caps), same construction as above. */
@@ -1168,18 +1171,17 @@ object SparkEntry {
     "q70_dedup_decision" -> dedupDecisionOracle,
     "q72_leakage_safe_split" -> leakageSafeSplitOracle,
     "q74_decontaminate" -> decontaminateOracle,
-    // engine defaults (k=12 tokens, df-cap 64) mirrored here
-    "q71_span_dedup" -> spanDupOracle(12, 64),
+    "q71_span_dedup" -> spanDupOracle,
     "q55_ann_ivf" -> bruteTopKOracle,
     "q30_ann_brute" -> bruteTopKOracle,
-    "q60_daily_point_summaries" -> OracleSql.q60(2000),
-    "q61_object_features" -> OracleSql.q61(2000),
-    "q62_checkpoint_lineage" -> OracleSql.q62(800),
-    "q64_checkpoint_append" -> OracleSql.q64(500, 800),
+    "q60_daily_point_summaries" -> OracleSql.q60,
+    "q61_object_features" -> OracleSql.q61,
+    "q62_checkpoint_lineage" -> OracleSql.q62,
+    "q64_checkpoint_append" -> OracleSql.q64,
     // q31's oracle replicates the WHOLE LSH pipeline in SQL (inlined plane
     // constants, signatures, banding, dedup, exact rerank) — see OracleSql.q31
-    "q31_ann_lsh" -> OracleSql.q31(Ann.hyperplanes(Ann.LshBits, 64)),
-    "q44_embed_neardup" -> OracleSql.q44(0.45),
+    "q31_ann_lsh" -> OracleSql.q31,
+    "q44_embed_neardup" -> OracleSql.q44,
     "q66_ann_sq8" -> OracleSql.q66,
     // IVF+SQ8 at full probe ≡ exhaustive SQ8 — same relation by definition
     "q69_ann_ivf_sq8" -> OracleSql.q66,
@@ -1205,7 +1207,7 @@ object SparkEntry {
             floor(p.value * 100.0 + 0.5)::BIGINT AS p_value_cents
           FROM events e ASOF JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
             ON e.user_id = p.user_id AND e.ts >= p.ts""",
-    "q83_kmv_distinct" -> OracleSql.q83(graft.ops.Sketches.DistinctK),
+    "q83_kmv_distinct" -> OracleSql.q83,
     "q87_hll_distinct" -> OracleSql.q87,
     // honest all-pairs distance join; `a.lat = b.lat` is a lattice fact
     // (integer-degree lats, sigma*R >= |dlat|*111.19 km > 15 km for any
@@ -1255,7 +1257,7 @@ object SparkEntry {
             sum(floor(l_extendedprice * 100.0 + 0.5)::BIGINT)::BIGINT AS revenue_cents
           FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""",
     // bit-for-bit replay of the literal-shift interleave (integer terms)
-    "q91_zorder" -> OracleSql.q91(pts),
+    "q91_zorder" -> OracleSql.q91,
     // the window form of per-group top-k (the engine runs bounded heaps)
     "q92_topk_group" ->
       """WITH r AS (SELECT c_mktsegment, c_custkey,
@@ -1277,15 +1279,15 @@ object SparkEntry {
             last_us
           FROM a""",
     // full geohash encode replayed in SQL (scaled ints + interleave + base32)
-    "q94_geohash" -> OracleSql.q94(pts),
+    "q94_geohash" -> OracleSql.q94,
     // the entire histogram sketch replayed: bins, cumulative ranks, estimates
     "q95_hist_quantile" -> graft.ops.HistQuantile.oracle,
     // per-side sketches, union sketch, rho, and both estimates replayed
-    "q96_kmv_intersect" -> OracleSql.q96(graft.ops.Sketches.IntersectK, graft.ops.Sketches.IntersectCut),
+    "q96_kmv_intersect" -> OracleSql.q96,
     // the full d×w counter matrix + min-over-rows estimates replayed
-    "q97_countmin" -> OracleSql.q97(4, 256),
+    "q97_countmin" -> OracleSql.q97,
     // fmt coin + analytic pixels + tile assignment replayed in SQL
-    "q98_tile_mosaic" -> OracleSql.q98(2000),
+    "q98_tile_mosaic" -> OracleSql.q98,
     // grouped register file + HUGEINT estimate per event_type
     "q99_hll_per_group" -> OracleSql.q99,
     // DIRECT full recompute — merged partials must equal it as a relation
@@ -1313,31 +1315,31 @@ object SparkEntry {
           FROM v""",
     "q106_cohort_retention" -> OracleSql.q106,
     "q107_funnel" -> OracleSql.q107,
-    "q108_triangles" -> OracleSql.q108(graft.ops.Graph.GateNodes, graft.ops.Graph.GateEdges),
-    "q109_pagerank" -> OracleSql.q109(graft.ops.Graph.GateNodes, graft.ops.Graph.GateEdges, 10),
+    "q108_triangles" -> OracleSql.q108,
+    "q109_pagerank" -> OracleSql.q109,
     "q110_ema" -> OracleSql.q110,
     "q111_pii_scrub" -> OracleSql.q111,
-    "q112_bbox_overlap" -> OracleSql.q112(150, 600),
+    "q112_bbox_overlap" -> OracleSql.q112,
     "q113_tile_density" -> OracleSql.q113,
     "q114_grouped_median" -> OracleSql.q114,
     "q115_skyline" -> OracleSql.q115,
-    "q116_image_integral" -> OracleSql.q116(graft.multimodal.Pyramid.GateN),
-    "q117_pyramid" -> OracleSql.q117(graft.multimodal.Pyramid.GateN),
-    "q118_stay_segments" -> OracleSql.q118(graft.ops.Sessionize.StayRadiusKm),
-    "q119_time_travel" -> OracleSql.q119(400L),
+    "q116_image_integral" -> OracleSql.q116,
+    "q117_pyramid" -> OracleSql.q117,
+    "q118_stay_segments" -> OracleSql.q118,
+    "q119_time_travel" -> OracleSql.q119,
     "q120_compaction_plan" -> OracleSql.q120,
     "q121_cdc_merge" -> OracleSql.q121,
     "q122_scd2" -> OracleSql.q122,
     "q123_change_feed" -> OracleSql.q123,
     "q124_bigram_lm" -> OracleSql.q124,
-    "q125_kcore" -> OracleSql.q125(graft.ops.Graph.GateNodes, graft.ops.Graph.GateEdges, 8, 10),
-    "q126_inverted_query" -> OracleSql.q126(Seq("dup", "key", "fast")),
-    "q127_adaptive_tiles" -> OracleSql.q127(15L),
+    "q125_kcore" -> OracleSql.q125,
+    "q126_inverted_query" -> OracleSql.q126,
+    "q127_adaptive_tiles" -> OracleSql.q127,
     "q128_grouped_trend" -> OracleSql.q128,
-    "q129_prefix_filter_join" -> OracleSql.q129(6, 10),
+    "q129_prefix_filter_join" -> OracleSql.q129,
     "q130_markov" -> OracleSql.q130,
-    "q131_grid_clusters" -> OracleSql.q131(15L),
-    "q132_term_lift" -> OracleSql.q132(25L),
+    "q131_grid_clusters" -> OracleSql.q131,
+    "q132_term_lift" -> OracleSql.q132,
     "q133_minmax_scale" -> OracleSql.q133,
     "q134_mad_anomalies" -> OracleSql.q134,
     "q135_shipping_priority" -> OracleSql.q135,
@@ -1347,44 +1349,44 @@ object SparkEntry {
     "q139_seq_patterns" -> OracleSql.q139,
     "q140_bitmap_intersect" -> OracleSql.q140,
     "q141_rfm" -> OracleSql.q141,
-    "q142_tree_depths" -> OracleSql.q142(2000),
+    "q142_tree_depths" -> OracleSql.q142,
     "q143_interval_merge" -> OracleSql.q143,
     "q144_rolling_distinct" -> OracleSql.q144,
-    "q145_stratified_sample" -> OracleSql.q145(graft.ops.Analytics.SampleK),
+    "q145_stratified_sample" -> OracleSql.q145,
     "q146_share_of_total" -> OracleSql.q146,
     "q147_temporal_join" -> OracleSql.q147,
     "q148_skew_profile" -> OracleSql.q148,
     "q149_gini_splits" -> OracleSql.q149,
-    "q150_event_correlation" -> OracleSql.q150(graft.ops.Analytics.CorrelationWindowUs),
-    "q151_metro_brightness" -> OracleSql.q151(2000),
-    "q152_image_tv" -> OracleSql.q152(graft.multimodal.Pyramid.GateN),
+    "q150_event_correlation" -> OracleSql.q150,
+    "q151_metro_brightness" -> OracleSql.q151,
+    "q152_image_tv" -> OracleSql.q152,
     "q153_segment_intersections" -> OracleSql.q153,
     "q154_polygon_measures" -> OracleSql.q154,
     "q155_encoding_advisor" -> OracleSql.q155,
     "q156_zonemap_sim" -> OracleSql.q156,
     "q157_merkle_diff" -> OracleSql.q157,
-    "q158_pixel_histogram" -> OracleSql.q158(graft.multimodal.Pyramid.GateN),
+    "q158_pixel_histogram" -> OracleSql.q158,
     "q159_threshold_sweep" -> OracleSql.q159,
     "q160_auc_exact" -> OracleSql.q160,
-    "q161_basket_rules" -> OracleSql.q161(3),
-    "q162_douglas_peucker" -> OracleSql.q162(250000L),
+    "q161_basket_rules" -> OracleSql.q161,
+    "q162_douglas_peucker" -> OracleSql.q162,
     "q163_tv_drift" -> OracleSql.q163,
     "q164_gram_matrix" -> OracleSql.q164,
-    "q165_sorted_neighborhood" -> OracleSql.q165(3),
+    "q165_sorted_neighborhood" -> OracleSql.q165,
     "q166_corr_matrix" -> OracleSql.q166,
     "q167_idw_surface" -> OracleSql.q167,
     "q168_cusum" -> OracleSql.q168,
     "q169_spearman" -> OracleSql.q169,
-    "q170_blob_count" -> OracleSql.q170(graft.multimodal.Pyramid.GateN, 150),
-    "q171_rendezvous" -> OracleSql.q171(graft.ops.Sharding.Shards),
+    "q170_blob_count" -> OracleSql.q170,
+    "q171_rendezvous" -> OracleSql.q171,
     "q172_lpm_join" -> OracleSql.q172,
-    "q173_sssp" -> OracleSql.q173(6),
+    "q173_sssp" -> OracleSql.q173,
     "q174_twap" -> OracleSql.q174,
     "q175_tile_occupancy" -> OracleSql.q175,
-    "q176_watermark_audit" -> OracleSql.q176(43200000000L),
-    "q177_topn_others" -> OracleSql.q177(graft.ops.Lateness.TopN),
+    "q176_watermark_audit" -> OracleSql.q176,
+    "q177_topn_others" -> OracleSql.q177,
     "q178_weighted_median" -> OracleSql.q178,
-    "q179_equalization_lut" -> OracleSql.q179(graft.multimodal.Pyramid.GateN),
+    "q179_equalization_lut" -> OracleSql.q179,
     "q180_z_outliers" -> OracleSql.q180,
     "q181_star_pip" -> OracleSql.q181,
     "q182_ks_drift" -> OracleSql.q182,
@@ -1392,7 +1394,7 @@ object SparkEntry {
     "q184_tail_shortfall" -> OracleSql.q184,
     "q185_winsorized" -> OracleSql.q185,
     "q186_nearest_asof" -> OracleSql.q186,
-    "q187_clustering_coeff" -> OracleSql.q187(graft.ops.Graph.GateNodes, graft.ops.Graph.GateEdges),
+    "q187_clustering_coeff" -> OracleSql.q187,
     "q188_autocorr" -> OracleSql.q188,
     // both outer null sides hashed row-for-row
     "q100_outer_join" ->
@@ -1435,8 +1437,8 @@ object SparkEntry {
             max(us)::BIGINT AS end_us, count(*)::BIGINT AS n_events,
             sum(vc)::BIGINT AS value_cents
           FROM s GROUP BY 1, 2""",
-    "q65_ann_neardup_lsh_tier" -> OracleSql.q65(900, 0.95),
-    "q73_semdedup" -> OracleSql.q73(0.45),
+    "q65_ann_neardup_lsh_tier" -> OracleSql.q65,
+    "q73_semdedup" -> OracleSql.q73,
     // sketch queries verified by a REAL oracle: OracleSql reproduces the
     // engine's from-scratch 64-bit hashing (FNV-1a, rotl, splitmix64) in
     // DuckDB via wrap-around 32-bit-half multiplication
@@ -1447,10 +1449,10 @@ object SparkEntry {
     // the full image pipeline re-derived in SQL: splitmix64 + geotag + web-
     // mercator + PIP, bit-exact (see OracleSql.pipelineCtes). q38's dynamic
     // pivot must produce the identical relation (column order differs only)
-    "q32_image_tile_pivot" -> OracleSql.q32(2000),
-    "q38_team_pivot_dynamic" -> OracleSql.q32(2000),
-    "q45_tile_measure_matrix" -> OracleSql.q45(2000),
-    "q46_centroid_agg" -> OracleSql.q46(2000),
+    "q32_image_tile_pivot" -> OracleSql.q32(ImagePipeline.GateRows),
+    "q38_team_pivot_dynamic" -> OracleSql.q32(ImagePipeline.GateRows),
+    "q45_tile_measure_matrix" -> OracleSql.q45,
+    "q46_centroid_agg" -> OracleSql.q46,
     // the sink round-trip invariants recomputed straight from the raw rows
     "q47_geojson_sink" ->
       s"""WITH p AS ($pts)
@@ -1461,18 +1463,18 @@ object SparkEntry {
            count(DISTINCT event_type)::BIGINT AS n_types,
            sum(floor(value * 100 + 0.5)::BIGINT)::BIGINT AS value_cents
          FROM p""",
-    "q48_ann_lsh_recall" -> OracleSql.q48(Ann.hyperplanes(Ann.LshBits, 64)),
-    "q49_multizoom_rollup" -> OracleSql.q49(2000),
-    "q56_tile_centers" -> OracleSql.q56(2000),
+    "q48_ann_lsh_recall" -> OracleSql.q48,
+    "q49_multizoom_rollup" -> OracleSql.q49,
+    "q56_tile_centers" -> OracleSql.q56,
     // the classifier's output is re-derived ANALYTICALLY from the generator
     // formulas — fully independent of the Spark window-algebra implementation
-    "q34_interactions_versions" -> OracleSql.q34(500),
+    "q34_interactions_versions" -> OracleSql.q34,
     // group the FULL q34 analytic relation by edit class
     "q57_edit_class_counts" ->
       s"""SELECT e, count(*)::BIGINT AS n, count(DISTINCT id)::BIGINT AS n_entities
-         FROM (${OracleSql.q34(500)}) t GROUP BY 1""",
-    "q39_tag_key_filter" -> OracleSql.q39(500),
-    "q43_interval_filters" -> OracleSql.q43(500, 1500150000L, 1500300000L),
+         FROM (${OracleSql.q34}) t GROUP BY 1""",
+    "q39_tag_key_filter" -> OracleSql.q39,
+    "q43_interval_filters" -> OracleSql.q43,
     "q35_roster_rollup" -> graft.ops.Roster.rosterRollupOracle,
     "q36_centroid" ->
       s"""WITH p AS ($pts)
@@ -1507,8 +1509,8 @@ object SparkEntry {
          GROUP BY 1""",
     // analytic: key kJ exists on rows k >= J of entities whose kind(J) = 3
     "q41_key_like_resolution" ->
-      """WITH ev AS (
-           SELECT t.id, r.k FROM range(0, 500) t(id), range(0, 6) r(k)
+      s"""WITH ev AS (
+           SELECT t.id, r.k FROM range(0, ${graft.ops.Interactions.GateEntities}) t(id), range(0, 6) r(k)
            WHERE r.k < 2 + (t.id*7+3)%5),
          x AS (SELECT id, k, j FROM ev, range(1, 6) s(j)
                WHERE j <= k AND (id*13 + j*37)%10 = 3)
@@ -1516,7 +1518,7 @@ object SparkEntry {
     // analytic (round-4): the row total comes from the generator domain and
     // the per-format verdict split re-derives mix(seed^5) bit 0 in SQL —
     // no more pinned constants (see OracleSql.q33)
-    "q33_image_validate" -> OracleSql.q33(2000),
+    "q33_image_validate" -> OracleSql.q33,
     // q31_ann_lsh: LSH-bucketed ANN — candidates reranked exactly; see queries.
   )
 }

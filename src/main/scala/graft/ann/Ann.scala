@@ -57,6 +57,9 @@ object Ann {
   val LloydIters = 2
   /** IVF lists of the `dir` tiers, all probed: the exhaustive degenerate the gates pin. */
   private val NList = 16
+  /** The cosine threshold of the exact `dir` near-dup gates, [[cosineNearDupPairs]]
+    * (q44) and [[semDedup]] (q73). */
+  val DedupCos = 0.45
 
   private def loadVecs(spark: SparkSession, dir: String): DataFrame =
     vecsOf(table(spark, dir, "embeddings"))
@@ -217,7 +220,7 @@ object Ann {
     * threshold's angle gives LSH real recall; at θ=0.45 on this corpus the
     * qualifying pairs sit ON the threshold — measured min cos 0.4501 — so no
     * sketch prefilter has certifiable recall and the gate runs exact). */
-  def cosineNearDupPairs(spark: SparkSession, dir: String, minCos: Double = 0.45,
+  def cosineNearDupPairs(spark: SparkSession, dir: String, minCos: Double = DedupCos,
                          blocks: Int = 8): DataFrame = {
     import spark.implicits._
     val thr = minCos
@@ -312,7 +315,7 @@ object Ann {
     * pairs), vectors join back once, and the exact-cosine verify runs in a
     * mapPartitions kernel over primitive arrays — cosine once per candidate,
     * never in a join condition. */
-  def cosineNearDupLshTier(vecs: DataFrame, minCos: Double): DataFrame = {
+  def cosineNearDupLshTier(vecs: DataFrame, minCos: Double = PlantedCos): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
     val banded = bandRows(vecs, 64, 8).withColumnRenamed("vec_id", "doc_id")
@@ -423,9 +426,9 @@ object Ann {
     * top-53-bit uniform, base + eps·noise) is replicated operation-for-
     * operation in the DuckDB oracle (OracleSql.q65), so the gate hashes the
     * tier's full output relation. */
-  def plantedNearDupVecs(spark: SparkSession, n: Int): DataFrame = {
+  def plantedNearDupVecs(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    spark.range(0L, n.toLong, 1L, 8).map { idx =>
+    spark.range(0L, PlantedRows, 1L, 8).map { idx =>
       val g = idx / PlantedGroup
       val v = Array.tabulate(PlantedDim) { i =>
         val b = unitUniform(graft.synth.ImageSynth.mix(g * PlantedDim + i + 10000000L))
@@ -436,10 +439,13 @@ object Ann {
     }.toDF("vec_id", "v")
   }
 
-  /** The planted corpus' vector length, group run length and perturbation scale. */
+  /** The planted corpus' row count (q65), vector length, group run length
+    * and perturbation scale, and the tier threshold q65 runs at. */
+  val PlantedRows = 900L
   val PlantedDim = 64
   val PlantedGroup = 3
   val PlantedEps = 0.01
+  val PlantedCos = 0.95
 
   /** Uniform in [-1, 1) from the top 53 bits of a 64-bit hash (the
     * hyperplanes construction, shared with the q65 corpus). */
@@ -663,7 +669,7 @@ object Ann {
     * recursive-CTE closure (no centroid replay needed: at nlist = 1
     * clustering cannot change the answer, the q55 plan-equivalence trick). */
   def semDedup(spark: SparkSession, dir: String): DataFrame =
-    semDedupFrom(loadVecs(spark, dir), 1, 0.45)
+    semDedupFrom(loadVecs(spark, dir), 1, DedupCos)
 
   def semDedupFrom(vecs: DataFrame, nlist: Int, theta: Double): DataFrame = graft.CacheOps.scope { s =>
     val spark = vecs.sparkSession

@@ -26,7 +26,8 @@ object MetroBrightness {
 
   /** Gate query (q151): per-(metro, team) count + summed sampled brightness
     * of the PNG rows of the synthesized image table. */
-  def layer(spark: SparkSession, n: Long = 2000, parts: Int = 16): DataFrame = {
+  def layer(spark: SparkSession, n: Long = ImagePipeline.GateRows,
+            parts: Int = ImagePipeline.GateParts): DataFrame = {
     val index = new BoundaryIndex(ImagePipeline.metroBoundaries.toArray)
     ImagePipeline.synthTable(spark, n, parts)
       .filter(_.fmt == "png")

@@ -30,6 +30,8 @@ object Pyramid {
   /** Image count (the oracles read it) and range partitions of the raster gates. */
   val GateN = 1200L
   private val GateParts = 16
+  /** The brightness threshold of [[blobCount]]'s mask (q170). */
+  val BlobThr = 150
 
   final case class IntRow(idx: Long, w: Int, h: Int, sum_brightness: Long)
   final case class PyrRow(idx: Long, lvl1_sum: Long, lvl2_sum: Long)
@@ -127,7 +129,7 @@ object Pyramid {
     * closes with a recursive CTE (the q63/q131 different-family
     * discipline). */
   def blobCount(spark: SparkSession, n: Long = GateN, parts: Int = GateParts,
-                thr: Int = 150): DataFrame =
+                thr: Int = BlobThr): DataFrame =
     ImagePipeline.synthTable(spark, n, parts)
       .filter(_.fmt == "png")
       .mapPartitions { it =>

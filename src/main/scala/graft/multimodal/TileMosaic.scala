@@ -34,7 +34,8 @@ object TileMosaic {
 
   /** Gate query (q98): per-z12-tile count + summed 4-pixel brightness of
     * the PNG rows of the synthesized image table. */
-  def mosaic(spark: SparkSession, n: Long = 2000, parts: Int = 16): DataFrame = {
+  def mosaic(spark: SparkSession, n: Long = ImagePipeline.GateRows,
+             parts: Int = ImagePipeline.GateParts): DataFrame = {
     val px = ImagePipeline.synthTable(spark, n, parts)
       .filter(_.fmt == "png")
       .mapPartitions { it =>

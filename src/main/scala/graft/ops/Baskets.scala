@@ -19,8 +19,11 @@ import graft.Session.table
   */
 object Baskets {
 
+  /** The support floor q161 runs at; its oracle reads it. */
+  val MinSup = 3L
+
   /** Gate query (q161): item pairs with support ≥ minSup, plus exact lift. */
-  def pairRules(spark: SparkSession, dir: String, minSup: Long = 3L): DataFrame =
+  def pairRules(spark: SparkSession, dir: String, minSup: Long = MinSup): DataFrame =
     CacheOps.scope { s =>
     // the distinct basket relation has FOUR consumers (item counts, order
     // total, both sides of the pair self-join) — materialize its scan +

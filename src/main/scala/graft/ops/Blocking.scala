@@ -19,9 +19,12 @@ import graft.Session.table
   * volume is exactly n·w. */
 object Blocking {
 
+  /** The neighborhood window q165 runs at; its oracle reads it. */
+  val GateW = 3
+
   /** Gate query (q165): sorted-neighborhood pairs over documents keyed by
     * (n_chars, doc_id), window w — emits (da, db, rank_dist, len_gap). */
-  def sortedNeighborhood(spark: SparkSession, dir: String, w: Int = 3): DataFrame = {
+  def sortedNeighborhood(spark: SparkSession, dir: String, w: Int = GateW): DataFrame = {
     val docs = table(spark, dir, "documents").select(col("doc_id"), col("n_chars"))
     val ranked = OrderStats.distributedRowNumber(docs, 8,
       col("n_chars"), col("doc_id"))

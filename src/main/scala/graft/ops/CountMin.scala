@@ -24,6 +24,10 @@ import graft.functions.SeedExprs
   */
 object CountMin {
 
+  /** The sketch shape q97 runs: rows and counters per row; its oracle reads both. */
+  val Depth = 4
+  val Width = 256
+
   private def salt(j: Int): Long = (j + 1).toLong * 0x9E3779B97F4A7C15L
 
   private def colOf(key: Column, j: Int, w: Int): Column =
@@ -44,7 +48,7 @@ object CountMin {
     * then the estimate (min over rows) for EVERY distinct partkey — each
     * estimate ≥ the true count, over only by collision mass. The counter
     * matrix is broadcast; keys never shuffle for the lookup. */
-  def partkeyFreq(spark: SparkSession, dir: String, d: Int = 4, w: Int = 256): DataFrame = {
+  def partkeyFreq(spark: SparkSession, dir: String, d: Int = Depth, w: Int = Width): DataFrame = {
     val li = table(spark, dir, "lineitem")
     val cm = counters(li, "l_partkey", d, w)
     val keys = li.select(col("l_partkey")).distinct()

@@ -20,6 +20,11 @@ object Graph {
   /** Node count and edge draws of the gate graph (the oracles read both). */
   val GateNodes = 250
   val GateEdges = 1500
+  /** [[pageRank]]'s rounds (q109), [[kCore]]'s k (q125) and [[treeDepths]]'
+    * tree size (q142), which their oracles read. */
+  val PageRankIters = 10
+  val CoreK = 8
+  val TreeNodes = 2000
 
   /** Nonnegative mix draw in [0, n). */
   private def draw(i: Column, n: Int): Column =
@@ -43,6 +48,17 @@ object Graph {
       .select(draw(col("id") * 2, n).as("u"), draw(col("id") * 2 + 1, n).as("v"))
       .where(col("u") =!= col("v"))
 
+  /** The distinct undirected edges (a < b) of directed `(u, v)` draws. */
+  private def undirected(draws: DataFrame): DataFrame =
+    draws.select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
+      .distinct()
+
+  /** Occurrences per node across the node columns `ends` of `rows`, counted
+    * into column `as`: each row's ends unioned by name, then one rollup. */
+  private def nodeCounts(rows: DataFrame, ends: Seq[String], as: String): DataFrame =
+    ends.map(e => rows.select(col(e).as("node"))).reduce(_ unionByName _)
+      .groupBy("node").agg(count(lit(1)).as(as))
+
   /** Per-node triangle counts via DEGREE-ORIENTED wedge enumeration
     * (compact-forward): each undirected edge is oriented toward the higher
     * (degree, id); wedges are enumerated only at their lowest-ordered apex
@@ -53,12 +69,8 @@ object Graph {
     * vertex id — three shuffles total, no driver state. Integer counts,
     * merge-order-free. */
   def triangleCounts(spark: SparkSession, n: Int = GateNodes, m: Int = GateEdges): DataFrame = {
-    val uedges = synthDraws(spark, n, m)
-      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-      .distinct()
-    val deg = uedges.select(col("a").as("node"))
-      .unionByName(uedges.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
+    val uedges = undirected(synthDraws(spark, n, m))
+    val deg = nodeCounts(uedges, Seq("a", "b"), "d")
     // orient toward higher (deg, id): lexicographic on the (d, id) pair
     val withDeg = uedges
       .join(deg.withColumnRenamed("node", "a").withColumnRenamed("d", "da"), "a")
@@ -76,10 +88,7 @@ object Graph {
       uedges("a") === least(col("x"), col("y")) &&
         uedges("b") === greatest(col("x"), col("y")))
       .select(col("p"), col("x"), col("y"))
-    tri.select(col("p").as("node"))
-      .unionByName(tri.select(col("x").as("node")))
-      .unionByName(tri.select(col("y").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("tri_count"))
+    nodeCounts(tri, Seq("p", "x", "y"), "tri_count")
   }
 
   /** Gate query (q187) — local clustering coefficient per node: the
@@ -89,19 +98,13 @@ object Graph {
     * degree relation via a LEFT join, so zero-triangle nodes keep their
     * row (coeff 0) — only d ≥ 2 nodes can close a wedge and d < 2 nodes
     * are excluded (coefficient undefined). */
-  def clusteringCoeff(spark: SparkSession): DataFrame = {
-    val uedges = synthDraws(spark, GateNodes, GateEdges)
-      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-      .distinct()
-    val deg = uedges.select(col("a").as("node"))
-      .unionByName(uedges.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
-    deg.where(col("d") >= 2)
+  def clusteringCoeff(spark: SparkSession): DataFrame =
+    nodeCounts(undirected(synthDraws(spark, GateNodes, GateEdges)), Seq("a", "b"), "d")
+      .where(col("d") >= 2)
       .join(triangleCounts(spark), Seq("node"), "left")
       .na.fill(0L, Seq("tri_count"))
       .select(col("node"), col("d"), col("tri_count"),
         expr("(2 * tri_count * 1000000) div (d * (d - 1))").as("coeff_e6"))
-  }
 
   /** Exact-integer PageRank, `iters` fixed rounds over the directed synth
     * graph: r_{t+1}(v) = floor(0.15·R0) + Σ_{u→v} floor(0.85·r_t(u) /
@@ -115,7 +118,7 @@ object Graph {
     * sum re-keys on v. Rounds run on [[graft.CacheOps.Scope.fixpoint]], one
     * eager rank checkpoint per round. */
   def pageRank(spark: SparkSession, n: Int = GateNodes, m: Int = GateEdges,
-               iters: Int = 10): DataFrame = CacheOps.scope { s =>
+               iters: Int = PageRankIters): DataFrame = CacheOps.scope { s =>
     require(iters >= 1, s"pageRank needs iters >= 1, got iters=$iters")
     val dedges = synthDraws(spark, n, m).distinct()
     val outdeg = dedges.groupBy("u").agg(count(lit(1)).as("od"))
@@ -148,7 +151,7 @@ object Graph {
     * still-jumping count is the round's one action and convergence signal.
     * Oracle: recursive CTE walk (sequential chase — different algorithm
     * family). */
-  def treeDepths(spark: SparkSession, n: Int = 2000): DataFrame = CacheOps.scope { s =>
+  def treeDepths(spark: SparkSession, n: Int = TreeNodes): DataFrame = CacheOps.scope { s =>
     val t = spark.range(0L, n.toLong, 1L, slicesFor(spark, n.toLong))
       .select(col("id").as("node"),
       when(col("id") === 0, 0L)
@@ -176,17 +179,12 @@ object Graph {
     * converges regardless of order (the k-core is order-independent), and a
     * non-converged exit refuses rather than return a superset. Output: each
     * surviving node with its core-subgraph degree. */
-  def kCore(spark: SparkSession, n: Int = GateNodes, m: Int = GateEdges, k: Int = 8,
+  def kCore(spark: SparkSession, n: Int = GateNodes, m: Int = GateEdges, k: Int = CoreK,
             maxRounds: Int = 64): DataFrame = CacheOps.scope { s =>
     val draws = s.checkpoint(synthDraws(spark, n, m)) // the driver sizes the loop from these bytes
     var cnt = -1L // unknown until the first round counts
-    val core = s.fixpoint("kCore", maxRounds, draws
-        .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-        .distinct()) { (edges, _) =>
-      val surv = edges.select(col("a").as("node"))
-        .unionByName(edges.select(col("b").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("d"))
-        .where(col("d") >= k).select("node")
+    val core = s.fixpoint("kCore", maxRounds, undirected(draws)) { (edges, _) =>
+      val surv = nodeCounts(edges, Seq("a", "b"), "d").where(col("d") >= k).select("node")
       val next = s.checkpoint(edges
         .join(surv.withColumnRenamed("node", "a"), "a")
         .join(surv.withColumnRenamed("node", "b"), "b")
@@ -195,8 +193,6 @@ object Graph {
       cnt = next.count()
       (next, cnt == prev)
     }
-    s.checkpoint(core.select(col("a").as("node"))
-      .unionByName(core.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("core_deg")))
+    s.checkpoint(nodeCounts(core, Seq("a", "b"), "core_deg"))
   }
 }

@@ -216,6 +216,13 @@ object Interactions {
 
   // ---- deterministic synthetic versions table ------------------------------
 
+  /** Entities of the versions table the q34/q39/q41/q43/q57 gates run on,
+    * and the bounds of q43's viewer window (epoch seconds);
+    * their oracles read these. */
+  val GateEntities = 500
+  val IntervalStart = 1500150000L
+  val IntervalEnd = 1500300000L
+
   /** Per-event mutation kind — closed-form in (id, k) so a DuckDB oracle can
     * derive the identical table (graft.OracleSql.q34): kinds 0-2 tag-modify
     * (version bump), 3 tag-add, 4 tag-delete, 5-6 geometry move (bump),
@@ -228,7 +235,7 @@ object Interactions {
     * ring rotations (normalized-equality proof), restriction-relation latch,
     * deletions, unchanged latest rows. ALL state is closed-form in (id, k) —
     * no sequential accumulation — so the gate oracle recomputes it in SQL. */
-  def synthVersions(spark: SparkSession, nEntities: Int): Dataset[VersionRow] = {
+  def synthVersions(spark: SparkSession, nEntities: Int = GateEntities): Dataset[VersionRow] = {
     import spark.implicits._
     spark.range(0, nEntities, 1, 4).flatMap { id =>
       val etype = (id % 5) match {

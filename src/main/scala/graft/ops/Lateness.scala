@@ -13,6 +13,8 @@ object Lateness {
 
   /** The tiles' named buckets in q177; its oracle reads it. */
   val TopN = 2
+  /** The watermark lag of q176 (12 h in µs); its oracle reads it. */
+  val LagUs = 43200000000L
 
   /** Gate query (q176) — watermark late-data accounting, batch-replayed:
     * per user stream (arrival order = event_id), a row is LATE iff its
@@ -22,7 +24,7 @@ object Lateness {
     * cross-engine, not just asserted. Emits per-user late/total counts and the worst
     * disorder observed. One window exchange on the stream key. */
   def watermarkAudit(spark: SparkSession, dir: String,
-                     lagUs: Long = 43200000000L): DataFrame = {
+                     lagUs: Long = LagUs): DataFrame = {
     // the synthetic events are generated in event-time order, so the
     // identity arrival order has ZERO disorder (measured) — a deterministic
     // hash-permuted arrival order simulates the network reordering the

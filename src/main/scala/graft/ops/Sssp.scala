@@ -15,6 +15,9 @@ import graft.spatial.ZOrder
   */
 object Sssp {
 
+  /** The relaxation rounds q173 runs; its oracle reads it. */
+  val GateHops = 6
+
   /** Gate query (q173) — bounded-hop single-source shortest path by
     * distributed Bellman-Ford: `hops` min-plus relaxation rounds over the
     * event-derived weighted digraph (src = user_id,
@@ -23,7 +26,7 @@ object Sssp {
     * on the frontier key + min-combine) on [[CacheOps.Scope.fixpoint]], one
     * eager distance checkpoint per round. The DuckDB oracle unrolls the
     * same rounds as MATERIALIZED CTEs. */
-  def boundedSssp(spark: SparkSession, dir: String, hops: Int = 6): DataFrame =
+  def boundedSssp(spark: SparkSession, dir: String, hops: Int = GateHops): DataFrame =
     CacheOps.scope { s =>
       require(hops >= 1, s"boundedSssp needs hops >= 1, got hops=$hops")
       val edges = s.checkpoint(table(spark, dir, "events").select(

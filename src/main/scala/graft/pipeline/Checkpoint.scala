@@ -41,6 +41,16 @@ object Checkpoint {
   /** Bucket and range-partition counts of the q62/q64/q119 gate stores. */
   val GateBuckets = 8
   private val GateParts = 8
+  /** Row count of the q62 lineage build. */
+  val LineageRows = 800L
+  /** q64's store: epoch 0 holds ids [0, AppendSplit), epoch 1 appends
+    * [AppendSplit, AppendRows). */
+  val AppendSplit = 500L
+  val AppendRows = 800L
+  /** q119's store: epoch 0 holds ids [0, TravelSplit), epoch 1 the rest of
+    * [0, TravelRows). */
+  val TravelSplit = 400L
+  val TravelRows = 650L
 
   def bucketOf(seed: Long, buckets: Int): Int = {
     val cell = Hex.latLngToCell(Geotag.latOf(seed), Geotag.lonOf(seed), HexRes)
@@ -97,20 +107,21 @@ object Checkpoint {
     * The pixel-derived phashDigest stays OUT of the gate row (DuckDB cannot
     * re-render; it is spec-verified in CheckpointSpec), while the validation
     * counters assert all written rows decoded clean per bucket. */
-  def lineageGate(spark: SparkSession, n: Long): DataFrame = {
+  def lineageGate(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_ckpt_gate")
     // the manifests are driver-side values once run() returns — the scratch
     // build (parquet + commits) is deleted before the gate row-set is built,
     // so repeated bench/gate invocations cannot accumulate tmp data
-    val ms = try run(spark, n, dir.toString, GateBuckets, GateParts)
+    val ms = try run(spark, LineageRows, dir.toString, GateBuckets, GateParts)
              finally deleteRecursively(dir)
     ms.map(m => (m.bucket, m.cellMin, m.cellMax, m.rowCount, m.nPixelsOk, m.nCaptionsOk))
       .toDF("bucket", "cell_min", "cell_max", "row_count", "n_pixels_ok", "n_captions_ok")
   }
 
   /** Gate shape for append-only incremental ingestion (q64): epoch 0 builds
-    * ids [0, n0), then the input GROWS — epoch 1 arrives with [n0, n1) — and
+    * ids [0, AppendSplit), then the input GROWS — epoch 1 arrives with
+    * [AppendSplit, AppendRows) — and
     * an incremental run processes exactly the new epoch (epoch-0 manifests
     * skip; a third run is a no-op, asserted here). The emitted relation is
     * every (epoch, bucket) manifest; the DuckDB oracle derives the same
@@ -120,13 +131,13 @@ object Checkpoint {
     * One-shot-vs-incremental byte equality is additionally pinned in
     * CheckpointSpec (the digests include the pixel-derived phash xor, which
     * DuckDB cannot re-render). */
-  def appendGate(spark: SparkSession, n0: Long, n1: Long): DataFrame = {
+  def appendGate(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_ckpt_append")
     val ms = try {
-      runEpoch(spark, 0, 0L, n0, dir.toString, GateBuckets, GateParts)
-      runEpoch(spark, 1, n0, n1, dir.toString, GateBuckets, GateParts)
-      require(runEpoch(spark, 1, n0, n1, dir.toString, GateBuckets, GateParts).isEmpty,
+      runEpoch(spark, 0, 0L, AppendSplit, dir.toString, GateBuckets, GateParts)
+      runEpoch(spark, 1, AppendSplit, AppendRows, dir.toString, GateBuckets, GateParts)
+      require(runEpoch(spark, 1, AppendSplit, AppendRows, dir.toString, GateBuckets, GateParts).isEmpty,
         "incremental re-run must be a no-op")
       manifests(dir.toString, epochs = 2, GateBuckets)
     } finally deleteRecursively(dir)
@@ -146,7 +157,8 @@ object Checkpoint {
     * independent of the manifests q62/q64 gate, so a hash match proves the
     * as-of read returned exactly the rows committed at that snapshot: no
     * epoch-1 leakage, no epoch-0 loss. */
-  def timeTravelGate(spark: SparkSession, n0: Long, n1: Long): DataFrame = CacheOps.scope { s =>
+  def timeTravelGate(spark: SparkSession, n0: Long = TravelSplit,
+                     n1: Long = TravelRows): DataFrame = CacheOps.scope { s =>
     val dir = Files.createTempDirectory("graft_ckpt_tt")
     try {
       runEpoch(spark, 0, 0L, n0, dir.toString, GateBuckets, GateParts)

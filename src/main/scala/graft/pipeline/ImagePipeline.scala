@@ -44,8 +44,11 @@ object ImagePipeline {
   private val HexRes = 7
   private val TileZ = 12
   private val S2Level = 12
-  /** Range partitions of the tile gate queries (q45, q49, q56, q60, q61). */
-  private val GateParts = 16
+  /** Row count and range partitions of the image gate queries (q32, q33,
+    * q38, q45, q46, q49, q56, q60, q61, and q98/q151's decoded tables),
+    * which their oracles read. */
+  val GateRows = 2000L
+  val GateParts = 16
 
   /** Distributed synthesis of the full input table (Iceberg-shaped rows). */
   def synthTable(spark: SparkSession, n: Long, parts: Int): Dataset[ImageSynth.ImageRow] = {
@@ -116,7 +119,8 @@ object ImagePipeline {
     * hash, and the final mean is a single correctly-rounded division on both
     * sides. The shuffle carries the 3-double CentroidBuf per group — geometry
     * never moves. */
-  def userDailyCentroidGate(spark: SparkSession, n: Long, parts: Int = 16): DataFrame = {
+  def userDailyCentroidGate(spark: SparkSession, n: Long = GateRows,
+                            parts: Int = GateParts): DataFrame = {
     import spark.implicits._
     val joined = PipJoin.join(features(spark, n, parts).toDF(), metroBoundaries, "lon", "lat")
     joined.select(col("uid"), col("day"),
@@ -144,9 +148,9 @@ object ImagePipeline {
 
   /** The tile summaries' (q45, q60) prologue: [[pipFiltered]] features with
     * team name, e6 highway km (rounded per segment), building and POI flags. */
-  private def measured(spark: SparkSession, n: Long): DataFrame = {
+  private def measured(spark: SparkSession): DataFrame = {
     import graft.functions.SeedExprs
-    val f = pipFiltered(spark, n, GateParts)
+    val f = pipFiltered(spark, GateRows, GateParts)
       .withColumn("noun_id", SeedExprs.metaNounId(col("idx")))
       .withColumn("dlon", SeedExprs.segDLon(col("idx")))
       .withColumn("dlat", SeedExprs.segDLat(col("idx")))
@@ -177,13 +181,13 @@ object ImagePipeline {
     * operate on ~|tiles|·|teams|·2 rows. The pivot's team-discovery pass runs
     * on the pre-rollup, not the feature table; at 100 TB pass the known team
     * list to `pivot(col, values)` and the discovery job disappears. */
-  def tileMeasureMatrix(spark: SparkSession, n: Long): DataFrame = CacheOps.scope { s =>
+  def tileMeasureMatrix(spark: SparkSession): DataFrame = CacheOps.scope { s =>
     // the totals / pivot / team_sum branches below each consume this
     // pre-rollup; without materialization Catalyst re-executes the full
     // scan+shuffle per branch (verified: 3 scans, no ReusedExchange).
     // The pre-rollup is ~|tiles|·|teams|·2 rows, so pinning it locally is
     // the scale-correct trade: ONE pass over the feature table, period.
-    val pre = s.checkpoint(measured(spark, n)
+    val pre = s.checkpoint(measured(spark)
       .withColumn("rostered", col("uid") % 5 =!= 0)
       .groupBy(col("tile"), col("team"), col("rostered"))
       .agg(count(lit(1)).as("e"), sum("km_e6").as("km_e6"),
@@ -221,8 +225,8 @@ object ImagePipeline {
     * division — q46), km rounded per segment then summed as longs (q45).
     * ONE shuffle on (team, day); partial aggregation absorbs the metro skew
     * map-side exactly like the tile rollups. */
-  def dailyPointSummaries(spark: SparkSession, n: Long): DataFrame =
-    measured(spark, n)
+  def dailyPointSummaries(spark: SparkSession): DataFrame =
+    measured(spark)
       .withColumn("lon_e6", floor(col("lon") * lit(1e6) + lit(0.5)).cast("long"))
       .withColumn("lat_e6", floor(col("lat") * lit(1e6) + lit(0.5)).cast("long"))
       .groupBy(col("team"), col("day"))
@@ -240,10 +244,10 @@ object ImagePipeline {
     * with from_json, so the gate hashes the sink's actual output row for row
     * (the q47 pattern, but per-feature instead of aggregated). Scale shape:
     * pure map — no shuffle at all; the sink writes partition-local files. */
-  def objectFeatures(spark: SparkSession, n: Long): DataFrame = {
+  def objectFeatures(spark: SparkSession): DataFrame = {
     import graft.functions.SeedExprs
     val names = metroBoundaries.map(_.id).toArray
-    val f = pipFiltered(spark, n, GateParts)
+    val f = pipFiltered(spark, GateRows, GateParts)
       .withColumn("team", element_at(lit(teamNames.toArray), col("team_id") + 1))
       .withColumn("noun_id", SeedExprs.metaNounId(col("idx")))
     val props = f.select(col("lon"), col("lat"), col("idx"),
@@ -275,8 +279,8 @@ object ImagePipeline {
     * [[graft.spatial.TileAssign.withTileMultiZoom]] emits every feature's cell at
     * every requested zoom via bit-shift parent derivation (one encode at
     * z-max, no re-encoding), then one rollup per (zoom, cell, team). */
-  def multiZoomRollup(spark: SparkSession, n: Long): DataFrame = {
-    val f = pipFiltered(spark, n, GateParts)
+  def multiZoomRollup(spark: SparkSession): DataFrame = {
+    val f = pipFiltered(spark, GateRows, GateParts)
       .withColumn("team", element_at(lit(teamNames.toArray), col("team_id") + 1))
     graft.spatial.TileAssign.withTileMultiZoom(f, "lon", "lat", RollupZooms)
       .groupBy(col("zoom"), col("cell_id"), col("team"))
@@ -291,9 +295,9 @@ object ImagePipeline {
     * point geometry, util/map-contribution-extractor.js:279): distinct AOI
     * tiles with their feature counts and inverse-web-mercator centers in e6
     * fixed-point. */
-  def tileCenters(spark: SparkSession, n: Long): DataFrame = {
+  def tileCenters(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    pipFiltered(spark, n, GateParts)
+    pipFiltered(spark, GateRows, GateParts)
       .groupBy(col("tile")).agg(count(lit(1)).as("n_feats"))
       .as[(Long, Long)]
       .mapPartitions(_.map { case (t, nf) =>

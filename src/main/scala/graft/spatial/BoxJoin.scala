@@ -24,6 +24,14 @@ import graft.functions.SeedExprs
   */
 object BoxJoin {
 
+  /** The gate inputs their oracles read: [[overlapJoin]]'s box counts per
+    * side (q112), [[adaptiveTiles]]' refinement cap (q127) and
+    * [[gridClusters]]' density threshold in points per 10^4 (q131). */
+  val OverlapA = 150
+  val OverlapB = 600
+  val TileCap = 15L
+  val ClusterMinPtsBp = 15L
+
   private def u20(seed: Column): Column =
     SeedExprs.mix64(seed).bitwiseAND(lit(1048575L)).cast("double") / 1048575.0
 
@@ -54,7 +62,7 @@ object BoxJoin {
         least(floor((col(y0) + col(h) + 90.0) / 2.8125).cast("long"), lit(63L)))))
 
   /** Gate query (q112): all overlapping (a, b) rectangle pairs. */
-  def overlapJoin(spark: SparkSession, na: Int = 150, nb: Int = 600): DataFrame = {
+  def overlapJoin(spark: SparkSession, na: Int = OverlapA, nb: Int = OverlapB): DataFrame = {
     val a = withCells(synthBoxes(spark, na, 1000L, 5000L, 7000L, "a"),
       "ax0", "ay0", "aw", "ah")
     val b = withCells(synthBoxes(spark, nb, 9000L, 13000L, 17000L, "b"),
@@ -100,7 +108,7 @@ object BoxJoin {
     * 10^12 rows), and the hot-tile set is broadcast back over the fine
     * relation. This is the density-adaptive layout step a skewed metro
     * table needs before bucketing (SkewSpec's subject, as an operator). */
-  def adaptiveTiles(spark: SparkSession, dir: String, cap: Long = 15L): DataFrame = {
+  def adaptiveTiles(spark: SparkSession, dir: String, cap: Long = TileCap): DataFrame = {
     val g = SpatialQueries.eventPoints(spark, dir).select(
       ZOrder.gridX(col("lon"), 8).as("x8"),
       ZOrder.gridY(col("lat"), 8).as("y8"))
@@ -156,7 +164,7 @@ object BoxJoin {
     * tiles are their own clusters. Oracle: recursive-CTE closure over the
     * same adjacency (the q63 different-algorithm-family discipline). */
   def gridClusters(spark: SparkSession, dir: String,
-                   minPtsBp: Long = 15L): DataFrame = graft.CacheOps.scope { s =>
+                   minPtsBp: Long = ClusterMinPtsBp): DataFrame = graft.CacheOps.scope { s =>
     // density threshold RELATIVE to the corpus (minPtsBp per 10^4 points):
     // a fixed absolute cap stops meaning "dense" the moment the table grows
     // — at 10x the rows, near-every tile crossed the old bar and the hot

@@ -26,13 +26,16 @@ import graft.Session.table
   */
 object Simplify {
 
+  /** The squared tolerance ε² (grid units²) q162 runs at; its oracle reads it. */
+  val GateEps2 = 250000L
+
   final case class KeptRow(user_id: Long, seq: Long)
 
   /** Gate query (q162): (user, seq) of the points Douglas-Peucker keeps at
     * ε² = eps2 over per-user trajectories (points ordered by event_id,
     * coords from modular arithmetic on event_id — oracle-replayable). */
   def douglasPeucker(spark: SparkSession, dir: String,
-                     eps2: Long = 250000L): DataFrame = {
+                     eps2: Long = GateEps2): DataFrame = {
     import spark.implicits._
     val pts = table(spark, dir, "events").select(
       col("user_id").as("u"), col("event_id").as("eid"),

@@ -18,6 +18,14 @@ import graft.Session.table
   */
 object Dedup {
 
+  /** The gate inputs their oracles read: [[spanDup]]'s span length in tokens
+    * and document-frequency cap (q71), and [[prefixFilterJoin]]'s Jaccard
+    * threshold TauNum/TauDen (q129). */
+  val SpanTokens = 12
+  val SpanMaxDf = 64
+  val TauNum = 6
+  val TauDen = 10
+
   /** Exact dedup by content digest (md5 of normalized text — the digest, not
     * the text, is what shuffles). Truncated to 24 chars to manufacture dup
     * groups on the synthetic corpus while keeping semantics honest. */
@@ -196,28 +204,37 @@ object Dedup {
     * edge that some member-member edge would have passed, so capping trades
     * pair-list completeness for boundedness; the two INDEPENDENT hubs exist
     * precisely so one failed hub edge cannot by itself sever a genuine dup
-    * group. Shared by minhash bands, simhash segments (shape-specialized
-    * there for the fingerprint columns) and the ANN cosine LSH tier. */
-  def boundedPairs(banded: DataFrame, maxBucket: Int): DataFrame = CacheOps.scope { s =>
+    * group. Shared by minhash bands, the ANN cosine LSH tier and the
+    * simhash/phash segments; the last carry their fingerprint for the
+    * hamming verify as a `payload` column `p`, which comes out as `pa`/`pb`
+    * beside `a`/`b` (a hub's value picked by `min_by`/`max_by`). */
+  def boundedPairs(banded: DataFrame, maxBucket: Int, payload: Seq[String] = Nil): DataFrame =
+    CacheOps.scope { s =>
     // the banding relation has two consumers (bucket-size rollup + the
     // bucket self-join) — materialize it once. The checkpoint escapes in the
     // lazy result, to the caller's scope.
     val bd = s.checkpoint(banded)
     val sized = bd.join(
       bd.groupBy(col("band"), col("bucket"))
-        .agg(count(lit(1)).as("bn"),
-          min(col("doc_id")).as("hub_lo"), max(col("doc_id")).as("hub_hi")),
+        .agg(count(lit(1)).as("bn"), Seq(
+          min(col("doc_id")).as("hub_lo"), max(col("doc_id")).as("hub_hi")) ++
+          payload.flatMap(p => Seq(min_by(col(p), col("doc_id")).as(s"hub_lo_$p"),
+            max_by(col(p), col("doc_id")).as(s"hub_hi_$p"))): _*),
       Seq("band", "bucket"))
+    // (a, b) plus each payload column as seen from the a and b sides
+    def pair(a: String, b: String, pa: String => String, pb: String => String) =
+      col(a).as("a") +: col(b).as("b") +:
+        payload.flatMap(p => Seq(col(pa(p)).as(s"${p}a"), col(pb(p)).as(s"${p}b")))
     val small = sized.filter(col("bn") <= maxBucket)
     val pairwise = small.as("l").join(small.as("r"),
         col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
           col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("a"), col("r.doc_id").as("b"))
+      .select(pair("l.doc_id", "r.doc_id", "l." + _, "r." + _): _*)
     val hot = sized.filter(col("bn") > maxBucket)
     val starLo = hot.filter(col("doc_id") =!= col("hub_lo"))
-      .select(col("hub_lo").as("a"), col("doc_id").as("b"))
+      .select(pair("hub_lo", "doc_id", "hub_lo_" + _, identity): _*)
     val starHi = hot.filter(col("doc_id") =!= col("hub_hi"))
-      .select(col("doc_id").as("a"), col("hub_hi").as("b"))
+      .select(pair("doc_id", "hub_hi", identity, "hub_hi_" + _): _*)
     pairwise.unionByName(starLo).unionByName(starHi).distinct()
   }
 
@@ -260,14 +277,13 @@ object Dedup {
   val MaxHam = 3
   val SegmentCap = 1024
 
-  /** Pigeonhole candidate join over a (doc_id, sh) fingerprint table, with
-    * the same hot-bucket dual-star bound as [[boundedPairs]] (a segment
-    * shared by m near-identical fingerprints otherwise emits m²/2 pairs) —
-    * shape-specialized here because the fingerprints must ride along for the
-    * hamming verify. The same completeness caveat applies: a star pair the
-    * ham≤k check rejects is not retried through a member-member edge. */
-  def simhashCandidatePairs(df: DataFrame, maxHam: Int, maxBucket: Int): DataFrame =
-    CacheOps.scope { s =>
+  /** Pigeonhole candidate join over a (doc_id, sh) fingerprint table through
+    * the hot-bucket dual-star bound of [[boundedPairs]] (a segment shared by
+    * m near-identical fingerprints otherwise emits m²/2 pairs), the
+    * fingerprints riding along as its payload for the hamming verify. The
+    * same completeness caveat applies: a star pair the ham≤k check rejects
+    * is not retried through a member-member edge. */
+  def simhashCandidatePairs(df: DataFrame, maxHam: Int, maxBucket: Int): DataFrame = {
     // pigeonhole: with 4 disjoint 16-bit segments, two fingerprints within
     // hamming distance 3 MUST agree on at least one whole segment (3 differing
     // bits can dirty at most 3 of the 4). The guarantee is maxHam <= segs-1,
@@ -277,32 +293,12 @@ object Dedup {
     // segment extraction MUST be bitwise (shiftright sign-extends and a signed
     // `% 65536` of a negative value is NOT the low 16 bits — that dropped
     // pairs whose fingerprints differ in sign)
-    // the segment relation has two consumers (bucket rollup + self-join) —
-    // materialize it once
-    val segs = s.checkpoint(df.select(col("doc_id"), col("sh"), posexplode(array(
+    // each segment index is a band, each segment value its bucket
+    val segs = df.select(col("doc_id"), col("sh"), posexplode(array(
       (0 until 4).map(i => shiftright(col("sh"), i * 16).bitwiseAND(lit(65535L))): _*)))
-      .toDF("doc_id", "sh", "seg_idx", "seg"))
-    val sized = segs.join(
-      segs.groupBy(col("seg_idx"), col("seg"))
-        .agg(count(lit(1)).as("bn"),
-          min(col("doc_id")).as("hub_lo"), min_by(col("sh"), col("doc_id")).as("hub_lo_sh"),
-          max(col("doc_id")).as("hub_hi"), max_by(col("sh"), col("doc_id")).as("hub_hi_sh")),
-      Seq("seg_idx", "seg"))
-    val small = sized.filter(col("bn") <= maxBucket)
-    val pairwise = small.as("l").join(small.as("r"),
-        col("l.seg_idx") === col("r.seg_idx") && col("l.seg") === col("r.seg") &&
-          col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("a"), col("r.doc_id").as("b"),
-        col("l.sh").as("sha"), col("r.sh").as("shb"))
-    val hot = sized.filter(col("bn") > maxBucket)
-    val starLo = hot.filter(col("doc_id") =!= col("hub_lo"))
-      .select(col("hub_lo").as("a"), col("doc_id").as("b"),
-        col("hub_lo_sh").as("sha"), col("sh").as("shb"))
-    val starHi = hot.filter(col("doc_id") =!= col("hub_hi"))
-      .select(col("doc_id").as("a"), col("hub_hi").as("b"),
-        col("sh").as("sha"), col("hub_hi_sh").as("shb"))
-    val cand = pairwise.unionByName(starLo).unionByName(starHi).distinct()
-    cand.withColumn("ham", bit_count(col("sha").bitwiseXOR(col("shb"))))
+      .toDF("doc_id", "sh", "band", "bucket")
+    boundedPairs(segs, maxBucket, Seq("sh"))
+      .withColumn("ham", bit_count(col("sha").bitwiseXOR(col("shb"))))
       .filter(col("ham") <= maxHam)
       .select(col("a"), col("b"), col("ham"))
   }
@@ -604,7 +600,8 @@ object Dedup {
     * distinct shared spans. The q71 gate's oracle joins on the span STRINGS
     * — an independent representation that would catch (not inherit) a 64-bit
     * hash collision. */
-  def spanDup(spark: SparkSession, dir: String, k: Int = 12, maxDf: Int = 64): DataFrame =
+  def spanDup(spark: SparkSession, dir: String, k: Int = SpanTokens,
+              maxDf: Int = SpanMaxDf): DataFrame =
     CacheOps.scope { s =>
     import spark.implicits._
     val kk = k
@@ -644,7 +641,7 @@ object Dedup {
     * the shingles ride as 8-byte FNV hashes — the q26 discipline; strings
     * here keep the gate's intersection counts exact by construction). */
   def prefixFilterJoin(spark: SparkSession, dir: String,
-                       tauNum: Int = 6, tauDen: Int = 10): DataFrame = {
+                       tauNum: Int = TauNum, tauDen: Int = TauDen): DataFrame = {
     val sh = table(spark, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("ts"))
       .where(size(col("ts")) >= 3)

@@ -12,6 +12,11 @@ import graft.Session.table
   */
 object TextOps {
 
+  /** The gate inputs their oracles read: [[invertedQuery]]'s AND-query terms
+    * (q126) and [[termLift]]'s pair co-occurrence floor (q132). */
+  val QueryTerms: Seq[String] = Seq("dup", "key", "fast")
+  val LiftMinCab = 25L
+
   val Stopwords: Seq[String] = Seq(
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it", "on", "for", "with", "as", "at", "by")
 
@@ -319,7 +324,7 @@ object TextOps {
     * is why the index exists. Terms chosen for non-trivial selectivity
     * ('dup' df≈5%). */
   def invertedQuery(spark: SparkSession, dir: String,
-                    terms: Seq[String] = Seq("dup", "key", "fast")): DataFrame = {
+                    terms: Seq[String] = QueryTerms): DataFrame = {
     val tf = table(spark, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .where(col("w").isin(terms: _*)) // posting-list access, pushed to scan
@@ -340,7 +345,7 @@ object TextOps {
     * rows — bounded by per-doc vocabulary, not corpus size — and the
     * unigram counts broadcast. cab-floor keeps the output to the
     * statistically meaningful pairs. */
-  def termLift(spark: SparkSession, dir: String, minCab: Long = 25L): DataFrame =
+  def termLift(spark: SparkSession, dir: String, minCab: Long = LiftMinCab): DataFrame =
     CacheOps.scope { s =>
     // the distinct (doc, term) relation has FOUR consumers (unigram counts,
     // the N-docs count action, both sides of the pair self-join) —
