@@ -715,21 +715,21 @@ object SparkEntry {
     * brute plan) and q55 (IVF at full probe), which MUST be the same
     * relation; one definition enforces that by construction. */
   private val bruteTopKOracle =
-    """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         q AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < 5),
+    s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+         q AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < ${Ann.Q}),
          d AS (SELECT q.qid, v.vec_id, list_cosine_similarity(q.qe, v.e) AS c FROM v CROSS JOIN q),
          r AS (SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY c DESC, vec_id) AS rk FROM d)
-         SELECT qid, vec_id, rk::INT AS rank FROM r WHERE rk <= 10"""
+         SELECT qid, vec_id, rk::INT AS rank FROM r WHERE rk <= ${Ann.K}"""
 
   /** q76: the brute oracle restricted to label = 3 candidates (queries stay
     * the global first-5 vectors — the filter constrains CANDIDATES). */
   private val filteredTopKOracle =
-    """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         q AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < 5),
+    s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+         q AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < ${Ann.Q}),
          f AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings WHERE label = 3),
          d AS (SELECT q.qid, f.vec_id, list_cosine_similarity(q.qe, f.e) AS c FROM f CROSS JOIN q),
          r AS (SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY c DESC, vec_id) AS rk FROM d)
-         SELECT qid, vec_id, rk::INT AS rank FROM r WHERE rk <= 10"""
+         SELECT qid, vec_id, rk::INT AS rank FROM r WHERE rk <= ${Ann.K}"""
 
   /** q77: all-pairs kNN graph — the q44 left-to-right cosine kernel over
     * every ordered pair (self excluded), top-4 per vector by
@@ -742,7 +742,7 @@ object SparkEntry {
        d AS (SELECT l.vec_id, r.vec_id AS nbr, ${dot("l.e", "r.e")} / (l.n * r.n) AS c
              FROM v l JOIN v r ON l.vec_id <> r.vec_id),
        rk AS (SELECT vec_id, nbr, row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, nbr) AS rank FROM d)
-       SELECT vec_id, nbr, rank::INT AS rank FROM rk WHERE rank <= 4"""
+       SELECT vec_id, nbr, rank::INT AS rank FROM rk WHERE rank <= ${Ann.GraphK}"""
   }
 
   /** ALL-PAIRS exact Jaccard over string shingles — shared verbatim by q27
@@ -750,7 +750,7 @@ object SparkEntry {
     * default caps), which must be the same relation on a benign corpus; one
     * definition enforces that by construction. */
   private val minhashAllPairsOracle =
-    """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+    s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
          sh AS (SELECT DISTINCT doc_id,
                   unnest(list_transform(range(1, len(toks)-1),
                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS g
@@ -762,7 +762,7 @@ object SparkEntry {
          SELECT i.a, i.b, i.common,
            floor(i.common * 10000.0 / (na.n_sh + nb.n_sh - i.common))::BIGINT AS j_bp
          FROM inter i JOIN n na ON i.a=na.doc_id JOIN n nb ON i.b=nb.doc_id
-         WHERE floor(i.common * 10000.0 / (na.n_sh + nb.n_sh - i.common)) >= 5000"""
+         WHERE floor(i.common * 10000.0 / (na.n_sh + nb.n_sh - i.common)) >= ${Dedup.MinhashMinBp}"""
 
   /** DuckDB recursive-CTE transitive closure over the exact minhash pair
     * graph — the components oracle shared by q63 (hash-min) and q67
@@ -813,19 +813,19 @@ object SparkEntry {
     * sequence as their one degenerate shingle, mirroring
     * Dedup.shingleHashes. */
   private val decontaminateOracle =
-    """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+    s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
        sh AS (SELECT DISTINCT doc_id, unnest(CASE WHEN len(toks) >= 3
                 THEN list_transform(range(1, len(toks)-1),
                        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
                 ELSE [array_to_string(toks, ' ')] END) AS g
               FROM t),
-       ev AS (SELECT DISTINCT g FROM sh WHERE doc_id < 25),
-       n AS (SELECT doc_id, count(*)::BIGINT AS n_sh FROM sh WHERE doc_id >= 25 GROUP BY 1),
+       ev AS (SELECT DISTINCT g FROM sh WHERE doc_id < ${Dedup.EvalMax}),
+       n AS (SELECT doc_id, count(*)::BIGINT AS n_sh FROM sh WHERE doc_id >= ${Dedup.EvalMax} GROUP BY 1),
        ov AS (SELECT s.doc_id, count(*)::BIGINT AS n_overlap
-              FROM sh s JOIN ev ON s.g = ev.g WHERE s.doc_id >= 25 GROUP BY 1)
+              FROM sh s JOIN ev ON s.g = ev.g WHERE s.doc_id >= ${Dedup.EvalMax} GROUP BY 1)
        SELECT n.doc_id, n.n_sh, coalesce(ov.n_overlap, 0)::BIGINT AS n_overlap,
          (coalesce(ov.n_overlap, 0) * 10000 // n.n_sh)::BIGINT AS overlap_bp,
-         (CASE WHEN coalesce(ov.n_overlap, 0) * 10000 // n.n_sh >= 2000
+         (CASE WHEN coalesce(ov.n_overlap, 0) * 10000 // n.n_sh >= ${Dedup.ContaminatedBp}
                THEN 1 ELSE 0 END)::BIGINT AS contaminated
        FROM n LEFT JOIN ov ON n.doc_id = ov.doc_id"""
 
@@ -1139,12 +1139,12 @@ object SparkEntry {
            max(n)::BIGINT AS max_group
          FROM g""",
     "q26_ngram_jaccard" ->
-      """WITH t AS (SELECT doc_id, source, string_split(text,' ') AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, source, string_split(text,' ') AS toks FROM documents),
          sh AS (SELECT DISTINCT doc_id, source,
                   unnest(list_transform(range(1, len(toks)-1),
                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS g
                 FROM t WHERE len(toks) >= 3),
-         dfok AS (SELECT g FROM (SELECT g, count(*) AS df FROM sh GROUP BY 1) WHERE df <= 5),
+         dfok AS (SELECT g FROM (SELECT g, count(*) AS df FROM sh GROUP BY 1) WHERE df <= ${Dedup.NgramMaxDf}),
          shc AS (SELECT sh.* FROM sh JOIN dfok USING (g)),
          n AS (SELECT doc_id, count(*)::BIGINT AS n_sh FROM shc GROUP BY 1),
          inter AS (SELECT l.doc_id AS a, r.doc_id AS b, count(*)::BIGINT AS common
@@ -1153,7 +1153,7 @@ object SparkEntry {
          SELECT i.a, i.b, i.common,
            floor(i.common * 10000.0 / (na.n_sh + nb.n_sh - i.common))::BIGINT AS j_bp
          FROM inter i JOIN n na ON i.a=na.doc_id JOIN n nb ON i.b=nb.doc_id
-         WHERE floor(i.common * 10000.0 / (na.n_sh + nb.n_sh - i.common)) >= 2000""",
+         WHERE floor(i.common * 10000.0 / (na.n_sh + nb.n_sh - i.common)) >= ${Dedup.NgramMinBp}""",
     // q27's oracle is ALL-PAIRS exact Jaccard (no LSH, no df cap): matching it
     // proves both the exact-verify stage AND that LSH recall is 1.0 at this
     // threshold on this corpus

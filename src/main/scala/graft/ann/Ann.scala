@@ -50,6 +50,8 @@ object Ann {
   /** Query count and k of every `dir` entry point (their oracles read both). */
   val Q = 5
   val K = 10
+  /** Neighbours per vector of [[knnGraph]] (q77; its oracle reads it). */
+  val GraphK = 4
   /** The LSH signature width and band count of [[lshTopK]] and [[lshRecall]]. */
   val LshBits = 16
   val LshBands = 4
@@ -281,7 +283,7 @@ object Ann {
     * the per-group candidates to the true top-k (every other vector is met
     * exactly once across groups, so the union of group heaps contains the
     * global top-k), replicated in the q77 oracle's all-pairs window. */
-  def knnGraph(spark: SparkSession, dir: String, k: Int = 4, blocks: Int = 8): DataFrame = {
+  def knnGraph(spark: SparkSession, dir: String, k: Int = GraphK, blocks: Int = 8): DataFrame = {
     import spark.implicits._
     val kk = k
     val partial = blockPairs(loadVecs(spark, dir), blocks) { pairs =>

@@ -75,7 +75,7 @@ object Sharding {
     // NOTE: a localCheckpoint of the twice-consumed distinct hit relation
     // was tried and REVERTED (+0.2 s consistently): the two consumers'
     // subtrees run as overlapping broadcast-build jobs on idle cores, and
-    // the checkpoint barrier serialized them — same economics as q129.
+    // the checkpoint barrier serialized them.
     val keyCnt = table(spark, dir, "lineitem")
       .groupBy(col("l_partkey").as("k")).agg(count(lit(1)).as("cnt"))
     val bestPerKey = hits.select("k", "shift", "route_id").distinct()

@@ -19,12 +19,19 @@ import graft.Session.table
 object Dedup {
 
   /** The gate inputs their oracles read: [[spanDup]]'s span length in tokens
-    * and document-frequency cap (q71), and [[prefixFilterJoin]]'s Jaccard
-    * threshold TauNum/TauDen (q129). */
+    * and document-frequency cap (q71), [[prefixFilterJoin]]'s Jaccard
+    * threshold TauNum/TauDen (q129), [[minhashLsh]]'s Jaccard floor in basis
+    * points (q27/q58), [[ngramJaccard]]'s df cap and floor (q26), and
+    * [[decontaminate]]'s eval-set bound and contamination flag (q74). */
   val SpanTokens = 12
   val SpanMaxDf = 64
   val TauNum = 6
   val TauDen = 10
+  val MinhashMinBp = 5000
+  val NgramMaxDf = 5
+  val NgramMinBp = 2000
+  val EvalMax = 25L
+  val ContaminatedBp = 2000
 
   /** Exact dedup by content digest (md5 of normalized text — the digest, not
     * the text, is what shuffles). Truncated to 24 chars to manufacture dup
@@ -62,9 +69,12 @@ object Dedup {
 
   /** Distinct w-shingle HASHES of a document with zero intermediate strings:
     * token FNV hashes combined by an order-sensitive polynomial over each
-    * window, then sort+dedup in place. The hashes stand in for the string
-    * shingles everywhere downstream (64-bit: collisions are ~|pairs|²/2^64,
-    * and the gate oracle cross-checks against string shingles). */
+    * window, then sort+dedup in place. The one shingle kernel of the family
+    * (w = 3 shingles, q71's w = 12 spans); the hashes stand in for the string
+    * windows everywhere downstream (64-bit: collisions are ~|pairs|²/2^64,
+    * and every gate oracle cross-checks against string windows). A document
+    * shorter than w gets ONE whole-document window, so a caller whose
+    * semantics has no window there filters on token count first. */
   def shingleHashes(text: String, w: Int): Array[Long] = {
     val toks = text.split(' ')
     val th = new Array[Long](toks.length)
@@ -119,8 +129,9 @@ object Dedup {
 
   /** MinHash + LSH near-dup pipeline, verification-grade: signature (k
     * hashes) → bands → band-hash bucket join → candidate pairs → EXACT
-    * Jaccard verification of candidates only (shingle-hash equi-join) →
-    * pairs with true Jaccard ≥ 0.5.
+    * Jaccard verification of candidates only ([[verified]]: an in-row
+    * intersection of the pair's shingle-hash arrays) → pairs with true
+    * Jaccard ≥ 0.5.
     *
     * Scale shape: documents are read once in mapPartitions (signer); only
     * (doc_id, band, bucket) rows enter the banding shuffle (no signatures, no
@@ -136,8 +147,8 @@ object Dedup {
     // subtree re-executed per consumer (guide §2.4: shared subtrees should
     // share one materialization, not recompute). No fan-out repartition: the
     // shingling cost scales with the corpus scan's own split count, and
-    // measured at sf0.1 a blanket defaultParallelism fan-out ADDED ~20 s of
-    // near-empty-task overhead across the dedup family's downstream stages.
+    // measured at sf0.1 a blanket fan-out to the session parallelism ADDED
+    // ~20 s of near-empty-task overhead across the family's downstream stages.
     val signed = s.checkpoint(table(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
       .as[(Long, String)]
@@ -153,24 +164,31 @@ object Dedup {
     // AQE's skew-join splitting exactly where a production-scale verify
     // falls back to shuffle joins.)
     val cand = minhashCandidates(signed, MinhashBands, MinhashK / MinhashBands, maxBucket)
-    // exact verification: intersect candidate pairs' shingle-hash sets
-    val ex = signed.select(col("doc_id"), size(col("shs")).as("n_sh"),
-      explode(col("shs")).as("gh"))
-    val inter = ex.as("l")
-      .join(cand, col("l.doc_id") === col("a"))
-      .join(ex.as("r"),
-        col("r.doc_id") === col("b") && col("l.gh") === col("r.gh"))
-      .groupBy(col("a"), col("b"), col("l.n_sh").as("na"), col("r.n_sh").as("nb"))
-      .agg(count(lit(1)).as("common"))
     // the verified pair list is O(dup pairs) — checkpoint it eagerly so the
     // scope frees the signature and banding checkpoints (the big
     // intermediates) on return; consumers (components, decision list,
     // splits, the gate count) read the small materialized pairs
-    s.checkpoint(inter
-      .withColumn("j_bp", floor(col("common") * 10000.0 / (col("na") + col("nb") - col("common"))).cast("long"))
-      .filter(col("j_bp") >= 5000L)
-      .select(col("a"), col("b"), col("common"), col("j_bp")))
+    s.checkpoint(jaccardAtLeast(
+      verified(cand, signed.select(col("doc_id"), col("shs"))), MinhashMinBp))
   }
+
+  /** Exact intersection of candidate pairs `cand` (a, b) in row: each pair
+    * joins both documents' sorted distinct hash arrays from `sets`
+    * (doc_id, hashes) and counts `size(array_intersect)` — no exploded
+    * relation, no group-by. Output (a, b, common, na, nb), all BIGINT. */
+  private def verified(cand: DataFrame, sets: DataFrame): DataFrame =
+    cand.join(sets.toDF("a", "ha"), Seq("a")).join(sets.toDF("b", "hb"), Seq("b"))
+      .select(col("a"), col("b"),
+        size(array_intersect(col("ha"), col("hb"))).cast("long").as("common"),
+        size(col("ha")).cast("long").as("na"), size(col("hb")).cast("long").as("nb"))
+
+  /** (a, b, common, j_bp): the pairs of `inter` (a, b, common, na, nb) whose
+    * Jaccard `common / (na + nb − common)`, floored to basis points, is at
+    * least `minBp` — the one `j_bp` of [[minhashLsh]] and [[ngramJaccard]]. */
+  private def jaccardAtLeast(inter: DataFrame, minBp: Int): DataFrame = inter
+    .withColumn("j_bp", floor(col("common") * 10000.0 / (col("na") + col("nb") - col("common"))).cast("long"))
+    .filter(col("j_bp") >= minBp)
+    .select(col("a"), col("b"), col("common"), col("j_bp"))
 
   /** Shingle width of every n-gram path; [[minhashLsh]]'s signature length and bands. */
   private val ShingleW = 3
@@ -479,8 +497,8 @@ object Dedup {
 
   /** n-gram Jaccard near-dup, exact (the verification-grade variant):
     * explode distinct shingles, DROP shingles with document frequency >
-    * 5 (standard near-dup practice — one hot boilerplate shingle
-    * otherwise makes the self-join quadratic at scale), equi-join on
+    * [[NgramMaxDf]] (standard near-dup practice — one hot boilerplate
+    * shingle otherwise makes the self-join quadratic at scale), equi-join on
     * shingle, count intersection, Jaccard over the CAPPED shingle sets.
     * Bucketed by `source` to bound pairs. */
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame = CacheOps.scope { s =>
@@ -498,51 +516,39 @@ object Dedup {
       .as[(Long, String, String)]
       .mapPartitions(_.map { case (id, src, text) => (id, src, shingleHashes(text, ShingleW)) })
       .toDF("doc_id", "source", "sh")
-    val ex = d.select(col("doc_id"), col("source"), explode(col("sh")).as("g"))
-    // document-frequency cap: the df agg and the semi-join both shuffle on g,
-    // the same key as the intersection self-join below — one partitioning
-    val dfok = ex.groupBy(col("g")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= 5).select(col("g"))
-    val exc = ex.join(dfok, Seq("g"))
+    val exc = dfCapped(d.select(col("doc_id"), col("source"), explode(col("sh")).as("g")), NgramMaxDf)
     val n = exc.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     val exn = s.checkpoint(exc.join(n, Seq("doc_id")))
-    val inter = exn.as("l").join(exn.as("r"),
+    jaccardAtLeast(exn.as("l").join(exn.as("r"),
         col("l.source") === col("r.source") && col("l.g") === col("r.g") &&
           col("l.doc_id") < col("r.doc_id"))
       .groupBy(col("l.doc_id").as("a"), col("r.doc_id").as("b"),
         col("l.n_sh").as("na"), col("r.n_sh").as("nb"))
-      .agg(count(lit(1)).as("common"))
-    inter
-      .withColumn("j_bp", floor(col("common") * 10000.0 / (col("na") + col("nb") - col("common"))).cast("long"))
-      .filter(col("j_bp") >= 2000L)
-      .select(col("a"), col("b"), col("common"), col("j_bp"))
+      .agg(count(lit(1)).as("common")), NgramMinBp)
   }
 
-  /** Distinct k-token window hashes of a document — the substring-dedup
-    * analog of [[shingleHashes]] with LONG windows (k ≈ 12 tokens ≈ the
-    * 50-char spans substring dedup targets) instead of w=3 shingles. */
-  def spanHashes(text: String, k: Int): Array[Long] = {
-    val toks = text.split(' ')
-    if (toks.length < k) Array.empty
-    else {
-      val out = new java.util.HashSet[Long]()
-      var i = 0
-      while (i + k <= toks.length) {
-        val sb = new java.lang.StringBuilder()
-        var j = i
-        while (j < i + k) {
-          if (j > i) sb.append(' ')
-          sb.append(toks(j))
-          j += 1
-        }
-        out.add(hash64(sb.toString)); i += 1
-      }
-      val arr = new Array[Long](out.size())
-      val it = out.iterator(); var n = 0
-      while (it.hasNext) { arr(n) = it.next(); n += 1 }
-      arr
-    }
+  /** The rows of `ex` whose hash `g` occurs in at most `maxDf` of them — the
+    * document-frequency cap of [[ngramJaccard]] and [[spanDup]] (each doc's
+    * hashes are distinct, so rows per hash = documents per hash). The df
+    * rollup and the semi-join both shuffle on g, the key of the
+    * intersection self-join that follows — one partitioning end to end. */
+  private def dfCapped(ex: DataFrame, maxDf: Int): DataFrame =
+    ex.join(ex.groupBy(col("g")).agg(count(lit(1)).as("df"))
+      .filter(col("df") <= maxDf).select(col("g")), Seq("g"))
+
+  /** (doc_id, sh): every (doc_id, text) row of `docs` as its distinct
+    * w-shingle hashes, computed in the partition that read it. */
+  private def shingled(docs: DataFrame, w: Int): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs.select(col("doc_id"), col("text")).as[(Long, String)]
+      .mapPartitions(_.map { case (id, text) => (id, shingleHashes(text, w)) })
+      .toDF("doc_id", "sh")
   }
+
+  /** The documents of `dir` with at least `w` tokens — those with a full
+    * w-token window (the oracles' `len(string_split(text, ' ')) >= w`). */
+  private def withWindow(spark: SparkSession, dir: String, w: Int): DataFrame =
+    table(spark, dir, "documents").where(size(split(col("text"), " ")) >= w)
 
   /** Benchmark DECONTAMINATION — the eval-leakage guard run before training:
     * a training document that shares verbatim n-grams with a benchmark/eval
@@ -558,20 +564,18 @@ object Dedup {
     * representation that catches a 64-bit collision. Output: every train doc
     * with its distinct-shingle count, overlap count, overlap in basis points
     * and the contaminated verdict. */
-  def decontaminate(spark: SparkSession, dir: String, evalMax: Long = 25L): DataFrame = {
+  def decontaminate(spark: SparkSession, dir: String, evalMax: Long = EvalMax): DataFrame = {
     import spark.implicits._
     // filter BEFORE the typed shingling map — a predicate above mapPartitions
     // cannot push past it, so each side's doc_id range reaches the parquet
     // scan (PushedFilters) and neither pass shingles the other side's docs
-    def shingled(pred: org.apache.spark.sql.Column) = table(spark, dir, "documents")
-      .select(col("doc_id"), col("text")).filter(pred).as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) => (id, shingleHashes(text, ShingleW)) })
-      .toDF("doc_id", "sh")
-    val evalSet = shingled(col("doc_id") < evalMax)
+    def side(pred: org.apache.spark.sql.Column) =
+      shingled(table(spark, dir, "documents").filter(pred), ShingleW)
+    val evalSet = side(col("doc_id") < evalMax)
       .select(explode(col("sh")).as("g")).distinct()
       .as[Long].collect().toSet
     val bcEval = spark.sparkContext.broadcast(evalSet)
-    shingled(col("doc_id") >= evalMax).as[(Long, Array[Long])]
+    side(col("doc_id") >= evalMax).as[(Long, Array[Long])]
       .map { case (id, shs) =>
         val ev = bcEval.value
         var overlap = 0; var i = 0
@@ -581,7 +585,7 @@ object Dedup {
       }
       .toDF("doc_id", "n_sh", "n_overlap", "overlap_bp")
       .withColumn("contaminated",
-        when(col("overlap_bp") >= 2000L, 1L).otherwise(0L))
+        when(col("overlap_bp") >= ContaminatedBp, 1L).otherwise(0L))
   }
 
   /** Cross-document duplicated-SPAN detection — substring-level exact dedup
@@ -589,35 +593,24 @@ object Dedup {
     * Better"): two documents can be distinct at the whole-document level yet
     * share a verbatim k-token span (a quoted paragraph, boilerplate header,
     * license block) that an LM will memorize. Every k-token window becomes
-    * an 8-byte hash in the partition that read the document; only
-    * (doc_id, hash) pairs ever enter an exchange (the q26/q27 string-free
-    * pattern — never the spans themselves). Window hashes with document
-    * frequency > `maxDf` are dropped before the self-join (ubiquitous
-    * boilerplate would otherwise make one bucket quadratic — same df-cap
-    * practice as [[ngramJaccard]], and at k=12 tokens a span shared by >64
-    * documents is boilerplate by definition, not a dedup pair). Output: one
-    * row per document pair sharing ≥1 surviving span, with the count of
-    * distinct shared spans. The q71 gate's oracle joins on the span STRINGS
-    * — an independent representation that would catch (not inherit) a 64-bit
-    * hash collision. */
+    * an 8-byte hash ([[shingleHashes]] at w = k) in the partition that read
+    * the document; only (doc_id, hash) pairs ever enter an exchange (the
+    * q26/q27 string-free pattern — never the spans themselves). A document
+    * shorter than k has no span. Window hashes with document frequency >
+    * `maxDf` are dropped before the self-join ([[dfCapped]]: ubiquitous
+    * boilerplate would otherwise make one bucket quadratic, and at k=12
+    * tokens a span shared by >64 documents is boilerplate by definition, not
+    * a dedup pair). Output: one row per document pair sharing ≥1 surviving
+    * span, with the count of distinct shared spans. The q71 gate's oracle
+    * joins on the span STRINGS — an independent representation that would
+    * catch (not inherit) a 64-bit hash collision. */
   def spanDup(spark: SparkSession, dir: String, k: Int = SpanTokens,
               maxDf: Int = SpanMaxDf): DataFrame =
     CacheOps.scope { s =>
-    import spark.implicits._
-    val kk = k
     // the df-capped (doc, span-hash) relation feeds BOTH sides of the
     // self-join — one materialization (guide §2.4), not a re-execution per side
-    val d = table(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) => (id, spanHashes(text, kk)) })
-      .toDF("doc_id", "sh")
-    val ex = d.select(col("doc_id"), explode(col("sh")).as("g"))
-    // df rollup, semi-join and the intersection self-join all shuffle on g —
-    // one partitioning end to end
-    val dfok = ex.groupBy(col("g")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf).select(col("g"))
-    val exc = s.checkpoint(ex.join(dfok, Seq("g")))
+    val exc = s.checkpoint(dfCapped(shingled(withWindow(spark, dir, k), k)
+      .select(col("doc_id"), explode(col("sh")).as("g")), maxDf))
     exc.as("l").join(exc.as("r"),
         col("l.g") === col("r.g") && col("l.doc_id") < col("r.doc_id"))
       .groupBy(col("l.doc_id").as("a"), col("r.doc_id").as("b"))
@@ -628,58 +621,40 @@ object Dedup {
   /** Gate query (q129): EXACT set-similarity join (Jaccard ≥ τ over
     * word-3-gram sets) via PREFIX FILTERING (Chaudhuri et al. ICDE'06 /
     * Bayardo et al. WWW'07 AllPairs): order every doc's shingles by global
-    * document frequency (rarest first, ties lexicographic); two sets with
-    * Jaccard ≥ τ MUST share an element among each one's first
-    * |s| − ceil(τ·|s|) + 1 elements (if all prefix elements differ, the
-    * overlap is too small by the pigeonhole bound), so candidates = pairs
-    * sharing a PREFIX element — recall 1 BY THEOREM, not by tuning, and the
-    * honest all-pairs oracle proves it per run. The fixture compresses
-    * 124,750 all-pairs to ~165 candidates. The df ordering concentrates the
-    * join on RARE shingles, exactly opposite to a hot-key skew: the
-    * candidate join's biggest bucket is bounded by the rarest-element df.
-    * Exchange carries (shingle, doc) prefix rows only (at production scale
-    * the shingles ride as 8-byte FNV hashes — the q26 discipline; strings
-    * here keep the gate's intersection counts exact by construction). */
+    * document frequency (rarest first, ties by hash — any global total order
+    * will do); two sets with Jaccard ≥ τ MUST share an element among each
+    * one's first |s| − ceil(τ·|s|) + 1 elements (if all prefix elements
+    * differ, the overlap is too small by the pigeonhole bound), so
+    * candidates = pairs sharing a PREFIX element — recall 1 BY THEOREM, not
+    * by tuning, and the honest all-pairs oracle proves it per run. The df
+    * ordering concentrates the join on RARE shingles, exactly opposite to a
+    * hot-key skew: the candidate join's biggest bucket is bounded by the
+    * rarest-element df. Shingles are 8-byte hashes from the partition that
+    * read the document (the q26 discipline), so no exchange carries a
+    * string, and each candidate is verified in row ([[verified]]). The
+    * oracle joins shingle STRINGS, which would catch a 64-bit collision. */
   def prefixFilterJoin(spark: SparkSession, dir: String,
-                       tauNum: Int = TauNum, tauDen: Int = TauDen): DataFrame = {
-    val sh = table(spark, dir, "documents")
-      .select(col("doc_id"), split(col("text"), " ").as("ts"))
-      .where(size(col("ts")) >= 3)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(ts)-2), i -> concat_ws(' ', ts[i-1], ts[i], ts[i+1]))"))
-        .as("s"))
-      .distinct()
-    val df = sh.groupBy("s").agg(count(lit(1)).as("df"))
+                       tauNum: Int = TauNum, tauDen: Int = TauDen): DataFrame =
+    CacheOps.scope { s =>
+    // documents with a full 3-token window (the oracle's i + 2 <= len(ts)),
+    // materialized once: the df rollup, the prefixes and both verify sides
+    // read it
+    val sh = s.checkpoint(shingled(withWindow(spark, dir, ShingleW), ShingleW))
+    val ex = sh.select(col("doc_id"), size(col("sh")).as("n"), explode(col("sh")).as("g"))
+    val df = ex.groupBy("g").agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy(col("df"), col("s"))
-    val n = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-    val pfx = sh.join(df, "s")
+      .partitionBy("doc_id").orderBy(col("df"), col("g"))
+    val pfx = ex.join(df, "g")
       .withColumn("r", row_number().over(w))
-      .withColumn("n", count(lit(1)).over(n))
       .where(col("r") <= col("n") - expr(s"($tauNum * n + ${tauDen - 1}) div $tauDen") + 1)
-      .select(col("doc_id"), col("s"))
-    // ~300k candidates at sf0.1: pin the distinct + verify width to a
-    // MODERATE fan-out (quarter parallelism). AQE's byte-based coalescing
-    // runs these string-probe stages 2-wide; full session width was
-    // measured to inflate per-probe CPU ~7x (32 threads random-probing the
-    // shared broadcast shingle relations saturate memory bandwidth), so
-    // quarter width is the balance point on bandwidth-bound probe stages.
-    val cand = pfx.as("a").join(pfx.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-      .repartition(math.max(2, spark.sparkContext.defaultParallelism / 4),
-        col("da"), col("db"))
+      .select(col("doc_id"), col("g"))
+    val cand = pfx.as("l").join(pfx.as("r"),
+        col("l.g") === col("r.g") && col("l.doc_id") < col("r.doc_id"))
+      .select(col("l.doc_id").as("a"), col("r.doc_id").as("b"))
       .distinct()
-    val sz = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(sh.select(col("doc_id").as("da"), col("s")), Seq("da"))
-      .join(sh.select(col("doc_id").as("db"), col("s")), Seq("db", "s"))
-      .groupBy("da", "db").agg(count(lit(1)).as("c"))
-    inter
-      .join(sz.select(col("doc_id").as("da"), col("n").as("na")), Seq("da"))
-      .join(sz.select(col("doc_id").as("db"), col("n").as("nb")), Seq("db"))
-      .where(col("c") * tauDen >= (col("na") + col("nb") - col("c")) * tauNum)
-      .select(col("da"), col("db"), col("c").as("n_inter"),
-        (col("na") + col("nb") - col("c")).as("n_union"))
+    verified(cand, sh)
+      .where(col("common") * tauDen >= (col("na") + col("nb") - col("common")) * tauNum)
+      .select(col("a").as("da"), col("b").as("db"), col("common").as("n_inter"),
+        (col("na") + col("nb") - col("common")).as("n_union"))
   }
 }

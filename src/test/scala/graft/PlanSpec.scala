@@ -6,9 +6,11 @@ import org.apache.spark.sql.GraftShim
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{GenerateExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.functions.{PipHits, PipOrdinal, SeedScalar}
 
@@ -63,6 +65,25 @@ class PlanSpec extends AnyFunSuite {
     val timed = executions(pipeline.ImagePipeline.run(spark, 2000L, 4).count()).map(_.optimizedPlan)
     assert(timed.map(count(_)(probe)) == Seq(1) && timed.map(count(_)(geotagLon)) == Seq(1),
       timed.mkString("\n"))
+  }
+
+  private def executedPlans(q: String) =
+    executions(SparkEntry.queries(q)(spark, fixtureDir).collect()).map(_.executedPlan)
+
+  test("q129: no exchange carries a string column") {
+    val exchanges = executedPlans("q129_prefix_filter_join")
+      .flatMap(new AdaptiveSparkPlanHelper {}.collect(_) { case e: Exchange => e })
+    assert(exchanges.nonEmpty)
+    exchanges.foreach(e =>
+      assert(!e.output.exists(_.dataType.isInstanceOf[StringType]), s"string on an exchange:\n$e"))
+  }
+
+  test("q27: the minhash verify explodes no hash array") {
+    val generates = executedPlans("q27_minhash_lsh")
+      .flatMap(new AdaptiveSparkPlanHelper {}.collect(_) { case g: GenerateExec => g })
+    assert(generates.nonEmpty, "q27: no banding posexplode")
+    generates.foreach(g =>
+      assert(!g.generator.references.exists(_.name == "shs"), s"q27 explodes shs:\n$g"))
   }
 
   test("bucketed checkpoint layout: partition pruning reaches the scan (Iceberg-style)") {

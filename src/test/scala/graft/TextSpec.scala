@@ -219,7 +219,8 @@ class SpanDedupSpec extends AnyFunSuite {
       (4L, s"$shared2 ${pad("f", 8)}"),
       (5L, s"${pad("g", 8)} $shared2"),
       (6L, pad("h", 20)), // singleton: shares nothing
-      (7L, pad("zz", 3)) // shorter than k: no spans at all
+      (7L, pad("zz", 3)), // shorter than k: no spans at all
+      (8L, pad("zz", 3)) // equal to doc 7, and still no shared span
     ) ++ (10L to 15L).map(i => (i, s"${pad(s"x$i", 8)} $boiler"))
     docs.map { case (id, t) => (id, "src0", t) }
       .toDF("doc_id", "source", "text").write.parquet(s"$dir/documents.parquet")
@@ -239,6 +240,20 @@ class SpanDedupSpec extends AnyFunSuite {
     assert(got == want, s"missed=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
     // the boilerplate span must NOT appear as pairs among docs 10..15
     assert(!got.exists { case (a, b, _) => a >= 10L && b <= 15L && a < b && a >= 10L })
+  }
+
+  test("prefixFilterJoin: equal 2-token documents have no 3-gram and no pair") {
+    import spark.implicits._
+    val dir = "/tmp/short_doc_spec_dir"
+    graft.pipeline.Checkpoint.deleteRecursively(java.nio.file.Paths.get(dir))
+    def pad(p: String, n: Int) = (1 to n).map(i => s"$p$i").mkString(" ")
+    Seq((1L, pad("a", 5)), (2L, pad("a", 5)), (3L, pad("b", 2)), (4L, pad("b", 2)),
+      (5L, pad("c", 20)), (6L, pad("c", 20)))
+      .map { case (id, t) => (id, "src0", t) }
+      .toDF("doc_id", "source", "text").write.parquet(s"$dir/documents.parquet")
+    val got = Dedup.prefixFilterJoin(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    assert(got == Set((1L, 2L, 3L, 3L), (5L, 6L, 18L, 18L)))
   }
 
   test("dedupDecision: longest member wins, ties to lowest id, singletons keep") {
