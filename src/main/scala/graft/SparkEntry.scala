@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.ops.CoreQueries
-import graft.spatial.{PipJoin, SpatialQueries}
+import graft.spatial.SpatialQueries
 import graft.text.{TextOps, Dedup}
 import graft.ann.Ann
 import graft.pipeline.{ImagePipeline, Validate}
@@ -541,12 +541,10 @@ object SparkEntry {
     // image pipeline (north_rule flagship; input synthesized deterministically)
     "q32_image_tile_pivot" -> ((s: SparkSession, _: String) =>
       ImagePipeline.run(s, ImagePipeline.GateRows, ImagePipeline.GateParts)),
-    // the same rollup with teams DISCOVERED dynamically via pivot() over the
-    // typed Dataset path — must agree with q32's codegen path and the oracle
+    // the same rollup with teams DISCOVERED dynamically via pivot() — must
+    // agree with q32's fixed team columns and the oracle
     "q38_team_pivot_dynamic" -> ((s: SparkSession, _: String) =>
-      ImagePipeline.tileTeamPivotDynamic(PipJoin.join(
-        ImagePipeline.features(s, ImagePipeline.GateRows, ImagePipeline.GateParts).toDF(),
-        ImagePipeline.metroBoundaries, "lon", "lat"))),
+      ImagePipeline.tileTeamPivotDynamic(s)),
     // the FULL tilePointSummaries measure matrix: tile totals + dynamic
     // per-team km/b/p/e pivot + team_sum rollups (extractor.js:279-313)
     "q45_tile_measure_matrix" -> ((s: SparkSession, _: String) =>

@@ -57,6 +57,7 @@ case class CellScalar(left: Expression, right: Expression, res: Int, fn: String)
   override protected def nullSafeEval(lat: Any, lon: Any): Any = fn match {
     case "hexCell" => Statics.hexCell(lat.asInstanceOf[Double], lon.asInstanceOf[Double], res)
     case "s2Cell" => Statics.s2Cell(lat.asInstanceOf[Double], lon.asInstanceOf[Double], res)
+    case "quadCell" => Statics.quadCell(lat.asInstanceOf[Double], lon.asInstanceOf[Double], res)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -138,6 +139,10 @@ object SeedExprs {
     co(CellScalar(ex(lat), ex(lon), res, "hexCell"))
   def s2Cell(lat: Column, lon: Column, level: Int): Column =
     co(CellScalar(ex(lat), ex(lon), level, "s2Cell"))
+  /** The packed quadkey cell ([[graft.index.Quadkey.cellIdOf]]) at `zoom`:
+    * the engine's one tile encoder. */
+  def quadCell(lat: Column, lon: Column, zoom: Int): Column =
+    co(CellScalar(ex(lat), ex(lon), zoom, "quadCell"))
   def pipOrdinal(lon: Column, lat: Column, index: BoundaryIndex): Column =
     co(PipOrdinal(ex(lon), ex(lat), index))
   def pipHits(lon: Column, lat: Column, index: BoundaryIndex): Column =

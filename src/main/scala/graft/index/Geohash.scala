@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.spatial.SpatialQueries
+import graft.spatial.{SpatialQueries, ZOrder}
 
 /** Geohash — the third index family next to quadkey and the hex/S2 tiers:
   * base32 text cells whose PREFIX relation is the containment relation, so
@@ -23,31 +23,20 @@ object Geohash {
 
   val Alphabet = "0123456789bcdefghjkmnpqrstuvwxyz"
 
-  /** Scaled integer coordinate: floor((v+half)/span · 2^bits), clamped to
-    * the top cell (v = +max edge). */
-  private def scaled(v: Column, half: Double, bits: Int): Column =
-    least(floor((v + lit(half)) / lit(2 * half) * lit((1L << bits).toDouble)),
-      lit((1L << bits) - 1.0)).cast("long")
-
   /** The 5p-bit geohash integer code (lon bit 14 at code bit 29, lat bit 14
-    * at code bit 28, ... — lon-first interleave, MSB down). */
+    * at code bit 28, ... — lon-first interleave, MSB down): the Morton code
+    * of the equirectangular grid cell. MSB-first alternation starting with
+    * lon puts, counting from the LSB, lon bit i at 2i+1 and lat bit i at 2i
+    * when 5p is even (lat takes Morton's even positions), and lon bit i at
+    * 2i, lat bit i at 2i+1 when 5p is odd (lat's missing top bit is 0). */
   def codeCol(lon: Column, lat: Column, precision: Int): Column = {
     val totalBits = 5 * precision
     val lonBits = (totalBits + 1) / 2
     val latBits = totalBits / 2
-    val ix = scaled(lon, 180.0, lonBits)
-    val iy = scaled(lat, 90.0, latBits)
-    // MSB-first alternation starting with lon ⇒ counting from the LSB:
-    // even totalBits → lon bit i at code position 2i+1, lat bit i at 2i;
-    // odd totalBits → lon at 2i, lat at 2i+1.
-    val lonShift = if (totalBits % 2 == 0) 1 else 0
-    val lons = (0 until lonBits).map { i =>
-      shiftright(ix, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i + lonShift))
-    }
-    val lats = (0 until latBits).map { i =>
-      shiftright(iy, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i + 1 - lonShift))
-    }
-    (lons ++ lats).reduce(_ + _)
+    val ix = ZOrder.gridX(lon, lonBits)
+    val iy = ZOrder.gridY(lat, latBits)
+    if (totalBits % 2 == 0) ZOrder.mortonCol(iy, ix, latBits)
+    else ZOrder.mortonCol(ix, iy, lonBits)
   }
 
   /** Geohash string of `precision` base32 chars from the code. */

@@ -1,15 +1,13 @@
 package graft.index
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 /** Web-mercator slippy-tile / quadkey encoding, written from scratch.
   *
   * Re-expresses the reference's z12 quadkey tile addressing
   * (reference: util/map-contribution-extractor.js:85 `tilebelt.tileToQuadkey`)
-  * as (a) pure Scala functions for driver/UDF use and (b) pure-`Column`
-  * arithmetic (`tileXCol`/`tileYCol`/`cellIdCol`) that stays inside
-  * whole-stage codegen — no UDF on the hot path.
+  * as one scalar encoder, [[cellIdOf]]. The driver calls it directly, and
+  * generated code reaches it through `SeedExprs.quadCell` (a static call
+  * inlined into whole-stage codegen, no UDF), so every tile in the engine
+  * comes from this one function.
   *
   * Cell id layout (long): [ z:5 bits | x:29 bits | y:29 bits ], valid z <= 28.
   */
@@ -34,12 +32,13 @@ object Quadkey {
     * DuckDB oracle replica (OracleSql.pipelineCtes) uses the SAME form, and
     * the radians are spelled as the oracle spells them, `lat / 180 · π`
     * (`Math.toRadians` multiplies by π/180 and differs in the last ulp on
-    * some latitudes). [[tileYCol]] spells them the same way. `graft.Dev
-    * merc` + tools/merc_parity.py compare this function with DuckDB's over
-    * 2M geotag latitudes at z12. */
+    * some latitudes). The log is `StrictMath.log` (fdlibm), the same on
+    * every JVM, and the sine `Math.sin`. `graft.Dev merc` +
+    * tools/merc_parity.py compare this function with DuckDB's over 2M
+    * geotag latitudes at z12. */
   def tileYRaw(lat: Double, z: Int): Double = {
-    val s = math.sin(clampLat(lat) / 180.0 * math.Pi)
-    (1.0 - 0.5 * math.log((1.0 + s) / (1.0 - s)) / math.Pi) / 2.0 * (1L << z)
+    val s = Math.sin(clampLat(lat) / 180.0 * Math.PI)
+    (1.0 - 0.5 * StrictMath.log((1.0 + s) / (1.0 - s)) / Math.PI) / 2.0 * (1L << z)
   }
 
   /** lon/lat -> tile y at zoom z (web mercator). */
@@ -77,33 +76,4 @@ object Quadkey {
     val (w, s, e, n) = tileBounds(x, y, z)
     ((w + e) / 2.0, (s + n) / 2.0)
   }
-
-  // ---- Column-native (whole-stage-codegen) variants ------------------------
-
-  /** Tile x as a pure Column expression (stays in WSCG; no UDF). */
-  def tileXCol(lon: Column, z: Int): Column = {
-    val n = 1L << z
-    least(lit(n - 1), greatest(lit(0L),
-      floor((lon + lit(180.0)) / lit(360.0) * lit(n.toDouble)).cast("long"))).cast("int")
-  }
-
-  /** Tile y as a pure Column expression — same atanh(sinφ) form and the
-    * same `lat / 180 · π` radians as the scalar [[tileYRaw]] (the two must
-    * assign identical tiles or the cell cover `PipJoin.joinViaCellCover`
-    * builds from the scalar could drop boundary rows). The
-    * repeated `sin(latRad)` subtree is shared by whole-stage codegen's
-    * subexpression elimination: one sin + one log per row. */
-  def tileYCol(lat: Column, z: Int): Column = {
-    val n = 1L << z
-    val latC = greatest(lit(-MaxLat), least(lit(MaxLat), lat))
-    val s = sin(latC / lit(180.0) * lit(math.Pi))
-    val yRaw = (lit(1.0) - lit(0.5) * log((lit(1.0) + s) / (lit(1.0) - s)) / lit(math.Pi)) / lit(2.0) * lit(n.toDouble)
-    least(lit(n - 1), greatest(lit(0L), floor(yRaw).cast("long"))).cast("int")
-  }
-
-  /** Packed cell id as a pure Column expression. */
-  def cellIdCol(lon: Column, lat: Column, z: Int): Column =
-    (lit(z.toLong) * lit(1L << 58)) +
-      shiftleft(tileXCol(lon, z).cast("long"), 29) +
-      tileYCol(lat, z).cast("long")
 }

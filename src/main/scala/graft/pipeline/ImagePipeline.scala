@@ -1,16 +1,17 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.CacheOps
+import graft.functions.SeedExprs
 import graft.synth.{ImageSynth, Geotag}
-import graft.index.{Hex, Quadkey, S2Like}
+import graft.index.Quadkey
 import graft.spatial.{Boundary, PipJoin}
 
 /** The flagship spatial-join + tiling pipeline over the image+caption table
-  * (north_rule): geotagged image rows → H3/S2/quadkey cell encoding
-  * (mapPartitions over reused index objects) → point-in-polygon join against
-  * broadcast metro boundaries → raster↔vector tile assignment → per-tile
+  * (north_rule): geotagged image rows → point-in-polygon join against
+  * broadcast metro boundaries → H3/S2/quadkey cell encoding (codegen
+  * expressions, [[fastFeatures]]) → raster↔vector tile assignment → per-tile
   * contributor rollups — re-expressing the reference's interaction-tile
   * outputs (util/map-contribution-extractor.js:164-320).
   *
@@ -23,13 +24,6 @@ import graft.spatial.{Boundary, PipJoin}
   *    aggregation absorbs metro skew map-side, AQE splits what remains.
   */
 object ImagePipeline {
-
-  /** One geotagged feature row — the engine's point-feature analog of the
-    * reference's QA-tile feature (SURVEY.md §1.1 #5). */
-  final case class Feature(image_id: String, phash: Long,
-                           lon: Double, lat: Double,
-                           uid: Long, team: String, day: Long,
-                           tile: Long, hex: Long, s2: Long)
 
   /** Metro boundary fixture: boxes around the three synthetic metros + one
     * spanning none (negative control). */
@@ -56,35 +50,17 @@ object ImagePipeline {
     spark.range(0L, n, 1L, parts).mapPartitions(_.map(i => ImageSynth.rowOf(i)))
   }
 
-  /** Feature derivation straight from row indices — cheap path that skips
-    * pixel rendering entirely (phash re-derived from rendered pixels is only
-    * needed by validation; here the phash comes with the row). */
-  def features(spark: SparkSession, n: Long, parts: Int): Dataset[Feature] = {
-    import spark.implicits._
-    // no per-row allocation beyond the Feature
-    spark.range(0L, n, 1L, parts).mapPartitions(_.map(i => featureOf(i, ImageSynth.idOf(i), 0L)))
-  }
-
-  /** Row `i`'s feature: geotag and meta derived from its id-seed, cells encoded. */
-  private def featureOf(i: Long, id: String, phash: Long): Feature = {
-    val seed = ImageSynth.seedOf(i)
-    val lon = Geotag.lonOf(seed)
-    val lat = Geotag.latOf(seed)
-    Feature(id, phash, lon, lat, ImageSynth.uidOf(seed), ImageSynth.teamOf(seed),
-      ImageSynth.dayOf(seed), Quadkey.cellIdOf(lon, lat, TileZ),
-      Hex.latLngToCell(lat, lon, HexRes), S2Like.cellIdAt(lat, lon, S2Level))
-  }
-
   /** Feature extraction from a *stored* image table (the path a real Iceberg
-    * table takes): derives geotag/meta from the id-seed, cells in
-    * mapPartitions. Never touches `bytes`. */
-  def featuresFromTable(rows: DataFrame): Dataset[Feature] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    rows.select(col("image_id"), col("phash")).as[(String, Long)].mapPartitions(_.map {
-      case (id, ph) => featureOf(id.stripPrefix("img").toLong, id, ph)
-    })
-  }
+    * table takes): [[derived]] over the row index parsed from `image_id` and
+    * its geotag, with `image_id`, `phash` and the `team` name. Never reads
+    * `bytes`. */
+  def featuresFromTable(rows: DataFrame): DataFrame =
+    named(derived(geotagged(rows.select(idxOf(col("image_id")).as("idx"),
+      col("image_id"), col("phash")))))
+
+  /** The row index of an [[ImageSynth.idOf]] image id: its digits after `img`. */
+  private[graft] def idxOf(imageId: Column): Column =
+    imageId.substr(4, Int.MaxValue).cast("long")
 
   /** Dynamic per-team pivot — the reference emits `<team>-*` columns for
     * whatever teams EXIST in the data (map-contribution-extractor.js:293-313
@@ -93,11 +69,12 @@ object ImagePipeline {
     * (At 100 TB pass the known team list to `pivot(col, values)` to skip the
     * discovery job — the output contract is identical.) Absent team cells
     * coalesce to 0 like the reference's zero-initialized accumulators. */
-  def tileTeamPivotDynamic(joined: DataFrame): DataFrame = CacheOps.scope { s =>
+  def tileTeamPivotDynamic(spark: SparkSession): DataFrame = CacheOps.scope { s =>
     // pre-rollup once on (tile, boundary, team, uid) — fine enough for BOTH
     // the pivot and the distinct-user totals — and materialize it: the two
     // branches would otherwise re-execute the feature scan (same
     // multi-consumer re-execution q45's plan audit caught)
+    val joined = named(pipFiltered(spark, GateRows, GateParts))
     val pre = s.checkpoint(joined.groupBy(col("tile"), col("boundary_id"), col("team"), col("uid"))
       .agg(count(lit(1)).as("e")))
     val p = pre.groupBy(col("tile"), col("boundary_id")).pivot("team").agg(sum("e"))
@@ -122,8 +99,7 @@ object ImagePipeline {
   def userDailyCentroidGate(spark: SparkSession, n: Long = GateRows,
                             parts: Int = GateParts): DataFrame = {
     import spark.implicits._
-    val joined = PipJoin.join(features(spark, n, parts).toDF(), metroBoundaries, "lon", "lat")
-    joined.select(col("uid"), col("day"),
+    pipFiltered(spark, n, parts).select(col("uid"), col("day"),
         floor(col("lon") * lit(1e6) + lit(0.5)).cast("double").as("lon_e6"),
         floor(col("lat") * lit(1e6) + lit(0.5)).cast("double").as("lat_e6"))
       .as[(Long, Long, Double, Double)]
@@ -138,23 +114,23 @@ object ImagePipeline {
 
   /** AOI-filtered codegen feature stream: the [[fastFeatures]] columns plus
     * `b_ord`, through [[PipJoin.withOrdinal]], the one broadcast PIP
-    * prologue, which also backs [[PipJoin.join]] (q17, q38, q46). The probe
-    * runs on (idx, lon, lat) before the rest of the feature is derived, so a
-    * row outside every metro pays for no meta or cell encode. Every tile gate query (measure matrix,
-    * daily summaries, objects, multi-zoom, centers, flagship run) reads the
-    * metro ordinal from its `b_ord` column. */
+    * prologue, which also backs [[PipJoin.join]] (q17). The probe runs on
+    * (idx, lon, lat) before the rest of the feature is derived, so a row
+    * outside every metro pays for no meta or cell encode. Every image gate
+    * query over features (pivots, centroids, measure matrix, daily
+    * summaries, objects, multi-zoom, centers, flagship run) reads the metro
+    * ordinal from its `b_ord` column. */
   private def pipFiltered(spark: SparkSession, n: Long, parts: Int): DataFrame =
-    derived(PipJoin.withOrdinal(geotagged(spark, n, parts), metroBoundaries, "lon", "lat"))
+    derived(PipJoin.withOrdinal(geotagged(spark.range(0L, n, 1L, parts).toDF("idx")),
+      metroBoundaries, "lon", "lat"))
 
   /** The tile summaries' (q45, q60) prologue: [[pipFiltered]] features with
     * team name, e6 highway km (rounded per segment), building and POI flags. */
   private def measured(spark: SparkSession): DataFrame = {
-    import graft.functions.SeedExprs
-    val f = pipFiltered(spark, GateRows, GateParts)
+    val f = named(pipFiltered(spark, GateRows, GateParts))
       .withColumn("noun_id", SeedExprs.metaNounId(col("idx")))
       .withColumn("dlon", SeedExprs.segDLon(col("idx")))
       .withColumn("dlat", SeedExprs.segDLat(col("idx")))
-      .withColumn("team", element_at(lit(teamNames.toArray), col("team_id") + 1))
     val kmE6 = when(col("noun_id") === 1,
       floor(graft.spatial.SpatialQueries.haversineKmCol(
         col("lat"), col("lon"), col("lat") + col("dlat"), col("lon") + col("dlon"))
@@ -245,17 +221,13 @@ object ImagePipeline {
     * (the q47 pattern, but per-feature instead of aggregated). Scale shape:
     * pure map — no shuffle at all; the sink writes partition-local files. */
   def objectFeatures(spark: SparkSession): DataFrame = {
-    import graft.functions.SeedExprs
-    val names = metroBoundaries.map(_.id).toArray
-    val f = pipFiltered(spark, GateRows, GateParts)
-      .withColumn("team", element_at(lit(teamNames.toArray), col("team_id") + 1))
+    val f = named(pipFiltered(spark, GateRows, GateParts))
       .withColumn("noun_id", SeedExprs.metaNounId(col("idx")))
     val props = f.select(col("lon"), col("lat"), col("idx"),
       col("uid").as("u"), concat(lit("user"), col("uid")).as("h"),
       SeedExprs.metaCs(col("idx")).as("c"), col("day").as("t"),
       SeedExprs.metaVer(col("idx")).as("v"), col("team").as("m"),
-      col("noun_id").cast("long").as("n"),
-      element_at(lit(names), col("b_ord") + 1).as("r"))
+      col("noun_id").cast("long").as("n"), col("boundary_id").as("r"))
     val lines = graft.geo.GeoJson.pointFeatures(props)
     val ddl = "type STRING, properties STRUCT<idx: BIGINT, u: BIGINT, h: STRING, " +
       "c: BIGINT, t: BIGINT, v: BIGINT, m: STRING, n: BIGINT, r: STRING>, " +
@@ -280,8 +252,7 @@ object ImagePipeline {
     * every requested zoom via bit-shift parent derivation (one encode at
     * z-max, no re-encoding), then one rollup per (zoom, cell, team). */
   def multiZoomRollup(spark: SparkSession): DataFrame = {
-    val f = pipFiltered(spark, GateRows, GateParts)
-      .withColumn("team", element_at(lit(teamNames.toArray), col("team_id") + 1))
+    val f = named(pipFiltered(spark, GateRows, GateParts))
     graft.spatial.TileAssign.withTileMultiZoom(f, "lon", "lat", RollupZooms)
       .groupBy(col("zoom"), col("cell_id"), col("team"))
       .agg(count(lit(1)).as("n_edits"), countDistinct(col("uid")).as("n_users"))
@@ -310,41 +281,42 @@ object ImagePipeline {
 
   // ---- codegen fast path -----------------------------------------------
 
-  /** Feature derivation as pure codegen expressions (graft.functions): the
-    * whole scan→derive→encode→PIP→partial-agg pipeline is ONE WholeStageCodegen
-    * span with zero per-row JVM allocation. 2.5-4x the Dataset path at high
-    * core counts, where the typed path is allocator-bound. */
+  /** The engine's one feature derivation, as pure codegen expressions
+    * (graft.functions): the whole scan→derive→encode→PIP→partial-agg
+    * pipeline is ONE WholeStageCodegen span with zero per-row JVM
+    * allocation. */
   def fastFeatures(spark: SparkSession, n: Long, parts: Int): DataFrame =
-    derived(geotagged(spark, n, parts))
+    derived(geotagged(spark.range(0L, n, 1L, parts).toDF("idx")))
 
-  /** Row indices with their geotag: (idx, lon, lat). */
-  private def geotagged(spark: SparkSession, n: Long, parts: Int): DataFrame = {
-    import graft.functions.SeedExprs
-    spark.range(0L, n, 1L, parts).toDF("idx")
-      .select(col("idx"),
-        SeedExprs.geotagLon(col("idx")).as("lon"),
-        SeedExprs.geotagLat(col("idx")).as("lat"))
-  }
+  /** `rows` with the geotag of their row index `idx` in `lon` and `lat`. */
+  private[graft] def geotagged(rows: DataFrame): DataFrame =
+    rows.withColumn("lon", SeedExprs.geotagLon(col("idx")))
+      .withColumn("lat", SeedExprs.geotagLat(col("idx")))
 
   /** [[geotagged]] rows with the rest of the feature: meta and cells. */
-  private def derived(points: DataFrame): DataFrame = {
-    import graft.functions.SeedExprs
+  private def derived(points: DataFrame): DataFrame =
     points
       .withColumn("uid", SeedExprs.metaUid(col("idx")))
       .withColumn("day", SeedExprs.metaDay(col("idx")))
       .withColumn("team_id", SeedExprs.metaTeamId(col("idx")))
-      .withColumn("tile", graft.index.Quadkey.cellIdCol(col("lon"), col("lat"), TileZ))
+      .withColumn("tile", SeedExprs.quadCell(col("lat"), col("lon"), TileZ))
       .withColumn("hex", SeedExprs.hexCell(col("lat"), col("lon"), HexRes))
       .withColumn("s2", SeedExprs.s2Cell(col("lat"), col("lon"), S2Level))
-  }
 
-  private val teamNames = Seq("kll", "msf", "dcx", "hot")
+  private val teamNames = ImageSynth.Teams.toSeq
 
-  /** Codegen PIP join + per-tile per-team pivot — semantically identical to
-    * a typed pivot over [[features]] joined to their metros (asserted in
-    * FastPathSpec). */
+  /** `df` with the names of the ordinals it carries: `team` from `team_id`
+    * and `boundary_id`, the metro's id, from `b_ord`. */
+  private[graft] def named(df: DataFrame): DataFrame =
+    Seq(("team_id", "team", teamNames), ("b_ord", "boundary_id", metroBoundaries.map(_.id)))
+      .filter { case (ord, _, _) => df.columns.contains(ord) }
+      .foldLeft(df) { case (d, (ord, name, names)) =>
+        d.withColumn(name, element_at(lit(names.toArray), col(ord) + 1))
+      }
+
+  /** Codegen PIP join + per-tile per-team pivot: the per-team sums over the
+    * metro-joined features (FastPathSpec replays it on the driver). */
   def run(spark: SparkSession, n: Long, parts: Int = 32): DataFrame = {
-    val names = metroBoundaries.map(_.id).toArray // ordinal = position in the index array
     val joined = pipFiltered(spark, n, parts)
     val agged = joined.groupBy(col("tile"), col("b_ord"))
       .agg(
@@ -354,9 +326,7 @@ object ImagePipeline {
         sum(when(col("team_id") === 3, 1L).otherwise(0L)).as("hot_e"),
         count(lit(1)).as("team_sum_e"),
         countDistinct(col("uid")).as("n_users"))
-    agged
-      .withColumn("boundary_id", element_at(lit(names), col("b_ord") + 1))
-      .drop("b_ord")
+    named(agged)
       .select(col("tile"), col("boundary_id"), col("kll_e"), col("msf_e"),
         col("dcx_e"), col("hot_e"), col("team_sum_e"), col("n_users"))
   }

@@ -73,12 +73,6 @@ final class BoundaryIndex(val boundaries: Array[Boundary]) extends Serializable 
   // has no area or a non-finite bound (every point in it ray-casts)
   private val rasters: Array[Byte] = boundaries.flatMap(rasterOf)
 
-  /** First (lowest-id) boundary containing the point, or null. */
-  def queryFirst(lon: Double, lat: Double): String = {
-    val o = queryFirstOrdinal(lon, lat)
-    if (o < 0) null else boundaries(o).id
-  }
-
   /** Ordinal of the containing boundary with the lowest id, or -1. Among
     * containing boundaries that share the lowest id, the highest ordinal
     * wins. Primitive return — usable from whole-stage-codegen without

@@ -51,15 +51,14 @@ object BoxJoin {
       (u8(id + hBase) * 2.0 + 0.5).as(s"${prefix}h"))
   }
 
-  /** Explode a rectangle to its covering cells on the 64×64 lon/lat grid. */
+  /** Explode a rectangle to its covering cells on the 64×64 lon/lat grid
+    * ([[ZOrder.gridX]]/[[ZOrder.gridY]] at 6 bits). */
   private def withCells(df: DataFrame, x0: String, y0: String, w: String,
                         h: String): DataFrame =
     df.withColumn("x", explode(sequence(
-        greatest(floor((col(x0) + 180.0) / 5.625).cast("long"), lit(0L)),
-        least(floor((col(x0) + col(w) + 180.0) / 5.625).cast("long"), lit(63L)))))
+        ZOrder.gridX(col(x0), 6), ZOrder.gridX(col(x0) + col(w), 6))))
       .withColumn("y", explode(sequence(
-        greatest(floor((col(y0) + 90.0) / 2.8125).cast("long"), lit(0L)),
-        least(floor((col(y0) + col(h) + 90.0) / 2.8125).cast("long"), lit(63L)))))
+        ZOrder.gridY(col(y0), 6), ZOrder.gridY(col(y0) + col(h), 6))))
 
   /** Gate query (q112): all overlapping (a, b) rectangle pairs. */
   def overlapJoin(spark: SparkSession, na: Int = OverlapA, nb: Int = OverlapB): DataFrame = {

@@ -3,7 +3,7 @@ package graft.spatial
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.index.Quadkey
+import graft.functions.SeedExprs
 
 /** Spatial distance self-join — all point pairs within `dKm` great-circle
   * kilometres — via web-mercator cell-cover candidate generation: each point
@@ -46,9 +46,11 @@ object DistanceJoin {
     val n = 1 << zoom
     val pts = SpatialQueries.eventPoints(spark, dir)
       .filter(abs(col("lat")) <= lit(84.0))
+      .withColumn("cell", SeedExprs.quadCell(col("lat"), col("lon"), zoom))
+      // the cell's x sits in bits 29-57 and its y in bits 0-28 (Quadkey's layout)
       .select(col("event_id"), col("lon"), col("lat"),
-        Quadkey.tileXCol(col("lon"), zoom).as("tx"),
-        Quadkey.tileYCol(col("lat"), zoom).as("ty"))
+        shiftright(col("cell"), 29).bitwiseAND(lit(0x1FFFFFFFL)).cast("int").as("tx"),
+        col("cell").bitwiseAND(lit(0x1FFFFFFFL)).cast("int").as("ty"))
     val right = pts.select(col("event_id").as("b_id"), col("lon").as("b_lon"),
       col("lat").as("b_lat"), col("tx").as("b_tx"), col("ty").as("b_ty"))
     // FORWARD-only half neighborhood: of each opposite offset pair (d, -d)

@@ -53,7 +53,8 @@ object PipJoin {
     * broadcast ceiling (north_star: "range-join pushdown on cell ID
     * intervals"). Each boundary explodes to the z6 cells covering its bbox
     * (the discretized cell-ID interval); each point computes its one cell in
-    * codegen; the join is a plain equi-join on `cell` that Catalyst plans
+    * codegen ([[SeedExprs.quadCell]]), with the same encoder,
+    * [[Quadkey.cellIdOf]], that covers the bboxes; the join is a plain equi-join on `cell` that Catalyst plans
     * however the sides' sizes dictate — broadcast for small boundary sets,
     * shuffle hash join when millions of polygons make [[join]]'s shipped
     * index impossible. The exact ray-cast verifies candidates after the join
@@ -76,7 +77,7 @@ object PipJoin {
     val bDf = bRows.toDF("cell", "boundary_id", "__b_lons", "__b_lats",
       "__w", "__e", "__s", "__n")
     val pts = points.withColumn("cell",
-      Quadkey.cellIdCol(col(lonCol), col(latCol), CoverZoom))
+      SeedExprs.quadCell(col(latCol), col(lonCol), CoverZoom))
     val inRing = udf { (lon: Double, lat: Double, lons: Seq[Double], lats: Seq[Double]) =>
       graft.geo.Geo.pointInRing(lon, lat, lons.toArray, lats.toArray)
     }

@@ -2,7 +2,7 @@ package graft.spatial
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.index.Quadkey
+import graft.functions.SeedExprs
 
 /** Feature→tile assignment — the tiling-engine core (SURVEY.md J7/X10;
   * reference: tile-reduce bucketing by z12 quadkey,
@@ -25,7 +25,7 @@ object TileAssign {
                         zooms: Seq[Int]): DataFrame = {
     val zMax = zooms.max
     val base = df.withColumn("__cell_zmax",
-      Quadkey.cellIdCol(col(lonCol), col(latCol), zMax))
+      SeedExprs.quadCell(col(latCol), col(lonCol), zMax))
     // parent at z: drop (zMax-z) low bits of x and y
     val cells = zooms.map { z =>
       val shift = zMax - z

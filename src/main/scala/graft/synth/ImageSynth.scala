@@ -52,7 +52,8 @@ object ImageSynth {
   private val Sizes = Array(16, 32, 64)
   private val CaptionVerbs = Array("edits", "maps", "squares", "traces", "tags", "imports")
   private val CaptionNouns = Array("building", "highway", "landuse", "amenity", "boundary", "waterway")
-  private val Teams = Array("kll", "msf", "dcx", "hot")
+  /** The team names, by team ordinal ([[teamIdOf]]). */
+  val Teams = Array("kll", "msf", "dcx", "hot")
 
   // per-thread canvas pool: BufferedImage construction allocates rasters and
   // (via finalizable internals) stresses GC/Finalizer at 32 threads; render

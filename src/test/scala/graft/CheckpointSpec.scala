@@ -147,7 +147,7 @@ class SkewSpec extends AnyFunSuite {
   test("salted repartition flattens the metro hot cells") {
     import org.apache.spark.sql.Row
     val feats = ImagePipeline.fastFeatures(spark, 6000, 4)
-      .withColumn("z8", graft.index.Quadkey.cellIdCol(col("lon"), col("lat"), 8))
+      .withColumn("z8", graft.functions.SeedExprs.quadCell(col("lat"), col("lon"), 8))
     def maxPartitionFraction(df: org.apache.spark.sql.DataFrame): Double = {
       val sizes = df.rdd.mapPartitions(it => Iterator(it.size)).collect()
       sizes.max.toDouble / sizes.sum

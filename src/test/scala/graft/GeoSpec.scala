@@ -61,7 +61,8 @@ class GeoSpec extends AnyFunSuite {
     forAllSeeded(2000) { r =>
       val lon = r.double(-179, 179); val lat = r.double(-85, 85)
       val brute = bs.filter(_.containsPoint(lon, lat)).map(_.id).sorted.headOption.orNull
-      assert(idx.queryFirst(lon, lat) == brute, s"($lon,$lat)")
+      val o = idx.queryFirstOrdinal(lon, lat)
+      assert((if (o < 0) null else bs(o).id) == brute, s"($lon,$lat)")
     }
   }
 

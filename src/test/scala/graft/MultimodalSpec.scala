@@ -16,7 +16,7 @@ class GeoJsonSpec extends AnyFunSuite {
 
   test("polygon ring geometry + dataframe sink path") {
     import org.apache.spark.sql.functions._
-    val df = graft.spatial.PipJoin.join(ImagePipeline.features(spark, 50, 2).toDF(),
+    val df = graft.spatial.PipJoin.join(ImagePipeline.fastFeatures(spark, 50, 2),
       ImagePipeline.metroBoundaries, "lon", "lat")
       .select(col("lon"), col("lat"), col("uid"), col("boundary_id"))
     val lines = GeoJson.pointFeatures(df).collect()

@@ -77,6 +77,24 @@ class PipAgreementSpec extends AnyFunSuite {
     check("nested", nested, 31L)
   }
 
+  test("joinViaCellCover keeps a point one ulp inside a box edge where the z6 row turns") {
+    // the box's north edge and the point one ulp below it lie a few ulps
+    // from the z6 tile row boundary near 45.09°, where a log rounded one ulp
+    // apart moves the tile: the cover of the box and the cell of the point
+    // must come from one encoder, or the point falls outside the cover
+    val top = java.lang.Double.longBitsToDouble(4631542534927257770L)
+    val lat = math.nextDown(top)
+    val bs = Seq(box("edge", 10.0, 40.0, 12.0, top))
+    assert(bs.head.containsPoint(11.0, lat))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(1L, 11.0, lat)), 1),
+      StructType(Seq(StructField("pid", LongType), StructField("lon", DoubleType),
+        StructField("lat", DoubleType))))
+    for (out <- Seq(PipJoin.join(df, bs, "lon", "lat"),
+                    PipJoin.joinViaCellCover(df, bs, "lon", "lat", "pid")))
+      assert(out.select("pid", "boundary_id").collect().map(r => (r.getLong(0), r.getString(1)))
+        .toSeq == Seq((1L, "edge")))
+  }
+
   /** The index's answer by brute force: the lowest containing id, the
     * highest position among boundaries that share it; -1 off the globe. */
   private def bruteOrdinal(bs: Seq[Boundary], lon: Double, lat: Double): Int =

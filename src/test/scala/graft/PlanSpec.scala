@@ -6,7 +6,8 @@ import org.apache.spark.sql.GraftShim
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.{GenerateExec, QueryExecution}
+import org.apache.spark.sql.execution.{DeserializeToObjectExec, GenerateExec, MapPartitionsExec,
+  QueryExecution, RangeExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
@@ -69,6 +70,21 @@ class PlanSpec extends AnyFunSuite {
 
   private def executedPlans(q: String) =
     executions(SparkEntry.queries(q)(spark, fixtureDir).collect()).map(_.executedPlan)
+
+  test("q38 and q46 derive features in codegen; fastFeatures encodes its tile once, with no LN") {
+    val aqe = new AdaptiveSparkPlanHelper {}
+    // the operators of `p`'s stage: everything below it up to an exchange
+    def stage(p: SparkPlan): Seq[SparkPlan] =
+      p +: (p match { case _: Exchange => Nil; case _ => p.children.flatMap(stage) })
+    Seq("q38_team_pivot_dynamic", "q46_centroid_agg").foreach { q =>
+      val nodes = executedPlans(q).flatMap(aqe.collect(_) { case n => n })
+      assert(!nodes.exists(_.isInstanceOf[MapPartitionsExec]), s"$q: mapPartitions:\n${nodes.head}")
+      nodes.collect { case d: DeserializeToObjectExec => d }.foreach(d =>
+        assert(!stage(d.child).exists(_.isInstanceOf[RangeExec]), s"$q: typed feature rows:\n$d"))
+    }
+    val plan = pipeline.ImagePipeline.fastFeatures(spark, 100, 2).queryExecution.executedPlan.toString
+    assert(plan.split("quadCell\\(12\\)\\(", -1).length == 2 && !plan.contains("LN("), plan)
+  }
 
   test("q129: no exchange carries a string column") {
     val exchanges = executedPlans("q129_prefix_filter_join")

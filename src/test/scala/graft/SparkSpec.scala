@@ -63,19 +63,20 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("feature tile assignment matches the scalar encoder row-for-row") {
-    val feats = ImagePipeline.features(spark, 200, 4).collect()
+    val feats = ImagePipeline.fastFeatures(spark, 200, 4)
+      .select(col("idx"), col("lon"), col("lat"), col("tile")).collect()
     assert(feats.length == 200)
     feats.foreach { f =>
-      val seed = ImageSynth.seedOf(f.image_id.stripPrefix("img").toLong)
+      val seed = ImageSynth.seedOf(f.getLong(0))
       val lon = Geotag.lonOf(seed)
       val lat = Geotag.latOf(seed)
-      assert(f.tile == Quadkey.cellIdOf(lon, lat, 12))
-      assert(math.abs(f.lon - lon) < 1e-12 && math.abs(f.lat - lat) < 1e-12)
+      assert(f.getLong(3) == Quadkey.cellIdOf(lon, lat, 12))
+      assert(math.abs(f.getDouble(1) - lon) < 1e-12 && math.abs(f.getDouble(2) - lat) < 1e-12)
     }
   }
 
   test("pipeline rollup: team columns sum to team_sum_e; joined rows preserved") {
-    val joined = PipJoin.join(ImagePipeline.features(spark, 2000, 4).toDF(),
+    val joined = PipJoin.join(ImagePipeline.named(ImagePipeline.fastFeatures(spark, 2000, 4)),
       ImagePipeline.metroBoundaries, "lon", "lat")
     val nJoined = joined.count()
     assert(nJoined > 1000, s"expected most rows in metros, got $nJoined") // ~70% clustered
@@ -86,13 +87,13 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("PIP join assigns only real metro boundaries and respects containment") {
-    val feats = ImagePipeline.features(spark, 1000, 4)
-    val joined = PipJoin.join(feats.toDF(), ImagePipeline.metroBoundaries, "lon", "lat")
-      .collect().map(r => r.getAs[String]("image_id") -> r.getAs[String]("boundary_id")).toMap
+    val feats = ImagePipeline.fastFeatures(spark, 1000, 4)
+    val joined = PipJoin.join(feats, ImagePipeline.metroBoundaries, "lon", "lat")
+      .collect().map(r => r.getAs[Long]("idx") -> r.getAs[String]("boundary_id")).toMap
     // brute force: the lowest-id boundary whose ring contains the point
-    val brute = feats.collect().flatMap { f =>
-      ImagePipeline.metroBoundaries.filter(_.containsPoint(f.lon, f.lat)).map(_.id)
-        .sorted.headOption.map(f.image_id -> _)
+    val brute = feats.select(col("idx"), col("lon"), col("lat")).collect().flatMap { f =>
+      ImagePipeline.metroBoundaries.filter(_.containsPoint(f.getDouble(1), f.getDouble(2))).map(_.id)
+        .sorted.headOption.map(f.getLong(0) -> _)
     }.toMap
     assert(brute.size > 500, s"expected most rows in metros, got ${brute.size}")
     assert(joined == brute)
@@ -102,8 +103,8 @@ class PipelineSpec extends AnyFunSuite {
   test("skew exists by construction (metro cells are dense at z8)") {
     // z12 spreads a metro over ~64 tiles; at z8 (1.4 deg tiles) each metro is
     // 1-4 tiles, so the hot-cell concentration the salting targets is visible
-    val feats = ImagePipeline.features(spark, 3000, 4)
-      .withColumn("z8", graft.index.Quadkey.cellIdCol(col("lon"), col("lat"), 8))
+    val feats = ImagePipeline.fastFeatures(spark, 3000, 4)
+      .withColumn("z8", graft.functions.SeedExprs.quadCell(col("lat"), col("lon"), 8))
     val counts = feats.groupBy(col("z8")).count().orderBy(col("count").desc).collect()
     val top = counts.take(10).map(_.getLong(1)).sum.toDouble
     assert(top / 3000.0 > 0.5, s"expected hot z8 cells holding >50% of rows, got ${top / 3000.0}")
@@ -535,23 +536,27 @@ class FastPathSpec extends AnyFunSuite {
   import org.apache.spark.sql.functions._
   lazy val spark: SparkSession = TestSpark.spark
 
-  test("codegen fast pipeline == typed Dataset pipeline, row for row") {
+  test("codegen fast pipeline == a driver-side scalar replay, row for row") {
+    import graft.index.Quadkey
+    import graft.synth.{Geotag, ImageSynth}
     val fast = ImagePipeline.run(spark, 4000, 4).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))).toSet
-    // the typed side joins by brute force, independent of the BoundaryIndex
+    // each row re-derived on the driver and joined by brute force, apart
+    // from the BoundaryIndex and every Spark expression
     val bs = ImagePipeline.metroBoundaries
-    val lowestContaining = udf { (lon: Double, lat: Double) =>
-      bs.filter(_.containsPoint(lon, lat)).map(_.id).sorted.headOption.orNull
+    val joined = (0L until 4000L).flatMap { i =>
+      val seed = ImageSynth.seedOf(i)
+      val (lon, lat) = (Geotag.lonOf(seed), Geotag.latOf(seed))
+      bs.filter(_.containsPoint(lon, lat)).map(_.id).sorted.headOption.map(b =>
+        (Quadkey.cellIdOf(lon, lat, 12), b, ImageSynth.teamOf(seed), ImageSynth.uidOf(seed)))
     }
-    val typed = TypedPivot.tileTeamPivot(ImagePipeline.features(spark, 4000, 4).toDF()
-        .withColumn("boundary_id", lowestContaining(col("lon"), col("lat")))
-        .filter(col("boundary_id").isNotNull))
-      .select(col("tile"), col("boundary_id"), col("kll_e"), col("msf_e"),
-        col("dcx_e"), col("hot_e"), col("team_sum_e"), col("n_users")).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))).toSet
-    assert(fast == typed)
+    val replay = joined.groupBy(j => (j._1, j._2)).map { case ((tile, b), rows) =>
+      def team(t: String) = rows.count(_._3 == t).toLong
+      (tile, b, team("kll"), team("msf"), team("dcx"), team("hot"), rows.size.toLong,
+        rows.map(_._4).distinct.size.toLong)
+    }.toSet
+    assert(fast == replay && fast.nonEmpty)
   }
 
   test("fast features stay in one WholeStageCodegen span (no UDF barrier)") {

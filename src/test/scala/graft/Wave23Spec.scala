@@ -20,7 +20,8 @@ class Wave23Spec extends AnyFunSuite {
     val rows = ImagePipeline.synthTable(spark, n, 4).collect()
     val expect = rows.filter(_.fmt == "png").flatMap { r =>
       val seed = ImageSynth.seedOf(r.image_id.stripPrefix("img").toLong)
-      Option(index.queryFirst(Geotag.lonOf(seed), Geotag.latOf(seed))).map { b =>
+      val o = index.queryFirstOrdinal(Geotag.lonOf(seed), Geotag.latOf(seed))
+      Option.when(o >= 0)(index.boundaries(o).id).map { b =>
         val img = Validate.decode(r.bytes, r.fmt)
         val s = Seq((0, 0), (9, 0), (0, 9), (9, 9))
           .map { case (x, y) => (img.getRGB(x, y) & 0xFF).toLong }.sum

@@ -32,6 +32,9 @@ GENERATED = "org.apache.spark.sql.catalyst.expressions.GeneratedClass"
 LAYERS = [
     ("ray-cast", lambda c, m: c == "graft.geo.Geo$" and m == "pointInRing"),
     ("PIP probe", lambda c, m: c.startswith("graft.spatial.BoundaryIndex")),
+    # the tile encoder (Quadkey.cellIdOf, reached from generated code through
+    # Statics.quadCell); its StrictMath.log is a native frame with no layer
+    ("tile encode", lambda c, m: c == "graft.index.Quadkey$"),
     ("geotag/derive", lambda c, m: c.startswith(("graft.synth.", "graft.functions.", "graft.index."))),
     ("hash aggregation", lambda c, m: c.startswith((
         "org.apache.spark.unsafe.map.", "org.apache.spark.sql.execution.aggregate.",

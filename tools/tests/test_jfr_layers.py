@@ -27,8 +27,8 @@ class JfrLayersTest(unittest.TestCase):
             self.assertEqual(list(jfr_layers.events(fh)), whole)
 
     def test_executor_samples_go_to_the_innermost_named_layer(self):
-        self.assertEqual(self.layers, {"ray-cast": 2, "PIP probe": 1, "geotag/derive": 1,
-                                       "hash aggregation": 2, "other": 3})
+        self.assertEqual(self.layers, {"ray-cast": 2, "PIP probe": 1, "tile encode": 1,
+                                       "geotag/derive": 1, "hash aggregation": 2, "other": 3})
 
     def test_allocation_weight_by_class_counts_executor_threads_only(self):
         self.assertEqual(self.alloc, {"scala.Tuple2$mcDD$sp": 4 * 2**20, "[B": 2**20})
@@ -38,10 +38,11 @@ class JfrLayersTest(unittest.TestCase):
         with contextlib.redirect_stdout(out):
             jfr_layers.main(["jfr_layers.py", FIXTURE])
         lines = out.getvalue().splitlines()
-        self.assertEqual(lines[0], "executor samples: 9")
-        self.assertEqual(lines[1].split(), ["ray-cast", "2", "22.2", "%"])
-        self.assertEqual(lines[6], "executor allocation weight: 5.0 MiB")
-        self.assertEqual(lines[7].split()[:2], ["scala.Tuple2$mcDD$sp", "4.0"])
+        self.assertEqual(lines[0], "executor samples: 10")
+        self.assertEqual(lines[1].split(), ["ray-cast", "2", "20.0", "%"])
+        self.assertEqual(lines[3].split(), ["tile", "encode", "1", "10.0", "%"])
+        self.assertEqual(lines[7], "executor allocation weight: 5.0 MiB")
+        self.assertEqual(lines[8].split()[:2], ["scala.Tuple2$mcDD$sp", "4.0"])
 
 
 if __name__ == "__main__":
