@@ -177,19 +177,13 @@ object Pyramid {
   /** Gate query (q179): per-image histogram-equalization lookup table —
     * lut(v) = (255·cdf(v)) div (w·h) over the decoded pixel histogram, the
     * contrast-normalization step a vision pipeline applies before feature
-    * extraction. Composes q158's decode histogram with a per-image cumsum;
-    * exact integers end to end. */
-  def equalizationLut(spark: SparkSession, n: Long = GateN, parts: Int = GateParts): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val hist = pixelHistogram(spark, n, parts)
-    val w = Window.partitionBy("idx").orderBy("value")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = Window.partitionBy("idx")
-    hist.withColumn("cdf", sum(col("cnt")).over(w))
-      .withColumn("npx", sum(col("cnt")).over(tot))
-      .select(col("idx"), col("value"),
-        expr("(255 * cdf) div npx").as("lut"))
-  }
+    * extraction. Composes q158's decode histogram with its per-image
+    * [[graft.ops.OrderStats.distribution]] (cdf = cum_cnt, pixels =
+    * tot_cnt); exact integers end to end. */
+  def equalizationLut(spark: SparkSession, n: Long = GateN, parts: Int = GateParts): DataFrame =
+    graft.ops.OrderStats.distribution(pixelHistogram(spark, n, parts), Seq("idx"), "value",
+        "cnt" -> col("cnt"))
+      .select(col("idx"), col("value"), expr("(255 * cum_cnt) div tot_cnt").as("lut"))
 
   final case class HistRow(idx: Long, value: Int, cnt: Long)
 

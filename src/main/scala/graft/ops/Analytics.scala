@@ -284,30 +284,22 @@ object Analytics {
   /** Gate query (q134): robust anomaly detection via median absolute
     * deviation — per event type, the lower median of value cents, the MAD
     * (lower median of |x − med|), and the count of points beyond 3·MAD.
-    * All integer order statistics with the deterministic (value, event_id)
-    * tie-break, so the thresholds replay exactly (σ-based z-scores would be
-    * FP and outlier-skewed — MAD is the robust standard). Two rank windows,
-    * both partitioned BY GROUP; the per-group medians broadcast back. */
+    * All integer nearest-rank order statistics (a rank picks a value, so
+    * ties need no tie-break), so the thresholds replay exactly (σ-based z-scores would be
+    * FP and outlier-skewed — MAD is the robust standard). Both medians read
+    * a per-group [[OrderStats.distribution]] at rank (n+1) div 2; the
+    * per-group medians broadcast back. */
   def madAnomalies(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = table(spark, dir, "events")
       .select(col("event_type").as("grp"),
-        floor(col("value") * 100.0 + 0.5).cast("long").as("cents"),
-        col("event_id"))
-    def lowerMedian(df: DataFrame, value: String, out: String): DataFrame = {
-      val w = Window.partitionBy("grp").orderBy(col(value), col("event_id"))
-      val n = Window.partitionBy("grp")
-      df.withColumn("rn", row_number().over(w))
-        .withColumn("n", count(lit(1)).over(n))
-        .groupBy("grp")
-        .agg(max(when(col("rn") === expr("(n + 1) div 2"), col(value)))
-          .as(out))
-    }
-    val med = lowerMedian(e, "cents", "med_cents")
+        floor(col("value") * 100.0 + 0.5).cast("long").as("cents"))
+    val mid = expr("(tot_n + 1) div 2")
+    val med = OrderStats.distribution(e, Seq("grp"), "cents", "n" -> lit(1L))
+      .groupBy("grp").agg(OrderStats.atRank(col("cents"), col("cum_n"), mid).as("med_cents"))
     val dev = e.join(broadcast(med), "grp")
-      .withColumn("dev", abs(col("cents") - col("med_cents")))
-    val mad = lowerMedian(dev.select(col("grp"), col("dev"), col("event_id")),
-      "dev", "mad_cents")
+      .select(col("grp"), abs(col("cents") - col("med_cents")).as("dev"))
+    val mad = OrderStats.distribution(dev, Seq("grp"), "dev", "n" -> lit(1L))
+      .groupBy("grp").agg(OrderStats.atRank(col("dev"), col("cum_n"), mid).as("mad_cents"))
     e.join(broadcast(med), "grp").join(broadcast(mad), "grp")
       .groupBy(col("grp").as("event_type"))
       .agg(max(col("med_cents")).as("med_cents"),

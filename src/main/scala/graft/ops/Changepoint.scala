@@ -79,28 +79,25 @@ object Changepoint {
     * treatment) centered by their exact integer mean (n+1), so the
     * correlation is Σc_x·c_y / √(Σc_x²·Σc_y²) with every sum an exact
     * integer — no n-scaling, no overflow through sf0.1, and the single FP
-    * tail is the q154 discipline. */
+    * tail is the q154 discipline. Each rank map is the ungrouped
+    * [[OrderStats.distribution]] of one column, whose total gives n. */
   def spearman(spark: SparkSession, dir: String): DataFrame = {
     val base = table(spark, dir, "lineitem").select(
       floor(col("l_extendedprice") / 100.0 + 0.5).cast("long").as("vx"),
       floor(col("l_quantity") + 0.5).cast("long").as("vy"))
-    def rankMap(v: String): DataFrame = {
-      val g = base.groupBy(col(v)).agg(count(lit(1)).as("c"))
-      val w = Window.orderBy(v)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      g.withColumn("below", sum(col("c")).over(w) - col("c"))
-        .select(col(v), (lit(2L) * col("below") + col("c") + 1L).as(s"r2_$v"))
-    }
-    val n = base.count()
+    // centered doubled mid-rank: 2·below + at + 1 − (n + 1)
+    def rankMap(v: String): DataFrame =
+      OrderStats.distribution(base, Nil, v, "c" -> lit(1L))
+        .select(col(v), col("tot_c").as(s"n_$v"),
+          (lit(2L) * (col("cum_c") - col("c")) + col("c") + 1L - (col("tot_c") + 1L)).as(s"c_$v"))
     val joined = base
       .join(rankMap("vx"), Seq("vx"))
       .join(rankMap("vy"), Seq("vy"))
-      .select((col("r2_vx") - lit(n + 1L)).as("cx"),
-        (col("r2_vy") - lit(n + 1L)).as("cy"))
-    joined.agg(sum(col("cx") * col("cy")).as("sxy"),
-        sum(col("cx") * col("cx")).as("sxx"),
-        sum(col("cy") * col("cy")).as("syy"))
-      .select(lit(n).as("n"), col("sxy"), col("sxx"), col("syy"),
+    joined.agg(max(col("n_vx")).as("n"),
+        sum(col("c_vx") * col("c_vy")).as("sxy"),
+        sum(col("c_vx") * col("c_vx")).as("sxx"),
+        sum(col("c_vy") * col("c_vy")).as("syy"))
+      .select(col("n"), col("sxy"), col("sxx"), col("syy"),
         floor(col("sxy").cast("double") * 1000000.0 /
           (sqrt(col("sxx").cast("double")) * sqrt(col("syy").cast("double")))
           + 0.5).cast("long").as("spearman_e6"))

@@ -44,33 +44,23 @@ object Drift {
     * SUP-norm sibling of q163's TV, kept integer the same way —
     * KS·n_a·n_b = max over the merged value domain of |cumA·n_b − cumB·n_a|
     * (running counts, common denominator, no FP CDFs). Reports ks_e6 and
-    * the value attaining it (smallest on ties). The windows run over the
-    * per-type distinct-value relation, never the events. */
+    * the value attaining it (smallest on ties, the argmax by max-struct of
+    * (dev, −cents)). The per-type [[OrderStats.distribution]] weighted by
+    * half-month A and by half-month B runs its windows over the distinct
+    * values, never the events, and its one exchange serves the rollup. */
   def ksDrift(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val vc = table(spark, dir, "events").select(
+    val rows = table(spark, dir, "events").select(
         col("event_type"),
         floor(col("value") * 100.0 + 0.5).cast("long").as("cents"),
         when(col("ts") < lit("2024-01-16").cast("timestamp"), 1L).otherwise(0L)
           .as("in_a"))
-      .groupBy("event_type", "cents")
-      .agg(sum(col("in_a")).as("ca"), sum(lit(1L) - col("in_a")).as("cb"))
-    val w = Window.partitionBy("event_type").orderBy("cents")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = Window.partitionBy("event_type")
-    val cum = vc
-      .withColumn("cuma", sum(col("ca")).over(w))
-      .withColumn("cumb", sum(col("cb")).over(w))
-      .withColumn("na", sum(col("ca")).over(tot))
-      .withColumn("nb", sum(col("cb")).over(tot))
-      .withColumn("dev", abs(col("cuma") * col("nb") - col("cumb") * col("na")))
-    val mx = cum.groupBy("event_type").agg(max(col("dev")).as("mdev"))
-    cum.join(broadcast(mx), Seq("event_type"))
-      .where(col("dev") === col("mdev"))
+    OrderStats.distribution(rows, Seq("event_type"), "cents",
+        "a" -> col("in_a"), "b" -> (lit(1L) - col("in_a")))
+      .withColumn("dev", abs(col("cum_a") * col("tot_b") - col("cum_b") * col("tot_a")))
       .groupBy("event_type")
-      .agg(max(col("na")).as("na"), max(col("nb")).as("nb"),
-        min(col("cents")).as("ks_at_cents"), max(col("mdev")).as("mdev"))
-      .select(col("event_type"), col("na"), col("nb"), col("ks_at_cents"),
-        expr("(mdev * 1000000) div (na * nb)").as("ks_e6"))
+      .agg(max(col("tot_a")).as("na"), max(col("tot_b")).as("nb"),
+        max(struct(col("dev"), (-col("cents")).as("nc"))).as("m"))
+      .select(col("event_type"), col("na"), col("nb"), (-col("m.nc")).as("ks_at_cents"),
+        expr("(m.dev * 1000000) div (na * nb)").as("ks_e6"))
   }
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Session.table
@@ -17,12 +16,13 @@ import graft.Session.table
   * arithmetic (cents, counts, basis points), so the DuckDB oracle replays
   * the ENTIRE sketch — bins, cumulative ranks, estimates — digit-for-digit.
   *
-  * Scale shape: one partial+final agg over ≤ domain/W bins (~220 here);
-  * the cumulative window runs on the BIN table (hundreds of rows, one
-  * partition — deliberate: the data-sized exchange is the histogram agg,
-  * never a sort of the input). Spark's own percentile_approx offers the
-  * same trade with data-adaptive bins; this is the from-scratch form whose
-  * answer is provable cross-engine.
+  * Scale shape: one partial+final agg over ≤ domain/W bins (~220 here),
+  * the ungrouped [[OrderStats.distribution]] of `bin`; its cumulative and
+  * total windows run on the BIN table (hundreds of rows, one partition —
+  * deliberate: the data-sized exchange is the histogram agg, never a sort
+  * of the input), and the data is scanned once. Spark's own
+  * percentile_approx offers the same trade with data-adaptive bins; this
+  * is the from-scratch form whose answer is provable cross-engine.
   */
 object HistQuantile {
 
@@ -33,23 +33,19 @@ object HistQuantile {
   /** Gate query (q95): p50/p90/p99 of lineitem extendedprice (cents) from a
     * W = 50 000-cent histogram. Output: (q_bp, bin, est_cents). */
   def quantiles(spark: SparkSession, dir: String): DataFrame = {
-    val cents = table(spark, dir, "lineitem")
+    val bins = table(spark, dir, "lineitem")
       .select(floor(col("l_extendedprice") * lit(100.0) + lit(0.5)).cast("long")
         .as("cents"))
-    val hist = cents.groupBy(expr(s"cents div $WidthCents").as("bin"))
-      .agg(count(lit(1)).as("n"))
-    val cum = hist.withColumn("cum_n",
-      sum(col("n")).over(Window.orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val tot = cents.agg(count(lit(1)).as("total"))
+      .select(expr(s"cents div $WidthCents").as("bin"))
     import spark.implicits._
     val q = QBps.map(_.toLong).toDF("q_bp")
-    // first bin whose cumulative rank reaches ceil(q·N/10^4):
-    // cum_n ≥ q_bp·N/10^4  ⇔  cum_n·10^4 ≥ q_bp·N (exact in 64-bit)
-    cum.crossJoin(broadcast(tot)).crossJoin(broadcast(q))
-      .filter(col("cum_n") * lit(10000L) >= col("q_bp") * col("total"))
+    // first bin whose cumulative rank reaches ceil(q·N/10^4) =
+    // (q_bp·N + 9999) div 10^4, i.e. cum_n·10^4 ≥ q_bp·N (exact in 64-bit)
+    OrderStats.distribution(bins, Nil, "bin", "n" -> lit(1L))
+      .crossJoin(broadcast(q))
       .groupBy(col("q_bp"))
-      .agg(min(col("bin")).as("bin"))
+      .agg(OrderStats.atRank(col("bin"), col("cum_n"),
+        expr("(q_bp * tot_n + 9999) div 10000")).as("bin"))
       .withColumn("est_cents", col("bin") * lit(WidthCents))
   }
 

@@ -68,29 +68,17 @@ object Lateness {
 
   /** Gate query (q178) — exact weighted median (lower): per return flag,
     * the smallest price p with 2·cumweight(p) ≥ total weight, weights =
-    * integer quantity units. Distributes by aggregating to the distinct-
-    * value relation first (map-side), then one window cumsum over THAT —
-    * the q160/q169 pattern: the data is touched once, the window touches
-    * only the value domain. */
+    * integer quantity units — the per-flag [[OrderStats.distribution]]
+    * weighted by quantity, read at rank (tw+1) div 2: the data is touched
+    * once, the windows touch only the value domain. */
   def weightedMedian(spark: SparkSession, dir: String): DataFrame = {
-    // ONE exchange end to end (guide §2.4): hash-partitioning by flag alone
-    // satisfies the (flag, cents) aggregation (subset of its grouping keys),
-    // the flag-keyed windows, AND the final flag rollup — the round-5 plan
-    // paid three exchanges for the same pipeline. Parallelism is bounded by
-    // the flag cardinality either way (the windows' own partition key).
     val g = table(spark, dir, "lineitem").select(
         col("l_returnflag").as("flag"),
         floor(col("l_extendedprice") * 100.0 + 0.5).cast("long").as("cents"),
         floor(col("l_quantity") + 0.5).cast("long").as("wt"))
-      .repartition(spark.sparkContext.defaultParallelism, col("flag"))
-      .groupBy("flag", "cents").agg(sum(col("wt")).as("w"))
-    val win = Window.partitionBy("flag").orderBy("cents")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = Window.partitionBy("flag")
-    g.withColumn("cw", sum(col("w")).over(win))
-      .withColumn("tw", sum(col("w")).over(tot))
-      .where(lit(2L) * col("cw") >= col("tw"))
+    OrderStats.distribution(g, Seq("flag"), "cents", "w" -> col("wt"))
       .groupBy("flag")
-      .agg(min(col("cents")).as("wmedian_cents"), max(col("tw")).as("total_w"))
+      .agg(OrderStats.atRank(col("cents"), col("cum_w"), expr("(tot_w + 1) div 2"))
+        .as("wmedian_cents"), max(col("tot_w")).as("total_w"))
   }
 }

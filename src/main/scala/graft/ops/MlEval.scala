@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Session.table
@@ -57,18 +56,15 @@ object MlEval {
     * standard tie handling, kept INTEGER throughout: per distinct score,
     * positives contribute p·(2·below + at + 1) to the doubled rank sum, so
     * 2U = Σ − npos·(npos+1) and auc_e6 = 10⁶·2U div (2·npos·nneg) — no FP
-    * anywhere, any score distribution, any tie pattern. Distributes as one
-    * groupBy(score) + a window cumsum over the (small) distinct-score
-    * relation + one final fold. */
+    * anywhere, any score distribution, any tie pattern. Distributes as the
+    * ungrouped [[OrderStats.distribution]] of the score (one groupBy(score)
+    * + a cumsum over the small distinct-score relation; below = cum_c − c)
+    * + one final fold. */
   def aucExact(spark: SparkSession, dir: String): DataFrame = {
-    val byScore = scored(spark, dir).groupBy("score")
-      .agg(count(lit(1)).as("c"), sum(col("pos")).as("p"))
-    val w = Window.orderBy("score")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = byScore
-      .withColumn("below", sum(col("c")).over(w) - col("c"))
-    ranked.agg(
-        sum(col("p") * (lit(2L) * col("below") + col("c") + 1L)).as("rsum2"),
+    OrderStats.distribution(scored(spark, dir), Nil, "score",
+        "c" -> lit(1L), "p" -> col("pos"))
+      .agg(
+        sum(col("p") * (lit(2L) * (col("cum_c") - col("c")) + col("c") + 1L)).as("rsum2"),
         sum(col("p")).as("npos"), sum(col("c") - col("p")).as("nneg"))
       .select(col("npos"), col("nneg"),
         (col("rsum2") - col("npos") * (col("npos") + 1L)).as("u2"),

@@ -6,36 +6,60 @@ import org.apache.spark.sql.functions._
 
 import graft.Session.table
 
-/** Distributed order statistics: exact grouped quantiles and the 2-D skyline
-  * (Pareto frontier). Both are EXACT — integer cents, deterministic
+/** Distributed order statistics: the value-distribution kernel under every
+  * exact quantile, rank and tail, exact grouped quantiles and the 2-D skyline
+  * (Pareto frontier). All are EXACT — integer cents, deterministic
   * tie-breaks — so they hash-gate against DuckDB; percentile_approx-style
   * sketches already exist separately (q95 mergeable histogram quantiles).
   */
 object OrderStats {
 
+  /** The value distribution under every exact order statistic: one row per
+    * (`groups`, distinct `value`) carrying, for each named weight `w`, its
+    * sum at that value (`w`), the running sum over the group's values up to
+    * and including this one (`cum_w`) and the group's total (`tot_w`).
+    * Nearest-rank quantiles ([[atRank]]), mid-ranks (`2·(cum − w) + w + 1`),
+    * CDFs and tails (`tot − cum`) all read these three columns.
+    *
+    * With a group key the rows hash-partition ONCE on it (no width, so AQE
+    * sizes the exchange): the (group, value) aggregate, both windows and any
+    * rollup by group afterwards all cluster on the group, so the pipeline
+    * pays one exchange where a map-side partial aggregate would add a second
+    * keyed on (group, value) — and values that are near-unique per row give
+    * that partial aggregate nothing to compress. With no group key the
+    * values aggregate map-side and the windows run over the distinct-value
+    * relation in one task: the data-sized exchange is the aggregate, never a
+    * sort of the input. */
+  def distribution(rows: DataFrame, groups: Seq[String], value: String,
+                   weights: (String, Column)*): DataFrame = {
+    val byGroup = Window.partitionBy(groups.map(col): _*)
+    val upTo = byGroup.orderBy(value)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val sums = weights.map { case (w, c) => sum(c).as(w) }
+    val clustered = if (groups.isEmpty) rows else rows.repartition(groups.map(col): _*)
+    clustered.groupBy((groups :+ value).map(col): _*).agg(sums.head, sums.tail: _*)
+      .select((groups :+ value).map(col) ++ weights.flatMap { case (w, _) =>
+        Seq(col(w), sum(col(w)).over(upTo).as(s"cum_$w"), sum(col(w)).over(byGroup).as(s"tot_$w"))
+      }: _*)
+  }
+
+  /** The value at nearest rank `rank` of a [[distribution]] group — the
+    * least value whose running weight `cum` reaches it — as an aggregate. */
+  def atRank(value: Column, cum: Column, rank: Column): Column =
+    min(when(cum >= rank, value))
+
   /** Gate query (q114): exact per-group lower-median and nearest-rank p90 of
-    * order totals in integer cents. The rank window partitions BY GROUP —
-    * each group sorts inside its own hash partition (one exchange, no global
-    * sort); (cents, o_orderkey) is a total order so ranks are deterministic.
-    * For groups too large to sort in one task the binary-search-on-domain
-    * + count refinement is the documented fallback; at G ≈ thousands of
-    * groups × millions of rows each, per-group task sort is the right plan. */
+    * order totals in integer cents, read off the per-priority
+    * [[distribution]] at ranks (n+1) div 2 and (9n+9) div 10. */
   def groupedMedian(spark: SparkSession, dir: String): DataFrame = {
     val o = table(spark, dir, "orders")
       .select(col("o_orderpriority").as("grp"),
-        floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("cents"),
-        col("o_orderkey"))
-    val w = Window.partitionBy("grp").orderBy(col("cents"), col("o_orderkey"))
-    val n = Window.partitionBy("grp")
-    o.withColumn("rn", row_number().over(w))
-      .withColumn("n", count(lit(1)).over(n))
+        floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("cents"))
+    distribution(o, Seq("grp"), "cents", "n" -> lit(1L))
       .groupBy("grp")
-      .agg(
-        max(when(col("rn") === expr("(n + 1) div 2"), col("cents")))
-          .as("median_cents"),
-        max(when(col("rn") === expr("(9 * n + 9) div 10"), col("cents")))
-          .as("p90_cents"),
-        max(col("n")).as("n"))
+      .agg(atRank(col("cents"), col("cum_n"), expr("(tot_n + 1) div 2")).as("median_cents"),
+        atRank(col("cents"), col("cum_n"), expr("(9 * tot_n + 9) div 10")).as("p90_cents"),
+        max(col("tot_n")).as("n"))
   }
 
   /** DISTRIBUTED global row numbering — the primitive behind exact deciles,

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Session.table
@@ -30,29 +29,21 @@ object Robust {
   }
 
   /** Gate query (q184) — expected shortfall (CVaR): the exact mean of the
-    * top-5% tail per group — nearest-rank cutoff from a cumsum over the
-    * DESCENDING distinct-value relation, tail sum/count exact integers,
-    * mean as div. The risk aggregate that a mean or p95 alone understates. */
+    * top-5% tail per group — nearest-rank cutoff over the per-group
+    * [[OrderStats.distribution]], tail sum/count exact integers, mean as
+    * div. The risk aggregate that a mean or p95 alone understates. */
   def tailShortfall(spark: SparkSession, dir: String): DataFrame = {
-    // ONE exchange end to end (the q178 pattern): hash(grp) satisfies the
-    // (grp, cents) aggregation, both windows and the final rollup; cents
-    // are near-unique per row, so the lost map-side partial agg was not
-    // compressing anything
     val g = table(spark, dir, "orders").select(
         col("o_orderpriority").as("grp"),
         floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("cents"))
-      .repartition(spark.sparkContext.defaultParallelism, col("grp"))
-      .groupBy("grp", "cents").agg(count(lit(1)).as("c"))
-    val w = Window.partitionBy("grp").orderBy(col("cents").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = Window.partitionBy("grp")
-    // tail = the ceil(n/20) largest rows; a value group straddling the
-    // cutoff contributes only its in-tail multiplicity
-    g.withColumn("cum", sum(col("c")).over(w))
-      .withColumn("n", sum(col("c")).over(tot))
-      .withColumn("k", expr("(n + 19) div 20"))
-      .where(col("cum") - col("c") < col("k"))
-      .withColumn("take", least(col("c"), col("k") - (col("cum") - col("c"))))
+    // tail = the k = ceil(n/20) largest rows: a value is in it iff fewer
+    // than k rows lie strictly above it (tot − cum), and a value group
+    // straddling the cutoff contributes only its in-tail multiplicity
+    OrderStats.distribution(g, Seq("grp"), "cents", "c" -> lit(1L))
+      .withColumn("k", expr("(tot_c + 19) div 20"))
+      .withColumn("above", col("tot_c") - col("cum_c"))
+      .where(col("above") < col("k"))
+      .withColumn("take", least(col("c"), col("k") - col("above")))
       .groupBy("grp")
       .agg(max(col("k")).as("tail_n"), sum(col("take") * col("cents")).as("tail_sum"))
       .select(col("grp"), col("tail_n"), col("tail_sum"),
@@ -61,30 +52,19 @@ object Robust {
 
   /** Gate query (q185) — winsorized statistics: clamp each value to the
     * group's exact nearest-rank [p5, p95] band, emit the winsorized sum and
-    * the clamped-row counts. The cutoffs come from the q114 rank machinery
-    * (cumsum over the value domain); clamping is a broadcast join of the
-    * tiny per-group band relation back onto the rollup — the data is
-    * scanned once. */
+    * the clamped-row counts. The cutoffs are [[OrderStats.atRank]] over the
+    * per-group [[OrderStats.distribution]]; clamping is a broadcast join of
+    * the tiny per-group band relation back onto that distribution — the
+    * data is scanned once. */
   def winsorized(spark: SparkSession, dir: String): DataFrame = {
-    // ONE exchange per consumer (the q178 pattern) — hash(grp) satisfies
-    // the aggregation, the windows, the band rollup and the clamping join
     val g = table(spark, dir, "orders").select(
         col("o_orderpriority").as("grp"),
         floor(col("o_totalprice") * 100.0 + 0.5).cast("long").as("cents"))
-      .repartition(spark.sparkContext.defaultParallelism, col("grp"))
-      .groupBy("grp", "cents").agg(count(lit(1)).as("c"))
-    val w = Window.partitionBy("grp").orderBy("cents")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = Window.partitionBy("grp")
-    val cum = g.withColumn("cum", sum(col("c")).over(w))
-      .withColumn("n", sum(col("c")).over(tot))
-    val bands = cum
-      .withColumn("lo_rank", expr("(n + 19) div 20"))
-      .withColumn("hi_rank", expr("(19 * n + 19) div 20"))
-      .groupBy("grp")
-      .agg(min(when(col("cum") >= col("lo_rank"), col("cents"))).as("p5"),
-        min(when(col("cum") >= col("hi_rank"), col("cents"))).as("p95"))
-    g.join(broadcast(bands), Seq("grp"))
+    val d = OrderStats.distribution(g, Seq("grp"), "cents", "c" -> lit(1L))
+    val bands = d.groupBy("grp")
+      .agg(OrderStats.atRank(col("cents"), col("cum_c"), expr("(tot_c + 19) div 20")).as("p5"),
+        OrderStats.atRank(col("cents"), col("cum_c"), expr("(19 * tot_c + 19) div 20")).as("p95"))
+    d.join(broadcast(bands), Seq("grp"))
       .withColumn("wv", greatest(col("p5"), least(col("p95"), col("cents"))))
       .groupBy("grp")
       .agg(max(col("p5")).as("p5"), max(col("p95")).as("p95"),

@@ -4,12 +4,13 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.GraftShim
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.{Expression, RowNumber, ScalaUDF}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.{DeserializeToObjectExec, GenerateExec, MapPartitionsExec,
-  QueryExecution, RangeExec, SparkPlan}
+import org.apache.spark.sql.execution.{DeserializeToObjectExec, FileSourceScanExec, GenerateExec,
+  MapPartitionsExec, QueryExecution, RangeExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -100,6 +101,44 @@ class PlanSpec extends AnyFunSuite {
     assert(generates.nonEmpty, "q27: no banding posexplode")
     generates.foreach(g =>
       assert(!g.generator.references.exists(_.name == "shs"), s"q27 explodes shs:\n$g"))
+  }
+
+  private val aqe = new AdaptiveSparkPlanHelper {}
+
+  test("q95 reads lineitem once") {
+    val scans = executedPlans("q95_hist_quantile")
+      .flatMap(aqe.collect(_) { case s: FileSourceScanExec => s })
+      .filter(_.relation.location.rootPaths.exists(_.getName == "lineitem.parquet"))
+    assert(scans.size == 1, s"q95 reads lineitem ${scans.size} times")
+  }
+
+  test("q182 runs one shuffle exchange") {
+    val shuffles = executedPlans("q182_ks_drift")
+      .flatMap(aqe.collect(_) { case e: ShuffleExchangeExec => e })
+    assert(shuffles.size == 1, s"q182 shuffles ${shuffles.size} times:\n${shuffles.mkString("\n")}")
+  }
+
+  test("q114 and q134 hold no row_number") {
+    Seq("q114_grouped_median", "q134_mad_anomalies").foreach { q =>
+      val exprs = executedPlans(q).flatMap(aqe.flatMap(_)(_.expressions))
+      assert(!exprs.exists(_.exists(_.isInstanceOf[RowNumber])), s"$q ranks with row_number")
+    }
+  }
+
+  test("building q169's frame runs no job beyond its table open") {
+    def jobsOf(run: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try { run; GraftShim.drainListenerBus(spark.sparkContext) }
+      finally spark.sparkContext.removeSparkListener(listener)
+      jobs.get
+    }
+    val open = jobsOf(Session.table(spark, fixtureDir, "lineitem"))
+    val build = jobsOf(SparkEntry.queries("q169_spearman")(spark, fixtureDir))
+    assert(build == open, s"q169 construction ran $build jobs, its table open $open")
   }
 
   test("bucketed checkpoint layout: partition pruning reaches the scan (Iceberg-style)") {
